@@ -245,12 +245,15 @@ def bounded_rows(df: DataFrame, max_rows: int, what: str) -> list:
     """Collect a MODEL-GEOMETRY relation to the driver (the sanctioned
     S15-class bounded pull): ``max_rows`` states the geometry bound and is
     ENFORCED — this helper must never see a corpus-sized relation.  Doubles
-    arrive bit-exactly (collect yields the binary C double)."""
-    rows = df.collect()
+    arrive bit-exactly (collect yields the binary C double).  The pull is
+    ``limit(max_rows + 1)``: an over-bound relation ships one row past the
+    bound, never the whole relation, so the guard fires before a driver OOM."""
+    rows = df.limit(max_rows + 1).collect()
     if len(rows) > max_rows:
         raise ValueError(
-            f"bounded_rows({what}): {len(rows)} rows exceed the stated "
-            f"model-geometry bound {max_rows} — refusing the driver pull")
+            f"bounded_rows({what}): the relation exceeds the stated "
+            f"model-geometry bound of {max_rows} rows — refusing the "
+            f"driver pull")
     return rows
 
 

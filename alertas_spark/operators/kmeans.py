@@ -11,12 +11,13 @@ re-runs):
   contract) — the one step where naive double summation would diverge between
   partitionings and engines.
 
-Scale shape per iteration: one 1-row broadcast of the packed centroid array
-(K×dim doubles are always tiny), the argmin evaluated INSIDE the scan
-projection (zero exchange — r18; the former crossJoin + vec_id-window shape
-shuffled a full copy of every embedding per round), and one (cluster, dim)
-aggregation with map-side combine.  The loop structure is exactly
-GraphX/Spark-ML's kmeans; the decimal-sum means are the price of cross-engine
+Scale shape per iteration: one bounded driver collect of the ≤K centroid rows
+(K×dim doubles are always tiny), baked into a constant-folded literal array;
+the argmin evaluated INSIDE the scan projection against that constant (zero
+exchange, no broadcast, no join — r18; the former crossJoin + vec_id-window
+shape shuffled a full copy of every embedding per round); and one
+(cluster, dim) aggregation with map-side combine.  The loop structure is
+exactly GraphX/Spark-ML's kmeans; the decimal-sum means are the price of cross-engine
 bit-equality and cost one extra cast.
 
 The trained assignment feeds ``simsearch_topk_ivf`` / the blocked dedup as their
@@ -25,6 +26,8 @@ coarse partition — closing the loop from raw embeddings to a *trained* IVF ind
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -35,7 +38,6 @@ from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
 K = 8
-ITERS = 2
 DIM = 64
 
 _DUCK_DIST = ("list_reduce(list_transform(range(1, 65), "
@@ -80,64 +82,59 @@ _DUCK_ORACLE = f"""
 """
 
 
-#: argmin over the packed centroid array, evaluated scan-side: per vector,
-#: build (dist, cid) structs for every centroid with a higher-order
-#: ``transform`` and take ``array_min`` — structs compare field-by-field, so
-#: the minimum IS (lowest dist, ties to lowest cid), the oracle's
-#: ROW_NUMBER() ORDER BY dist, cid tiebreak, bit-identical.  ``cs_expr`` is
-#: either the packed broadcast column or a constant-folded literal array;
-#: ``with_cvec`` carries the winning centroid's vector on the struct (a
-#: third tiebreak field never consulted — cid is unique), so residual
-#: consumers need no join-back against the centroid table.
-def _spark_best(cs_expr: str, with_cvec: bool = False) -> str:
-    cvec = ", 'cvec', c.cvec" if with_cvec else ""
-    return (f"array_min(transform({cs_expr}, c -> named_struct("
-            "'dist', aggregate(zip_with(emb, c.cvec, "
-            "(x, ce) -> (x - ce) * (x - ce)), "
+#: argmin over a literal item array, evaluated scan-side: per row, build
+#: (d, id) structs against every item with a higher-order ``transform`` and
+#: take ``array_min`` — structs compare field-by-field, so the minimum IS
+#: (lowest d, ties to lowest id), the oracle's ROW_NUMBER() ORDER BY d, id
+#: tiebreak, bit-identical (d is the same sequential left-to-right fold).
+#: ``vec`` is the row's vector column, ``key`` the items' id field;
+#: ``with_cvec`` carries the winning item's vector on the struct (a third
+#: field never consulted — ids are unique), so residual consumers need no
+#: join-back.  Shared by the k-means assign and the PQ sub-assign.
+def argmin_expr(items: str, vec: str, key: str,
+                with_cvec: bool = False) -> str:
+    cvec = ", 'cvec', it.cvec" if with_cvec else ""
+    return (f"array_min(transform({items}, it -> named_struct("
+            f"'d', aggregate(zip_with({vec}, it.cvec, "
+            "(x, y) -> (x - y) * (x - y)), "
             "cast(0.0 as double), (acc, v) -> acc + v), "
-            f"'cid', c.cid{cvec})))")
-
-
-_SPARK_BEST = _spark_best("cs")
+            f"'{key}', it.{key}{cvec})))")
 
 
 def dlit(x: float) -> str:
     """SQL double literal reproducing the exact binary64 value: ``repr`` is
     the shortest round-trip decimal, and both Spark's parser and
-    ``Double.parseDouble`` reconstruct the identical double from it."""
-    return repr(float(x)) + "D"
+    ``Double.parseDouble`` reconstruct the identical double from it.  NaN and
+    ±Inf have no such literal (``nanD`` is not SQL) and raise."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"dlit: {x!r} has no SQL double literal")
+    return repr(x) + "D"
 
 
-def lit_centroid_array(rows, cid_suffix: str = "L") -> str:
-    """The K trained centroids as ONE literal ``array<struct<cid, cvec>>``
-    SQL expression (constant-folded by Catalyst into a single Literal):
-    consumers evaluate the argmin against a CONSTANT — no pack aggregation,
-    no BroadcastExchange job, no join.  Element order is sorted by cid for
-    reproducibility; min-over-set is order-independent."""
-    items = ", ".join(
-        f"named_struct('cid', {int(r['cid'])}{cid_suffix}, "
+def lit_items(rows, key: str, suffix: str = "") -> str:
+    """Driver-held ``(key, cvec)`` rows as ONE literal
+    ``array<struct<key, cvec>>`` SQL expression (constant-folded by Catalyst
+    into a single Literal): consumers evaluate the argmin against a CONSTANT
+    — no pack aggregation, no BroadcastExchange job, no join.  ``suffix``
+    types the id literal (``L`` keeps a bigint id bigint).  Element order is
+    sorted by id for reproducibility; min-over-set is order-independent."""
+    return "array({})".format(", ".join(
+        f"named_struct('{key}', {int(r[key])}{suffix}, "
         f"'cvec', array({', '.join(dlit(x) for x in r['cvec'])}))"
-        for r in sorted(rows, key=lambda r: r["cid"]))
-    return f"array({items})"
+        for r in sorted(rows, key=lambda r: r[key])))
 
 
-def _assign(emb: DataFrame, centroids, with_cvec: bool = False) -> DataFrame:
-    # ZERO-exchange assignment: the K centroids collapse to ONE broadcast row
-    # holding an array of (cid, cvec) structs, and the argmin runs inside the
-    # scan projection (``_spark_best``).  The former shape — crossJoin each
-    # vector against all K centroids, then argmin via a vec_id window —
-    # shuffled and sorted one full copy of every embedding per Lloyd round
-    # (measured at sf0.1: 2,000 records / 820 KB per round, the dominant
-    # exchange of the trainer); here assignment is a narrow projection and
-    # the only exchanges left in a round are the tiny (cid, dim) mean
-    # partials.  min-over-set is order-independent, so the unordered
-    # collect_list is deterministic in the result.
-    #
-    # ``centroids`` is a DataFrame only for the seed round (c0 rides the
-    # corpus scan lazily); DRIVER-HELD rows (post-update rounds, the trained
-    # coarse-centroid artifact) become a constant-folded LITERAL array
-    # instead — no pack aggregation, no BroadcastExchange job, no join
-    # (the trainer chains are job-count-bound; artifacts.bounded_rows).
+def _assign(emb: DataFrame, centroids: list,
+            with_cvec: bool = False) -> DataFrame:
+    # ZERO-exchange assignment: the driver-held centroid rows (every round,
+    # the seed included — bounded_rows) bake into a constant-folded literal
+    # and the argmin runs inside the scan projection (``argmin_expr``): no
+    # pack aggregation, no BroadcastExchange job, no join (the trainer
+    # chains are job-count-bound).  The former crossJoin + vec_id-window
+    # shape shuffled and sorted one full copy of every embedding per Lloyd
+    # round (measured at sf0.1: 2,000 records / 820 KB per round); here the
+    # only exchanges left in a round are the tiny (cid, dim) mean partials.
     #
     # ``cid`` is coalesced against a sentinel that never occurs: the argmin
     # over a non-empty centroid set is never null, so values are identical —
@@ -145,24 +142,16 @@ def _assign(emb: DataFrame, centroids, with_cvec: bool = False) -> DataFrame:
     # cid generate NO inferred isnotnull constraint.  Without it, Catalyst
     # rewrites the inferred filter through this projection and re-evaluates
     # the ENTIRE argmin chain per row a second time (measured: the IVFADC
-    # scorer went 13.3 s → 1.1 s at sf0.1 when the inference died).
+    # scorer went 13.3 s → 1.1 s at sf0.1 when the inference died;
+    # test_plan_shapes pins it).
     out = ["vec_id", "emb",
            F.coalesce(F.col("best.cid"), F.lit(-1)).alias("cid"),
-           F.col("best.dist").alias("dist")]
+           F.col("best.d").alias("dist")]
     if with_cvec:
         out.append(F.col("best.cvec").alias("cvec"))
-    if isinstance(centroids, list):
-        return (emb.withColumn(
-            "best", F.expr(_spark_best(lit_centroid_array(centroids),
-                                       with_cvec)))
-            .select(*out))
-    cs = centroids.groupBy().agg(
-        F.collect_list(F.struct("cid", "cvec")).alias("cs"))
-    return (
-        emb.crossJoin(F.broadcast(cs))
-        .withColumn("best", F.expr(_spark_best("cs", with_cvec)))
-        .select(*out)
-    )
+    best = argmin_expr(lit_items(centroids, "cid", "L"), "emb", "cid",
+                       with_cvec)
+    return emb.withColumn("best", F.expr(best)).select(*out)
 
 
 def _update(assigned: DataFrame) -> DataFrame:
@@ -188,25 +177,36 @@ def _update(assigned: DataFrame) -> DataFrame:
     )
 
 
+def lloyd_centroids(v: DataFrame, k: int) -> DataFrame:
+    """The one Lloyd update every k-means consumer trains over ``v``
+    ``(vec_id, emb)``: the seed — the first ``k`` vectors by ``vec_id`` — is
+    collected (≤k rows, model geometry) and baked into the literal argmin
+    like every later round, and the decimal-exact means of its clusters are
+    returned LAZY as ``(cid, cvec)`` (empty clusters drop): the caller's
+    bounded pull or artifact tier owns the materialization."""
+    c0 = bounded_rows(v.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")),
+        k, "kmeans_c0")
+    return _update(_assign(v, c0))
+
+
+def _lloyd_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, emb, cid, dist)``: the valid embeddings assigned to their
+    trained centroid — seed → assign → update → re-assign, the oracle's
+    c0→a1→c1→a2 chain.  The K trained centroids come to the driver (bounded
+    by model geometry): the collect IS the round's one materializing action,
+    and it also truncates the lineage for the final assign."""
+    v = valid_embeddings(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
+    return _assign(v, bounded_rows(lloyd_centroids(v, K), K, "kmeans_c1"))
+
+
 @declare("kmeans_assign", oracle=_DUCK_ORACLE,
          late=True)  # green r2 driver row + in-window simsearch_topk_ivf_trained re-runs this exact quantizer
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train an IVF coarse quantizer with {ITERS} deterministic Lloyd iterations and
-    return the final cluster assignment (+ L2² distance) per vector."""
-    v = valid_embeddings(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    centroids = v.filter(F.col("vec_id") < K).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
-    assigned = _assign(v, centroids)
-    for _ in range(ITERS - 1):
-        # K rows to the driver (bounded by model geometry): the collect IS
-        # the round's one materializing action — the former localCheckpoint
-        # cost the same job, but left a checkpoint-backed table whose pack +
-        # broadcast submitted ANOTHER job per consumer; literal centroids
-        # make the next assign a pure projection (bounded_rows rationale)
-        centroids = bounded_rows(_update(assigned), K, "kmeans_c1")
-        assigned = _assign(v, centroids)
-    return assigned.select(
+    """Train an IVF coarse quantizer with two deterministic Lloyd iterations
+    and return the final cluster assignment (+ L2² distance) per vector."""
+    return _lloyd_assignment(spark, sf_dir).select(
         "vec_id", F.col("cid").cast("bigint").alias("cluster"),
         F.round("dist", 6).alias("dist"))
 
@@ -257,18 +257,10 @@ def trained_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alertas_spark.operators.simsearch import _norm2
 
     def train() -> DataFrame:
-        v = valid_embeddings(load_table(spark, sf_dir, "embeddings")).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        centroids = v.filter(F.col("vec_id") < K).select(
-            F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
-        assigned = _assign(v, centroids)
-        for _ in range(ITERS - 1):
-            centroids = bounded_rows(_update(assigned), K, "kmeans_c1")
-            assigned = _assign(v, centroids)
-        # lazy: persistent_artifact owns materialization (the per-iteration
-        # literal centroid arrays above already truncate the deep lineage)
-        return assigned.select("vec_id", "emb", "cid",
-                               F.sqrt(_norm2(F.col("emb"))).alias("nrm"))
+        # lazy: persistent_artifact owns materialization (the literal
+        # centroid arrays already truncate the deep lineage)
+        return _lloyd_assignment(spark, sf_dir).select(
+            "vec_id", "emb", "cid", F.sqrt(_norm2(F.col("emb"))).alias("nrm"))
 
     return persistent_artifact(spark, sf_dir, "kmeans_trained_assignment",
                                code_version="1", table="embeddings",

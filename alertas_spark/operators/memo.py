@@ -15,8 +15,9 @@ shape (consumers were reading a checkpoint scan either way), only how many times
 the training pipeline runs.
 
 At 100 TB the same pattern holds — a trained quantizer is a tiny shared artifact
-(K × DIM doubles) produced once and broadcast to every consumer; re-deriving it
-inside each query would repeat full-corpus scans.
+(K × DIM doubles) produced once and baked into every consumer's plan as a
+constant-folded literal; re-deriving it inside each query would repeat
+full-corpus scans.
 """
 
 from __future__ import annotations

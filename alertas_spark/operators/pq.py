@@ -49,9 +49,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from alertas_spark.operators.artifacts import (persistent_artifact,
+from alertas_spark.operators.artifacts import (bounded_rows,
+                                               persistent_artifact,
                                                persistent_artifact_rows)
-from alertas_spark.operators.kmeans import _assign, _update
+from alertas_spark.operators.kmeans import (_assign, argmin_expr, lit_items,
+                                            lloyd_centroids)
 from alertas_spark.operators.memo import session_artifact
 from alertas_spark.operators.embgate import (EMB_VALID_SQL, np_valid_mask,
                                              valid_embeddings, valid_nrm)
@@ -521,6 +523,57 @@ def _sub_mean(a1: DataFrame) -> DataFrame:
                   for i in range(SUBDIM)]).alias("cvec"))
 
 
+def _lit_codebook_by_m(rows) -> str:
+    """A driver-held (m, c, cvec) codebook as ONE literal
+    ``array<array<struct<c, cvec>>>`` SQL expression indexed by subspace
+    (``element_at(..., m)``), constant-folded by Catalyst into a single
+    Literal.  Consumers evaluate the sub-argmin / LUT against a CONSTANT —
+    no pack aggregation, no BroadcastExchange job, no join-by-m (the
+    trainer chains are job-count-bound; artifacts.bounded_rows)."""
+    by_m: dict = {}
+    for r in rows:
+        by_m.setdefault(r["m"], []).append(r)
+    if sorted(by_m) != list(range(1, M + 1)):
+        raise ValueError(f"codebook covers subspaces {sorted(by_m)}, "
+                         f"expected 1..{M}")
+    return "array({})".format(
+        ", ".join(lit_items(by_m[m], "c") for m in range(1, M + 1)))
+
+
+def _assign_sub(subs: DataFrame, cw: list) -> DataFrame:
+    """``subs`` plus ``c``/``d``: per (vec_id, m) the codeword minimizing the
+    sequential-fold sub-L2², ties to the lowest id — evaluated scan-side
+    against the literal codebook indexed by ``m`` (zero exchange; the former
+    crossJoin-by-m + struct-min agg shuffled every sub-vector once per
+    pass).  ``sub`` stays on the row for the Lloyd mean."""
+    # c coalesced non-nullable (sentinel never occurs — the argmin over a
+    # non-empty codeword set is never null): joins on c/cid then infer NO
+    # isnotnull constraint, which would otherwise re-evaluate the whole
+    # argmin chain per row as a pushed filter (kmeans._assign rationale)
+    best = argmin_expr(f"element_at({_lit_codebook_by_m(cw)}, m)", "sub", "c")
+    return (subs.withColumn("best", F.expr(best))
+            .select(*subs.columns,
+                    F.coalesce(F.col("best.c"), F.lit(-1)).alias("c"),
+                    F.col("best.d").alias("d")))
+
+
+def _lloyd_codebook(subs: DataFrame, what: str) -> DataFrame:
+    """One Lloyd update per subspace over ``subs`` ``(vec_id, m, sub, …)``:
+    the seed codebook — sub-vector ``m`` of the first KSUB vectors — is
+    collected (≤M·KSUB rows) and baked into the literal sub-argmin, and each
+    codeword becomes the decimal-exact mean of its members (``_sub_mean``,
+    ONE exchange); an empty cell keeps its seed.  Returns the LAZY
+    ``(m, c, cvec)`` codebook — the artifact tier owns materialization."""
+    cw0 = (subs.filter(F.col("vec_id") < KSUB)
+           .select("m", F.col("vec_id").cast("int").alias("c"),
+                   F.col("sub").alias("cvec")))
+    mean1 = _sub_mean(_assign_sub(subs, bounded_rows(cw0, M * KSUB, what)))
+    # one join: seed-aliased cw0 left-joins the means (keys unique)
+    return (cw0.withColumnRenamed("cvec", "seed")
+            .join(mean1, ["m", "c"], "left")
+            .select("m", "c", F.coalesce("cvec", "seed").alias("cvec")))
+
+
 @declare(
     "pq_encode_trained",
     oracle=f"""
@@ -543,11 +596,12 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest id, DECIMAL(29,6) means) applied per subspace, so training is
     idempotent across partitionings and engines.
 
-    Scale shape per subspace pass: one shuffle on (vec_id, m) for the argmin,
-    one (m, c, dim) aggregation with map-side combine for the means (64×16×16
-    cells — tiny), broadcast of the trained codebook back.  The qerr sum
-    quantizes each sub-distance to 1e-9-unit bigints so the 4-term sum is
-    order-independent."""
+    Scale shape per subspace pass: the argmin is a scan-side projection
+    against the codebook baked into a constant-folded literal (seed and
+    trained codebook alike are ≤M·KSUB collected rows — no broadcast, no
+    join), and the means are one (m, c) aggregation with map-side combine
+    (M×KSUB cells — tiny).  The qerr sum quantizes each sub-distance to
+    1e-9-unit bigints so the 4-term sum is order-independent."""
     v = _normalized(spark, sf_dir)
     subs = v.select(
         "vec_id",
@@ -555,60 +609,16 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"transform(sequence(1, {M}), m -> slice(emb, (m - 1) * {SUBDIM} + 1, "
             f"{SUBDIM}))")).alias("m0", "sub"),
     ).select("vec_id", (F.col("m0") + 1).alias("m"), "sub")
-    cw0 = (subs.filter(F.col("vec_id") < KSUB)
-           .select("m", F.col("vec_id").cast("int").alias("c"),
-                   F.col("sub").alias("cvec")))
-    def assign(cw) -> DataFrame:
-        # ZERO-exchange sub-assignment (r18, kmeans._assign's exact shape per
-        # subspace): the KSUB codewords of each subspace pack into ONE array
-        # row, the 4-row packed codebook broadcasts, and the argmin runs
-        # inside the scan projection via array_min over (d, c) structs —
-        # field-by-field struct comparison IS the (lowest d, ties to lowest
-        # c) contract.  The former crossJoin-by-m + (vec_id, m) struct-min
-        # agg shuffled every sub-vector once per assign pass; now ``sub``
-        # stays on the row for free (the Lloyd mean needs it — previously a
-        # join-back against a second evaluation of the subs subtree).
-        # Driver-held trained-codebook ROWS bake into a constant-folded
-        # literal instead — no pack, no broadcast job, no join-by-m.
-        # c coalesced non-nullable — see _assign_sub (kills the inferred-
-        # isnotnull re-evaluation of the argmin chain under the mean1 join)
-        c = F.coalesce(F.col("best.c"), F.lit(-1)).alias("c")
-        if isinstance(cw, list):
-            return (subs.withColumn(
-                "best",
-                F.expr(_sub_best(f"element_at({_lit_codebook_by_m(cw)}, m)")))
-                .select("vec_id", "m", c, F.col("best.d").alias("d"), "sub"))
-        return (subs.join(F.broadcast(_packed_codebook(cw)), "m")
-                .withColumn("best", F.expr(_SUB_BEST))
-                .select("vec_id", "m", c, F.col("best.d").alias("d"), "sub"))
-
-    def train_codebook() -> DataFrame:
-        a1 = assign(cw0)
-        # ONE exchange (r18, kmeans._update's exact shape per subspace): the
-        # per-dimension decimal sums ride SUBDIM agg columns in a single
-        # groupBy(m, c) — the former posexplode + groupBy(m, c, dim) +
-        # groupBy(m, c) paid two exchanges and a SUBDIM× row explosion for
-        # bit-identical numbers (decimal sums are order-independent).
-        mean1 = _sub_mean(a1)
-        return (
-            # one join: seed-aliased cw0 left-joins the means (keys unique) —
-            # the former drop+join+join evaluated the cw0 subtree twice
-            cw0.select("m", "c", F.col("cvec").alias("seed"))
-            .join(mean1, ["m", "c"], "left")
-            .select("m", "c", F.coalesce("cvec", "seed").alias("cvec"))
-            # 64 tiny rows; lazy — persistent_artifact owns materialization
-        )
-
     # trained-artifact tiers: the Lloyd pass runs once per session per dataset
     # (operators/memo.py), and when an artifact store is configured
     # (spark.alertas.artifacts.dir / ALERTAS_ARTIFACTS_DIR) the 64-row trained
     # codebook persists as versioned parquet and later sessions skip training
     # entirely (operators/artifacts.py); the final re-assign runs per call
-    cw1 = persistent_artifact_rows(spark, sf_dir, "pq_trained_codebook",
-                                   code_version="1", table="embeddings",
-                                   build=train_codebook,
-                                   max_rows=M * KSUB)
-    a2 = assign(cw1)
+    cw1 = persistent_artifact_rows(
+        spark, sf_dir, "pq_trained_codebook", code_version="1",
+        table="embeddings", max_rows=M * KSUB,
+        build=lambda: _lloyd_codebook(subs, "pq_cw0"))
+    a2 = _assign_sub(subs, cw1)
     # codes + qerr in ONE conditional aggregation (single shuffle on vec_id) —
     # a pivot + join-back here would cost an extra exchange and a merge join
     code_cols = [F.max(F.when(F.col("m") == m, F.col("c"))).cast("int")
@@ -639,7 +649,7 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Structure (every trained piece rides the artifact store):
 #
 # * coarse quantizer — 2 deterministic Lloyd iterations (kmeans.py's exact
-#   ``_assign``/``_update`` machinery) over the L2-NORMALIZED embeddings, so
+#   ``lloyd_centroids``) over the L2-NORMALIZED embeddings, so
 #   ADC's L2² ranking stays monotone in cosine like every other PQ tier;
 #   the K-row centroid table is the persisted artifact, assignment is a
 #   zero-shuffle argmin re-projection at read time (the FAISS add-time shape).
@@ -654,10 +664,11 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   1e-9-unit bigints before the sum so the 4-term total is order- and
 #   engine-independent.
 #
-# Scale shape: centroids and codebook are tiny broadcast artifacts; encoding
-# is a scan projection; the probe list bounds the candidate join (the IVF
-# prune — candidates shuffle once on cell id, never all-pairs); the final
-# rank is the two-phase exact top-k.  Nothing driver-side grows with the
+# Scale shape: centroids and codebooks (seeds and trained alike) are tiny
+# collected rows baked into constant-folded literals — no broadcast job, no
+# join; encoding is a scan projection; the probe list bounds the candidate
+# join (the IVF prune — candidates shuffle once on cell id, never
+# all-pairs); the final rank is the two-phase exact top-k.  Nothing driver-side grows with the
 # corpus.
 #
 # No reference counterpart (the reference has no vector ops); extension
@@ -788,15 +799,10 @@ def _coarse_centroids(spark: SparkSession, sf_dir: str) -> list:
     geometry) over the NORMALIZED embeddings — the index's first artifact.
     Driver-held: every consumer bakes them into a constant-folded literal
     (no broadcast jobs, no joins — artifacts.persistent_artifact_rows)."""
-    def train() -> DataFrame:
-        v = _normalized(spark, sf_dir)
-        c0 = v.filter(F.col("vec_id") < KC).select(
-            F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
-        return _update(_assign(v, c0))  # lazy; ≤KC rows
-
-    return persistent_artifact_rows(spark, sf_dir, "ivfpq_coarse_centroids",
-                                    code_version="1", table="embeddings",
-                                    build=train, max_rows=KC)
+    return persistent_artifact_rows(
+        spark, sf_dir, "ivfpq_coarse_centroids", code_version="1",
+        table="embeddings", max_rows=KC,
+        build=lambda: lloyd_centroids(_normalized(spark, sf_dir), KC))
 
 
 def _residual_subs(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
@@ -817,101 +823,15 @@ def _residual_subs(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
         .select("vec_id", "cid", (F.col("m0") + 1).alias("m"), "sub"))
 
 
-#: scan-side sub-argmin over the packed per-subspace codeword array (r18):
-#: array_min over (d, c) structs = the oracle's ORDER BY d, c — struct
-#: comparison is field-by-field, d is the same sequential fold both ways.
-#: ``cs_expr`` is the packed broadcast column or a constant-folded literal.
-def _sub_best(cs_expr: str) -> str:
-    return (f"array_min(transform({cs_expr}, cc -> named_struct("
-            "'d', aggregate(zip_with(sub, cc.cvec, "
-            "(x, y) -> (x - y) * (x - y)), "
-            "cast(0.0 as double), (acc, v) -> acc + v), "
-            "'c', cc.c)))")
-
-
-_SUB_BEST = _sub_best("cs")
-
-
-def _packed_codebook(cw: DataFrame) -> DataFrame:
-    """(m, array<(c, cvec)>): one row per subspace — the broadcast shape that
-    lets the argmin run inside the scan projection (``_SUB_BEST``) with zero
-    exchange; min-over-set is order-independent, so the unordered
-    collect_list is deterministic in the result."""
-    return cw.groupBy("m").agg(
-        F.collect_list(F.struct("c", "cvec")).alias("cs"))
-
-
-def _lit_codebook_by_m(rows) -> str:
-    """A trained (m, c, cvec) codebook as ONE literal
-    ``array<array<struct<c, cvec>>>`` SQL expression indexed by subspace
-    (``element_at(..., m)``), constant-folded by Catalyst into a single
-    Literal.  Consumers evaluate the sub-argmin / LUT against a CONSTANT —
-    no pack aggregation, no BroadcastExchange job, no join-by-m (the
-    trainer chains are job-count-bound; artifacts.bounded_rows)."""
-    from alertas_spark.operators.kmeans import dlit
-
-    by_m: dict = {}
-    for r in sorted(rows, key=lambda r: (r["m"], r["c"])):
-        by_m.setdefault(r["m"], []).append(r)
-    assert sorted(by_m) == list(range(1, M + 1))
-    per_m = []
-    for m in range(1, M + 1):
-        items = ", ".join(
-            f"named_struct('c', {int(r['c'])}, "
-            f"'cvec', array({', '.join(dlit(x) for x in r['cvec'])}))"
-            for r in by_m[m])
-        per_m.append(f"array({items})")
-    return f"array({', '.join(per_m)})"
-
-
-def _assign_sub(subs: DataFrame, cw) -> DataFrame:
-    """Per (vec_id, m): the codeword minimizing the sequential-fold sub-L2²,
-    ties to the lowest id — evaluated scan-side against the packed codebook
-    (zero-exchange; the former crossJoin-by-m + struct-min agg shuffled every
-    residual sub-vector once per pass).  Driver-held codebook ROWS (the
-    trained artifact) become a constant-folded literal indexed by ``m`` —
-    no broadcast job, no join."""
-    # c coalesced non-nullable (sentinel never occurs — the argmin over a
-    # non-empty codeword set is never null): joins on c/cid then infer NO
-    # isnotnull constraint, which would otherwise re-evaluate the whole
-    # argmin chain per row as a pushed filter (kmeans._assign rationale)
-    c = F.coalesce(F.col("best.c"), F.lit(-1)).alias("c")
-    if isinstance(cw, list):
-        return (subs.withColumn(
-            "best",
-            F.expr(_sub_best(f"element_at({_lit_codebook_by_m(cw)}, m)")))
-            .select("vec_id", "cid", "m", c))
-    return (subs.join(F.broadcast(_packed_codebook(cw)), "m")
-            .withColumn("best", F.expr(_SUB_BEST))
-            .select("vec_id", "cid", "m", c))
-
-
 def _residual_codebook(spark: SparkSession, sf_dir: str, c1: list) -> list:
     """The trained (m, c, cvec) residual codebook ROWS (≤M·KSUB, model
     geometry) — one Lloyd update over the pooled residual sub-vectors
     (pq_encode_trained's exact contract); driver-held for literal baking."""
-    def train() -> DataFrame:
-        subs = _residual_subs(spark, sf_dir, c1)
-        cw0 = (subs.filter(F.col("vec_id") < KSUB)
-               .select("m", F.col("vec_id").cast("int").alias("c"),
-                       F.col("sub").alias("cvec")))
-        # scan-side argmin against the packed codebook (zero exchange) —
-        # ``sub`` stays on the row for the Lloyd mean, where the former
-        # shape paid a join-back against a SECOND evaluation of the subs
-        # subtree (Catalyst does not dedupe identical subtrees)
-        a1 = (subs.join(F.broadcast(_packed_codebook(cw0)), "m")
-              .withColumn("best", F.expr(_SUB_BEST))
-              .select("vec_id", "m", F.col("best.c").alias("c"), "sub"))
-        # single-exchange per-dimension means + one seed-coalesce join — see
-        # pq_encode_trained.train_codebook (identical rewrite, r18)
-        mean1 = _sub_mean(a1)
-        return (cw0.select("m", "c", F.col("cvec").alias("seed"))
-                .join(mean1, ["m", "c"], "left")
-                .select("m", "c", F.coalesce("cvec", "seed").alias("cvec")))
-
-    return persistent_artifact_rows(spark, sf_dir, "ivfpq_residual_codebook",
-                                    code_version="1", table="embeddings",
-                                    build=train, max_rows=M * KSUB)
+    return persistent_artifact_rows(
+        spark, sf_dir, "ivfpq_residual_codebook", code_version="1",
+        table="embeddings", max_rows=M * KSUB,
+        build=lambda: _lloyd_codebook(_residual_subs(spark, sf_dir, c1),
+                                      "ivfpq_rcw0"))
 
 
 def _probed_cells(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
@@ -921,8 +841,6 @@ def _probed_cells(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
     as an ``inline`` over the constant-folded literal array (same (query,
     centroid) rows the former crossJoin(broadcast) produced, minus its
     broadcast-build job)."""
-    from alertas_spark.operators.kmeans import lit_centroid_array
-
     q = (_normalized(spark, sf_dir)
          .filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"),
@@ -931,7 +849,7 @@ def _probed_cells(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
              "cast(0.0 as double), (acc, v) -> acc + v)")
     wq = Window.partitionBy("query_id").orderBy("qd", "cid")
     return (q.select("query_id", "qemb",
-                     F.expr(f"inline({lit_centroid_array(c1)})"))
+                     F.expr(f"inline({lit_items(c1, 'cid', 'L')})"))
             .withColumn("qd", F.expr(qdist))
             .withColumn("rn", F.row_number().over(wq))
             .filter(F.col("rn") <= NPROBE)

@@ -13,15 +13,13 @@ SF = "/root/testdata/sf0.001"
 
 def _train_centroids(spark):
     """The real Lloyd-iteration centroid trainer from kmeans.py (K rows)."""
-    from alertas_spark.operators.kmeans import K, _assign, _update
+    from alertas_spark.operators.kmeans import K, lloyd_centroids
     from alertas_spark.operators.embgate import valid_embeddings
     from alertas_spark.sources.catalog import load_table
 
     v = valid_embeddings(load_table(spark, SF, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    c0 = v.filter(F.col("vec_id") < K).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec"))
-    return _update(_assign(v, c0)).localCheckpoint()
+    return lloyd_centroids(v, K).localCheckpoint()
 
 
 def test_train_once_then_load(spark, tmp_path):
@@ -105,6 +103,28 @@ def test_incomplete_artifact_debris_is_rebuilt(spark, tmp_path):
     # debris gone, no temp dirs left behind
     parent = os.path.dirname(debris)
     assert os.listdir(parent) == ["v=v1"]
+
+
+def test_bounded_rows_refuses_one_row_past_the_bound(spark):
+    """bounded_rows pulls at most ``max_rows + 1`` rows: a relation at the
+    bound arrives whole, one row past it raises, and rows beyond the first
+    ``max_rows + 1`` are never evaluated — the guard fires before the
+    driver would hold an over-bound relation."""
+    import pytest
+
+    from alertas_spark.operators.artifacts import bounded_rows
+
+    assert len(bounded_rows(spark.range(8), 8, "at_bound")) == 8
+    with pytest.raises(ValueError, match="bound of 8 rows"):
+        bounded_rows(spark.range(9), 8, "past_bound")
+    # a row past max_rows + 1 that fails when evaluated: a whole-relation
+    # collect would raise the SQL error, the bounded pull never reaches it
+    poisoned = spark.range(0, 1000, numPartitions=1).select(
+        F.when(F.col("id") < 9, F.col("id"))
+        .otherwise(F.raise_error(F.lit("pulled past the bound")))
+        .alias("id"))
+    with pytest.raises(ValueError, match="bound of 8 rows"):
+        bounded_rows(poisoned, 8, "poisoned")
 
 
 def test_fingerprint_tracks_dataset_rewrites(tmp_path):

@@ -25,6 +25,8 @@ QUERIES = [
     "product_aggregate",         # fixed-point EXP(SUM(LN)) quantization
     "pq_encode",                 # scan-side argmin over broadcast codebook
     "pq_encode_trained",         # Lloyd update: decimal means + quantized qerr
+    "simsearch_topk_ivf_trained",     # collected seed -> literal k-means argmin
+    "simsearch_topk_ivfpq_residual",  # collected seeds -> literal residual PQ
     "simsearch_topk_pq_reranked",  # ADC shortlist + exact-cosine re-rank
     "simsearch_topk_bruteforce",   # two-phase top-k local shortlist (topk.py)
     "dedup_cluster_representative",  # CC labels + deterministic rep pick

@@ -260,3 +260,41 @@ def test_single_exchange_sub_mean_equals_exploded_form(spark):
     assert set(got_s) == set(ref_s)
     for key, cvec in got_s.items():
         assert cvec == [ref_s[key][p] for p in range(SUBDIM)]
+
+
+def test_double_literals_round_trip_bit_exactly_and_refuse_non_finite(spark):
+    """kmeans.dlit renders every trained centroid/codeword double: Spark
+    must parse each literal back to the identical binary64, and NaN/±Inf
+    (which have no SQL double literal) must raise instead of rendering
+    invalid SQL."""
+    import math
+    import struct
+
+    import pytest
+
+    from alertas_spark.operators.kmeans import dlit
+
+    vals = [0.1, -0.0, 1 / 3, 5e-324, 1.7976931348623157e308, -2.5e-7,
+            0.30000000000000004]
+    got = spark.sql("SELECT array({}) AS xs".format(
+        ", ".join(dlit(x) for x in vals))).first().xs
+    assert [struct.pack("<d", x) for x in got] == \
+        [struct.pack("<d", x) for x in vals]
+    for bad in (math.nan, math.inf, -math.inf):
+        with pytest.raises(ValueError):
+            dlit(bad)
+
+
+def test_codebook_literal_refuses_a_missing_subspace():
+    """The literal codebook is indexed by subspace (``element_at(.., m)``):
+    a codebook without rows for some subspace must raise, not render an
+    array whose indexes silently shift."""
+    import pytest
+
+    from alertas_spark.operators.pq import M, _lit_codebook_by_m
+
+    rows = [{"m": m, "c": c, "cvec": [0.5, 0.25]}
+            for m in range(1, M + 1) for c in range(2)]
+    assert _lit_codebook_by_m(rows).startswith("array(array(")
+    with pytest.raises(ValueError, match="subspaces"):
+        _lit_codebook_by_m([r for r in rows if r["m"] != 2])
