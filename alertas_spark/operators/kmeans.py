@@ -12,13 +12,12 @@ re-runs):
   partitionings and engines.
 
 Scale shape per iteration: one bounded driver collect of the ≤K centroid rows
-(K×dim doubles are always tiny), baked into a constant-folded literal array;
-the argmin evaluated INSIDE the scan projection against that constant (zero
-exchange, no broadcast, no join — r18; the former crossJoin + vec_id-window
-shape shuffled a full copy of every embedding per round); and one
-(cluster, dim) aggregation with map-side combine.  The loop structure is
-exactly GraphX/Spark-ML's kmeans; the decimal-sum means are the price of cross-engine
-bit-equality and cost one extra cast.
+(K×dim doubles are always tiny), handed to ONE numpy argmin kernel that runs
+over the scan's Arrow batches (``argmin_arrow``, ``mapInArrow``; zero
+exchange, no broadcast, no join, and no interpreted per-row higher-order
+fold); and one (cluster, dim) aggregation with map-side combine.  The loop structure is exactly GraphX/Spark-ML's kmeans; the
+decimal-sum means are the price of cross-engine bit-equality and cost one
+extra cast.
 
 The trained assignment feeds ``simsearch_topk_ivf`` / the blocked dedup as their
 coarse partition — closing the loop from raw embeddings to a *trained* IVF index
@@ -31,6 +30,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DataType, DoubleType, LongType,
+                               StructField, StructType)
 
 from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
 from alertas_spark.operators.embgate import EMB_VALID_SQL, valid_embeddings
@@ -82,23 +83,121 @@ _DUCK_ORACLE = f"""
 """
 
 
-#: argmin over a literal item array, evaluated scan-side: per row, build
-#: (d, id) structs against every item with a higher-order ``transform`` and
-#: take ``array_min`` — structs compare field-by-field, so the minimum IS
-#: (lowest d, ties to lowest id), the oracle's ROW_NUMBER() ORDER BY d, id
-#: tiebreak, bit-identical (d is the same sequential left-to-right fold).
-#: ``vec`` is the row's vector column, ``key`` the items' id field;
-#: ``with_cvec`` carries the winning item's vector on the struct (a third
-#: field never consulted — ids are unique), so residual consumers need no
-#: join-back.  Shared by the k-means assign and the PQ sub-assign.
-def argmin_expr(items: str, vec: str, key: str,
-                with_cvec: bool = False) -> str:
-    cvec = ", 'cvec', it.cvec" if with_cvec else ""
-    return (f"array_min(transform({items}, it -> named_struct("
-            f"'d', aggregate(zip_with({vec}, it.cvec, "
-            "(x, y) -> (x - y) * (x - y)), "
-            "cast(0.0 as double), (acc, v) -> acc + v), "
-            f"'{key}', it.{key}{cvec})))")
+def _seq_subdist(a, b):
+    """Sequential left-fold of Σ(aᵢ−bᵢ)² over the LAST axis — operation-for-
+    operation the Spark ``aggregate(zip_with(..))`` / DuckDB ``list_reduce``
+    fold (single IEEE add per step, no pairwise regrouping, no FMA), so
+    results are bit-equal to both engines.  The one fold behind every numpy
+    distance: the argmin kernel below and the PQ ADC scan (pq._adc_topk)."""
+    diff = a - b
+    sq = diff * diff
+    d = sq[..., 0].copy()
+    for i in range(1, sq.shape[-1]):
+        d += sq[..., i]
+    return d
+
+
+def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
+                 key_type: DataType, dist: str, group: str | None = None,
+                 with_cvec: bool = False) -> DataFrame:
+    """``df`` plus, per row, the item nearest its ``vec`` column: the winning
+    id ``key`` (typed ``key_type``), its squared L2 distance ``dist`` and,
+    with ``with_cvec``, the winner's vector ``cvec`` — one numpy kernel over
+    Arrow batches (``mapInArrow``) against the driver-held ``(key[, group],
+    cvec)`` rows.  With ``group`` set (PQ's subspace ``m``), a row competes
+    only against the items of its own group.  The one argmin behind every
+    k-means / PQ assign (``_assign``, ``pq._assign_sub``).
+
+    Exactness audit (why the result is cell-equal to the DuckDB oracle's
+    ``ROW_NUMBER() OVER (ORDER BY d, id)``):
+
+    * fold order — ``d`` is :func:`_seq_subdist`, Σ(x−c)² left to right, one
+      IEEE multiply and one add per dimension, no pairwise or FMA regrouping;
+    * tie-break — each group's items are sorted by ascending id and numpy's
+      ``argmin`` returns the FIRST minimum, so equal distances go to the
+      lowest id (``-0.0`` and ``0.0`` compare equal, as in both engines);
+    * input precision — vectors arrive as doubles: callers cast the float32
+      embeddings to ``array<double>`` upstream (the oracle's ``::DOUBLE[]``),
+      so numpy folds the same binary64 values the engines fold;
+    * non-finite — a NaN or ±Inf distance raises instead of being ranked
+      (numpy's argmin stops at the first NaN; Spark orders NaN above every
+      double); the embedding gate upstream makes it unreachable on valid
+      input.
+
+    Guards (``ValueError``): a NULL vector, a vector whose width is not the
+    codebook's, a group value missing from the codebook, a non-finite
+    distance.  The id and distance are declared NON-nullable in the output
+    schema, so joins on them infer no ``isnotnull`` filter, and the Python
+    node is a barrier Catalyst pushes no filter through: the argmin runs
+    once per row."""
+    import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    books: dict = {}
+    for r in sorted(items, key=lambda r: r[key]):
+        books.setdefault(r[group] if group else None, []).append(r)
+    books = {g: (np.array([r[key] for r in rs], dtype=np.int64),
+                 np.array([r["cvec"] for r in rs], dtype=np.float64))
+             for g, rs in books.items()}
+    widths = {cb.shape[1] for _, cb in books.values()}
+    if len(widths) > 1:
+        raise ValueError(f"argmin_arrow: codebook widths {sorted(widths)} "
+                         "differ")
+    width = widths.pop() if widths else 0
+    out = [StructField(key, key_type, False), StructField(dist, DoubleType(), False)]
+    if with_cvec:
+        out.append(StructField("cvec", ArrayType(DoubleType(), False), False))
+    schema = StructType(df.schema.fields + out)
+    names, arrow_key = schema.names, to_arrow_type(key_type)
+
+    def kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
+                continue
+            col = batch.column(vec)
+            if col.null_count:
+                raise ValueError(f"argmin_arrow: NULL {vec} vector")
+            gv = (batch.column(group).to_numpy(zero_copy_only=False)
+                  if group else None)
+            groups = np.unique(gv) if group else [None]
+            missing = [g for g in groups if g not in books]
+            if missing:
+                raise ValueError(f"argmin_arrow: no codebook items for "
+                                 f"{group or vec} {missing}")
+            lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+            if (lens != width).any():
+                raise ValueError(f"argmin_arrow: {vec} width "
+                                 f"{sorted(set(lens.tolist()) - {width})} is "
+                                 f"not the codebook's {width}")
+            mat = col.flatten().to_numpy(zero_copy_only=False).reshape(n, width)
+            win = np.empty(n, dtype=np.int64)
+            best = np.empty(n, dtype=np.float64)
+            cv = np.empty((n, width), dtype=np.float64) if with_cvec else None
+            for g in groups:
+                sel = slice(None) if group is None else np.flatnonzero(gv == g)
+                ids, cb = books[g]
+                d = _seq_subdist(mat[sel][:, None, :], cb[None, :, :])
+                if not np.isfinite(d).all():
+                    raise ValueError(f"argmin_arrow: non-finite {vec} "
+                                     "distance")
+                a = d.argmin(axis=1)  # first minimum: ties → lowest id
+                win[sel] = ids[a]
+                best[sel] = d[np.arange(len(a)), a]
+                if with_cvec:
+                    cv[sel] = cb[a]
+            cols = batch.columns + [pa.array(win, type=arrow_key),
+                                    pa.array(best, type=pa.float64())]
+            if with_cvec:
+                cols.append(pa.ListArray.from_arrays(
+                    pa.array(np.arange(n + 1, dtype=np.int32) * width),
+                    pa.array(cv.ravel())))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return df.mapInArrow(kernel, schema)
 
 
 def dlit(x: float) -> str:
@@ -115,10 +214,11 @@ def dlit(x: float) -> str:
 def lit_items(rows, key: str, suffix: str = "") -> str:
     """Driver-held ``(key, cvec)`` rows as ONE literal
     ``array<struct<key, cvec>>`` SQL expression (constant-folded by Catalyst
-    into a single Literal): consumers evaluate the argmin against a CONSTANT
-    — no pack aggregation, no BroadcastExchange job, no join.  ``suffix``
-    types the id literal (``L`` keeps a bigint id bigint).  Element order is
-    sorted by id for reproducibility; min-over-set is order-independent."""
+    into a single Literal): the 10-query sides (pq._probed_cells, the IVFADC
+    LUT) ``inline`` it against a CONSTANT — no pack aggregation, no
+    BroadcastExchange job, no join.  ``suffix`` types the id literal (``L``
+    keeps a bigint id bigint).  Element order is sorted by id for
+    reproducibility."""
     return "array({})".format(", ".join(
         f"named_struct('{key}', {int(r[key])}{suffix}, "
         f"'cvec', array({', '.join(dlit(x) for x in r['cvec'])}))"
@@ -128,30 +228,15 @@ def lit_items(rows, key: str, suffix: str = "") -> str:
 def _assign(emb: DataFrame, centroids: list,
             with_cvec: bool = False) -> DataFrame:
     # ZERO-exchange assignment: the driver-held centroid rows (every round,
-    # the seed included — bounded_rows) bake into a constant-folded literal
-    # and the argmin runs inside the scan projection (``argmin_expr``): no
-    # pack aggregation, no BroadcastExchange job, no join (the trainer
-    # chains are job-count-bound).  The former crossJoin + vec_id-window
-    # shape shuffled and sorted one full copy of every embedding per Lloyd
-    # round (measured at sf0.1: 2,000 records / 820 KB per round); here the
-    # only exchanges left in a round are the tiny (cid, dim) mean partials.
-    #
-    # ``cid`` is coalesced against a sentinel that never occurs: the argmin
-    # over a non-empty centroid set is never null, so values are identical —
-    # but the coalesce makes the COLUMN non-nullable, so downstream joins on
-    # cid generate NO inferred isnotnull constraint.  Without it, Catalyst
-    # rewrites the inferred filter through this projection and re-evaluates
-    # the ENTIRE argmin chain per row a second time (measured: the IVFADC
-    # scorer went 13.3 s → 1.1 s at sf0.1 when the inference died;
-    # test_plan_shapes pins it).
-    out = ["vec_id", "emb",
-           F.coalesce(F.col("best.cid"), F.lit(-1)).alias("cid"),
-           F.col("best.d").alias("dist")]
-    if with_cvec:
-        out.append(F.col("best.cvec").alias("cvec"))
-    best = argmin_expr(lit_items(centroids, "cid", "L"), "emb", "cid",
-                       with_cvec)
-    return emb.withColumn("best", F.expr(best)).select(*out)
+    # the seed included — bounded_rows) ride into the numpy argmin kernel
+    # (``argmin_arrow``) over the scan's Arrow batches: no pack aggregation,
+    # no BroadcastExchange job, no join (the trainer chains are
+    # job-count-bound).  A crossJoin + vec_id-window shape would shuffle and
+    # sort one full copy of every embedding per Lloyd round (measured at
+    # sf0.1: 2,000 records / 820 KB per round); here the only exchanges in a
+    # round are the tiny (cid, dim) mean partials.
+    return argmin_arrow(emb.select("vec_id", "emb"), "emb", centroids, "cid",
+                        LongType(), "dist", with_cvec=with_cvec)
 
 
 def _update(assigned: DataFrame) -> DataFrame:

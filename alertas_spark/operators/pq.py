@@ -48,11 +48,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from alertas_spark.operators.artifacts import (bounded_rows,
                                                persistent_artifact,
                                                persistent_artifact_rows)
-from alertas_spark.operators.kmeans import (_assign, argmin_expr, lit_items,
+from alertas_spark.operators.kmeans import (_assign, _seq_subdist,
+                                            argmin_arrow, lit_items,
                                             lloyd_centroids)
 from alertas_spark.operators.memo import session_artifact
 from alertas_spark.operators.embgate import (EMB_VALID_SQL, np_valid_mask,
@@ -215,18 +217,6 @@ _DUCK_ADC_RANKED = f"""
                                   ORDER BY adist, cand_id) AS rnk
         FROM approx
     )"""
-
-
-def _seq_subdist(a, b):
-    """Sequential left-fold of Σ(aᵢ−bᵢ)² over the LAST axis — operation-for-
-    operation the `_SUBDIST` / `_DUCK_SUBDIST` fold (single IEEE add per step,
-    no pairwise regrouping, no FMA), so results are bit-equal to both engines."""
-    diff = a - b
-    sq = diff * diff
-    d = sq[..., 0].copy()
-    for i in range(1, sq.shape[-1]):
-        d += sq[..., i]
-    return d
 
 
 def _adc_artifacts(spark: SparkSession, sf_dir: str):
@@ -527,9 +517,9 @@ def _lit_codebook_by_m(rows) -> str:
     """A driver-held (m, c, cvec) codebook as ONE literal
     ``array<array<struct<c, cvec>>>`` SQL expression indexed by subspace
     (``element_at(..., m)``), constant-folded by Catalyst into a single
-    Literal.  Consumers evaluate the sub-argmin / LUT against a CONSTANT —
-    no pack aggregation, no BroadcastExchange job, no join-by-m (the
-    trainer chains are job-count-bound; artifacts.bounded_rows)."""
+    Literal.  The IVFADC LUT evaluates against this CONSTANT — no pack
+    aggregation, no BroadcastExchange job, no join-by-m (the trainer chains
+    are job-count-bound; artifacts.bounded_rows)."""
     by_m: dict = {}
     for r in rows:
         by_m.setdefault(r["m"], []).append(r)
@@ -541,20 +531,16 @@ def _lit_codebook_by_m(rows) -> str:
 
 
 def _assign_sub(subs: DataFrame, cw: list) -> DataFrame:
-    """``subs`` plus ``c``/``d``: per (vec_id, m) the codeword minimizing the
-    sequential-fold sub-L2², ties to the lowest id — evaluated scan-side
-    against the literal codebook indexed by ``m`` (zero exchange; the former
-    crossJoin-by-m + struct-min agg shuffled every sub-vector once per
-    pass).  ``sub`` stays on the row for the Lloyd mean."""
-    # c coalesced non-nullable (sentinel never occurs — the argmin over a
-    # non-empty codeword set is never null): joins on c/cid then infer NO
-    # isnotnull constraint, which would otherwise re-evaluate the whole
-    # argmin chain per row as a pushed filter (kmeans._assign rationale)
-    best = argmin_expr(f"element_at({_lit_codebook_by_m(cw)}, m)", "sub", "c")
-    return (subs.withColumn("best", F.expr(best))
-            .select(*subs.columns,
-                    F.coalesce(F.col("best.c"), F.lit(-1)).alias("c"),
-                    F.col("best.d").alias("d")))
+    """``subs`` plus ``c`` (int) / ``d``: per (vec_id, m) the codeword
+    minimizing the sequential-fold sub-L2², ties to the lowest id — the
+    numpy argmin kernel (``kmeans.argmin_arrow``) grouped by subspace ``m``
+    over the scan's Arrow batches, against the driver-held codebook rows
+    (zero exchange: a crossJoin-by-m + struct-min agg would shuffle every
+    sub-vector once per pass).  A subspace missing from the codebook raises;
+    ``c`` is non-nullable by the kernel's output schema, so joins on it
+    infer no isnotnull filter.  ``sub`` stays on the row for the Lloyd
+    mean."""
+    return argmin_arrow(subs, "sub", cw, "c", IntegerType(), "d", group="m")
 
 
 def _lloyd_codebook(subs: DataFrame, what: str) -> DataFrame:
@@ -596,10 +582,11 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest id, DECIMAL(29,6) means) applied per subspace, so training is
     idempotent across partitionings and engines.
 
-    Scale shape per subspace pass: the argmin is a scan-side projection
-    against the codebook baked into a constant-folded literal (seed and
-    trained codebook alike are ≤M·KSUB collected rows — no broadcast, no
-    join), and the means are one (m, c) aggregation with map-side combine
+    Scale shape per subspace pass: the argmin is one numpy kernel over the
+    scan's Arrow batches (``kmeans.argmin_arrow``, grouped by ``m``) against
+    the driver-held codebook (seed and trained codebook alike are ≤M·KSUB
+    collected rows — no broadcast, no join, no interpreted per-row fold),
+    and the means are one (m, c) aggregation with map-side combine
     (M×KSUB cells — tiny).  The qerr sum quantizes each sub-distance to
     1e-9-unit bigints so the 4-term sum is order-independent."""
     v = _normalized(spark, sf_dir)
@@ -665,8 +652,10 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   engine-independent.
 #
 # Scale shape: centroids and codebooks (seeds and trained alike) are tiny
-# collected rows baked into constant-folded literals — no broadcast job, no
-# join; encoding is a scan projection; the probe list bounds the candidate
+# collected rows — no broadcast job, no join; every assign and encode is the
+# numpy argmin kernel over the scan's Arrow batches (kmeans.argmin_arrow),
+# and the 10-query sides (probed cells, LUT) inline them as constant-folded
+# literals; the probe list bounds the candidate
 # join (the IVF prune — candidates shuffle once on cell id, never
 # all-pairs); the final rank is the two-phase exact top-k.  Nothing driver-side grows with the
 # corpus.
@@ -807,8 +796,8 @@ def _coarse_centroids(spark: SparkSession, sf_dir: str) -> list:
 
 def _residual_subs(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
     """(vec_id, cid, m, sub): the per-subspace residual slices — assignment
-    is the zero-shuffle argmin over the LITERAL centroids carrying the
-    winning centroid's vector on the argmin struct (``with_cvec``), so the
+    is the zero-shuffle argmin kernel over the driver-held centroids, which
+    also returns the winning centroid's vector (``with_cvec``), so the
     residual is a zip_with projection with no join-back (the former shape
     paid a broadcast-build job for the pack and another for the c1 join)."""
     a2 = _assign(_normalized(spark, sf_dir), c1, with_cvec=True)

@@ -10,12 +10,13 @@ from __future__ import annotations
 SF = "/root/testdata/sf0.01"
 
 
-def _plan(df) -> str:
+def _plan(df, mode: str = "simple") -> str:
     # "simple" mode: each physical node appears exactly once (formatted mode lists
-    # nodes twice — tree + detail section — which breaks occurrence counting)
+    # nodes twice — tree + detail section — which breaks occurrence counting;
+    # tools/plan_audit.audit_plan reads formatted plans and counts one section)
     spark = df.sparkSession
     return spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple")
+        df._jdf.queryExecution(), mode)
 
 
 def _build(spark, name: str):
@@ -152,20 +153,26 @@ def test_pq_encode_is_scan_side_after_codebook_build(spark):
 
 
 def test_trainer_argmin_never_reruns_as_an_inferred_filter(spark):
-    """The argmin's id column is coalesced non-nullable (kmeans._assign,
-    pq._assign_sub), so a join on it infers no ``isnotnull`` constraint —
-    which Catalyst would push through the projection as a Filter that
-    re-evaluates the whole argmin chain per row (13.3 s vs 1.1 s on the
-    IVFADC scorer at sf0.1).  No Filter may carry the argmin's HOFs: its
-    ``array_min`` or its ``aggregate(zip_with(..))`` distance fold (the
-    embedding validity gate's ``aggregate(transform(..))`` norm fold is a
-    legitimate Filter and stays allowed)."""
+    """Every k-means / PQ assign is ONE numpy kernel over Arrow batches
+    (kmeans.argmin_arrow): its id and distance are declared non-nullable in
+    the kernel's output schema, so a join on the id infers no ``isnotnull``
+    constraint, and the Python node is a barrier Catalyst pushes no filter
+    through — the argmin runs once per row (an inferred filter re-running
+    the former interpreted argmin chain cost 13.3 s vs 1.1 s on the IVFADC
+    scorer at sf0.1).  The kernel shows as ``MapInArrow`` wherever the
+    plan assigns; ``simsearch_topk_ivf_trained`` reads the checkpointed
+    assignment artifact, so its plan has none.  No Filter may carry an
+    interpreted argmin: ``array_min`` or an ``aggregate(zip_with(..))``
+    distance fold (the embedding validity gate's ``aggregate(transform(..))``
+    norm fold is a legitimate Filter and stays allowed)."""
     import re
 
     for name in ("kmeans_assign", "simsearch_topk_ivf_trained",
                  "pq_encode_trained", "simsearch_topk_ivfpq_residual"):
-        conds = [ln.split("Filter ", 1)[1]
-                 for ln in _plan(_build(spark, name)).splitlines()
+        plan = _plan(_build(spark, name))
+        if name != "simsearch_topk_ivf_trained":
+            assert "MapInArrow" in plan, name
+        conds = [ln.split("Filter ", 1)[1] for ln in plan.splitlines()
                  if re.search(r"\bFilter ", ln)]
         for cond in conds:
             for hof in ("array_min", "zip_with"):
@@ -173,7 +180,12 @@ def test_trainer_argmin_never_reruns_as_an_inferred_filter(spark):
 
 
 def test_pq_adc_topk_shuffles_only_for_the_window(spark):
-    plan = _plan(_build(spark, "simsearch_topk_pq"))
+    from tools.plan_audit import audit_plan
+
+    df = _build(spark, "simsearch_topk_pq")
+    plan = _plan(df)
+    # the one Python-eval node is the ADC scan itself
+    assert audit_plan(_plan(df, "formatted"))["py"] == 1
     # r6 two-phase shape: codes + ADC distances + partition-local top-k all live
     # in one numpy mapInPandas scan; the ONLY shuffle is the exact final rank
     # window over the ≤ k·partitions-per-query shortlist

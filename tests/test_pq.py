@@ -298,3 +298,82 @@ def test_codebook_literal_refuses_a_missing_subspace():
     assert _lit_codebook_by_m(rows).startswith("array(array(")
     with pytest.raises(ValueError, match="subspaces"):
         _lit_codebook_by_m([r for r in rows if r["m"] != 2])
+
+
+def test_argmin_kernel_matches_a_sequential_fold_bit_for_bit(spark):
+    """kmeans.argmin_arrow against a pure-Python left-to-right fold: equal
+    ids and bit-equal distances on duplicate centroids (the tie goes to the
+    lowest id), ``-0.0`` and ``1e-30`` components, and squares whose
+    pairwise sum differs from the sequential one (1e16 + 1 + … + 1, which
+    numpy's own ``sum`` regroups at this width); plus the
+    four guards (NULL vector, wrong width, uncovered group, non-finite
+    distance)."""
+    import struct
+
+    import pytest
+    from pyspark.sql.types import IntegerType, LongType
+
+    from alertas_spark.operators.kmeans import argmin_arrow
+
+    def fold(x, c):
+        d = 0.0
+        for a, b in zip(x, c):
+            d += (a - b) * (a - b)
+        return d
+
+    def bits(x):
+        return struct.pack("<d", x)
+
+    dup = [1.0, -0.0, 1e-30, 0.0]
+    items = [{"m": m, "cid": cid, "cvec": cvec}
+             for m in (1, 2)
+             for cid, cvec in ((5, dup), (2, dup), (9, [0.5] * 4),
+                               (7, [0.0, 1e-30, -1e-30, -0.0]),
+                               (3, [0.0, 0.0, 0.0, 1e-30 * m]))]
+    vecs = [[1.0, 0.0, 1e-30, -0.0], [-0.0, 0.0, 0.0, 0.0],
+            [1e-30, 1e-30, 1e-30, 1e-30], [0.1, 0.2, 0.3, 0.4],
+            [1e8, 1.0, 1.0, 1.0], [0.5, 0.5, 0.5, 0.5],
+            [0.75, 0.25, -0.0, 1e-30], [-1e-30, 0.0, 0.0, 2e-30]]
+    rows = [(i, 1 + i % 2, v) for i, v in enumerate(vecs * 3)]
+    df = spark.createDataFrame(rows, "vec_id bigint, m int, emb array<double>")
+
+    for group in (None, "m"):
+        book = items if group else [r for r in items if r["m"] == 1]
+        got = {r.vec_id: r for r in argmin_arrow(
+            df, "emb", book, "cid", LongType(), "dist", group=group,
+            with_cvec=True).collect()}
+        assert len(got) == len(rows)
+        for vid, m, v in rows:
+            cands = sorted((fold(v, r["cvec"]), r["cid"], r["cvec"])
+                           for r in book if not group or r["m"] == m)
+            d, cid, cvec = cands[0]
+            assert (got[vid].cid, bits(got[vid].dist)) == (cid, bits(d)), vid
+            assert [bits(x) for x in got[vid].cvec] == [bits(x) for x in cvec]
+    # the tie: rows equal to the duplicated centroid go to cid 2, not 5
+    assert {r.cid for r in argmin_arrow(
+        df.filter("vec_id = 0"), "emb", items, "cid", LongType(), "dist",
+        group="m").collect()} == {2}
+    # the fold order: 1e16 followed by fifteen 1s folds to 1e16 left to
+    # right; a pairwise or blocked sum keeps some of the 1s
+    wide = [1e8] + [1.0] * 15
+    (r,) = argmin_arrow(
+        spark.createDataFrame([(0, wide)], "vec_id bigint, emb array<double>"),
+        "emb", [{"cid": 0, "cvec": [0.0] * 16}], "cid", LongType(),
+        "dist").collect()
+    assert bits(r.dist) == bits(fold(wide, [0.0] * 16)) == bits(1e16)
+
+    def run(data, book, group=None):
+        return argmin_arrow(
+            spark.createDataFrame(data, "vec_id bigint, m int, "
+                                        "emb array<double>"),
+            "emb", book, "c", IntegerType(), "d", group=group).collect()
+
+    cb = [{"m": 1, "c": 0, "cvec": [0.0, 0.0]},
+          {"m": 1, "c": 1, "cvec": [1.0, 1.0]}]
+    assert [r.c for r in run([(0, 1, [0.9, 0.9])], cb, "m")] == [1]
+    for data, match in (([(0, 1, None)], "NULL emb"),
+                        ([(0, 1, [0.5, 0.5, 0.5])], "width"),
+                        ([(0, 2, [0.5, 0.5])], "no codebook items for m"),
+                        ([(0, 1, [1e200, 0.0])], "non-finite")):
+        with pytest.raises(Exception, match=match):
+            run(data, cb, "m")

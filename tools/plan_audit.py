@@ -7,6 +7,8 @@ matter at 100 TB:
 * ``bhj/smj/bnl`` — broadcast-hash vs sort-merge vs nested-loop join counts;
 * ``exchanges``   — shuffle count (the scale cost driver);
 * ``codegen``     — WholeStageCodegen span count vs interpreted operators;
+* ``py``          — Python-eval nodes (MapInArrow / MapInPandas /
+  ArrowEvalPython / BatchEvalPython): where rows leave the JVM for a worker;
 * flags: full-width scans (no column pruning), non-broadcast joins against tiny
   inputs, cartesian products.
 
@@ -41,6 +43,8 @@ def audit_plan(plan: str) -> dict:
         # cache-POPULATION lineage (executed once), not per-consumer re-reads —
         # so read `scans` alongside this column, not alone (alerta_prcr).
         "imts": len(re.findall(r"InMemoryTableScan", plan)),
+        "py": len(re.findall(r"\(\d+\) (?:MapInArrow|MapInPandas|"
+                             r"ArrowEvalPython|BatchEvalPython)\b", plan)),
     }
 
 
@@ -50,7 +54,7 @@ def main() -> None:
 
     spark = get_spark("plan-audit")
     registry = load_all()
-    print(f"{'query':36} scans pushed bhj smj shj bnlj cart exch codegen imts")
+    print(f"{'query':36} scans pushed bhj smj shj bnlj cart exch codegen imts py")
     for name, q in sorted(registry.items()):
         if ONLY and name not in ONLY:
             continue
@@ -69,7 +73,7 @@ def main() -> None:
             flags.append("no-broadcast")
         print(f"{name:36} {a['scans']:5} {a['pushed']:6} {a['bhj']:3} {a['smj']:3} "
               f"{a['shj']:3} {a['bnlj']:4} {a['cartesian']:4} {a['exchange']:4} "
-              f"{a['codegen']:7} {a['imts']:4}  {' '.join(flags)}")
+              f"{a['codegen']:7} {a['imts']:4} {a['py']:2}  {' '.join(flags)}")
 
 
 if __name__ == "__main__":
