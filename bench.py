@@ -1,12 +1,15 @@
-"""Benchmark runner — the driver's per-round feedback loop.
+"""Benchmark runner: the cold-run harness for the declared-query corpus.
 
-Runs every declared query at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+    python bench.py              # every query; the full record, also written
+                                 # to BENCH_LOCAL.json
+    python bench.py NAME [...]   # only the named queries; writes nothing
 
-    {"metric": "...", "value": <total_sec>, "unit": "sec", "queries": {...}, "sf": ...}
-
-Each query is forced with the noop sink (full computation, no driver collect) —
-measuring the engine, not result serialization.
+Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
+``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line.  Each query is forced
+with the noop sink (full computation, no driver collect).  Besides its time,
+every query gets a ``layers`` entry: builder vs action seconds and jobs, plus
+the Spark counters of ``perfbench/sparkrest.summarize``.  README's bench
+section describes the protocol.
 """
 
 from __future__ import annotations
@@ -14,424 +17,265 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path.insert(1, os.path.join(ROOT, "perfbench"))
+
+from run import pretouch, spark_conf  # noqa: E402  (perfbench/run.py)
+from sparkrest import Rest, summarize  # noqa: E402
+
+RECORD = os.path.join(ROOT, "BENCH_LOCAL.json")
+#: per-query time = min over this many cold runs (a machine-noise guard)
+PASSES = 2
+#: perfbench's retained-UI limits: the REST API must still list every job
+RETAINED_UI = {k: v for k, v in spark_conf("").items() if ".retained" in k}
+FIXTURE_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+                  "lineitem", "events", "documents", "embeddings")
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
+def timed_run(spark, rest: Rest, query, sf_dir: str) -> tuple[float, dict]:
+    """One noop-sink run of a declared query: ``(wall seconds, layers)``.
 
+    The clock covers ``builder()`` and ``save()`` only; the job-id watermark
+    between them and the counter reads after them stay outside it."""
+    j0 = rest.max_job_id()
+    t0 = time.time()
+    df = query.builder(spark, sf_dir)
+    t1 = time.time()
+    j1 = rest.max_job_id()
+    t2 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    t3 = time.time()
+    j2 = rest.max_job_id()
+    jobs = rest.jobs_between(j0, j2)
+    layers = {"builder_s": t1 - t0, "action_s": t3 - t2,
+              "builder_jobs": j1 - j0, "action_jobs": j2 - j1,
+              **summarize(jobs, rest.stages(jobs), [(t0, t1), (t2, t3)],
+                          spark.sparkContext.defaultParallelism)}
+    return (round(t1 - t0 + t3 - t2, 3),
+            {k: round(v, 3) for k, v in layers.items()})
+
+
+def main(names: list[str]) -> int:
     from alertas_spark.registry import load_all
+
+    registry = load_all()
+    unknown = [n for n in names if n not in registry]
+    if unknown:
+        print(f"bench.py: unknown query: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+
+    from alertas_spark.operators import artifacts, memo
     from alertas_spark.session import get_spark
 
-    spark = get_spark("alertas-bench")
-    registry = load_all()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("alertas-bench", extra_conf=RETAINED_UI)
+    rest = Rest(spark)
 
-    # Pre-touch every fixture byte and RECORD the observed read rate (r15
-    # postmortem: four same-head runs spread 239.7-297.0 s and the committed
-    # record was the cold-page-cache outlier, manufacturing 5x phantom
-    # per-query regressions).  Reading the files here (a) makes every record
-    # page-cache-WARM by construction — a cold-cache record can no longer be
-    # produced, let alone committed — and (b) stamps the evidence: warm
-    # reads run at RAM speed (GB/s), a cold first touch at disk speed.
-    cache_state = {"prewarm_mb": 0.0, "prewarm_mb_per_s": None,
-                   "initial": "unknown"}
-    try:
-        import glob as _glob
-        nbytes, t0 = 0, time.time()
-        for pat in (os.path.join(sf_dir, "*.parquet"),
-                    os.path.join(sf_dir, "*.parquet", "*.parquet")):
-            for f in _glob.glob(pat):
-                if os.path.isfile(f):
-                    with open(f, "rb") as fh:
-                        # count actual chunk lengths: charging a full 4 MiB
-                        # for the final partial chunk inflates the rate by
-                        # up to 4 MiB per file, enough to mislabel a cold
-                        # run "warm" over many small files (r16 advice)
-                        while (chunk := fh.read(1 << 22)):
-                            nbytes += len(chunk)
-        dt = max(time.time() - t0, 1e-9)
-        rate = nbytes / dt / 1e6
-        cache_state = {"prewarm_mb": round(nbytes / 1e6, 1),
-                       "prewarm_mb_per_s": round(rate, 1),
-                       # ~RAM speed → the cache was already warm; disk-bound
-                       # → this run started cold and THIS read warmed it
-                       "initial": "warm" if rate > 1500 else "cold"}
-    except Exception as ex:
-        print(f"# fixture prewarm skipped: {ex}", file=sys.stderr)
+    def run(name: str) -> tuple[float, dict]:
+        return timed_run(spark, rest, registry[name], sf_dir)
 
-    # warm the JVM/Python workers so per-query numbers measure steady-state
+    # Every record is page-cache-warm by construction; the read rate says
+    # whether the cache was warm before (RAM speed) or this read warmed it.
+    mb, rate = pretouch([sf_dir])
+    cache_state = {"prewarm_mb": round(mb, 1), "prewarm_mb_per_s": round(rate, 1),
+                   "initial": "warm" if rate > 1500 else "cold"}
+
+    # Untimed warm-up: JVM and Python workers, the alert corpus's shared
+    # context (per-session infrastructure, not the first alert's cost), one
+    # real query for codegen and the noop sink, and one Arrow round-trip.
     spark.range(1000).selectExpr("sum(id)").collect()
-    # ... and the alert-corpus shared context (fixture generation + cached base
-    # views): that is per-SESSION infrastructure amortized across 20 alert queries,
-    # not per-query cost — without this the first alert in registry order absorbs
-    # all of it (~10 s) and round-over-round diffs misattribute it as a regression.
     try:
         from alertas_spark.plans.alert_corpus import _ctx
 
         _ctx(spark).view("documentos_ativos").count()
     except Exception as ex:
         print(f"# bench warmup skipped: {ex}", file=sys.stderr)
-
-    # One untimed WARMUP QUERY per session (r16 verdict item 1): the first
-    # timed query of a session otherwise absorbs whole-stage-codegen, noop-sink
-    # and Arrow-worker warmup (~2x measured on heavy queries; the r16 record's
-    # 10x multiprobe phantom was first-query-of-session warmup under load).
-    # The warmup runs a real corpus query end-to-end plus one pandas_udf
-    # round-trip so both the codegen and the Arrow paths are hot before any
-    # clock starts.
     try:
-        from alertas_spark.operators import memo as _memo_wu
-        from alertas_spark.operators import artifacts as _art_wu
+        from pyspark.sql.functions import pandas_udf
 
-        # first query WITHOUT persistent artifacts: a persistent-tier warmup
-        # would build and store that query's artifacts before its own "cold"
-        # timing, understating it (r17 advice)
-        _first = next(n for n in registry
-                      if n not in _art_wu.PERSISTENT_QUERIES)
-        registry[_first].builder(spark, sf_dir) \
-            .write.format("noop").mode("overwrite").save()
-        _memo_wu.clear()
-        from pyspark.sql.functions import pandas_udf as _pudf
-
-        # lambda form: a def with local type hints is stringified by
-        # `from __future__ import annotations` and pandas_udf can't
-        # resolve the local alias
-        _wu = _pudf(lambda s: s, "long")
-        spark.range(1000).select(_wu("id")) \
+        # a query without persistent artifacts: warming a persistent one
+        # would store its artifacts before its own cold timing
+        run(next(n for n in registry if n not in artifacts.PERSISTENT_QUERIES))
+        memo.clear()
+        # lambda form: `from __future__ import annotations` stringifies a
+        # def's type hints and pandas_udf can't resolve them
+        identity = pandas_udf(lambda s: s, "long")
+        spark.range(1000).select(identity("id")) \
             .write.format("noop").mode("overwrite").save()
     except Exception as ex:
         print(f"# bench query warmup skipped: {ex}", file=sys.stderr)
 
-    # Prior committed record, read BEFORE this run overwrites it: the >3x
-    # swing guard below re-times any apparent regression standalone instead
-    # of committing a phantom (r16 verdict item 1c).
-    prior_record: dict = {}
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_LOCAL.json")) as fh:
-            prior_record = json.load(fh)
-    except Exception:
-        pass
-
-    # Per-query time = min of two COLD passes: a single sample conflates the query
-    # with whatever the machine was doing that second (observed 1.5-2x whole-corpus
-    # swings between back-to-back runs), and the min is the steady-state cost the
-    # plan actually has.  COLD means the session-scoped trained-artifact memo
-    # (operators/memo.py) is cleared before every timed run, so each query pays its
-    # full standalone cost — kmeans training, PQ codebooks, dashboard truth sets —
-    # and min-of-2 stays purely a machine-noise guard, never a cache-warmth
-    # artifact.  The corpus metric is the sum of per-query cold minima.
-    from alertas_spark.operators import memo
-
-    # Queries whose pre-r7 bench numbers were contaminated by Spark's
-    # canonicalized-subplan cache: operator-internal .cache() calls (the ngram
-    # verifier's shingle table, the MinHash signature table) warmed the SECOND
-    # cold pass of the same query and ANY other query sharing the subplan.
-    # From r7 memo.clear() unpersists tracked operator caches, so these
-    # queries' timings are honestly cold and NOT comparable to r6-and-earlier
-    # records (tools/bench_diff.py excludes them across the boundary).
-    cache_cold_since_r7 = [
-        "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_jaccard_prefix_filter",
-        "dedup_components", "dedup_cluster_representative",
-        "pipeline_clean_corpus", "pipeline_clean_corpus_v2",
-    ]
-
+    # Cold passes: the trained-artifact memo is cleared before every timed
+    # run, so each query pays its full standalone cost.  A query keeps the
+    # layers of its faster run; an error in either pass marks it -1.0.
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     memoized: set[str] = set()
-    for _pass in range(2):
-        for name, q in registry.items():
+    for _pass in range(PASSES):
+        for name in names or registry:
             memo.clear()
-            t0 = time.time()
             try:
-                q.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                t = round(time.time() - t0, 3)
-            except Exception as ex:  # keep the bench line parseable even on one failure
-                t = -1.0
+                t, layer = run(name)
+            except Exception as ex:  # keep the bench line parseable
+                t, layer = -1.0, {"error": str(ex)[:300]}
                 print(f"# bench error {name}: {ex}", file=sys.stderr)
             if memo.artifact_count():
                 memoized.add(name)
             prev = timings.get(name)
-            timings[name] = -1.0 if (t < 0 or (prev is not None and prev < 0)) \
-                else min(t, prev) if prev is not None else t
+            if prev is None or prev >= 0 and (t < 0 or t < prev):
+                timings[name], layers[name] = t, layer
+    memo.clear()
+    if names:
+        print(json.dumps({"queries": timings, "layers": layers}))
+        return 1 if any(t < 0 for t in timings.values()) else 0
 
-    # >3x swing guard (r16 verdict item 1c): a per-query regression beyond 3x
-    # vs the prior committed record on IDENTICAL fixtures is, on this repo's
-    # history, machine state — not code (r15: 5x phantoms from a dropped page
-    # cache; r16: a 10x multiprobe phantom from session warmup under load).
-    # Re-time each such query standalone (2 extra cold passes), fold the min
-    # in, and ANNOTATE the record so the round diff shows the evidence
-    # instead of the phantom.
-    retimed: dict[str, dict] = {}
+    from alertas_spark.operators.artifacts import dataset_fingerprint
+
+    fixtures = {t: dataset_fingerprint(sf_dir, t) for t in FIXTURE_TABLES}
     try:
-        from alertas_spark.operators.artifacts import dataset_fingerprint as _dfp
+        with open(RECORD) as fh:
+            prior = json.load(fh)
+    except (OSError, ValueError):
+        prior = {}
 
-        same_fixtures = prior_record.get("fixtures") and all(
-            prior_record["fixtures"].get(t) == _dfp(sf_dir, t)
-            for t in prior_record["fixtures"])
-        if same_fixtures:
-            prior_q = prior_record.get("queries") or {}
-            for name, t in sorted(timings.items()):
-                old = prior_q.get(name)
-                if old is None or old < 1.0 or t <= 3 * old:
-                    continue
-                samples = []
-                for _p in range(2):
-                    memo.clear()
-                    t0 = time.time()
-                    try:
-                        registry[name].builder(spark, sf_dir) \
-                            .write.format("noop").mode("overwrite").save()
-                        samples.append(round(time.time() - t0, 3))
-                    except Exception:
-                        break
-                if samples:
-                    retimed[name] = {"in_loop": t, "standalone": samples,
-                                     "prior": old}
-                    timings[name] = min(t, *samples)
-    except Exception as ex:
-        print(f"# bench swing guard skipped: {ex}", file=sys.stderr)
+    # Swing guard: on identical fixtures, a >3x per-query regression vs the
+    # prior record has so far always been machine state, not code.  Re-time
+    # it standalone and annotate the evidence under 'retimed'.
+    retimed: dict[str, dict] = {}
+    if prior.get("fixtures") == fixtures:
+        prior_q = prior.get("queries") or {}
+        for name, t in sorted(timings.items()):
+            old = prior_q.get(name)
+            if old is None or old < 1.0 or t <= 3 * old:
+                continue
+            samples = []
+            for _p in range(PASSES):
+                memo.clear()
+                try:
+                    s, layer = run(name)
+                except Exception:
+                    break
+                samples.append(s)
+                if s < timings[name]:
+                    timings[name], layers[name] = s, layer
+            if samples:
+                retimed[name] = {"in_loop": t, "standalone": samples, "prior": old}
+    memo.clear()
 
-    total = round(sum(t for t in timings.values() if t >= 0), 3)
-
-    # Session-warm timings for the artifact-memoized queries, reported SEPARATELY
-    # (never folded into the headline): in a real multi-query session the trained
-    # quantizer/codebook is built once and shared, so this is the marginal cost of
-    # re-running such a query with its artifacts live.  Each query's own prior run
-    # warms its memo; no cross-query sharing is staged here.
+    # Warm tier, outside the headline: the marginal cost of re-running a
+    # memoized query with its own session artifacts live.
     warm: dict[str, float] = {}
-    for name in memoized:
+    for name in sorted(memoized):
         memo.clear()
-        q = registry[name]
         try:
-            q.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t0 = time.time()
-            q.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            warm[name] = round(time.time() - t0, 3)
+            run(name)  # populates the memo
+            warm[name] = run(name)[0]
         except Exception as ex:
             warm[name] = -1.0
             print(f"# bench warm error {name}: {ex}", file=sys.stderr)
     memo.clear()
 
-    # Third tier — queries_warm_persistent: the CROSS-SESSION cost.  A prior
-    # session persisted the trained artifacts (IVF assignment table, PQ
-    # codebook) into the versioned store (operators/artifacts.py); this tier
-    # times each trained query in a simulated NEW session — session memo
-    # cleared, only the on-disk store warm — i.e. what tomorrow's pipeline
-    # run pays.  Queries whose paths persist nothing are skipped (their
-    # cross-session cost IS the cold number).
+    # Persistent tier, outside the headline: the cross-session cost.  A
+    # trained query re-timed in a simulated new session (memo cleared)
+    # against an artifact store its own earlier run populated.
     persistent: dict[str, float] = {}
+    dropped = artifacts.PERSISTENT_QUERIES - memoized
+    if dropped:
+        print(f"# bench persistent tier: declared-persistent queries missing "
+              f"from the memoized set (not timed): {sorted(dropped)}",
+              file=sys.stderr)
+    art_dir = tempfile.mkdtemp(prefix="bench_artifacts_")
     try:
-        import shutil
-        import tempfile
-
-        from alertas_spark.operators import artifacts as _art
-
-        art_dir = tempfile.mkdtemp(prefix="bench_artifacts_")
-        try:
-            # only the queries whose paths actually persist artifacts
-            # (artifacts.PERSISTENT_QUERIES, accuracy pytest-pinned) — probing
-            # every memoized query end-to-end just to learn via build_count
-            # that it persists nothing doubled this tier's cost.  A declared
-            # persistent query that did NOT memoize in the cold loop would be
-            # silently dropped from the tier — surface it instead.
-            dropped = _art.PERSISTENT_QUERIES - memoized
-            if dropped:
-                print(f"# bench persistent tier: declared-persistent queries "
-                      f"missing from the memoized set (not timed): "
-                      f"{sorted(dropped)}", file=sys.stderr)
-            for name in sorted(memoized & _art.PERSISTENT_QUERIES):
-                q = registry[name]
-                memo.clear()
-                # per-query store root: artifacts persisted by an earlier
-                # query in this loop must not mask a later query's own
-                # populate step (shared roots make build_count stay flat)
-                spark.conf.set(_art.CONF_KEY, os.path.join(art_dir, name))
-                b0 = _art.build_count()
-                try:
-                    q.builder(spark, sf_dir).write.format("noop") \
-                        .mode("overwrite").save()  # populates the store
-                    if _art.build_count() == b0:
-                        continue  # nothing persistent in this query's path
-                    # min of 2, same machine-noise guard as the cold loop:
-                    # this tier was a SINGLE sample through r10, and one GC
-                    # pause in the end-of-bench session faked a 5.2->20.8s
-                    # "regression" (r10 verdict #2; a controlled re-run of
-                    # the identical protocol measured 5.0-6.1s)
-                    for _p in range(2):
-                        memo.clear()  # new-session simulation: memo cold,
-                        t0 = time.time()  # store warm
-                        q.builder(spark, sf_dir).write.format("noop") \
-                            .mode("overwrite").save()
-                        t = round(time.time() - t0, 3)
-                        persistent[name] = min(persistent.get(name, t), t)
-                except Exception as ex:
-                    # a transient second-pass failure must not erase a valid
-                    # first-pass sample already min()-ed into the dict
-                    if name not in persistent:
-                        persistent[name] = -1.0
-                    print(f"# bench persistent error {name}: {ex}",
-                          file=sys.stderr)
-        finally:
-            spark.conf.unset(_art.CONF_KEY)
-            shutil.rmtree(art_dir, ignore_errors=True)
+        for name in sorted(memoized & artifacts.PERSISTENT_QUERIES):
             memo.clear()
-    except Exception as ex:
-        print(f"# bench persistent tier skipped: {ex}", file=sys.stderr)
+            # per-query store root: an earlier query's artifacts must not
+            # mask this query's own populate step
+            spark.conf.set(artifacts.CONF_KEY, os.path.join(art_dir, name))
+            b0 = artifacts.build_count()
+            try:
+                run(name)  # populates the store
+                if artifacts.build_count() == b0:
+                    continue  # nothing persistent in this query's path
+                for _p in range(PASSES):
+                    memo.clear()
+                    t = run(name)[0]
+                    persistent[name] = min(persistent.get(name, t), t)
+            except Exception as ex:
+                # a second-pass failure keeps a valid first-pass sample
+                persistent.setdefault(name, -1.0)
+                print(f"# bench persistent error {name}: {ex}", file=sys.stderr)
+    finally:
+        spark.conf.unset(artifacts.CONF_KEY)
+        shutil.rmtree(art_dir, ignore_errors=True)
+        memo.clear()
 
-    # The nightly-batch e2e: all active alerts computed, staged and published
-    # through the engine (incl. the S7-S11 publication sinks the per-query loop
-    # never exercises).  One pass, wall-clock — mirrors the reference's
-    # Timer-phased generateAlertas run.
+    # The nightly batch end to end: every active alert computed, staged and
+    # published through the engine, min of PASSES full passes, under the
+    # same swing guard as the queries.
     alert_batch = -1.0
     try:
-        import shutil
-        import tempfile
-
         from alertas_spark.framework import engine
         from alertas_spark.framework.context import AlertContext
         from alertas_spark.testing.fixtures import AS_OF, ensure_fixtures
 
-        fixture_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                   ".fixtures", "mprj")
+        fixture_dir = os.path.join(ROOT, ".fixtures", "mprj")
         ensure_fixtures(fixture_dir)
         wh = tempfile.mkdtemp(prefix="bench_wh_")
+
+        def batch() -> float:
+            spark.catalog.clearCache()
+            ctx = AlertContext(spark=spark, warehouse=wh, as_of=AS_OF)
+            t0 = time.time()
+            engine.run_all(ctx, quiet=True)
+            return round(time.time() - t0, 3)
+
         try:
             for schema in ("exadata", "exadata_aux", "opengeo", "alertas_compras"):
-                os.symlink(os.path.join(fixture_dir, schema),
-                           os.path.join(wh, schema))
+                os.symlink(os.path.join(fixture_dir, schema), os.path.join(wh, schema))
             os.makedirs(os.path.join(wh, "alertas"))
-            # min of 2 full passes, same machine-noise guard as the per-query
-            # loop: single samples of this ~20s e2e batch swung 16.6→32.7s on
-            # unchanged code; each pass rebuilds the cached base views and
-            # rewrites every sink (cold), so the min is protocol-clean
-            for _pass in range(2):
-                spark.catalog.clearCache()
-                ctx = AlertContext(spark=spark, warehouse=wh, as_of=AS_OF)
-                t0 = time.time()
-                engine.run_all(ctx, quiet=True)
-                t = round(time.time() - t0, 3)
-                alert_batch = t if alert_batch < 0 else min(alert_batch, t)
-            # Same >3x swing guard as the per-query tier (r17 verdict item 4:
-            # the batch number previously sat outside both the guard and the
-            # movers annotation, so a 1.42x machine-state swing went
-            # unflagged).  A >3x regression vs the prior committed record is
-            # re-timed with one extra full pass and annotated under
-            # 'retimed' exactly like a query.
-            prior_batch = prior_record.get("alert_batch_wall_clock")
+            alert_batch = min(batch() for _p in range(PASSES))
+            prior_batch = prior.get("alert_batch_wall_clock")
             if (prior_batch is not None and prior_batch >= 1.0
                     and alert_batch > 3 * prior_batch):
-                spark.catalog.clearCache()
-                ctx = AlertContext(spark=spark, warehouse=wh, as_of=AS_OF)
-                t0 = time.time()
-                engine.run_all(ctx, quiet=True)
-                t = round(time.time() - t0, 3)
+                t = batch()
                 retimed["alert_batch_wall_clock"] = {
-                    "in_loop": alert_batch, "standalone": [t],
-                    "prior": prior_batch}
+                    "in_loop": alert_batch, "standalone": [t], "prior": prior_batch}
                 alert_batch = min(alert_batch, t)
         finally:
             spark.catalog.clearCache()
             shutil.rmtree(wh, ignore_errors=True)
     except Exception as ex:
         print(f"# bench alert-batch skipped: {ex}", file=sys.stderr)
-    # The recorder keeps the TAIL of this line: serialize queries ascending-by-time
-    # (slowest — most informative — last) and the headline keys after them, so a
-    # front truncation costs only the fastest per-query entries.  Full record also
-    # goes to BENCH_LOCAL.json for round-over-round diffing (tools/bench_diff.py).
-    # Fixture fingerprints: the driver regenerates /root/testdata between
-    # rounds, and regenerated content shifts absolute per-query times (r8
-    # postmortem: the six vector-family queries drifted +28-56% r7→r8 purely
-    # from fixture regeneration — A/B at both code points on byte-identical
-    # fixtures showed the r8 code FASTER on every one; SCALING.md).  Recording
-    # the input identity lets bench_diff gate cross-round comparison on it.
-    try:
-        from alertas_spark.operators.artifacts import dataset_fingerprint
 
-        fixtures = {t: dataset_fingerprint(sf_dir, t)
-                    for t in ("region", "nation", "customer", "supplier",
-                              "part", "orders", "lineitem", "events",
-                              "documents", "embeddings")}
-    except Exception:
-        fixtures = {}
+    sf = re.search(r"sf([0-9.]+)", sf_dir)
+    # The recorder keeps the TAIL of the printed line: the queries go last,
+    # ascending by time, so the slowest survive a front truncation.
     record = {
         "cache_state": cache_state,
-        "retimed": retimed,  # >3x swings vs the prior record, re-timed standalone
-        "queries": dict(sorted(timings.items(), key=lambda kv: kv[1])),
+        "retimed": retimed,
         "fixtures": fixtures,
-        "queries_warm_shared_artifacts": dict(sorted(warm.items())),
+        "layers": dict(sorted(layers.items())),
+        "queries_warm_shared_artifacts": warm,
         "queries_warm_persistent": dict(sorted(persistent.items())),
-        "cache_cold_since_r7": cache_cold_since_r7,
-        "alert_batch_wall_clock": alert_batch,  # min of 2 cold passes; same
-        # >3x swing guard + bench_min min-merge as the query tier (r18)
+        "queries": dict(sorted(timings.items(), key=lambda kv: kv[1])),
+        "alert_batch_wall_clock": alert_batch,
         "metric": "declared_query_corpus_wall_clock",
-        "value": total,
+        "value": round(sum(t for t in timings.values() if t >= 0), 3),
         "unit": "sec",
-        "sf": sf,
-        "protocol": ("one untimed WARMUP QUERY + one Arrow round-trip run "
-                     "before any clock starts (r17: the first timed query of "
-                     "a session no longer absorbs codegen/Arrow warmup), and "
-                     "any per-query time exceeding 3x the prior committed "
-                     "record on identical fixtures is re-timed standalone "
-                     "and annotated under 'retimed' — never run bench "
-                     "concurrently with pytest or scale probes.  "
-                     "fixture bytes are PRE-TOUCHED before any timing and "
-                     "the observed read rate recorded in cache_state — every "
-                     "record is page-cache-warm by construction (r16; the "
-                     "r15 committed record was a documented cold-cache "
-                     "outlier).  When multiple same-head runs exist, commit "
-                     "the per-query MIN merge (tools/bench_min.py), never a "
-                     "single noisy run.  "
-                     "per-query = min of 2 COLD passes (trained-artifact memo "
-                     "cleared before every timed run, so min-of-2 is purely a "
-                     "machine-noise guard).  MEASURED whole-corpus noise band "
-                     "on unchanged code + byte-identical fixtures: up to 1.25x "
-                     "total wall-clock between runs under differing background "
-                     "load (r11: builder-at-head 204.2s vs driver 164.2s, same "
-                     "commit, same fingerprints) — so compare rounds by the "
-                     "per-query GEOMEAN ratio over common queries, never by "
-                     "the totals, and treat any single-query swing without a "
-                     "code-level mover as load noise until it repeats across "
-                     "two rounds (the r10->r11 postmortems both followed this "
-                     "rule); "
-                     "queries_warm_shared_artifacts = same query re-timed with "
-                     "its session memo live (multi-query-session marginal cost), "
-                     "disclosed separately and excluded from the headline; "
-                     "queries_warm_persistent = trained query re-timed in a "
-                     "simulated NEW session (memo cleared) against a "
-                     "pre-populated persistent artifact store — the "
-                     "cross-session cost (r9; min of 2 from r11 — the single "
-                     "sample this tier took through r10 let one end-of-bench "
-                     "GC pause fake a 4x dashboard regression); also excluded "
-                     "from the headline "
-                     "(simsearch_recall_dashboard's persistent-warm residue is "
-                     "the five ANN tier plans themselves — ground truth is "
-                     "artifact-served from r10 (brute-force scan 0.9s -> 0.12s "
-                     "load), but tier plans recompute every session BY DESIGN: "
-                     "they are the measured subject, and artifact-serving "
-                     "their outputs would turn the dashboard into a cache "
-                     "read); "
-                     "streaming_* carry ~1-2s fixed micro-batch + state-store "
-                     "machinery per run; fixture regeneration between rounds "
-                     "shifts absolute times — per-query cross-round deltas are "
-                     "comparable ONLY between records whose fixtures "
-                     "fingerprints match (the r7->r8 vector-family drift was "
-                     "exactly this: regenerated embeddings/documents, not "
-                     "code); operator caches unpersisted "
-                     "before every timed run (r7) — cache_cold_since_r7 lists "
-                     "the queries whose earlier-round numbers were "
-                     "subplan-cache warm and are not comparable"),
+        "sf": float(sf.group(1)) if sf else None,
     }
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_LOCAL.json"), "w") as fh:
+    with open(RECORD, "w") as fh:
         json.dump(record, fh, indent=1)
         fh.write("\n")
     print(json.dumps(record))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

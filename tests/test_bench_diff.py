@@ -1,24 +1,14 @@
-"""Pin the bench_diff protocol-boundary rules: warm-vs-cold pairs must be
-refused, not graded as regressions (judge r6 item #5, extended for the r7
-operator-cache boundary)."""
+"""Pin the bench_diff gate and the bench_min merge on hand-built records,
+in both the raw bench.py shape and the driver's BENCH_r{N}.json wrapper."""
 
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
-COLD = ("per-query = min of 2 COLD passes (trained-artifact memo cleared "
-        "before every timed run)")
-CACHE_COLD = COLD + "; operator caches unpersisted before every timed run"
-
-
-def _record(queries, protocol, memoized=(), cache_sensitive=None):
-    rec = {"queries": queries, "protocol": protocol,
-           "queries_warm_shared_artifacts": {m: 0.1 for m in memoized}}
-    if cache_sensitive is not None:
-        rec["cache_cold_since_r7"] = list(cache_sensitive)
-    return rec
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run(tmp_path, old, new):
@@ -27,52 +17,49 @@ def _run(tmp_path, old, new):
     pn.write_text(json.dumps(new))
     res = subprocess.run(
         [sys.executable, "tools/bench_diff.py", str(po), str(pn)],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=ROOT)
     return res.returncode, res.stdout + res.stderr
 
 
-def test_memoized_query_across_memo_boundary_is_not_a_regression(tmp_path):
-    old = _record({"q_memo": 1.0, "q_plain": 2.0}, "per-query = min of 2")
-    new = _record({"q_memo": 5.5, "q_plain": 2.1}, COLD, memoized=["q_memo"])
-    code, out = _run(tmp_path, old, new)
-    assert code == 0, out
-    assert "protocol-changed" in out and "q_memo" in out
-
-
-def test_cache_sensitive_query_across_r7_boundary_is_not_a_regression(tmp_path):
-    old = _record({"q_cache": 1.2, "q_plain": 2.0}, COLD)
-    new = _record({"q_cache": 4.0, "q_plain": 2.1}, CACHE_COLD,
-                  cache_sensitive=["q_cache"])
-    code, out = _run(tmp_path, old, new)
-    assert code == 0, out
-    assert "protocol-changed" in out and "q_cache" in out
-
-
 def test_same_protocol_still_fails_real_regressions(tmp_path):
-    old = _record({"q_cache": 1.2, "q_slow": 2.0}, CACHE_COLD,
-                  cache_sensitive=["q_cache"])
-    new = _record({"q_cache": 1.3, "q_slow": 4.9}, CACHE_COLD,
-                  cache_sensitive=["q_cache"])
+    old = {"queries": {"q_cache": 1.2, "q_slow": 2.0}}
+    new = {"queries": {"q_cache": 1.3, "q_slow": 4.9}}
     code, out = _run(tmp_path, old, new)
     assert code == 1
     assert "q_slow" in out and "REGRESSION" in out
-    # same protocol on both sides → cache-sensitive queries ARE graded
-    assert "protocol-changed" not in out
+
+
+def test_driver_wrapper_is_graded_from_its_parsed_record(tmp_path):
+    # the driver keeps only a 2000-char tail of the bench line; here it holds
+    # no queries at all, so the full record must come from `parsed`
+    tail = " protocol prose, no queries object " * 40
+    old = {"n": 1, "rc": 0, "tail": tail,
+           "parsed": {"queries": {"q_fast": 1.0, "q_slow": 2.0}}}
+    new = {"n": 2, "rc": 0, "tail": tail,
+           "parsed": {"queries": {"q_fast": 1.0, "q_slow": 4.9}}}
+    code, out = _run(tmp_path, old, new)
+    assert code == 1, out
+    assert "q_slow" in out and "REGRESSION" in out
+
+
+def test_driver_wrapper_without_parsed_record_is_refused(tmp_path):
+    old = {"n": 4, "rc": 0, "tail": "truncated", "parsed": None}
+    code, out = _run(tmp_path, old, {"queries": {"q": 1.0}})
+    assert code == 2
+    assert "without a parsed bench record" in out and "Traceback" not in out
 
 
 def test_bench_min_merges_per_query_minimum(tmp_path):
-    import json
-    import subprocess
-    import sys
-
     a = {"queries": {"q1": 2.0, "q2": 5.0}, "fixtures": {"t": "x"},
          "queries_warm_shared_artifacts": {"q1": 1.0},
          "queries_warm_persistent": {}, "alert_batch_wall_clock": 20.0,
-         "value": 7.0, "cache_state": {"initial": "cold"}}
+         "value": 7.0, "cache_state": {"initial": "cold"},
+         "layers": {"q1": {"jobs": 1}, "q2": {"jobs": 2}}}
     b = {"queries": {"q1": 3.0, "q2": 1.5}, "fixtures": {"t": "x"},
          "queries_warm_shared_artifacts": {"q1": 0.8},
          "queries_warm_persistent": {}, "alert_batch_wall_clock": 18.0,
-         "value": 4.5, "cache_state": {"initial": "warm"}}
+         "value": 4.5, "cache_state": {"initial": "warm"},
+         "layers": {"q1": {"jobs": 3}, "q2": {"jobs": 4}}}
     (tmp_path / "a.json").write_text(json.dumps(a))
     (tmp_path / "b.json").write_text(json.dumps(b))
     out = subprocess.run(
@@ -81,6 +68,8 @@ def test_bench_min_merges_per_query_minimum(tmp_path):
         capture_output=True, text=True, check=True)
     m = json.loads(out.stdout)
     assert m["queries"] == {"q2": 1.5, "q1": 2.0}
+    # each query's layers come from the run whose time won
+    assert m["layers"] == {"q1": {"jobs": 1}, "q2": {"jobs": 4}}
     assert m["queries_warm_shared_artifacts"] == {"q1": 0.8}
     assert m["alert_batch_wall_clock"] == 18.0
     assert m["value"] == 3.5
@@ -88,10 +77,6 @@ def test_bench_min_merges_per_query_minimum(tmp_path):
 
 
 def test_bench_min_refuses_cross_fixture_merge(tmp_path):
-    import json
-    import subprocess
-    import sys
-
     a = {"queries": {"q1": 2.0}, "fixtures": {"t": "x"}, "value": 2.0}
     b = {"queries": {"q1": 1.0}, "fixtures": {"t": "y"}, "value": 1.0}
     (tmp_path / "a.json").write_text(json.dumps(a))

@@ -4,12 +4,12 @@ Compares two bench records per query and fails (exit 1) on any regression above
 the threshold.  Accepts either format:
 
 * the raw one-line JSON printed by ``bench.py`` (or its ``BENCH_LOCAL.json`` dump),
-* the driver's ``BENCH_r{N}.json`` wrapper, whose ``tail`` field holds the (possibly
-  front-truncated) bench line — the per-query dict is recovered by brace matching.
+* the driver's ``BENCH_r{N}.json`` wrapper, whose ``parsed`` field holds that
+  record (a wrapper whose ``parsed`` is null is refused, exit 2).
 
 Usage::
 
-    python tools/bench_diff.py BENCH_r01.json BENCH_LOCAL.json [--threshold 1.5]
+    python tools/bench_diff.py BENCH_r18.json BENCH_LOCAL.json [--threshold 1.5]
 
 Queries faster than the noise floor (NOISE_FLOOR_S = 1 s, on both sides) are
 reported but never fail the gate — timings that fast on a warm local JVM jitter
@@ -24,70 +24,22 @@ import sys
 
 NOISE_FLOOR_S = 1.0
 
-#: substring present in the bench ``protocol`` field from round 6 on — the
-#: round that introduced memo-clearing before every timed run.  Records
-#: WITHOUT it timed artifact-memoized queries warm, so their numbers for those
-#: queries are not comparable to a cold-protocol record.
-COLD_PROTOCOL_MARK = "cleared before every timed run"
 
-#: r7 protocol mark: operator-internal Spark caches unpersisted per timed run.
-#: Records carrying it list the affected queries in ``cache_cold_since_r7``;
-#: across a boundary where exactly one side has the mark, those queries'
-#: numbers are warm-vs-cold and not comparable.
-CACHE_COLD_MARK = "operator caches unpersisted"
-
-
-def _extract_queries(text: str) -> dict[str, float]:
-    """Recover the ``"queries": {...}`` object from a possibly truncated line."""
-    key = '"queries": {'
-    start = text.find(key)
-    if start < 0:
-        # Front-truncated mid-object (bench.py serializes queries slowest-last so
-        # exactly this truncation is survivable): drop the possibly-cut first
-        # entry, close the braces ourselves.  Keys can't contain '}' or ', "'.
-        end = text.find("}")
-        first = text.find(', "')
-        if end < 0 or first < 0 or first > end:
-            raise ValueError("no queries object found")
-        return json.loads("{" + text[first + 2:end] + "}")
-    i = start + len(key) - 1
-    depth = 0
-    for j in range(i, len(text)):
-        if text[j] == "{":
-            depth += 1
-        elif text[j] == "}":
-            depth -= 1
-            if depth == 0:
-                return json.loads(text[i:j + 1])
-    raise ValueError("unbalanced queries object (truncated at the tail?)")
-
-
-def load_bench(path: str) -> tuple[dict[str, float], bool, bool, set[str],
-                                   set[str], dict]:
-    """``(queries, is_cold, is_cache_cold, memoized, cache_sensitive,
-    fixtures)``.
-
-    Protocol marks are detected from the raw text (substring search so
-    truncated driver tails still classify); the name sets are what the record
-    itself flagged (empty for older records, which did not track them — the
-    NEW side's sets are used to classify those).  ``fixtures`` is the input
-    fingerprint map recorded from r9 on (empty for older records)."""
+def load_bench(path: str) -> tuple[dict[str, float], dict]:
+    """``(queries, fixtures)`` of a bench record.  ``fixtures`` is the input
+    fingerprint map (empty for records that predate it)."""
     with open(path) as fh:
-        raw = fh.read()
-    cold = COLD_PROTOCOL_MARK in raw
-    cache_cold = CACHE_COLD_MARK in raw
-    try:
-        doc = json.loads(raw)
-    except json.JSONDecodeError:
-        return _extract_queries(raw), cold, cache_cold, set(), set(), {}
-    if isinstance(doc, dict) and isinstance(doc.get("queries"), dict):
-        return (doc["queries"], cold, cache_cold,
-                set(doc.get("queries_warm_shared_artifacts") or ()),
-                set(doc.get("cache_cold_since_r7") or ()),
-                doc.get("fixtures") or {})
-    if isinstance(doc, dict) and "tail" in doc:  # driver wrapper
-        return _extract_queries(doc["tail"]), cold, cache_cold, set(), set(), {}
-    raise ValueError(f"{path}: unrecognized bench format")
+        doc = json.load(fh)
+    if "tail" in doc:  # driver wrapper
+        doc = doc.get("parsed")
+        if not isinstance(doc, dict):
+            print(f"{path}: driver wrapper without a parsed bench record",
+                  file=sys.stderr)
+            raise SystemExit(2)
+    if not isinstance(doc.get("queries"), dict):
+        print(f"{path}: unrecognized bench format", file=sys.stderr)
+        raise SystemExit(2)
+    return doc["queries"], doc.get("fixtures") or {}
 
 
 def main() -> int:
@@ -97,8 +49,8 @@ def main() -> int:
     ap.add_argument("--threshold", type=float, default=1.5)
     args = ap.parse_args()
 
-    old, old_cold, old_cc, old_memo, old_sens, old_fix = load_bench(args.old)
-    new, new_cold, new_cc, new_memo, new_sens, new_fix = load_bench(args.new)
+    old, old_fix = load_bench(args.old)
+    new, new_fix = load_bench(args.new)
     # Fixture boundary: regenerated input tables shift absolute per-query
     # times (the r7→r8 vector-family drift was exactly this — A/B on frozen
     # fixtures exonerated the code).  When both records carry fingerprints
@@ -110,16 +62,6 @@ def main() -> int:
                          if old_fix.get(t) != new_fix.get(t))
         print(f"fixture boundary: regenerated {', '.join(changed)} — "
               "regressions reported but not gated (data identity changed)")
-    # A query timed warm on ONE side only is not comparable — refuse to grade
-    # those pairs instead of reporting 5x "regressions".  Two boundaries:
-    # r5→r6 (trained-artifact memo cleared per run → memoized queries), and
-    # r6→r7 (operator Spark caches unpersisted per run → subplan-cache-
-    # sensitive queries).
-    incomparable: set[str] = set()
-    if old_cold != new_cold:
-        incomparable |= old_memo | new_memo
-    if old_cc != new_cc:
-        incomparable |= old_sens | new_sens
     common = sorted(set(old) & set(new))
     failures: list[str] = []
 
@@ -130,10 +72,6 @@ def main() -> int:
             continue
         ratio = n / o
         flag = ""
-        if name in incomparable:
-            print(f"{name:40s} {o:8.2f} {n:8.2f} {'—':>7s}  "
-                  f"protocol-changed (warm-vs-cold, not comparable)")
-            continue
         if ratio > args.threshold:
             if max(o, n) < NOISE_FLOOR_S:
                 flag = "  (noise)"
@@ -150,14 +88,10 @@ def main() -> int:
     if only_new:
         print(f"added in new: {', '.join(only_new)}")
 
-    graded = [k for k in common if k not in incomparable]
-    tot_o = sum(v for k, v in old.items() if k in graded and v > 0)
-    tot_n = sum(v for k, v in new.items() if k in graded and v > 0)
+    tot_o = sum(old[k] for k in common if old[k] > 0)
+    tot_n = sum(new[k] for k in common if new[k] > 0)
     print(f"\ncommon-query total: {tot_o:.1f}s -> {tot_n:.1f}s "
-          f"({tot_n / tot_o:.2f}x) over {len(graded)} protocol-comparable "
-          f"queries" + (f" ({len(common) - len(graded)} queries excluded: "
-                        "cold-protocol boundary)"
-                        if len(graded) != len(common) else ""))
+          f"({tot_n / tot_o:.2f}x) over {len(common)} common queries")
 
     if failures:
         print(f"\n{len(failures)} regression(s) past {args.threshold}x:",

@@ -6,7 +6,8 @@ dropped page cache) and the committed record was the noisiest, manufacturing
 protocol fix is twofold: bench.py now pre-touches every fixture byte (no
 record can be cold-cache) and the ROUND record, when several same-head runs
 exist, is their per-query MIN — the steady-state cost each plan actually has,
-with the inputs' run metadata preserved in ``runs``.
+with the inputs' run metadata preserved in ``runs``.  Each query's ``layers``
+entry comes from the run whose time won.
 
 Usage:  python tools/bench_min.py BENCH_A.json BENCH_B.json [...] > merged
         python tools/bench_min.py -o BENCH_LOCAL.json BENCH_A.json B.json
@@ -31,6 +32,7 @@ def merge(records: list[dict]) -> dict:
             raise SystemExit("refusing to merge: fixture fingerprints differ "
                              "(cross-fixture minima are meaningless)")
     out = dict(base)
+    layers: dict[str, dict] = {}
     for tier in ("queries", "queries_warm_shared_artifacts",
                  "queries_warm_persistent"):
         merged: dict[str, float] = {}
@@ -49,6 +51,8 @@ def merge(records: list[dict]) -> dict:
                     continue
                 if q not in merged or t < merged[q]:
                     merged[q] = t
+                    if tier == "queries":  # the winning run's layer split
+                        layers[q] = (r.get("layers") or {}).get(q)
         missing = errored - set(merged)
         if missing:
             raise SystemExit(
@@ -56,6 +60,7 @@ def merge(records: list[dict]) -> dict:
                 "have only error sentinels across all input runs")
         out[tier] = dict(sorted(merged.items(), key=lambda kv: kv[1]) if
                          tier == "queries" else sorted(merged.items()))
+    out["layers"] = {q: v for q, v in sorted(layers.items()) if v is not None}
     rt: dict[str, dict] = {}
     for r in records:
         rt.update(r.get("retimed") or {})

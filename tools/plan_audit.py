@@ -23,9 +23,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
-
 
 def audit_plan(plan: str) -> dict:
     return {
@@ -52,14 +49,16 @@ def main() -> None:
     from alertas_spark.registry import load_all
     from alertas_spark.session import get_spark
 
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
     spark = get_spark("plan-audit")
     registry = load_all()
     print(f"{'query':36} scans pushed bhj smj shj bnlj cart exch codegen imts py")
     for name, q in sorted(registry.items()):
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         try:
-            df = q.builder(spark, SF_DIR)
+            df = q.builder(spark, sf_dir)
             plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils \
                 .explainString(df._jdf.queryExecution(), "formatted")
         except Exception as ex:
