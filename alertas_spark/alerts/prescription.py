@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from alertas_spark.framework import codes
 from alertas_spark.framework.context import AlertContext
 from alertas_spark.functions.keys import uuidsha
+from alertas_spark.operators import memo
 
 DETAIL_TABLE = "mmps_alerta_detalhe_prcr"
 
@@ -245,7 +246,9 @@ def alerta_prcr(ctx: AlertContext) -> DataFrame:
 
     # Stage 6 (prcr:159-167): deadline = start + years·12 months; elapsed past it.
     # tempo_prescricao_fatorado·12 is always integral (years ∈ ladder × {1, 0.5}).
-    tempo = (
+    # Cached for the detail write and the classification (prcr:167) through
+    # memo.cached, so memo.clear() releases it and a later cold run recomputes it.
+    tempo = memo.cached(
         com_inicio
         .withColumn(
             "data_prescricao",
@@ -254,7 +257,6 @@ def alerta_prcr(ctx: AlertContext) -> DataFrame:
         )
         .withColumn("elapsed",
                     F.datediff(ctx.as_of_col, F.col("data_prescricao")).cast("int"))
-        .cache()  # reused by the detail write and the classification (prcr:167)
         # Reuse verified (r6 plan audit): the classification plan reads this
         # stage via 14 InMemoryTableScans; the ~214 "Scan parquet" lines in the
         # formatted explain are the cache-POPULATION lineage reprinted under

@@ -5,8 +5,8 @@ jobs.py:123-320``), rebuilt name-based and clock-injected:
 
 * normalization (sigla inject → alrt_key assembly → null-pad to family contract)
   ≙ ``generateAlerta`` jobs.py:258-277;
-* staging: per-alert append into a temp family table (crash isolation / lineage break)
-  ≙ the ``temp_`` tables jobs.py:134-141,277;
+* staging: per-alert append into a per-sigla temp table (crash isolation / lineage
+  break) ≙ the ``temp_`` tables jobs.py:134-141,277;
 * publication: snapshot overwrite + monthly hist partition merge stamped with
   ``dt_calculo``/``dt_partition`` ≙ ``write_dataframe`` jobs.py:284-320, using
   ``unionByName`` (the reference unions positionally, jobs.py:312 — SURVEY §7 risk)
@@ -104,28 +104,24 @@ def _stage_name(family_table: str, sigla: str) -> str:
     return f"temp_{family_table}__{sigla.lower()}"
 
 
-def run_alert(ctx: AlertContext, definition: AlertDefinition,
-              stage_table: str | None = None) -> None:
-    """Compute one alert and append into its staging table (jobs.py:258-277).
-    The write is the action that executes the lazy plan; 4 output files keep the
-    staging dir small (the reference used coalesce(20) for a 75-core cluster).
-    ``stage_table`` defaults to the family staging table; run_all passes the
-    per-sigla name so alerts stage concurrently."""
+def run_alert(ctx: AlertContext, definition: AlertDefinition) -> None:
+    """Compute one alert and append into its per-sigla staging table
+    (jobs.py:258-277).  The write is the action that executes the lazy plan;
+    4 output files keep the staging dir small (the reference used coalesce(20)
+    for a 75-core cluster)."""
     ctx.spark.sparkContext.setJobGroup(definition.sigla, definition.sigla)
     df = normalize(definition.builder(ctx), definition.sigla, definition.family_schema)
-    ctx.write_table("alertas", stage_table or f"temp_{definition.family_table}",
+    ctx.write_table("alertas", _stage_name(definition.family_table, definition.sigla),
                     df, mode="append", coalesce=4)
 
 
 def publish(ctx: AlertContext, family_table: str,
-            sigla_tables: tuple[str, ...] = ()) -> None:
+            sigla_tables: tuple[str, ...]) -> None:
     """Snapshot + hist-partition publication for one family (jobs.py:284-320).
 
-    Reads the legacy single staging table and/or the per-sigla staging tables
-    run_all wrote (their union IS the family staging relation the serial
-    append produced — row-identical, publication unchanged)."""
-    staged_names = [n for n in (f"temp_{family_table}", *sigla_tables)
-                    if ctx.table_exists("alertas", n)]
+    Reads the per-sigla staging tables run_all wrote (their union IS the
+    family staging relation a serial append would produce)."""
+    staged_names = [n for n in sigla_tables if ctx.table_exists("alertas", n)]
     parts = [ctx.table("alertas", n) for n in staged_names]
     staged = parts[0]
     for p in parts[1:]:
@@ -165,17 +161,12 @@ def generate_types_table(ctx: AlertContext) -> None:
 
 
 def _batch_pool_size(spark) -> int:
-    """Concurrent-alert pool size: conf ``spark.alertas.batch.alertParallelism``
-    when set, else scale-adaptive from the session's core count (cores // 2,
-    capped at 16 = the active-alert count).  The alert jobs are LATENCY-bound
-    (each is a chain of small stages over the fixture-scale inputs), so the
-    pool needs most of the registry in flight to keep task slots fed —
-    measured at local[32]: serial 19.6 s, pool 8 → 15.1 s, pool 16 → 7.2 s,
-    pool 32 → 8.1 s (min of 3 cold passes each).  1 disables the pool (the
-    serial reference shape)."""
-    conf = spark.conf.get("spark.alertas.batch.alertParallelism", None)
-    if conf is not None:
-        return max(1, int(conf))
+    """Concurrent-alert pool size, scale-adaptive from the session's core
+    count (cores // 2, capped at 16 = the active-alert count).  The alert
+    jobs are LATENCY-bound (each is a chain of small stages over the
+    fixture-scale inputs), so the pool needs most of the registry in flight
+    to keep task slots fed — measured at local[32]: serial 19.6 s, pool 8 →
+    15.1 s, pool 16 → 7.2 s, pool 32 → 8.1 s (min of 3 cold passes each)."""
     return max(1, min(16, spark.sparkContext.defaultParallelism // 2))
 
 
@@ -204,26 +195,19 @@ def run_all(ctx: AlertContext, siglas: tuple[str, ...] = ACTIVE,
     timings: dict[str, float] = {}
     defs = registry()
     families = sorted({defs[s].family_table for s in siglas})
-    for fam in families:  # ≙ leftover-temp cleanup jobs.py:138-141
-        ctx.drop_table("alertas", f"temp_{fam}")
-    for sigla in siglas:
+    for sigla in siglas:  # ≙ leftover-temp cleanup jobs.py:138-141
         ctx.drop_table("alertas", _stage_name(defs[sigla].family_table, sigla))
 
     def _run(sigla: str) -> None:
         with Timer(f"alert {sigla}", timings, quiet=quiet):
-            run_alert(ctx, defs[sigla],
-                      _stage_name(defs[sigla].family_table, sigla))
+            run_alert(ctx, defs[sigla])
 
     workers = _batch_pool_size(ctx.spark)
-    if workers <= 1 or len(siglas) <= 1:
-        for sigla in siglas:
-            _run(sigla)
-    else:
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            futures = [pool.submit(inheritable_thread_target(
-                lambda s=sigla: _run(s))) for sigla in siglas]
-            for f in futures:
-                f.result()
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(
+            lambda s=sigla: _run(s))) for sigla in siglas]
+        for f in futures:
+            f.result()
     ctx.spark.catalog.clearCache()  # ≙ jobs.py:285
 
     def _pub(fam: str) -> None:
@@ -233,13 +217,10 @@ def run_all(ctx: AlertContext, siglas: tuple[str, ...] = ACTIVE,
                 _stage_name(fam, s) for s in siglas
                 if defs[s].family_table == fam))
 
-    if workers <= 1 or len(families) <= 1:
-        for fam in families:
-            _pub(fam)
-    else:
-        with ThreadPoolExecutor(max_workers=min(workers, len(families))) as pool:
-            futures = [pool.submit(inheritable_thread_target(
-                lambda f_=fam: _pub(f_))) for fam in families]
-            for f in futures:
-                f.result()
+    pub_workers = max(1, min(workers, len(families)))
+    with ThreadPoolExecutor(max_workers=pub_workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(
+            lambda f_=fam: _pub(f_))) for fam in families]
+        for f in futures:
+            f.result()
     return timings

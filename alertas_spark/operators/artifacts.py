@@ -57,67 +57,6 @@ ENV_KEY = "ALERTAS_ARTIFACTS_DIR"
 #: asserting cross-session reuse) prove that a query ran WITHOUT training.
 _BUILD_CALLS = 0
 
-#: Declared queries whose execution path reaches a :func:`persistent_artifact`
-#: call when a store root is configured.  bench.py's queries_warm_persistent
-#: tier iterates exactly this set instead of probing every memoized query
-#: end-to-end (probing doubled bench time for the non-persistent ones).  Keep
-#: in sync when adding a persistent_artifact call site —
-#: tests/test_artifacts.py::test_persistent_queries_registry_is_accurate
-#: proves each listed query really persists (and really reuses) the store.
-PERSISTENT_QUERIES = frozenset({
-    "simsearch_topk_ivf_trained",   # kmeans.py trained assignment table
-    "pq_encode_trained",            # pq.py trained codebook
-    "simsearch_recall_dashboard",   # consumes both trained paths
-    "bpe_train_merges",             # bpe.py trained merge table
-    "bpe_token_count",              # applies the bpe_merges artifact
-    "bpe_token_count_builtin",      # same artifact, codegen apply tier
-    "bpe_vocab_census",             # subword census over the same artifact
-    "bpe_bytes_train_merges",       # bpe_bytes.py byte-fallback merge table
-    "bpe_bytes_token_count",        # applies the bpe_bytes_merges artifact
-    "bpe_bytes_token_count_builtin",  # same artifact, codegen apply tier
-    "bpe_bytes_vocab_census",       # byte-subword census, same artifact
-    "pack_sequences_bpe_bytes",     # packing on byte-token counts
-    "bpe_bytes_detokenize_roundtrip",  # lossless-detok proof, same artifact
-    "bpe_bytes_fertility",          # per-lang tokens/word, same artifact
-    "ccnet_perplexity_buckets",     # head/middle/tail over lm_unigram
-    "pack_sequences_bpe",           # packing on the artifact's token counts
-    "pipeline_corpus_to_batches",   # capstone: gate→dedup→tokenize→pack
-    "perplexity_unigram",           # textops.py lm_unigram count table
-    "perplexity_bigram_backoff",    # lm_bigram_uni + lm_bigram_bi tables
-    "streaming_corpus_manifest",    # stream enriched by the bpe_merges artifact
-    "curriculum_pack",              # packing.py — orders by the lm_unigram scorer
-    "dsir_logratio_scores",         # dsir.py hashed-unigram LM tables
-    "dsir_select_topk",             # selection over the same dsir_lm artifact
-    "dsir_sample_gumbel",           # Gumbel resampling, same dsir_lm artifact
-    "pipeline_dsir_curated",        # capstone: dsir_lm-scored selection
-    "nb_lang_classify",             # classifier.py nb_model count tables
-    "nb_classifier_confusion",      # same nb_model artifact
-    "streaming_classifier_gate",    # stream served by the nb_model artifact
-    "perplexity_kn_trigram",        # kneser_ney.py kn_{tri,big,uni}gram tables
-    "lr_quality_score",             # logreg.py IRLS-trained lr_model betas
-    "lr_gate_select",               # gate over the same lr_model artifact
-    "lr_nb_confusion_audit",        # joins lr_model + nb_model predictions
-    "ulm_train_vocab",              # ulm.py hard-EM piece vocabulary
-    "ulm_token_count",              # Viterbi apply over the ulm_vocab artifact
-    "ulm_bpe_fertility",            # joins ulm_vocab + bpe_merges applies
-    "pack_sequences_ulm",           # packing on the ulm_vocab token counts
-    "ulm_vocab_census",             # Viterbi-path census over the same artifact
-    "streaming_lr_gate",            # stream served by the lr_model artifact
-    "lr_calibration_curve",         # reliability diagram over lr_model scores
-    "pipeline_quality_ensemble",    # LR gate composed with the ppl terciles
-    "gate_marginal_rejection",      # per-gate audit over the same ensemble
-    "dataset_mix_doremi",           # MW reweighting over the lm_unigram loss
-    "wordpiece_train_vocab",        # wordpiece.py likelihood-merge table
-    "wordpiece_token_count",        # greedy apply over the same artifact
-    "wordpiece_fertility",          # per-lang fertility over the same apply
-    "pack_sequences_wordpiece",     # packing on the wordpiece token counts
-    "decontaminate_minkprob",       # Min-K% over the lm_unigram artifact
-    "decontaminate_panel",          # 5-axis panel — minkprob axis rides lm_unigram
-    "decontaminate_panel_marginal",  # per-axis ablation over the same panel
-    "pipeline_train_ready",         # capstone: ensemble + panel + dedup packs
-    "wordpiece_vocab_census",       # greedy-path census, same wp artifact
-})
-
 
 def build_count() -> int:
     return _BUILD_CALLS

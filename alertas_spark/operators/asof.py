@@ -27,9 +27,6 @@ from alertas_spark.sources.catalog import load_table
 
 @declare(
     "asof_join_click_view",
-    # green r2 driver row + in-window asof_join_salted is oracle-pinned to the
-    # identical output (hash-equal by construction)
-    late=True,
     oracle="""
     WITH clicks AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click' AND ts IS NOT NULL),
     views AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view' AND ts IS NOT NULL)

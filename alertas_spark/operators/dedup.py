@@ -58,7 +58,6 @@ _DUCK_SHINGLE_CTE = f"""
 
 @declare(
     "dedup_exact",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
     oracle=f"""
     SELECT md5(regexp_replace(trim(lower(text)), '{WS_RE}', ' ', 'g')) AS content_hash,
            MIN(doc_id) AS keeper_doc_id,
@@ -87,7 +86,6 @@ EXACT_PAIRS_MAX_DOCS = 200_000
 
 @declare(
     "dedup_ngram_jaccard",
-    late=True,  # the exact verifier; the scale path (minhash) holds the in-window row
     oracle=_DUCK_SHINGLE_CTE + f"""
     , sh AS (SELECT doc_id, unnest(shingles) AS s FROM shing),
     sizes AS (SELECT doc_id, len(shingles) AS n FROM shing),
@@ -363,7 +361,6 @@ _MINHASH_CTES_DUCK = _DUCK_SHINGLE_CTE + f"""
 
 @declare(
     "dedup_minhash_lsh",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
     oracle=_MINHASH_CTES_DUCK + f"""
     SELECT doc_a, doc_b, ROUND(jacc, 6) AS jaccard
     FROM verified
@@ -613,7 +610,6 @@ _BAND_MASK = (1 << 15) - 1
 
 @declare(
     "dedup_simhash",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
     oracle=f"""
     WITH tokd AS (
         SELECT doc_id,
@@ -834,7 +830,6 @@ def _emb_pairs_broadcast_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @declare(
     "dedup_embedding_cosine",
-    late=True,  # exact O(n^2) verifier; the blocked variant holds the in-window row
     oracle=f"""
     {_EMB_DUCK_CTE}
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, ROUND({_COS_DUCK}, 6) AS cos_sim
@@ -864,7 +859,6 @@ def _blocked_duck_cte() -> str:
 
 @declare(
     "dedup_embedding_cosine_blocked",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
     oracle=f"""
     {_blocked_duck_cte()}
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, ROUND({_COS_DUCK}, 6) AS cos_sim

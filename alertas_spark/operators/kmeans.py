@@ -286,8 +286,7 @@ def _lloyd_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _assign(v, bounded_rows(lloyd_centroids(v, K), K, "kmeans_c1"))
 
 
-@declare("kmeans_assign", oracle=_DUCK_ORACLE,
-         late=True)  # green r2 driver row + in-window simsearch_topk_ivf_trained re-runs this exact quantizer
+@declare("kmeans_assign", oracle=_DUCK_ORACLE)
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train an IVF coarse quantizer with two deterministic Lloyd iterations
     and return the final cluster assignment (+ L2² distance) per vector."""

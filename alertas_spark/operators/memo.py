@@ -148,7 +148,7 @@ def clear() -> None:
 
 
 def artifact_count() -> int:
-    """Number of live memoized artifacts (bench uses this to detect which
-    queries build session artifacts, so warm timings can be reported separately
-    from the cold headline)."""
-    return len(_CACHE)
+    """Number of live memoized artifacts, relations and values alike (bench
+    uses this to detect which queries build session artifacts, so warm
+    timings can be reported separately from the cold headline)."""
+    return len(_CACHE) + len(_VALUES)

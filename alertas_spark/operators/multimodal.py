@@ -247,7 +247,6 @@ def decode_features(media: DataFrame, decoder=None,
 
 @declare(
     "multimodal_decode_features",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
     oracle=f"""
     SELECT doc_id,
            CAST({PNG_W} AS INTEGER) AS width,

@@ -24,9 +24,6 @@ PACK_BUDGET = 1024  # tokens per pack
 
 @declare(
     "pack_sequences",
-    # green r2 driver row (union coverage retained); the ordered per-shard
-    # window-cumsum shape stays in-window via the segmented as-of carry-forward
-    late=True,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, source,
@@ -69,7 +66,6 @@ _STRIDE = CHUNK_TOKENS - CHUNK_OVERLAP
 
 @declare(
     "doc_chunk",
-    late=True,  # r2 driver row; 1-N explode chunking also pinned in-window by multimodal_frame_sample
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok

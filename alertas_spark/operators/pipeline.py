@@ -52,8 +52,7 @@ def _oracle() -> str:
     """
 
 
-@declare("pipeline_clean_corpus", oracle=_oracle(),
-         late=True)  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
+@declare("pipeline_clean_corpus", oracle=_oracle())
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filter → exact-dedup → near-dedup the documents table; returns the
     surviving (doc_id, n_tokens)."""

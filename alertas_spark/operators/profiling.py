@@ -41,7 +41,6 @@ def _duck_profile(col: str) -> str:
 
 @declare(
     "profile_columns",
-    late=True,  # double-pinned: green driver rows in r1+r2; the approx variant holds the in-window slot
     oracle=" UNION ALL ".join(_duck_profile(c) for c in _COLS),
 )
 def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:

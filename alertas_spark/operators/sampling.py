@@ -42,7 +42,6 @@ def _rate_case(col: str) -> str:
 
 @declare(
     "sample_hash_stratified",
-    late=True,  # r2 driver row; strict semantic subset of in-window dataset_mix_weighted (same hash-threshold idiom)
     oracle=f"""
     SELECT doc_id, source, {_DUCK_U} AS u
     FROM documents

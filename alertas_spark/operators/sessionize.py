@@ -21,7 +21,6 @@ WINDOW = "5 minutes"
 
 @declare(
     "events_tumbling_5min",
-    late=True,
     oracle=f"""
     SELECT strftime(time_bucket(INTERVAL 5 MINUTE, ts), '%Y-%m-%d %H:%M:%S')
                AS bucket_start,
@@ -51,9 +50,6 @@ def events_tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @declare(
     "events_sessionize",
-    # green r1+r2 driver rows; in-window streaming_sessionize pins the same
-    # gap-session semantics with its own full value-hash oracle
-    late=True,
     oracle=f"""
     WITH flagged AS (
         SELECT user_id, event_id, ts, value,

@@ -103,15 +103,14 @@ def _spark_topk(spark: SparkSession, sf_dir: str, same_label: bool) -> DataFrame
     return _topk_shape(scored)
 
 
-@declare("simsearch_topk_bruteforce", oracle=_duck_topk_sql(same_label=False),
-         late=True)  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
+@declare("simsearch_topk_bruteforce", oracle=_duck_topk_sql(same_label=False))
 def simsearch_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: broadcast queries × all candidates, window top-k.
     Exact baseline for ANN variants."""
     return _spark_topk(spark, sf_dir, same_label=False)
 
 
-@declare("simsearch_topk_ivf", oracle=_duck_topk_sql(same_label=True), late=True)
+@declare("simsearch_topk_ivf", oracle=_duck_topk_sql(same_label=True))
 def simsearch_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-pruned cosine top-k: candidates restricted to the query's coarse partition
     (``label`` ≙ nearest-centroid assignment).  Scans 1/|partitions| of the corpus —
@@ -268,8 +267,7 @@ def simsearch_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk_shape(scored)
 
 
-@declare("simsearch_topk_ivf_assigned", oracle=_duck_topk_assigned_sql(),
-         late=True)  # green r2 driver row + in-window simsearch_recall_dashboard recomputes this exact plan
+@declare("simsearch_topk_ivf_assigned", oracle=_duck_topk_assigned_sql())
 def simsearch_topk_ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k starting from RAW embeddings only: the coarse assignment is computed
     in-plan by a deterministic random-hyperplane partitioner (no precomputed ``label``

@@ -18,7 +18,6 @@ from alertas_spark.sources.catalog import load_table
 
 @declare(
     "salted_skew_agg",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to the new corpus ops
     oracle=f"""
     SELECT l_suppkey, COUNT(*) AS n_items, {sql_dsum('l_quantity')} AS total_qty,
            CAST(MIN(l_shipdate) AS VARCHAR) AS first_ship
@@ -50,7 +49,6 @@ def salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @declare(
     "salted_skew_join",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to the new corpus ops
     oracle="""
     SELECT o_orderkey, o_custkey, c_name, c_nationkey
     FROM orders JOIN customer ON o_custkey = c_custkey

@@ -74,7 +74,6 @@ def quality_gate_cond():
 
 @declare(
     "text_quality",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
     oracle=f"""
     SELECT doc_id,
            CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS INTEGER) AS n_tokens,
@@ -121,7 +120,6 @@ def _marker_count_duck(lang: str) -> str:
 
 @declare(
     "lang_guess",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
     oracle=f"""
     WITH scored AS (
         SELECT doc_id, lang,
@@ -169,7 +167,6 @@ def lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @declare(
     "token_count",
-    late=True,  # token counting overlaps text_quality's in-window n_tokens signal
     oracle=f"""
     SELECT doc_id,
            CAST(len(regexp_extract_all(text, '{NONWS_RE}')) AS INTEGER)
@@ -198,7 +195,6 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @declare(
     "doc_fingerprint",
-    late=True,  # double-pinned: green driver rows in r1+r2; slot rotated to first-time queries
     oracle=f"""
     WITH tokd AS (
         SELECT doc_id, text,
@@ -265,9 +261,6 @@ _NGRAM_DUCK = f"""
 
 @declare(
     "decontaminate_overlap",
-    # green r2 driver row (union coverage retained); the join-against-broadcast-
-    # reference-set shape stays in-window via dedup_incremental
-    late=True,
     oracle=f"""
     WITH tokd AS (
         SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok
@@ -321,9 +314,6 @@ _PII_PATTERNS = (
 
 @declare(
     "pii_scrub",
-    # green r2 driver row (union coverage retained); pure scan-side regex
-    # projection — no join/agg/shuffle semantics — pinned locally by oracle+pytest
-    late=True,
     oracle="""
     SELECT doc_id,
            CAST(len(regexp_extract_all(text,
@@ -361,9 +351,6 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @declare(
     "repetition_score",
-    # green r2 driver row (union coverage retained); pure scan-side n-gram
-    # ratio projection — no join/agg-shuffle semantics — pinned locally
-    late=True,
     oracle="""
     WITH tokd AS (
         SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS tok

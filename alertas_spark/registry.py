@@ -28,12 +28,6 @@ class DeclaredQuery:
     builder: Builder
     oracle: str | None  # DuckDB SQL; None → rows-only check (non-SQL-expressible op)
     doc: str
-    #: HISTORICAL (r1-r4): marked queries whose driver coverage was redundant so
-    #: they registered after the driver's 50-query window.  Ordering is now
-    #: computed from driver history (window_order below) and ignores this flag;
-    #: it survives as in-code documentation of which queries have an in-window
-    #: sibling pinning the same plan shape.
-    late: bool = False
 
 
 REGISTRY: dict[str, DeclaredQuery] = {}
@@ -100,14 +94,13 @@ _QUERY_MODULES = (
 )
 
 
-def declare(name: str, oracle: str | None = None,
-            late: bool = False) -> Callable[[Builder], Builder]:
+def declare(name: str, oracle: str | None = None) -> Callable[[Builder], Builder]:
     """Decorator: register ``fn`` as the builder for declared query ``name``."""
 
     def deco(fn: Builder) -> Builder:
         if name in REGISTRY:
             raise ValueError(f"duplicate declared query: {name}")
-        REGISTRY[name] = DeclaredQuery(name, fn, oracle, fn.__doc__ or "", late)
+        REGISTRY[name] = DeclaredQuery(name, fn, oracle, fn.__doc__ or "")
         return fn
 
     return deco
@@ -157,22 +150,13 @@ def _artifact_root() -> str:
     return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-#: Queries renamed after a driver round recorded them under the old name.
-#: driver_history() folds the old row into the new name so history stays 1:1
-#: with the registry (r4 recorded `simsearch_recall_eval`, renamed in r5).
-_RENAMED_QUERIES = {
-    "simsearch_recall_eval": "simsearch_recall_dashboard",
-}
-
-
 def driver_history(root: str | None = None) -> dict[str, tuple[int, bool]]:
     """``name -> (last_checked_round, was_green)`` from CORRECTNESS_r*.json.
 
-    Renamed queries are folded onto their current registry name, and — when
-    reading the live artifacts (``root is None``) with the registry populated —
-    rows for names no longer in the registry are dropped, so callers see
-    history keyed 1:1 by current query names.  An explicit ``root`` (synthetic
-    test fixtures) skips the registry filter.
+    When reading the live artifacts (``root is None``) with the registry
+    populated, rows for names no longer in the registry are dropped, so
+    callers see history keyed 1:1 by current query names.  An explicit
+    ``root`` (synthetic test fixtures) skips the registry filter.
     """
     import glob
     import json
@@ -192,7 +176,6 @@ def driver_history(root: str | None = None) -> dict[str, tuple[int, bool]]:
         except (OSError, ValueError):
             continue
         for name, row in data.items():
-            name = _RENAMED_QUERIES.get(name, name)
             if isinstance(row, dict):
                 # hash_match is authoritative when present: right cardinality +
                 # wrong values must schedule as red, not count as green via

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from alertas_spark.functions.numeric import sql_dsum
 from alertas_spark.operators.textops import (QUALITY_GATE_SQL, WS_RE,
                                              quality_gate_cond)
-from alertas_spark.registry import declare
+from alertas_spark.registry import REGISTRY, declare
 from alertas_spark.streaming import events as ev
 
 
@@ -195,10 +195,6 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @declare(
     "streaming_dedup_within_watermark",
-    # late: the unbounded-state sibling streaming_dedup_counts holds the in-window
-    # driver row for stream dedup; this pins the BOUNDED-state production variant
-    # locally (new in r5 — rotates into the driver window next round)
-    late=True,
     oracle="""
     SELECT event_type, COUNT(DISTINCT event_id) AS n_unique
     FROM events GROUP BY event_type
@@ -288,10 +284,38 @@ def streaming_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.run_to_memory(out, shuffle_partitions=8)
 
 
-@declare(
-    "streaming_corpus_manifest",
-    oracle=None,  # set below — needs the BPE trainer CTEs (import-order)
-)
+def _manifest_oracle() -> str:
+    """Batch front half in DuckDB: gate → distinct (lang, norm) → retrain
+    the BPE merges (unrolled CTEs) → tokenize each distinct content's words
+    → per-(lang, hash) token totals."""
+    from alertas_spark.operators.bpe import _apply_ctes, _train_ctes
+
+    docw_body = """
+        SELECT md5(norm) AS doc_id, t.w AS word FROM kept,
+        LATERAL unnest(regexp_extract_all(norm, '[a-z0-9]+')) AS t(w)"""
+    return f"""
+    WITH gated AS MATERIALIZED (
+        SELECT lang,
+               regexp_replace(trim(lower(text)), '{WS_RE}', ' ', 'g') AS norm
+        FROM documents
+        WHERE {QUALITY_GATE_SQL}
+    ), kept AS MATERIALIZED (
+        SELECT DISTINCT lang, norm FROM gated
+    ),
+    {_train_ctes()},
+    {_apply_ctes(docw_body=docw_body)},
+    kw AS (
+        SELECT lang, md5(norm) AS content_hash, t.w AS word FROM kept,
+        LATERAL unnest(regexp_extract_all(norm, '[a-z0-9]+')) AS t(w)
+    )
+    SELECT kw.lang, kw.content_hash,
+           CAST(sum(tokc.ntok) AS BIGINT) AS n_tokens
+    FROM kw JOIN tokc USING (word)
+    GROUP BY kw.lang, kw.content_hash
+    """
+
+
+@declare("streaming_corpus_manifest", oracle=_manifest_oracle())
 def streaming_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-to-batches capstone's FRONT HALF under incremental
     execution: quality gate → trained-BPE token-count ENRICHMENT → exact
@@ -360,49 +384,6 @@ def streaming_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                             shuffle_partitions=8)
 
 
-def _manifest_oracle() -> str:
-    """Batch front half in DuckDB: gate → distinct (lang, norm) → retrain
-    the BPE merges (unrolled CTEs) → tokenize each distinct content's words
-    → per-(lang, hash) token totals."""
-    from alertas_spark.operators.bpe import _apply_ctes, _train_ctes
-
-    docw_body = """
-        SELECT md5(norm) AS doc_id, t.w AS word FROM kept,
-        LATERAL unnest(regexp_extract_all(norm, '[a-z0-9]+')) AS t(w)"""
-    return f"""
-    WITH gated AS MATERIALIZED (
-        SELECT lang,
-               regexp_replace(trim(lower(text)), '{WS_RE}', ' ', 'g') AS norm
-        FROM documents
-        WHERE {QUALITY_GATE_SQL}
-    ), kept AS MATERIALIZED (
-        SELECT DISTINCT lang, norm FROM gated
-    ),
-    {_train_ctes()},
-    {_apply_ctes(docw_body=docw_body)},
-    kw AS (
-        SELECT lang, md5(norm) AS content_hash, t.w AS word FROM kept,
-        LATERAL unnest(regexp_extract_all(norm, '[a-z0-9]+')) AS t(w)
-    )
-    SELECT kw.lang, kw.content_hash,
-           CAST(sum(tokc.ntok) AS BIGINT) AS n_tokens
-    FROM kw JOIN tokc USING (word)
-    GROUP BY kw.lang, kw.content_hash
-    """
-
-
-# late oracle attach: REGISTRY entries are frozen dataclasses, so rebuild the
-# row with the composed SQL (the decorator ran with oracle=None above purely
-# to keep the declaration adjacent to the builder)
-from alertas_spark.registry import REGISTRY as _REG  # noqa: E402
-from alertas_spark.registry import DeclaredQuery as _DQ  # noqa: E402
-
-_q = _REG["streaming_corpus_manifest"]
-_REG["streaming_corpus_manifest"] = _DQ(
-    _q.name, _q.builder, _manifest_oracle(), _q.doc, _q.late)
-del _q
-
-
 # ---------------------------------------------------------------------------
 # Trained-classifier gate under micro-batch execution
 # ---------------------------------------------------------------------------
@@ -418,7 +399,7 @@ def _nb_gate_oracle() -> str:
     """
 
 
-@declare("streaming_classifier_gate", oracle=None)  # late attach below
+@declare("streaming_classifier_gate", oracle=_nb_gate_oracle())
 def streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The classifier-filter stage SERVED ON THE STREAM: the trained NB model
     (operators/classifier._nb_model — artifact-store relation, the trained-
@@ -482,11 +463,6 @@ def streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.run_to_memory(gated, output_mode="append")
 
 
-_qg = _REG["streaming_classifier_gate"]
-_REG["streaming_classifier_gate"] = _DQ(
-    _qg.name, _qg.builder, _nb_gate_oracle(), _qg.doc, _qg.late)
-
-
 # ---------------------------------------------------------------------------
 # Bloom decontamination gate under micro-batch execution
 # ---------------------------------------------------------------------------
@@ -501,7 +477,7 @@ def _bloom_gate_oracle() -> str:
     """
 
 
-@declare("streaming_bloom_gate", oracle=None)  # late attach below
+@declare("streaming_bloom_gate", oracle=_bloom_gate_oracle())
 def streaming_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The benchmark bloom filter SERVED ON THE STREAM — the third trained/
     bounded structure deployed under micro-batch (after the BPE merges and
@@ -562,11 +538,6 @@ def streaming_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.run_to_memory(gated, output_mode="append")
 
 
-_qb = _REG["streaming_bloom_gate"]
-_REG["streaming_bloom_gate"] = _DQ(
-    _qb.name, _qb.builder, _bloom_gate_oracle(), _qb.doc, _qb.late)
-
-
 # ---------------------------------------------------------------------------
 # IRLS-trained LR quality gate under micro-batch execution
 # ---------------------------------------------------------------------------
@@ -586,7 +557,7 @@ def _lr_gate_oracle() -> str:
     """
 
 
-@declare("streaming_lr_gate", oracle=None)  # late attach below
+@declare("streaming_lr_gate", oracle=_lr_gate_oracle())
 def streaming_lr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IRLS-trained LR quality gate SERVED ON THE STREAM — the fourth
     trained/bounded structure deployed under micro-batch (BPE merges, NB
@@ -645,11 +616,6 @@ def streaming_lr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.run_to_memory(gated, output_mode="append")
 
 
-_ql = _REG["streaming_lr_gate"]
-_REG["streaming_lr_gate"] = _DQ(
-    _ql.name, _ql.builder, _lr_gate_oracle(), _ql.doc, _ql.late)
-
-
 # ---------------------------------------------------------------------------
 # Heuristic rule battery served on the stream
 # ---------------------------------------------------------------------------
@@ -683,10 +649,10 @@ def streaming_rule_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _clip_gate_oracle() -> str:
     import alertas_spark.operators.clipgate as _cg  # runs its declares
 
-    return _REG[_cg.multimodal_clip_gate.__name__].oracle
+    return REGISTRY[_cg.multimodal_clip_gate.__name__].oracle
 
 
-@declare("streaming_clip_gate", oracle=None)  # late attach below
+@declare("streaming_clip_gate", oracle=_clip_gate_oracle())
 def streaming_clip_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LAION/DataComp CLIP alignment gate SERVED ON THE STREAM — the
     multimodal member of the model-serving family (NB, bloom, LR, rule
@@ -710,11 +676,6 @@ def streaming_clip_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                             output_mode="append")
 
 
-_qc = _REG["streaming_clip_gate"]
-_REG["streaming_clip_gate"] = _DQ(
-    _qc.name, _qc.builder, _clip_gate_oracle(), _qc.doc, _qc.late)
-
-
 # ---------------------------------------------------------------------------
 # Count-min sketch maintained on the stream
 # ---------------------------------------------------------------------------
@@ -722,10 +683,10 @@ _REG["streaming_clip_gate"] = _DQ(
 def _countmin_oracle() -> str:
     import alertas_spark.operators.countmin as _cm  # runs its declares
 
-    return _REG[_cm.heavyhitters_countmin.__name__].oracle
+    return REGISTRY[_cm.heavyhitters_countmin.__name__].oracle
 
 
-@declare("streaming_countmin_topk", oracle=None)  # late attach below
+@declare("streaming_countmin_topk", oracle=_countmin_oracle())
 def streaming_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The count-min sketch maintained INCREMENTALLY on the stream — the
     canonical streaming-sketch deployment (Cormode & Muthukrishnan's own
@@ -759,7 +720,3 @@ def streaming_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = _cm_probe_rows(_cm_token_counts(spark, sf_dir))
     return cm_topk_report(spark, _cm_est_from_cells(probes, replayed))
 
-
-_qcm = _REG["streaming_countmin_topk"]
-_REG["streaming_countmin_topk"] = _DQ(
-    _qcm.name, _qcm.builder, _countmin_oracle(), _qcm.doc, _qcm.late)

@@ -34,8 +34,6 @@ RECORD = os.path.join(ROOT, "BENCH_LOCAL.json")
 PASSES = 2
 #: perfbench's retained-UI limits: the REST API must still list every job
 RETAINED_UI = {k: v for k, v in spark_conf("").items() if ".retained" in k}
-FIXTURE_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-                  "lineitem", "events", "documents", "embeddings")
 
 
 def timed_run(spark, rest: Rest, query, sf_dir: str) -> tuple[float, dict]:
@@ -99,9 +97,9 @@ def main(names: list[str]) -> int:
     try:
         from pyspark.sql.functions import pandas_udf
 
-        # a query without persistent artifacts: warming a persistent one
-        # would store its artifacts before its own cold timing
-        run(next(n for n in registry if n not in artifacts.PERSISTENT_QUERIES))
+        # the driver's flagship query: it trains nothing, so the warm-up
+        # leaves no artifact behind for a later cold timing to find
+        run("revenue_by_nation")
         memo.clear()
         # lambda form: `from __future__ import annotations` stringifies a
         # def's type hints and pandas_udf can't resolve them
@@ -135,9 +133,9 @@ def main(names: list[str]) -> int:
         print(json.dumps({"queries": timings, "layers": layers}))
         return 1 if any(t < 0 for t in timings.values()) else 0
 
-    from alertas_spark.operators.artifacts import dataset_fingerprint
+    from alertas_spark.sources.catalog import TABLES
 
-    fixtures = {t: dataset_fingerprint(sf_dir, t) for t in FIXTURE_TABLES}
+    fixtures = {t: artifacts.dataset_fingerprint(sf_dir, t) for t in TABLES}
     try:
         with open(RECORD) as fh:
             prior = json.load(fh)
@@ -183,16 +181,12 @@ def main(names: list[str]) -> int:
 
     # Persistent tier, outside the headline: the cross-session cost.  A
     # trained query re-timed in a simulated new session (memo cleared)
-    # against an artifact store its own earlier run populated.
+    # against an artifact store its own earlier run populated.  A memoized
+    # query whose first run stores nothing has no cross-session tier.
     persistent: dict[str, float] = {}
-    dropped = artifacts.PERSISTENT_QUERIES - memoized
-    if dropped:
-        print(f"# bench persistent tier: declared-persistent queries missing "
-              f"from the memoized set (not timed): {sorted(dropped)}",
-              file=sys.stderr)
     art_dir = tempfile.mkdtemp(prefix="bench_artifacts_")
     try:
-        for name in sorted(memoized & artifacts.PERSISTENT_QUERIES):
+        for name in sorted(memoized):
             memo.clear()
             # per-query store root: an earlier query's artifacts must not
             # mask this query's own populate step

@@ -53,6 +53,26 @@ def test_prcr_sigla_partition(ctx):
     out.unpersist()
 
 
+def test_prcr_leaves_no_cache_behind(ctx):
+    """PRCR caches its deadline stage through ``memo.cached``: after a run
+    and ``memo.clear()``, re-planning PRCR finds no cached relation but the
+    context's documentos_ativos view, so the next cold run of PRCR is cold."""
+    from alertas_spark.operators import memo
+
+    ativos = sorted(ctx.view("documentos_ativos").columns)
+    out = engine.registry()["PRCR"].builder(ctx)
+    out.write.format("noop").mode("overwrite").save()
+    memo.clear()
+    leaves = out.select("*")._jdf.queryExecution().withCachedData().collectLeaves()
+    cached = [leaves.apply(i) for i in range(leaves.size())
+              if leaves.apply(i).nodeName() == "InMemoryRelation"]
+    assert cached  # the documentos_ativos view stays cached
+    for rel in cached:
+        out_cols = rel.output()
+        cols = sorted(out_cols.apply(i).name() for i in range(out_cols.size()))
+        assert cols == ativos, cols
+
+
 def test_isps_memoizes(ctx):
     d = engine.registry()["ISPS"]
     first = d.builder(ctx).count()

@@ -165,31 +165,55 @@ def test_fingerprint_tracks_directory_table_part_rewrites(tmp_path):
     assert artifacts.dataset_fingerprint(str(tmp_path), "embeddings") != f2
 
 
-def test_persistent_queries_registry_is_accurate(spark, tmp_path):
-    """artifacts.PERSISTENT_QUERIES (the set bench.py's persistent tier
-    iterates) is accurate: every listed query persists into a configured
-    store on first run and answers from it (zero builder calls) on a
-    memo-cold second run."""
+def _noop(spark, query) -> None:
+    query.builder(spark, SF).write.format("noop").mode("overwrite").save()
+
+
+def test_derived_persistent_queries_reuse_their_store(spark, tmp_path):
+    """The persistent set is derived, never listed: every registered query
+    runs once against its own fresh store root, and the ones that raised
+    ``build_count()`` are the persistent set (bench.py's persistent tier
+    applies the same rule).  Each of them must answer a memo-cold rerun
+    from its store with zero builder calls."""
     from alertas_spark.operators import artifacts, memo
     from alertas_spark.registry import load_all
 
     reg = load_all()
-    assert artifacts.PERSISTENT_QUERIES <= set(reg)
+    persistent = []
     try:
-        for name in sorted(artifacts.PERSISTENT_QUERIES):
+        for name in sorted(reg):
             spark.conf.set(artifacts.CONF_KEY, str(tmp_path / name))
             memo.clear()
             b0 = artifacts.build_count()
-            reg[name].builder(spark, SF).write.format("noop") \
-                .mode("overwrite").save()
-            assert artifacts.build_count() > b0, f"{name} persisted nothing"
+            _noop(spark, reg[name])
+            if artifacts.build_count() == b0:
+                continue
+            persistent.append(name)
             memo.clear()  # simulated new session: memo cold, store warm
             b1 = artifacts.build_count()
-            reg[name].builder(spark, SF).write.format("noop") \
-                .mode("overwrite").save()
+            _noop(spark, reg[name])
             assert artifacts.build_count() == b1, f"{name} retrained"
     finally:
         spark.conf.unset(artifacts.CONF_KEY)
+        memo.clear()
+    assert {"pq_encode_trained", "bpe_train_merges"} <= set(persistent), \
+        persistent
+
+
+def test_artifact_count_counts_row_artifacts(spark):
+    """A collected model-geometry artifact (``persistent_artifact_rows``)
+    is a live memo artifact: bench reads ``memo.artifact_count()`` to find
+    the memoized queries, and a query whose only artifact is a row list
+    must not be invisible to it."""
+    from alertas_spark.operators import artifacts, memo
+    from alertas_spark.registry import load_all
+
+    assert artifacts.artifact_root(spark) is None  # memo-only tier
+    memo.clear()
+    try:
+        _noop(spark, load_all()["pq_encode_trained"])
+        assert memo.artifact_count() > 0
+    finally:
         memo.clear()
 
 

@@ -26,9 +26,9 @@ import os
 import duckdb
 import pytest
 
+from alertas_spark.sources.catalog import TABLES
+
 SF = "/root/testdata/sf0.001"
-TABLES = ("region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings")
 
 _ADV_DOCS = [
     # (text, lang, source) — doc_id assigned sequentially; n_chars = len(text)

@@ -54,16 +54,17 @@ def test_publish_hist_merge(ctx):
     dt_calculo; prior-day rows of the month survive (jobs.py:295-318)."""
     spark = ctx.spark
     fam = "mmps_alertas_mgp"
+    stage_name = engine._stage_name(fam, "VADF")
 
     def stage(rows):
         df = engine.normalize(
             spark.createDataFrame(rows, "alrt_docu_dk int, alrt_orgi_orga_dk int"),
             "VADF", schemas.MGP)
-        ctx.drop_table("alertas", f"temp_{fam}")
-        ctx.write_table("alertas", f"temp_{fam}", df, mode="append")
+        ctx.drop_table("alertas", stage_name)
+        ctx.write_table("alertas", stage_name, df, mode="append")
 
     stage([(1, 10), (2, 20)])
-    engine.publish(ctx, fam)
+    engine.publish(ctx, fam, (stage_name,))
     assert ctx.table("alertas", fam).count() == 2
     hist = ctx.table("alertas", f"hist_{fam}")
     assert hist.count() == 2
@@ -79,7 +80,7 @@ def test_publish_hist_merge(ctx):
 
     # same-day rerun with 3 rows: month partition = prior-day 2 + today 3
     stage([(1, 10), (2, 20), (3, 30)])
-    engine.publish(ctx, fam)
+    engine.publish(ctx, fam, (stage_name,))
     hist2 = ctx.table("alertas", f"hist_{fam}")
     assert hist2.count() == 5
     assert hist2.filter(F.col("dt_calculo") == "20240401").count() == 2
@@ -97,26 +98,20 @@ def test_run_all_single_alert_end_to_end(ctx):
 
 
 def test_concurrent_staging_equals_serial(ctx):
-    """The r18 concurrent compute phase (per-sigla staging tables unioned at
-    publish) publishes the SAME rows as the serial reference shape — and
-    leaves no staging tables behind."""
+    """The concurrent compute phase (per-sigla staging tables unioned at
+    publish) publishes exactly the rows of each alert's own normalized
+    output — and leaves no staging tables behind."""
     fam = "mmps_alertas_mgp"
     siglas = ("VADF", "OUVI")
+    defs = engine.registry()
 
-    ctx.spark.conf.set("spark.alertas.batch.alertParallelism", "4")
-    try:
-        engine.run_all(ctx, siglas=siglas, quiet=True)
-        concurrent_rows = {tuple(r) for r in ctx.table("alertas", fam).collect()}
-        ctx.drop_table("alertas", fam)
-        ctx.drop_table("alertas", f"hist_{fam}")
+    engine.run_all(ctx, siglas=siglas, quiet=True)
+    published = {tuple(r) for r in ctx.table("alertas", fam).collect()}
+    expected = {tuple(r) for s in siglas
+                for r in engine.normalize(defs[s].builder(ctx), s,
+                                          defs[s].family_schema).collect()}
 
-        ctx.spark.conf.set("spark.alertas.batch.alertParallelism", "1")
-        engine.run_all(ctx, siglas=siglas, quiet=True)
-        serial_rows = {tuple(r) for r in ctx.table("alertas", fam).collect()}
-    finally:
-        ctx.spark.conf.unset("spark.alertas.batch.alertParallelism")
-
-    assert concurrent_rows == serial_rows and concurrent_rows
+    assert published == expected and published
     # per-sigla staging cleaned up by publish
     for s in siglas:
         assert not ctx.table_exists("alertas", engine._stage_name(fam, s))

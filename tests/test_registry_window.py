@@ -202,31 +202,14 @@ def test_driver_history_reads_latest_row_per_query(tmp_path):
 
 
 def test_driver_history_keys_subset_of_registry():
-    """Live-artifact history is 1:1 with the current registry: renamed rows
-    fold onto their new name (r4's simsearch_recall_eval →
-    simsearch_recall_dashboard) and orphans drop."""
+    """Live-artifact history is 1:1 with the current registry: rows for
+    names no longer in the registry drop."""
     from alertas_spark.registry import REGISTRY, driver_history
 
     _names()  # populate REGISTRY
     hist = driver_history()
     orphans = sorted(set(hist) - set(REGISTRY))
     assert orphans == [], orphans
-
-
-def test_driver_history_folds_renamed_queries(tmp_path):
-    import json
-
-    from alertas_spark.registry import driver_history
-
-    (tmp_path / "CORRECTNESS_r04.json").write_text(json.dumps(
-        {"simsearch_recall_eval":
-         {"rows_match": True, "hash_match": True, "err": None}}))
-    (tmp_path / "CORRECTNESS_r05.json").write_text(json.dumps(
-        {"simsearch_recall_dashboard":
-         {"rows_match": True, "hash_match": True, "err": None}}))
-    hist = driver_history(str(tmp_path))
-    assert "simsearch_recall_eval" not in hist
-    assert hist["simsearch_recall_dashboard"] == (5, True)
 
 
 def test_scheduler_invariants_on_synthetic_history(tmp_path):

@@ -71,6 +71,7 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
 def main() -> int:
     import __spark_entry__ as e
     from alertas_spark.session import get_spark
+    from alertas_spark.sources.catalog import TABLES
 
     spark = get_spark("verify-local")
     # pre-flight: surface source-schema drift (the TIMESTAMP_NTZ class) as named
@@ -82,8 +83,7 @@ def main() -> int:
         print("schema drift findings:")
         print(report(drift))
     con = duckdb.connect()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
-              "events", "documents", "embeddings"):
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
     qs, oracles = e.queries(), e.oracle_sql()
