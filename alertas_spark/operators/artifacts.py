@@ -202,8 +202,9 @@ def persistent_artifact_rows(spark: SparkSession, sf_dir: str, name: str,
                              max_rows: int) -> list:
     """:func:`persistent_artifact` for MODEL-GEOMETRY tables (≤ ``max_rows``
     rows: trained centroid/codeword relations), returning the COLLECTED ROWS
-    instead of a distributed relation.  Consumers bake the rows into literal
-    (constant-folded) expressions — deleting the per-consumer pack
+    instead of a distributed relation.  Consumers hand the rows to numpy
+    kernels — the executor-side argmin (``kmeans.argmin_arrow``) or the
+    driver-side query LUT (``pq._probe_lut``) — deleting the per-consumer pack
     aggregation, BroadcastExchange job, and join that a relation-shaped
     artifact costs (the trainer chains are job-count-bound:
     OPTIMIZATION_r18 "Not yet optimized" / ADVICE item 2).  The cold build

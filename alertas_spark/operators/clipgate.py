@@ -35,9 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alertas_spark.operators.embgate import EMB_VALID_SQL, valid_nrm
-from alertas_spark.operators.simsearch import (_DUCK_DOT, _DUCK_NORM2, _dot,
-                                               _norm2)
+from alertas_spark.operators.embgate import EMB_VALID_SQL, norm2, valid_nrm
+from alertas_spark.operators.simsearch import _DUCK_DOT, _DUCK_NORM2, _dot
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -72,7 +71,7 @@ def clip_pairs(spark: SparkSession, sf_dir: str,
     v = (load_table(spark, sf_dir, "embeddings")
          .select("vec_id",
                  F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
          .filter(valid_nrm(F.col("nrm"))))
     cap = v.select(F.col("vec_id").alias("cap_id"),
                    F.col("emb").alias("cemb"), F.col("nrm").alias("cnrm"))

@@ -26,15 +26,14 @@ coarse partition — closing the loop from raw embeddings to a *trained* IVF ind
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DataType, DoubleType, LongType,
                                StructField, StructType)
 
 from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
-from alertas_spark.operators.embgate import EMB_VALID_SQL, valid_embeddings
+from alertas_spark.operators.embgate import (EMB_VALID_SQL, norm2,
+                                             valid_embeddings)
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -88,7 +87,8 @@ def _seq_subdist(a, b):
     operation the Spark ``aggregate(zip_with(..))`` / DuckDB ``list_reduce``
     fold (single IEEE add per step, no pairwise regrouping, no FMA), so
     results are bit-equal to both engines.  The one fold behind every numpy
-    distance: the argmin kernel below and the PQ ADC scan (pq._adc_topk)."""
+    distance: the argmin kernel below, the PQ encode / ADC scans
+    (pq._pq_codes) and the IVFADC query tables (pq._probe_lut)."""
     diff = a - b
     sq = diff * diff
     d = sq[..., 0].copy()
@@ -200,31 +200,6 @@ def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
     return df.mapInArrow(kernel, schema)
 
 
-def dlit(x: float) -> str:
-    """SQL double literal reproducing the exact binary64 value: ``repr`` is
-    the shortest round-trip decimal, and both Spark's parser and
-    ``Double.parseDouble`` reconstruct the identical double from it.  NaN and
-    ±Inf have no such literal (``nanD`` is not SQL) and raise."""
-    x = float(x)
-    if not math.isfinite(x):
-        raise ValueError(f"dlit: {x!r} has no SQL double literal")
-    return repr(x) + "D"
-
-
-def lit_items(rows, key: str, suffix: str = "") -> str:
-    """Driver-held ``(key, cvec)`` rows as ONE literal
-    ``array<struct<key, cvec>>`` SQL expression (constant-folded by Catalyst
-    into a single Literal): the 10-query sides (pq._probed_cells, the IVFADC
-    LUT) ``inline`` it against a CONSTANT — no pack aggregation, no
-    BroadcastExchange job, no join.  ``suffix`` types the id literal (``L``
-    keeps a bigint id bigint).  Element order is sorted by id for
-    reproducibility."""
-    return "array({})".format(", ".join(
-        f"named_struct('{key}', {int(r[key])}{suffix}, "
-        f"'cvec', array({', '.join(dlit(x) for x in r['cvec'])}))"
-        for r in sorted(rows, key=lambda r: r[key])))
-
-
 def _assign(emb: DataFrame, centroids: list,
             with_cvec: bool = False) -> DataFrame:
     # ZERO-exchange assignment: the driver-held centroid rows (every round,
@@ -265,7 +240,7 @@ def _update(assigned: DataFrame) -> DataFrame:
 def lloyd_centroids(v: DataFrame, k: int) -> DataFrame:
     """The one Lloyd update every k-means consumer trains over ``v``
     ``(vec_id, emb)``: the seed — the first ``k`` vectors by ``vec_id`` — is
-    collected (≤k rows, model geometry) and baked into the literal argmin
+    collected (≤k rows, model geometry) and handed to the numpy argmin kernel
     like every later round, and the decimal-exact means of its clusters are
     returned LAZY as ``(cid, cvec)`` (empty clusters drop): the caller's
     bounded pull or artifact tier owns the materialization."""
@@ -338,13 +313,11 @@ def trained_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/artifacts.py; two-session proof in test_artifacts.py).
     Consumers: the trained-IVF search below and the SemDeDup tier
     (operators/semantic.py)."""
-    from alertas_spark.operators.simsearch import _norm2
-
     def train() -> DataFrame:
-        # lazy: persistent_artifact owns materialization (the literal
-        # centroid arrays already truncate the deep lineage)
+        # lazy: persistent_artifact owns materialization (the collected
+        # centroid rows already truncate the deep lineage)
         return _lloyd_assignment(spark, sf_dir).select(
-            "vec_id", "emb", "cid", F.sqrt(_norm2(F.col("emb"))).alias("nrm"))
+            "vec_id", "emb", "cid", F.sqrt(norm2(F.col("emb"))).alias("nrm"))
 
     return persistent_artifact(spark, sf_dir, "kmeans_trained_assignment",
                                code_version="1", table="embeddings",
@@ -355,9 +328,7 @@ def trained_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simsearch_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full trained-ANN loop in one plan: k-means coarse quantizer (above) →
     cluster-pruned cosine top-k.  Probe-1 over TRAINED cells — what a user gets
-    from `kmeans_assign` + `simsearch_topk_ivf` composed, oracle-checked end to end.
-    (late: the ANN capability rows in the driver window are ivf_assigned +
-    recall_eval; this pins the trained composition locally.)"""
+    from `kmeans_assign` + `simsearch_topk_ivf` composed, oracle-checked end to end."""
     from alertas_spark.operators.simsearch import N_QUERIES, TOP_K, _dot
 
     n = trained_assignment(spark, sf_dir)

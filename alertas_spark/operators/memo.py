@@ -15,8 +15,8 @@ shape (consumers were reading a checkpoint scan either way), only how many times
 the training pipeline runs.
 
 At 100 TB the same pattern holds — a trained quantizer is a tiny shared artifact
-(K × DIM doubles) produced once and baked into every consumer's plan as a
-constant-folded literal; re-deriving it inside each query would repeat
+(K × DIM doubles) produced once, pulled to the driver, and handed to every
+consumer's numpy kernel; re-deriving it inside each query would repeat
 full-corpus scans.
 """
 

@@ -25,17 +25,18 @@ distances over the PQ top-100 is the standard production refinement.
 
 Scale shape:
 
-* **encode** — the codebook build is one tiny global agg (KSUB rows → 1 packed
-  row, broadcast); encoding itself is a pure scan-side projection (argmin over
-  the broadcast codebook with array HOFs, fold order fixed left-to-right so the
-  codes are bit-deterministic across engines and partitionings) — ZERO shuffles,
+* **encode** — the codebook (sub-vectors of the first KSUB normalized vectors)
+  comes to the driver in one bounded pull; encoding is ONE numpy
+  ``mapInPandas`` pass over the scan's batches (normalize, per-subspace
+  first-minimum argmin, sequential-fold distances, so the codes are
+  bit-deterministic across engines and partitionings) — ZERO shuffles,
   embarrassingly parallel at 100 TB.
-* **ADC top-k** — the per-query LUTs (N_QUERIES × 4×16 doubles) and the packed
-  codebook are tiny driver artifacts broadcast to every task; codes + approximate
-  distances are vectorized numpy inside ONE ``mapInPandas`` scan that emits only
-  its partition-local top-k per query; the single shuffle is the exact final rank
-  over ≤ k · n_partitions rows per query (two-phase top-k, operators/topk.py) —
-  never a full-corpus sort in N_QUERIES tasks.
+* **ADC top-k** — the per-query LUTs (N_QUERIES × 4×16 doubles) and the
+  codebook are tiny driver artifacts shipped to every task with the kernel;
+  codes + approximate distances are vectorized numpy inside ONE ``mapInPandas``
+  scan that emits only its partition-local top-k per query; the single shuffle
+  is the exact final rank over ≤ k · n_partitions rows per query (two-phase
+  top-k, operators/topk.py) — never a full-corpus sort in N_QUERIES tasks.
 
 All distances are sequential left-to-right double folds (the ``simsearch._dot``
 contract), bit-equal to the DuckDB oracle's ``list_reduce``.
@@ -54,11 +55,12 @@ from alertas_spark.operators.artifacts import (bounded_rows,
                                                persistent_artifact,
                                                persistent_artifact_rows)
 from alertas_spark.operators.kmeans import (_assign, _seq_subdist,
-                                            argmin_arrow, lit_items,
-                                            lloyd_centroids)
-from alertas_spark.operators.memo import session_artifact
-from alertas_spark.operators.embgate import (EMB_VALID_SQL, np_valid_mask,
-                                             valid_embeddings, valid_nrm)
+                                            argmin_arrow, lloyd_centroids)
+from alertas_spark.operators.memo import session_artifact, session_value
+from alertas_spark.operators.embgate import (EMB_VALID_SQL, norm2,
+                                             np_valid_mask, valid_embeddings,
+                                             valid_nrm)
+from alertas_spark.operators.simsearch import _dot
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -68,14 +70,6 @@ DIM = M * SUBDIM  # full embedding width (64) — single definition for the modu
 KSUB = 16    # codewords per subspace
 N_QUERIES = 10  # vec_id < 10 are the query vectors (simsearch.py convention)
 TOP_K = 5
-
-#: per-(m, c) squared-L2 between a sub-vector of ``emb`` and codeword ``cb[m][c]``,
-#: as a fixed-order fold (element_at is 1-based; `m`/`c` come from sequence()).
-_SUBDIST = (
-    "aggregate(zip_with(slice(emb, ({m} - 1) * {sd} + 1, {sd}), "
-    "element_at(element_at(cb, {m}), {c}), (x, y) -> (x - y) * (x - y)), "
-    "cast(0.0 as double), (acc, v) -> acc + v)"
-)
 
 #: L2-normalized embeddings (fold order matches Spark's `_normalized`)
 _DUCK_V = f"""v0 AS (SELECT vec_id, embedding::DOUBLE[] AS e0 FROM embeddings
@@ -113,27 +107,13 @@ _DUCK_CODES = f"""
     codes AS (SELECT vec_id, m, c, d FROM best WHERE rn = 1)"""
 
 
-def _codebook(v: DataFrame) -> DataFrame:
-    """1-row DataFrame: ``cb[m][c][d]`` nested array (1-based via element_at) —
-    sub-vector ``m`` of seed vector ``vec_id == c - 1``."""
-    seeds = v.filter(F.col("vec_id") < KSUB)
-    packed = seeds.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct("vec_id", "emb"))).alias("seeds"))
-    return packed.select(F.expr(
-        f"transform(sequence(1, {M}), m -> transform(seeds, "
-        f"s -> slice(s.emb, (m - 1) * {SUBDIM} + 1, {SUBDIM})))").alias("cb"))
-
-
 def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings L2-normalized (fixed-fold norm), so PQ's L2² ADC distance is
     monotone in cosine (‖a−b‖² = 2−2·cos for unit vectors) and the compressed
     ranking targets the same similarity as the brute-force cosine path."""
     return (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e0"))
-        .withColumn("nrm", F.sqrt(F.expr(
-            "aggregate(transform(e0, x -> x * x), cast(0.0 as double), "
-            "(acc, v) -> acc + v)")))
+        _raw(spark, sf_dir).withColumnRenamed("emb", "e0")
+        .withColumn("nrm", F.sqrt(norm2(F.col("e0"))))
         .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
         # nullif guard: the filter already excludes nrm = 0, but Catalyst's
         # InferFiltersFromGenerate can synthesize a `size(emb) > 0` predicate
@@ -147,19 +127,56 @@ def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, codes) where ``codes[m]`` = struct(d, c): the argmin codeword id
-    (ties to the lowest id) and its exact sub-distance.  Scan-side only."""
-    v = _normalized(spark, sf_dir)
-    # array_min over struct(d, c) = lexicographic min = min d, ties to lowest c
-    argmin = ", ".join(
-        f"array_min(transform(sequence(1, {KSUB}), c -> "
-        f"struct({_SUBDIST.format(m=m, sd=SUBDIM, c='c')} AS d, c AS c)))"
-        for m in range(1, M + 1))
-    return (
-        v.crossJoin(F.broadcast(_codebook(v)))
-        .select("vec_id", F.expr(f"array({argmin})").alias("codes"))
-    )
+def _raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, emb)``: the raw embeddings as doubles (the oracle's
+    ``::DOUBLE[]``), ungated — what the numpy scans read."""
+    return (load_table(spark, sf_dir, "embeddings")
+            .select("vec_id", F.col("embedding").cast("array<double>")
+                    .alias("emb")))
+
+
+def _head_rows(spark: SparkSession, sf_dir: str) -> dict:
+    """``{vec_id: unit vector}`` of the PQ seeds and query vectors (valid
+    ``vec_id < max(KSUB, N_QUERIES)``): ONE bounded pull per session, read by
+    every PQ codebook and query table."""
+    import numpy as np
+
+    n = max(KSUB, N_QUERIES)
+
+    def pull() -> dict:
+        rows = bounded_rows(_normalized(spark, sf_dir)
+                            .filter(F.col("vec_id") < n), n, "pq_head_rows")
+        return {r["vec_id"]: np.asarray(r["emb"], dtype=np.float64)
+                for r in rows}
+
+    return session_value(spark, ("pq_head_rows", sf_dir), pull)
+
+
+def _unit_rows(pdf):
+    """``(ids, mat)``: one pandas batch of ``_raw`` rows gated (embgate) and
+    normalized bit-equal to ``_normalized`` — ``_seq_subdist(raw, 0.0)`` is
+    its norm fold op for op, and sqrt and divide are single-rounded."""
+    import numpy as np
+
+    sel = [i for i, e in enumerate(pdf["emb"]) if e is not None and len(e)]
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)[sel]
+    if not sel:
+        return ids, np.empty((0, DIM))
+    raw = np.stack(pdf["emb"].iloc[sel].tolist()).astype(np.float64)
+    keep = np_valid_mask(raw)
+    raw, ids = raw[keep], ids[keep]
+    return ids, raw / np.sqrt(_seq_subdist(raw, 0.0))[:, None]
+
+
+def _pq_codes(mat, cb):
+    """``(codes, d)``, both ``(n, M)``: per row and subspace, the nearest
+    codeword of ``cb`` ``(M, KSUB, SUBDIM)`` — argmin takes the FIRST
+    minimum, so ties go to the lowest id — and its ``_seq_subdist``."""
+    import numpy as np
+
+    d = np.stack([_seq_subdist(mat[:, None, m * SUBDIM:(m + 1) * SUBDIM],
+                               cb[m]) for m in range(M)], axis=1)
+    return d.argmin(axis=2), d.min(axis=2)
 
 
 @declare(
@@ -181,14 +198,27 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encoding: per vector, the 4 codeword ids (one per subspace) and the
     total quantization error (sum of the 4 exact sub-distances, the ADC
     self-distance).  Zero shuffles — see module docstring."""
-    enc = _encoded(spark, sf_dir)
-    # internal code ids are 1-based sequence indexes; the published code is the
-    # seed vector id (0-based), matching the codebook definition
-    cols = [F.expr(f"element_at(codes, {m}).c - 1").cast("int").alias(f"code_{m}")
-            for m in range(1, M + 1)]
-    qerr = F.round(F.expr(
-        "aggregate(codes, cast(0.0 as double), (acc, s) -> acc + s.d)"), 6)
-    return enc.select("vec_id", *cols, qerr.alias("qerr"))
+    import numpy as np
+    import pandas as pd
+
+    cb = _adc_artifacts(spark, sf_dir)[2]
+
+    def encode(batches):
+        for pdf in batches:
+            ids, mat = _unit_rows(pdf)
+            codes, d = _pq_codes(mat, cb)
+            # qerr sums the sub-distances left to right, as the oracle's
+            # list_reduce over `d ORDER BY m` does
+            yield pd.DataFrame({
+                "vec_id": ids,
+                **{f"code_{m + 1}": codes[:, m].astype(np.int32)
+                   for m in range(M)},
+                "qerr": d[:, 0] + d[:, 1] + d[:, 2] + d[:, 3]})
+
+    enc = _raw(spark, sf_dir).mapInPandas(
+        encode, "vec_id long, code_1 int, code_2 int, code_3 int, "
+        "code_4 int, qerr double")
+    return enc.withColumn("qerr", F.round("qerr", 6))
 
 
 #: ADC pipeline CTEs through `ranked` (per-query ascending-distance ranking of
@@ -220,27 +250,18 @@ _DUCK_ADC_RANKED = f"""
 
 
 def _adc_artifacts(spark: SparkSession, sf_dir: str):
-    """Driver-side bounded pull of the tiny PQ scoring artifacts (the S15
-    scalar-pull pattern, size-bounded by module constants): ONE job collecting
-    the ≤ max(KSUB, N_QUERIES) seed/query rows — the `vec_id <` filter rides
-    into the parquet scan — from which the packed codebook (seed sub-vector
-    slices, pure selection) and the per-query ADC LUTs (`_seq_subdist`, the
-    bit-exact fold) are assembled in numpy.  The normalized embeddings come out
-    of the SAME plan every other PQ path reads, so all doubles are bit-identical
-    to the declarative computation they replace."""
+    """``(qids, lut, cb)`` in numpy from the session's seed and query rows
+    (``_head_rows``): the codebook ``cb`` (seed sub-vector slices) and the
+    per-query ADC LUTs (``_seq_subdist``, the bit-exact fold)."""
     import numpy as np
 
-    v = _normalized(spark, sf_dir)
-    rows = v.filter(F.col("vec_id") < max(KSUB, N_QUERIES)).collect()
-    by_id = {r["vec_id"]: np.asarray(r["emb"], dtype=np.float64) for r in rows}
-    # cb[m][c] = sub-vector m of seed vector vec_id == c (the _codebook contract)
+    by_id = _head_rows(spark, sf_dir)
+    # cb[m][c] = sub-vector m of seed vector vec_id == c (the oracle's `cw`)
     cb = np.stack([
         np.stack([by_id[c][m * SUBDIM:(m + 1) * SUBDIM] for c in range(KSUB)])
         for m in range(M)])                                          # (M,KSUB,SUBDIM)
     qids = np.array(sorted(i for i in by_id if i < N_QUERIES), dtype=np.int64)
-    qsub = np.stack([
-        np.stack([by_id[int(q)][m * SUBDIM:(m + 1) * SUBDIM] for m in range(M)])
-        for q in qids])                                              # (nq,M,SUBDIM)
+    qsub = np.stack([by_id[int(q)].reshape(M, SUBDIM) for q in qids])
     lut = _seq_subdist(qsub[:, :, None, :], cb[None, :, :, :])       # (nq,M,KSUB)
     return qids, lut, cb
 
@@ -250,53 +271,26 @@ def _adc_topk(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
     by ADC distance ascending, ties to the lowest candidate id — row-identical to
     ranking EVERY candidate (the ``_DUCK_ADC_RANKED`` oracle) and filtering.
 
-    Round-6 rewrite of the former full-rank plan: PQ codes AND the ADC distance
-    are computed numpy-side in one ``mapInPandas`` pass (the interpreted
-    ``aggregate(sequence(...))`` LUT fold was the round-5 bench regression), and
-    each partition emits only its local top-``depth`` per query, so the final
-    exact rank window sees ≤ depth · n_partitions rows per query instead of the
-    corpus — the two-phase top-k shape (operators/topk.py), no N_QUERIES-task
-    full sort anywhere.
-
-    Bit-equality is preserved operation-for-operation: sub-distances accumulate
-    sequentially over dims (same left fold as `_SUBDIST`/`_DUCK_SUBDIST`, single
-    IEEE add per step, no FMA), argmin ties resolve to the lowest codeword id
-    (first-occurrence argmin), and adist sums the 4 LUT lookups in subspace
-    order — so codes, distances, and therefore ranks match the oracle exactly."""
+    Codes AND the ADC distance are numpy in one ``mapInPandas`` pass, and each
+    partition emits only its local top-``depth`` per query, so the final exact
+    rank window sees ≤ depth · n_partitions rows per query — the two-phase
+    top-k shape (operators/topk.py).  Bit-equal op for op: ``_unit_rows``,
+    ``_pq_codes``, and adist summing the 4 LUT lookups in subspace order."""
     import numpy as np
     import pandas as pd
 
-    bc = spark.sparkContext.broadcast(_adc_artifacts(spark, sf_dir))
-    # raw vectors in, normalization INSIDE the numpy scan: the interpreted
-    # per-row `aggregate(transform(...))` norm fold was the dominant 10×-probe
-    # cost once scoring went vectorized — `_seq_subdist(mat, 0.0)` is the same
-    # fold op-for-op (x−0.0 ≡ x bit-wise), sqrt and the per-element divide are
-    # single-rounded in both engines, so normalized values stay bit-equal.
-    v = (load_table(spark, sf_dir, "embeddings")
-         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb")))
+    qids, lut, cb = _adc_artifacts(spark, sf_dir)
 
     def gen(batches):
-        qids, lut, cb = bc.value
         best: pd.DataFrame | None = None
         for pdf in batches:
-            pdf = pdf[pdf["emb"].notna()]           # embgate: NULL vectors out
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            ids, mat = _unit_rows(pdf)
             if not len(ids):
                 continue
-            raw = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["emb"]])
-            keep = np_valid_mask(raw)               # embgate, inside the scan
-            if not keep.all():
-                raw, ids = raw[keep], ids[keep]
-                if not len(ids):
-                    continue
-            mat = raw / np.sqrt(_seq_subdist(raw, 0.0))[:, None]
-            acc = None  # (nq, n) ADC distances, accumulated in subspace order
-            for m in range(M):
-                sub = mat[:, m * SUBDIM:(m + 1) * SUBDIM]
-                d = _seq_subdist(sub[:, None, :], cb[m][None, :, :])
-                codes_m = d.argmin(axis=1)          # ties → lowest codeword id
-                lm = lut[:, m, :][:, codes_m]       # (nq, n) LUT gather
-                acc = lm if acc is None else acc + lm
+            codes, _ = _pq_codes(mat, cb)
+            acc = lut[:, 0, :][:, codes[:, 0]]  # (nq, n) LUT gather, m order
+            for m in range(1, M):
+                acc = acc + lut[:, m, :][:, codes[:, m]]
             qs, vs, ds = [], [], []
             for qi, q in enumerate(qids):
                 mask = ids != q                     # a query never matches itself
@@ -318,7 +312,8 @@ def _adc_topk(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
         if best is not None and len(best):
             yield best
 
-    scored = v.mapInPandas(gen, "query_id long, vec_id long, adist double")
+    scored = _raw(spark, sf_dir).mapInPandas(
+        gen, "query_id long, vec_id long, adist double")
     w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
     return (scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= depth))
@@ -413,16 +408,12 @@ def _rerank_from_adc(spark: SparkSession, sf_dir: str, adc: DataFrame) -> DataFr
             .select("vec_id", F.col("embedding").cast("array<double>").alias("e0")))
     q = (_normalized(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")))
-    dot = ("aggregate(zip_with(qemb, emb, (x, y) -> x * y), "
-           "cast(0.0 as double), (acc, v) -> acc + v)")
     rr = (
         vraw.join(F.broadcast(short), "vec_id")
-        .withColumn("nrm", F.sqrt(F.expr(
-            "aggregate(transform(e0, x -> x * x), cast(0.0 as double), "
-            "(acc, v) -> acc + v)")))
+        .withColumn("nrm", F.sqrt(norm2(F.col("e0"))))
         .withColumn("emb", F.expr("transform(e0, x -> x / nrm)"))
         .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.expr(dot))
+        .withColumn("cos", _dot(F.col("qemb"), F.col("emb")))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
@@ -513,23 +504,6 @@ def _sub_mean(a1: DataFrame) -> DataFrame:
                   for i in range(SUBDIM)]).alias("cvec"))
 
 
-def _lit_codebook_by_m(rows) -> str:
-    """A driver-held (m, c, cvec) codebook as ONE literal
-    ``array<array<struct<c, cvec>>>`` SQL expression indexed by subspace
-    (``element_at(..., m)``), constant-folded by Catalyst into a single
-    Literal.  The IVFADC LUT evaluates against this CONSTANT — no pack
-    aggregation, no BroadcastExchange job, no join-by-m (the trainer chains
-    are job-count-bound; artifacts.bounded_rows)."""
-    by_m: dict = {}
-    for r in rows:
-        by_m.setdefault(r["m"], []).append(r)
-    if sorted(by_m) != list(range(1, M + 1)):
-        raise ValueError(f"codebook covers subspaces {sorted(by_m)}, "
-                         f"expected 1..{M}")
-    return "array({})".format(
-        ", ".join(lit_items(by_m[m], "c") for m in range(1, M + 1)))
-
-
 def _assign_sub(subs: DataFrame, cw: list) -> DataFrame:
     """``subs`` plus ``c`` (int) / ``d``: per (vec_id, m) the codeword
     minimizing the sequential-fold sub-L2², ties to the lowest id — the
@@ -546,9 +520,9 @@ def _assign_sub(subs: DataFrame, cw: list) -> DataFrame:
 def _lloyd_codebook(subs: DataFrame, what: str) -> DataFrame:
     """One Lloyd update per subspace over ``subs`` ``(vec_id, m, sub, …)``:
     the seed codebook — sub-vector ``m`` of the first KSUB vectors — is
-    collected (≤M·KSUB rows) and baked into the literal sub-argmin, and each
-    codeword becomes the decimal-exact mean of its members (``_sub_mean``,
-    ONE exchange); an empty cell keeps its seed.  Returns the LAZY
+    collected (≤M·KSUB rows) and handed to the numpy sub-argmin kernel, and
+    each codeword becomes the decimal-exact mean of its members
+    (``_sub_mean``, ONE exchange); an empty cell keeps its seed.  Returns the LAZY
     ``(m, c, cvec)`` codebook — the artifact tier owns materialization."""
     cw0 = (subs.filter(F.col("vec_id") < KSUB)
            .select("m", F.col("vec_id").cast("int").alias("c"),
@@ -654,11 +628,11 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: centroids and codebooks (seeds and trained alike) are tiny
 # collected rows — no broadcast job, no join; every assign and encode is the
 # numpy argmin kernel over the scan's Arrow batches (kmeans.argmin_arrow),
-# and the 10-query sides (probed cells, LUT) inline them as constant-folded
-# literals; the probe list bounds the candidate
-# join (the IVF prune — candidates shuffle once on cell id, never
-# all-pairs); the final rank is the two-phase exact top-k.  Nothing driver-side grows with the
-# corpus.
+# and the 10-query side (probed cells, LUT of ≤ N_QUERIES·NPROBE·M·KSUB
+# rows) is driver numpy over one memoized pull of the query rows
+# (``_probe_lut``); the LUT bounds the candidate join (the IVF prune — a
+# broadcast of the LUT, never all-pairs); the final rank is the two-phase
+# exact top-k.  Nothing driver-side grows with the corpus.
 #
 # No reference counterpart (the reference has no vector ops); extension
 # operator per the training-data-pipeline brief.
@@ -786,8 +760,9 @@ _DUCK_IVFPQ = f"""
 def _coarse_centroids(spark: SparkSession, sf_dir: str) -> list:
     """The trained coarse centroid ROWS ``(cid, cvec)`` (≤KC, model
     geometry) over the NORMALIZED embeddings — the index's first artifact.
-    Driver-held: every consumer bakes them into a constant-folded literal
-    (no broadcast jobs, no joins — artifacts.persistent_artifact_rows)."""
+    Driver-held: the argmin kernel and the query side (``_probe_lut``) read
+    the rows directly (no broadcast jobs, no joins —
+    artifacts.persistent_artifact_rows)."""
     return persistent_artifact_rows(
         spark, sf_dir, "ivfpq_coarse_centroids", code_version="1",
         table="embeddings", max_rows=KC,
@@ -815,7 +790,8 @@ def _residual_subs(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
 def _residual_codebook(spark: SparkSession, sf_dir: str, c1: list) -> list:
     """The trained (m, c, cvec) residual codebook ROWS (≤M·KSUB, model
     geometry) — one Lloyd update over the pooled residual sub-vectors
-    (pq_encode_trained's exact contract); driver-held for literal baking."""
+    (pq_encode_trained's exact contract); driver-held for the argmin kernel
+    and the query LUT (``_probe_lut``)."""
     return persistent_artifact_rows(
         spark, sf_dir, "ivfpq_residual_codebook", code_version="1",
         table="embeddings", max_rows=M * KSUB,
@@ -823,28 +799,47 @@ def _residual_codebook(spark: SparkSession, sf_dir: str, c1: list) -> list:
                                       "ivfpq_rcw0"))
 
 
-def _probed_cells(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
-    """``(query_id, cid, qr)``: each query's NPROBE nearest trained coarse
-    cells and its residual against their centroids — shared by the IVFADC
-    scorer and the dashboard's candidate-count audit.  The centroids enter
-    as an ``inline`` over the constant-folded literal array (same (query,
-    centroid) rows the former crossJoin(broadcast) produced, minus its
-    broadcast-build job)."""
-    q = (_normalized(spark, sf_dir)
-         .filter(F.col("vec_id") < N_QUERIES)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("emb").alias("qemb")))
-    qdist = ("aggregate(zip_with(qemb, cvec, (x, y) -> (x - y) * (x - y)), "
-             "cast(0.0 as double), (acc, v) -> acc + v)")
-    wq = Window.partitionBy("query_id").orderBy("qd", "cid")
-    return (q.select("query_id", "qemb",
-                     F.expr(f"inline({lit_items(c1, 'cid', 'L')})"))
-            .withColumn("qd", F.expr(qdist))
-            .withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= NPROBE)
-            .select("query_id", "cid",
-                    F.zip_with("qemb", "cvec", lambda x, c: x - c)
-                    .alias("qr")))
+def _nearest_cells(queries: dict, c1: list) -> list:
+    """``[(query_id, cid)]``: each query's NPROBE nearest centroids of ``c1``
+    by ``_seq_subdist``, ties to the lowest cid (the oracle's ``qp``)."""
+    import numpy as np
+
+    cids = np.array([r["cid"] for r in c1], dtype=np.int64)
+    cents = np.array([r["cvec"] for r in c1], dtype=np.float64)
+    return [(int(qid), int(cid)) for qid in sorted(queries)
+            for cid in cids[np.lexsort(
+                (cids, _seq_subdist(queries[qid], cents)))[:NPROBE]]]
+
+
+def _probe_lut(queries: dict, c1: list, cw1: list) -> tuple[list, list]:
+    """``(probes, lut)`` for driver-held ``{query_id: unit vector}``:
+    ``probes`` is :func:`_nearest_cells`; ``lut`` has one ``(query_id, cid,
+    m, lc, sd)`` row per probe and codeword ``(m, lc)``, ``sd`` the
+    ``_seq_subdist`` of the query's residual against ``cid``, sliced to
+    subspace ``m``, and the codeword (the oracle's ``lut``).  A codebook
+    missing a subspace raises."""
+    import numpy as np
+
+    ms = sorted({r["m"] for r in cw1})
+    if ms != list(range(1, M + 1)):
+        raise ValueError(f"codebook covers subspaces {ms}, expected 1..{M}")
+    words = sorted(cw1, key=lambda r: (r["m"], r["c"]))
+    wm = np.array([r["m"] for r in words], dtype=np.int64)
+    wvec = np.array([r["cvec"] for r in words], dtype=np.float64)
+    cent = {r["cid"]: np.asarray(r["cvec"], dtype=np.float64) for r in c1}
+    probes = _nearest_cells(queries, c1)
+    lut = []
+    for qid, cid in probes:
+        qr = (queries[qid] - cent[cid]).reshape(M, SUBDIM)
+        sd = _seq_subdist(qr[wm - 1], wvec)
+        lut += [(qid, cid, int(m), w["c"], float(d))
+                for m, w, d in zip(wm, words, sd)]
+    return probes, lut
+
+
+def _query_rows(spark: SparkSession, sf_dir: str) -> dict:
+    return {q: v for q, v in _head_rows(spark, sf_dir).items()
+            if q < N_QUERIES}
 
 
 def _ivfpq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -854,19 +849,9 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = _coarse_centroids(spark, sf_dir)
     cw1 = _residual_codebook(spark, sf_dir, c1)
     codes = _assign_sub(_residual_subs(spark, sf_dir, c1), cw1)
-    probes = _probed_cells(spark, sf_dir, c1)
-    lutsub = (f"aggregate(zip_with(slice(qr, (m - 1) * {SUBDIM} + 1, "
-              f"{SUBDIM}), cvec, (x, y) -> (x - y) * (x - y)), "
-              f"cast(0.0 as double), (acc, v) -> acc + v)")
-    # the codewords enter the LUT as an inline over the literal codebook —
-    # same (probe, codeword) rows as the former crossJoin(broadcast(cw1)),
-    # minus its broadcast-build job
-    cwlit = ("inline(flatten(transform(" + _lit_codebook_by_m(cw1)
-             + ", (a, i) -> transform(a, s -> "
-             "named_struct('m', i + 1, 'lc', s.c, 'cvec', s.cvec)))))")
-    lut = (probes.select("query_id", "cid", "qr", F.expr(cwlit))
-           .withColumn("sd", F.expr(lutsub))
-           .select("query_id", "cid", "m", "lc", "sd"))
+    _, lut = _probe_lut(_query_rows(spark, sf_dir), c1, cw1)
+    lut = spark.createDataFrame(
+        lut, "query_id long, cid long, m int, lc int, sd double")
     return (codes
             .join(F.broadcast(lut), ["cid", "m"])
             .filter(F.col("lc") == F.col("c"))
@@ -1199,12 +1184,8 @@ def _candidate_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                    _plane_dot_exprs)
 
     # hyperplane buckets over the valid embeddings (ivf + multiprobe)
-    b = (load_table(spark, sf_dir, "embeddings")
-         .select("vec_id",
-                 F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(F.expr(
-             "aggregate(transform(emb, x -> x * x), cast(0.0 as double), "
-             "(acc, v) -> acc + v)")))
+    b = (_raw(spark, sf_dir)
+         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
          .filter(valid_nrm(F.col("nrm")))
          .selectExpr("vec_id", *[
              f"({d}) AS d{p}" for p, d
@@ -1243,8 +1224,10 @@ def _candidate_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = _coarse_centroids(spark, sf_dir)
     ch = (_assign(_normalized(spark, sf_dir), c1)
           .groupBy("cid").agg(F.count(F.lit(1)).alias("c")))
-    ivfpq = (_probed_cells(spark, sf_dir, c1).select("query_id", "cid")
-             .join(F.broadcast(ch), "cid")
+    probes = spark.createDataFrame(
+        _nearest_cells(_query_rows(spark, sf_dir), c1),
+        "query_id long, cid long")
+    ivfpq = (probes.join(F.broadcast(ch), "cid")
              .groupBy("query_id")
              .agg((F.sum("c") - 1).alias("n_candidates")))
     tiers = [

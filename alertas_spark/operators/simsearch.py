@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alertas_spark.operators.embgate import EMB_VALID_SQL, valid_nrm
+from alertas_spark.operators.embgate import EMB_VALID_SQL, norm2, valid_nrm
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -29,10 +29,6 @@ def _dot(a: Column, b: Column) -> Column:
     DuckDB oracle's list_reduce)."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
                        lambda acc, x: acc + x)
-
-
-def _norm2(a: Column) -> Column:
-    return F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
 
 
 _DUCK_DOT = ("list_reduce(list_transform(range(1, len({a}) + 1), "
@@ -86,7 +82,7 @@ def _spark_topk(spark: SparkSession, sf_dir: str, same_label: bool) -> DataFrame
     v = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label")
-        .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
         .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
     )
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
@@ -248,7 +244,7 @@ def simsearch_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        in enumerate(_plane_dot_exprs(one_based=False))])
         .withColumn("bucket", F.expr(_BUCKET_FROM_DOTS))
         .withColumn("weak", F.expr(_WEAK_PLANE))
-        .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
         .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
     )
     q = (
@@ -278,7 +274,7 @@ def simsearch_topk_ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
         .withColumn("bucket", F.expr(_bucket_expr(one_based=False)))
-        .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
         .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
     )
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
@@ -378,7 +374,7 @@ def simsearch_topk_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (load_table(spark, sf_dir, "embeddings")
          .select("vec_id",
                  F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
          .filter(valid_nrm(F.col("nrm")))
          .select("vec_id",
                  F.expr(_HAM_SIG_SPARK.format(start=1)).alias("sig_lo"),
@@ -465,7 +461,7 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v = (load_table(spark, sf_dir, "embeddings")
          .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(_norm2(F.col("emb"))))
+         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
          .filter(valid_nrm(F.col("nrm"))))
     is_eval = ((F.col("vec_id") % DECON_MOD == 0)
                & (F.col("vec_id") < DECON_EVAL_CAP))

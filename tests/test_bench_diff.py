@@ -29,6 +29,23 @@ def test_same_protocol_still_fails_real_regressions(tmp_path):
     assert "q_slow" in out and "REGRESSION" in out
 
 
+def test_regression_names_the_layer_that_moved(tmp_path):
+    # q_slow regresses in its action (executor time grew less); q_flat has no
+    # layers on the old side, so only q_slow gets a layer line
+    lo = {"builder_s": 0.5, "action_s": 1.0, "driver_gap_s": 0.2,
+          "executor_run_s": 0.8, "jobs": 4}
+    ln = {"builder_s": 0.6, "action_s": 3.9, "driver_gap_s": 0.3,
+          "executor_run_s": 2.1, "jobs": 9}
+    old = {"queries": {"q_slow": 1.5, "q_flat": 2.0},
+           "layers": {"q_slow": lo}}
+    new = {"queries": {"q_slow": 4.5, "q_flat": 6.0},
+           "layers": {"q_slow": ln, "q_flat": ln}}
+    code, out = _run(tmp_path, old, new)
+    assert code == 1, out
+    moved = [ln for ln in out.splitlines() if "moved:" in ln]
+    assert moved == [f"{'':40s} moved: action_s 1.00s -> 3.90s, jobs 4->9"], out
+
+
 def test_driver_wrapper_is_graded_from_its_parsed_record(tmp_path):
     # the driver keeps only a 2000-char tail of the bench line; here it holds
     # no queries at all, so the full record must come from `parsed`

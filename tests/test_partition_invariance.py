@@ -23,10 +23,10 @@ QUERIES = [
     "salted_skew_agg",           # two-phase decimal aggregation
     "sample_hash_stratified",    # hash-derived sampling
     "product_aggregate",         # fixed-point EXP(SUM(LN)) quantization
-    "pq_encode",                 # scan-side argmin over broadcast codebook
+    "pq_encode",                 # numpy scan-side argmin, driver codebook
     "pq_encode_trained",         # Lloyd update: decimal means + quantized qerr
-    "simsearch_topk_ivf_trained",     # collected seed -> literal k-means argmin
-    "simsearch_topk_ivfpq_residual",  # collected seeds -> literal residual PQ
+    "simsearch_topk_ivf_trained",     # collected seed -> numpy k-means argmin
+    "simsearch_topk_ivfpq_residual",  # numpy residual PQ + driver query LUT
     "simsearch_topk_pq_reranked",  # ADC shortlist + exact-cosine re-rank
     "simsearch_topk_bruteforce",   # two-phase top-k local shortlist (topk.py)
     "dedup_cluster_representative",  # CC labels + deterministic rep pick

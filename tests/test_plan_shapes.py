@@ -144,12 +144,25 @@ def test_dedup_incremental_reuses_the_fingerprint_exchange(spark):
 
 def test_pq_encode_is_scan_side_after_codebook_build(spark):
     plan = _plan(_build(spark, "pq_encode"))
-    # the ONLY exchanges are the 16-row codebook global agg + its broadcast back;
-    # the encoding pass over the corpus never shuffles data
-    assert plan.count("Exchange") == 2, plan.count("Exchange")
-    assert plan.count("BroadcastExchange") == 1
-    for join_node in ("SortMergeJoin", "ShuffledHashJoin"):
-        assert join_node not in plan
+    # the codebook is a driver-held bounded pull (pq._head_rows), so the plan
+    # is the scan plus ONE numpy encode pass: no exchange of any kind
+    assert plan.count("Exchange") == 0, plan.count("Exchange")
+    assert plan.count("MapInPandas") == 1, plan
+
+
+def test_ivfadc_query_side_is_driver_numpy(spark):
+    """The IVFADC probes and LUT are computed on the driver (pq._probe_lut)
+    and broadcast as a local relation: no ``inline`` Generate over a
+    literal codebook, and no Window beyond the result ranks — one for the
+    residual tier's top-k, two for the rerank tier (ADC shortlist, exact
+    re-rank).  The former query-side probe rank was a third kind."""
+    import re
+
+    for name, windows in (("simsearch_topk_ivfpq_residual", 1),
+                          ("simsearch_topk_ivfpq_rerank", 2)):
+        plan = _plan(_build(spark, name))
+        assert "Generate inline" not in plan, name
+        assert len(re.findall(r"\bWindow \[", plan)) == windows, name
 
 
 def test_trainer_argmin_never_reruns_as_an_inferred_filter(spark):

@@ -262,42 +262,90 @@ def test_single_exchange_sub_mean_equals_exploded_form(spark):
         assert cvec == [ref_s[key][p] for p in range(SUBDIM)]
 
 
-def test_double_literals_round_trip_bit_exactly_and_refuse_non_finite(spark):
-    """kmeans.dlit renders every trained centroid/codeword double: Spark
-    must parse each literal back to the identical binary64, and NaN/±Inf
-    (which have no SQL double literal) must raise instead of rendering
-    invalid SQL."""
-    import math
+def test_probe_lut_refuses_a_missing_subspace():
+    """The query LUT slices the residual by subspace ``m``: a codebook
+    without rows for some subspace must raise, not silently drop that
+    subspace's lookups from every candidate's distance."""
+    import numpy as np
+    import pytest
+
+    from alertas_spark.operators.pq import DIM, KSUB, M, _probe_lut
+
+    queries = {0: np.full(DIM, 0.125)}
+    c1 = [{"cid": 0, "cvec": [0.0] * DIM}]
+    cw1 = [{"m": m, "c": c, "cvec": [0.5] * (DIM // M)}
+           for m in range(1, M + 1) for c in range(KSUB)]
+    probes, lut = _probe_lut(queries, c1, cw1)
+    assert probes == [(0, 0)] and len(lut) == M * KSUB
+    with pytest.raises(ValueError, match="subspaces"):
+        _probe_lut(queries, c1, [r for r in cw1 if r["m"] != 2])
+
+
+def test_probe_lut_matches_the_spark_fold_bit_for_bit(spark):
+    """pq._probe_lut (driver numpy) against Spark's ``aggregate(zip_with(..))``
+    fold and ``ROW_NUMBER() OVER (ORDER BY d, cid)`` probe rank — the shape
+    the IVFADC query side had in SQL: equal probe sets and bit-equal
+    sub-distances on ``-0.0`` and ``1e-30`` components, half-ulp squares
+    (2 + 2⁻⁵² rounds back to 2 at every step of a left fold; a regrouped sum
+    keeps them), and two centroids equidistant from the query across the
+    NPROBE cut, where the lower cid must win."""
     import struct
 
-    import pytest
+    import numpy as np
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
-    from alertas_spark.operators.kmeans import dlit
+    from alertas_spark.operators.pq import (DIM, KSUB, M, NPROBE, SUBDIM,
+                                            _probe_lut)
 
-    vals = [0.1, -0.0, 1 / 3, 5e-324, 1.7976931348623157e308, -2.5e-7,
-            0.30000000000000004]
-    got = spark.sql("SELECT array({}) AS xs".format(
-        ", ".join(dlit(x) for x in vals))).first().xs
-    assert [struct.pack("<d", x) for x in got] == \
-        [struct.pack("<d", x) for x in vals]
-    for bad in (math.nan, math.inf, -math.inf):
-        with pytest.raises(ValueError):
-            dlit(bad)
+    trap = [1.0, 1.0] + [2.0 ** -26] * (SUBDIM - 4) + [-0.0, 1e-30]
+    q0 = np.array(trap * M)
+    q1 = np.array([0.25, -0.0, 1e-30, -0.5] * (DIM // 4))
+    e = np.array([0.5, -0.25] * (DIM // 2))
+    # q0's distances: cid 4 (0.625) < 7 (2.5) < 9 (8.0) < 3 == 5 (both
+    # ‖e‖² = 10) < 2 — the NPROBE-th slot is a tie, so cid 3 is probed and
+    # cid 5 is not; q0's residual against cid 9 is the trap itself
+    cents = {9: np.zeros(DIM), 4: q0 + e / 4, 7: q0 - e / 2, 5: q0 + e,
+             3: q0 - e, 2: q0 + 2 * e}
+    c1 = [{"cid": c, "cvec": v.tolist()} for c, v in cents.items()]
+    cw1 = [{"m": m, "c": c,
+            "cvec": (np.zeros(SUBDIM) if c == 0 else
+                     np.array(trap) * (c % 3) - 0.0625 * c * (m % 2)).tolist()}
+           for m in range(1, M + 1) for c in range(KSUB)]
+    queries = {0: q0, 1: q1}
+    probes, lut = _probe_lut(queries, c1, cw1)
 
+    assert [c for q, c in probes if q == 0] == [4, 7, 9, 3]
+    sd = {(q, c, m, lc): d for q, c, m, lc, d in lut}
+    assert sd[(0, 9, 1, 0)] == 2.0  # the left fold, not 2 + 12·2⁻⁵²
 
-def test_codebook_literal_refuses_a_missing_subspace():
-    """The literal codebook is indexed by subspace (``element_at(.., m)``):
-    a codebook without rows for some subspace must raise, not render an
-    array whose indexes silently shift."""
-    import pytest
+    fold = ("aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+            "cast(0.0 as double), (acc, v) -> acc + v)")
+    qdf = spark.createDataFrame([(q, v.tolist()) for q, v in queries.items()],
+                                "query_id long, qemb array<double>")
+    cdf = spark.createDataFrame([(r["cid"], r["cvec"]) for r in c1],
+                                "cid long, cvec array<double>")
+    wdf = spark.createDataFrame([(r["m"], r["c"], r["cvec"]) for r in cw1],
+                                "m int, lc int, wvec array<double>")
+    w = Window.partitionBy("query_id").orderBy("qd", "cid")
+    ref_probes = (qdf.crossJoin(cdf)
+                  .withColumn("qd", F.expr(fold.format(a="qemb", b="cvec")))
+                  .withColumn("rn", F.row_number().over(w))
+                  .filter(F.col("rn") <= NPROBE)
+                  .select("query_id", "cid",
+                          F.zip_with("qemb", "cvec", lambda x, c: x - c)
+                          .alias("qr")))
+    ref = (ref_probes.crossJoin(wdf)
+           .withColumn("sd", F.expr(fold.format(
+               a=f"slice(qr, (m - 1) * {SUBDIM} + 1, {SUBDIM})", b="wvec")))
+           .select("query_id", "cid", "m", "lc", "sd").collect())
 
-    from alertas_spark.operators.pq import M, _lit_codebook_by_m
+    def bits(x):
+        return struct.pack("<d", x)
 
-    rows = [{"m": m, "c": c, "cvec": [0.5, 0.25]}
-            for m in range(1, M + 1) for c in range(2)]
-    assert _lit_codebook_by_m(rows).startswith("array(array(")
-    with pytest.raises(ValueError, match="subspaces"):
-        _lit_codebook_by_m([r for r in rows if r["m"] != 2])
+    assert sorted(probes) == sorted({(r.query_id, r.cid) for r in ref})
+    assert sorted((k, bits(d)) for k, d in sd.items()) == sorted(
+        ((r.query_id, r.cid, r.m, r.lc), bits(r.sd)) for r in ref)
 
 
 def test_argmin_kernel_matches_a_sequential_fold_bit_for_bit(spark):

@@ -14,6 +14,10 @@ Usage::
 Queries faster than the noise floor (NOISE_FLOOR_S = 1 s, on both sides) are
 reported but never fail the gate — timings that fast on a warm local JVM jitter
 well past 1.5x.
+
+When both records carry a regressed query's ``layers`` entry, the report names
+the layer that moved: the one of LAYER_FIELDS with the largest increase, and
+the job counts old -> new.
 """
 
 from __future__ import annotations
@@ -23,11 +27,14 @@ import json
 import sys
 
 NOISE_FLOOR_S = 1.0
+#: the per-query time split of bench.py's ``layers`` entries
+LAYER_FIELDS = ("builder_s", "action_s", "driver_gap_s", "executor_run_s")
 
 
-def load_bench(path: str) -> tuple[dict[str, float], dict]:
-    """``(queries, fixtures)`` of a bench record.  ``fixtures`` is the input
-    fingerprint map (empty for records that predate it)."""
+def load_bench(path: str) -> tuple[dict[str, float], dict, dict]:
+    """``(queries, fixtures, layers)`` of a bench record.  ``fixtures`` is the
+    input fingerprint map and ``layers`` the per-query layer split (each
+    empty for records that predate it)."""
     with open(path) as fh:
         doc = json.load(fh)
     if "tail" in doc:  # driver wrapper
@@ -39,7 +46,15 @@ def load_bench(path: str) -> tuple[dict[str, float], dict]:
     if not isinstance(doc.get("queries"), dict):
         print(f"{path}: unrecognized bench format", file=sys.stderr)
         raise SystemExit(2)
-    return doc["queries"], doc.get("fixtures") or {}
+    return doc["queries"], doc.get("fixtures") or {}, doc.get("layers") or {}
+
+
+def moved_layer(old: dict, new: dict) -> str:
+    """The LAYER_FIELDS entry that grew most between two ``layers[q]``
+    records, and the job counts."""
+    field = max(LAYER_FIELDS, key=lambda f: new.get(f, 0) - old.get(f, 0))
+    return (f"{field} {old.get(field, 0):.2f}s -> {new.get(field, 0):.2f}s, "
+            f"jobs {old.get('jobs')}->{new.get('jobs')}")
 
 
 def main() -> int:
@@ -49,8 +64,8 @@ def main() -> int:
     ap.add_argument("--threshold", type=float, default=1.5)
     args = ap.parse_args()
 
-    old, old_fix = load_bench(args.old)
-    new, new_fix = load_bench(args.new)
+    old, old_fix, old_layers = load_bench(args.old)
+    new, new_fix, new_layers = load_bench(args.new)
     # Fixture boundary: regenerated input tables shift absolute per-query
     # times (the r7→r8 vector-family drift was exactly this — A/B on frozen
     # fixtures exonerated the code).  When both records carry fingerprints
@@ -80,6 +95,9 @@ def main() -> int:
                 failures.append(f"{name}: {o:.2f}s -> {n:.2f}s ({ratio:.2f}x)")
         if ratio > args.threshold or ratio < 1 / args.threshold:
             print(f"{name:40s} {o:8.2f} {n:8.2f} {ratio:7.2f}{flag}")
+        if flag == "  REGRESSION" and name in old_layers and name in new_layers:
+            print(f"{'':40s} moved: "
+                  f"{moved_layer(old_layers[name], new_layers[name])}")
 
     only_old = sorted(set(old) - set(new))
     only_new = sorted(set(new) - set(old))
