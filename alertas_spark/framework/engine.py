@@ -184,13 +184,11 @@ def run_all(ctx: AlertContext, siglas: tuple[str, ...] = ACTIVE,
     them back-to-back, leaving the cluster idle through every job's straggler
     tail — and their published union is row-identical to the serial append
     (pinned by test_framework/test_alerts e2e).  Publication runs one family
-    per thread (disjoint tables).  Shared base views build once under the
-    context's view lock."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
+    per thread (disjoint tables).  Both phases run through ``memo.overlap``,
+    so every alert and family job keeps the caller's session tags.  Shared
+    base views build once under the context's view lock."""
     from alertas_spark.framework.timing import Timer
+    from alertas_spark.operators.memo import overlap
 
     timings: dict[str, float] = {}
     defs = registry()
@@ -203,11 +201,7 @@ def run_all(ctx: AlertContext, siglas: tuple[str, ...] = ACTIVE,
             run_alert(ctx, defs[sigla])
 
     workers = _batch_pool_size(ctx.spark)
-    with ThreadPoolExecutor(max_workers=workers) as pool:
-        futures = [pool.submit(inheritable_thread_target(
-            lambda s=sigla: _run(s))) for sigla in siglas]
-        for f in futures:
-            f.result()
+    overlap(ctx.spark, [lambda s=sigla: _run(s) for sigla in siglas], workers)
     ctx.spark.catalog.clearCache()  # ≙ jobs.py:285
 
     def _pub(fam: str) -> None:
@@ -217,10 +211,6 @@ def run_all(ctx: AlertContext, siglas: tuple[str, ...] = ACTIVE,
                 _stage_name(fam, s) for s in siglas
                 if defs[s].family_table == fam))
 
-    pub_workers = max(1, min(workers, len(families)))
-    with ThreadPoolExecutor(max_workers=pub_workers) as pool:
-        futures = [pool.submit(inheritable_thread_target(
-            lambda f_=fam: _pub(f_))) for fam in families]
-        for f in futures:
-            f.result()
+    overlap(ctx.spark, [lambda f=fam: _pub(f) for fam in families],
+            max(1, min(workers, len(families))))
     return timings

@@ -35,8 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alertas_spark.operators.embgate import EMB_VALID_SQL, norm2, valid_nrm
-from alertas_spark.operators.simsearch import _DUCK_DOT, _DUCK_NORM2, _dot
+from alertas_spark.operators.embgate import EMB_VALID_SQL
+from alertas_spark.operators.simsearch import (_DUCK_DOT, _DUCK_NORM2, _corpus,
+                                               _cosine)
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -68,11 +69,7 @@ def clip_pairs(spark: SparkSession, sf_dir: str,
     — the streaming tier passes the documents STREAM here, so the served
     gate is literally the batch expression over an incremental source
     (stream-static join: the embedding sides stay static)."""
-    v = (load_table(spark, sf_dir, "embeddings")
-         .select("vec_id",
-                 F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
-         .filter(valid_nrm(F.col("nrm"))))
+    v = _corpus(spark, sf_dir)
     cap = v.select(F.col("vec_id").alias("cap_id"),
                    F.col("emb").alias("cemb"), F.col("nrm").alias("cnrm"))
     img = v.select(F.col("vec_id").alias("img_id"),
@@ -85,8 +82,7 @@ def clip_pairs(spark: SparkSession, sf_dir: str,
             .join(img, F.col("img_id")
                   == F.col("doc_id") - (F.col("doc_id") % 2))
             .select("doc_id", "source",
-                    (_dot(F.col("cemb"), F.col("iemb"))
-                     / (F.col("cnrm") * F.col("inrm"))).alias("cos")))
+                    _cosine("cemb", "cnrm", "iemb", "inrm").alias("cos")))
 
 
 def gate_projection(pairs: DataFrame) -> DataFrame:

@@ -145,7 +145,7 @@ def _panel_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them (guide §2.6) so the panel's wall-clock tracks the slowest axis
     # instead of the sum; each lands in the same memo slot it would
     # sequentially, so results and downstream plan shape are unchanged
-    ov, bl, mh, em, mk = overlap([
+    ov, bl, mh, em, mk = overlap(spark, [
         lambda: session_artifact(
             spark, ("decon_axis_overlap", sf_dir),
             lambda: decontaminate_overlap(spark, sf_dir)

@@ -26,7 +26,7 @@ coarse partition — closing the loop from raw embeddings to a *trained* IVF ind
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DataType, DoubleType, LongType,
                                StructField, StructType)
@@ -327,26 +327,12 @@ def trained_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @declare("simsearch_topk_ivf_trained", oracle=_DUCK_TOPK_TRAINED)
 def simsearch_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full trained-ANN loop in one plan: k-means coarse quantizer (above) →
-    cluster-pruned cosine top-k.  Probe-1 over TRAINED cells — what a user gets
-    from `kmeans_assign` + `simsearch_topk_ivf` composed, oracle-checked end to end."""
-    from alertas_spark.operators.simsearch import N_QUERIES, TOP_K, _dot
+    cluster-pruned cosine top-k through the shared two-phase score-and-rank
+    step (``simsearch.cosine_topk``).  Probe-1 over TRAINED cells — what a
+    user gets from `kmeans_assign` + `simsearch_topk_ivf` composed,
+    oracle-checked end to end."""
+    from alertas_spark.operators.simsearch import _topk_shape
 
-    n = trained_assignment(spark, sf_dir)
-    q = n.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"),
-        F.col("nrm").alias("qnrm"), F.col("cid").alias("qcid"))
-    scored = (
-        n.join(F.broadcast(q),
-               (F.col("query_id") != F.col("vec_id"))
-               & (F.col("qcid") == F.col("cid")))
-        .withColumn("cos", _dot(F.col("qemb"), F.col("emb"))
-                    / (F.col("qnrm") * F.col("nrm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("cand_id"),
-                F.col("rnk").cast("int").alias("rnk"),
-                F.round("cos", 6).alias("score"))
-    )
+    return _topk_shape(trained_assignment(spark, sf_dir),
+                       F.col("cid").alias("qcid"),
+                       prune=F.col("qcid") == F.col("cid"))

@@ -105,7 +105,7 @@ def _kn_tables(spark: SparkSession, sf_dir: str
     # them CONCURRENTLY (memo.overlap, guide §2.6): each lands in its own
     # session/store slot exactly as sequentially, and the tri/big/uni jobs'
     # stage tails back-fill each other instead of leaving the cluster idle
-    tri, big, uni = memo.overlap([
+    tri, big, uni = memo.overlap(spark, [
         lambda: persistent_artifact(spark, sf_dir, "kn_trigram",
                                     KN_CODE_VERSION, "documents", build_tri),
         lambda: persistent_artifact(spark, sf_dir, "kn_bigram",

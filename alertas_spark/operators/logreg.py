@@ -391,7 +391,7 @@ def lr_nb_confusion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two prediction relations are independent — the NB side's scan runs
     # WHILE the driver steps the LR trainer's IRLS collect rounds
     # (memo.overlap, guide §2.6; the _ensemble_df pattern)
-    lr, nb = memo.overlap([
+    lr, nb = memo.overlap(spark, [
         lambda: _lr_scored(spark, sf_dir).localCheckpoint(),
         lambda: _nb_predictions(spark, sf_dir).localCheckpoint(),
     ], max_workers=2)

@@ -24,8 +24,11 @@ from __future__ import annotations
 
 import threading
 from collections.abc import Callable, Sequence
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 _CACHE: dict[tuple, DataFrame] = {}
 
@@ -85,31 +88,39 @@ def session_value(spark: SparkSession, key: tuple, build: Callable[[], object]):
     return _VALUES[k]
 
 
-def overlap(thunks: Sequence[Callable[[], DataFrame]],
-            max_workers: int = 3) -> list[DataFrame]:
-    """Materialize independent artifact relations CONCURRENTLY (optimization
-    guide §2.6 "overlap independent jobs"): each ``localCheckpoint`` is its own
-    Spark action, and running them back-to-back from the driver leaves the
-    cluster idle through every job's straggler tail.  Spark's scheduler runs
+def overlap(spark: SparkSession, thunks: Sequence[Callable[[], T]],
+            max_workers: int = 3) -> list[T]:
+    """Run independent Spark actions CONCURRENTLY (optimization guide §2.6
+    "overlap independent jobs"): each ``localCheckpoint`` is its own Spark
+    action, and running them back-to-back from the driver leaves the cluster
+    idle through every job's straggler tail.  Spark's scheduler runs
     concurrent jobs FIFO — the next job's tasks back-fill executors freed by
     the current job's tail — so a small pool cuts the wall-clock of an
     N-artifact build toward the longest single artifact without changing any
     result (every build is deterministic and lands in the same memo slot it
     would sequentially; same-key races are serialized by the per-key lock in
-    :func:`session_artifact`).
+    :func:`session_artifact`).  The nightly batch stages its alerts and
+    publishes its families through the same pool.
+
+    Every thunk runs on a pool thread wrapped with the caller's ``spark``
+    (``inheritable_thread_target(spark)``): it inherits the caller's local
+    properties (job group, scheduler pool) AND its session tags
+    (``spark.addTag``), so its jobs can be attributed and cancelled by tag.
+    Each thunk is wrapped separately: one wrapper clones the caller's
+    properties once and installs that same object on every thread it runs
+    on, so a job group one thunk sets would leak into the others.
 
     Pool size 3 by default per the guide: enough in flight to fill stage
     tails, not so many that jobs fight for task slots (or, locally, that
     concurrent aggregation buffers stack up in one heap).  Thunk exceptions
     propagate — results come back in input order, all-or-nothing."""
-    if len(thunks) <= 1:
-        return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.util import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        futures = [pool.submit(inheritable_thread_target(spark)(t))
+                   for t in thunks]
         return [f.result() for f in futures]
 
 

@@ -66,7 +66,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session artifact shared with any other composition in the session —
     # the standalone dedup_minhash_lsh query keeps its full plan, only
     # compositions consume the materialized pairs.
-    quality, pairs = overlap([
+    quality, pairs = overlap(spark, [
         lambda: (text_quality(spark, sf_dir).filter("quality_ok = 1")
                  .select("doc_id", "n_tokens").localCheckpoint()),
         lambda: session_artifact(
@@ -128,7 +128,7 @@ def pipeline_clean_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (one row per near-dup cluster) serves every composition in the session.
     # The origin-gate scan is independent of it — materialize both
     # concurrently (memo.overlap, guide §2.6).
-    gated, reps0 = overlap([
+    gated, reps0 = overlap(spark, [
         lambda: (source_quality_gate(spark, sf_dir)
                  .select("doc_id", "source").localCheckpoint()),
         lambda: session_artifact(
@@ -206,7 +206,7 @@ def pipeline_corpus_to_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final join — the gate scan materializes WHILE the BPE trainer's driver
     # loop steps (memo.overlap, guide §2.6; ntok_udf builds inside its thunk
     # so the artifact work lands on the pool thread)
-    gk, per_doc = overlap([
+    gk, per_doc = overlap(spark, [
         lambda: (gated.join(kept.select("doc_id"), "doc_id")
                  .select("doc_id", "source").localCheckpoint()),
         lambda: (_doc_token_counts(spark, sf_dir, ntok_udf(spark, sf_dir))
@@ -288,7 +288,7 @@ def pipeline_dsir_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flag set (tokenize + probe join) are INDEPENDENT full-corpus passes
     # that only meet at the anti-join — materialize them concurrently
     # (memo.overlap, guide §2.6; the _ensemble_df pattern).
-    sel, flagged = overlap([
+    sel, flagged = overlap(spark, [
         lambda: (ranked_topk(
                      _dsir_scores(spark, sf_dir).withColumn("grp", F.lit(0)),
                      "grp", "avg_logratio_nats", "doc_id", DSIR_K,
@@ -378,7 +378,7 @@ def _ensemble_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # job's tail, and the scorer/rule/CLIP scans run WHILE the driver steps
     # the IRLS loop).  Each lands in the same deterministic relation it would
     # sequentially; the final stitch joins four thin checkpoint scans.
-    lr, ppl, rb, cg = overlap([
+    lr, ppl, rb, cg = overlap(spark, [
         lambda: _lr_scored(spark, sf_dir).localCheckpoint(),
         lambda: ccnet_perplexity_buckets(spark, sf_dir).localCheckpoint(),
         lambda: (rule_bits(load_table(spark, sf_dir, "documents"))
@@ -562,7 +562,7 @@ def pipeline_train_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
     # panel overlaps its own five axes internally), so the capstone's
     # wall-clock tracks its slowest branch instead of panel + ensemble in
     # sequence.  The checkpoint is a thin (doc_id, lang) keep-set projection.
-    qe, clean = overlap([
+    qe, clean = overlap(spark, [
         lambda: session_artifact(
             spark, ("train_ready_keep_set", sf_dir),
             lambda: _ensemble_df(spark, sf_dir)

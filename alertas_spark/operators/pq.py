@@ -61,6 +61,7 @@ from alertas_spark.operators.embgate import (EMB_VALID_SQL, norm2,
                                              np_valid_mask, valid_embeddings,
                                              valid_nrm)
 from alertas_spark.operators.simsearch import _dot
+from alertas_spark.operators.topk import merge_shortlist
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -304,11 +305,8 @@ def _adc_topk(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
                 "vec_id": np.concatenate(vs),
                 "adist": np.concatenate(ds),
             })
-            cur = batch_best if best is None else pd.concat(
-                (best, batch_best), ignore_index=True)
-            cur = cur.sort_values(["adist", "vec_id"], kind="mergesort",
-                                  ignore_index=True)
-            best = cur.groupby("query_id", sort=False).head(depth)
+            best = merge_shortlist(best, batch_best, ["query_id"], "adist",
+                                   "vec_id", depth)
         if best is not None and len(best):
             yield best
 
@@ -1333,7 +1331,7 @@ def simsearch_recall_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once, exactly as sequentially
     from alertas_spark.operators.memo import overlap
 
-    tiers = overlap([
+    tiers = overlap(spark, [
         (lambda n=name, b=build: session_artifact(
             spark, ("dashboard_tier", n, sf_dir),
             lambda: b().select("query_id", "cand_id").localCheckpoint()))

@@ -76,7 +76,7 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back-fill each other (memo.overlap, guide §2.6)
     from alertas_spark.operators import memo
 
-    stats_row, dist_row = memo.overlap([
+    stats_row, dist_row = memo.overlap(spark, [
         lambda: li.agg(*aggs).localCheckpoint(),
         lambda: li.agg(*[
             F.count_distinct(finite(F.col(c))).alias(f"{c}__n_distinct")

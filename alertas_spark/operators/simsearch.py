@@ -8,7 +8,9 @@
   partition id, so Spark shuffles each query only to its bucket — the scale path
   (probe-1 IVF; multi-probe = OR more labels in the join key).
 
-No UDFs: dot products are ``zip_with`` + ``aggregate`` higher-order functions, JVM-side.
+Dot products are ``zip_with`` + ``aggregate`` higher-order functions, JVM-side.  Every
+exact-cosine tier reads one gated scan (:func:`_corpus`) and scores and ranks through
+one function (:func:`cosine_topk`).
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alertas_spark.operators.embgate import EMB_VALID_SQL, norm2, valid_nrm
+from alertas_spark.operators.topk import ranked_topk
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -61,16 +64,55 @@ def _duck_topk_sql(same_label: bool) -> str:
     """
 
 
-def _topk_shape(scored: DataFrame) -> DataFrame:
-    """(query_id, vec_id, cos) → the declared top-k result shape, via the
-    two-phase exact top-k (operators/topk.py): per-partition shortlist with no
-    shuffle, then the exact rank over ≤ k·partitions rows per query — never a
-    full-corpus sort in N_QUERIES tasks."""
-    from alertas_spark.operators.topk import ranked_topk
-
+def _corpus(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """``(vec_id, emb, nrm, *cols)``: the valid embeddings as doubles with their
+    L2 norm — the one gated scan every exact-cosine tier, the hamming tier and
+    the CLIP gate read.  The gate is free off the norm fold (embgate)."""
     return (
-        ranked_topk(scored.select("query_id", "vec_id", "cos"),
-                    "query_id", "cos", "vec_id", TOP_K, ascending=False)
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"),
+                *cols)
+        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
+        .filter(valid_nrm(F.col("nrm")))
+        .select("vec_id", "emb", "nrm", *cols)
+    )
+
+
+def _cosine(a: str, an: str, b: str, bn: str) -> Column:
+    """``a·b / (‖a‖·‖b‖)`` from the sequential-fold dot and precomputed norms —
+    the one cosine expression (bit-equal to the oracles' ``_DUCK_DOT`` form)."""
+    return _dot(F.col(a), F.col(b)) / (F.col(an) * F.col(bn))
+
+
+def cosine_topk(corpus: DataFrame, queries: DataFrame, on: Column | None,
+                key: str = "query_id", tie: str = "vec_id",
+                k: int = TOP_K) -> DataFrame:
+    """``(key, tie, cos, rnk)``: the ``k`` best pairs per ``key`` of
+    ``corpus`` ``(vec_id, emb, nrm, ..)`` joined on ``on`` (``None``: every
+    pair) with the broadcast ``queries`` ``(.., qemb, qnrm, ..)``, by exact
+    cosine, ties to the lowest ``tie`` — ranked by the two-phase exact top-k
+    (operators/topk.py), never a full sort in ``n_keys`` tasks.  The one
+    score-and-rank step of the exact-cosine family: the tiers of
+    :func:`_topk_shape` and ``decontaminate_embedding``."""
+    scored = corpus.join(F.broadcast(queries), on).select(
+        key, tie, _cosine("qemb", "qnrm", "emb", "nrm").alias("cos"))
+    return ranked_topk(scored, key, "cos", tie, k, ascending=False)
+
+
+def _topk_shape(v: DataFrame, *qcols: Column,
+                prune: Column | None = None) -> DataFrame:
+    """:func:`cosine_topk` of ``v``'s ``N_QUERIES`` query rows (carrying
+    ``qcols``) over the rows of ``v`` that pass ``prune`` — a query never
+    matches itself — in the declared top-k result shape.  Callers:
+    ``simsearch_topk_bruteforce`` / ``_ivf`` (``_spark_topk``),
+    ``_multiprobe``, ``_ivf_assigned`` and
+    ``kmeans.simsearch_topk_ivf_trained``."""
+    q = v.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"),
+        F.col("nrm").alias("qnrm"), *qcols)
+    on = F.col("query_id") != F.col("vec_id")
+    return (
+        cosine_topk(v, q, on if prune is None else on & prune)
         .select(
             "query_id", F.col("vec_id").alias("cand_id"),
             F.col("rnk").cast("int").alias("rnk"), F.round("cos", 6).alias("score"),
@@ -79,29 +121,15 @@ def _topk_shape(scored: DataFrame) -> DataFrame:
 
 
 def _spark_topk(spark: SparkSession, sf_dir: str, same_label: bool) -> DataFrame:
-    v = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label")
-        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
-        .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
-    )
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"),
-        F.col("nrm").alias("qnrm"), F.col("label").alias("qlabel"))
-    cond = q.query_id != v.vec_id
-    if same_label:
-        # IVF probe: only the query's coarse bucket is scanned.
-        cond = cond & (q.qlabel == v.label)
-    scored = (
-        v.join(F.broadcast(q), cond)
-        .withColumn("cos", _dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")))
-    )
-    return _topk_shape(scored)
+    # IVF probe: only the query's coarse bucket is scanned.
+    return _topk_shape(_corpus(spark, sf_dir, "label"),
+                       F.col("label").alias("qlabel"),
+                       prune=F.col("qlabel") == F.col("label") if same_label else None)
 
 
 @declare("simsearch_topk_bruteforce", oracle=_duck_topk_sql(same_label=False))
 def simsearch_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k: broadcast queries × all candidates, window top-k.
+    """Brute-force cosine top-k: broadcast queries × all candidates, two-phase top-k.
     Exact baseline for ANN variants."""
     return _spark_topk(spark, sf_dir, same_label=False)
 
@@ -238,29 +266,15 @@ def simsearch_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (broadcast) query side only, so the candidate table still shuffles once on
     its single bucket key."""
     v = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        .selectExpr("vec_id", "emb", *[f"({d}) AS d{p}" for p, d
-                                       in enumerate(_plane_dot_exprs(one_based=False))])
+        _corpus(spark, sf_dir)
+        .selectExpr("vec_id", "emb", "nrm",
+                    *[f"({d}) AS d{p}" for p, d
+                      in enumerate(_plane_dot_exprs(one_based=False))])
         .withColumn("bucket", F.expr(_BUCKET_FROM_DOTS))
         .withColumn("weak", F.expr(_WEAK_PLANE))
-        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
-        .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
     )
-    q = (
-        v.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"),
-                F.col("nrm").alias("qnrm"),
-                F.explode(F.array(F.col("bucket"),
-                                  F.expr("bucket ^ shiftleft(1, weak)"))).alias("probe"))
-    )
-    scored = (
-        v.join(F.broadcast(q),
-               (F.col("query_id") != F.col("vec_id"))
-               & (F.col("probe") == F.col("bucket")))
-        .withColumn("cos", _dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")))
-    )
-    return _topk_shape(scored)
+    probes = F.explode(F.array(F.col("bucket"), F.expr("bucket ^ shiftleft(1, weak)")))
+    return _topk_shape(v, probes.alias("probe"), prune=F.col("probe") == F.col("bucket"))
 
 
 @declare("simsearch_topk_ivf_assigned", oracle=_duck_topk_assigned_sql())
@@ -270,23 +284,10 @@ def simsearch_topk_ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     column), then candidates are pruned to the query's bucket exactly as in
     ``simsearch_topk_ivf``.  Assignment is a shuffle-free projection; the search
     shuffles only on the bucket key with the query set broadcast."""
-    v = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        .withColumn("bucket", F.expr(_bucket_expr(one_based=False)))
-        .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
-        .filter(valid_nrm(F.col("nrm")))  # embgate, free off the existing fold
-    )
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"),
-        F.col("nrm").alias("qnrm"), F.col("bucket").alias("qbucket"))
-    scored = (
-        v.join(F.broadcast(q),
-               (F.col("query_id") != F.col("vec_id"))
-               & (F.col("qbucket") == F.col("bucket")))
-        .withColumn("cos", _dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm")))
-    )
-    return _topk_shape(scored)
+    v = _corpus(spark, sf_dir).withColumn(
+        "bucket", F.expr(_bucket_expr(one_based=False)))
+    return _topk_shape(v, F.col("bucket").alias("qbucket"),
+                       prune=F.col("qbucket") == F.col("bucket"))
 
 
 # ---------------------------------------------------------------------------
@@ -369,13 +370,7 @@ def simsearch_topk_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRUE, so this is a semantics choice, not a comparison seam).  Ties in
     Hamming distance (common — the distance is a 0-64 integer) break by
     cand_id, making the top-k a total order."""
-    from alertas_spark.operators.topk import ranked_topk
-
-    v = (load_table(spark, sf_dir, "embeddings")
-         .select("vec_id",
-                 F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
-         .filter(valid_nrm(F.col("nrm")))
+    v = (_corpus(spark, sf_dir)
          .select("vec_id",
                  F.expr(_HAM_SIG_SPARK.format(start=1)).alias("sig_lo"),
                  F.expr(_HAM_SIG_SPARK.format(start=33)).alias("sig_hi")))
@@ -457,23 +452,16 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     training vectors × large eval sets, the blocked/IVF tiers
     (``dedup_embedding_cosine_blocked``, ``simsearch_topk_ivf``) are the
     candidate-pruning upgrades — same contract, bucketed candidates."""
-    from alertas_spark.operators.topk import ranked_topk
-
-    v = (load_table(spark, sf_dir, "embeddings")
-         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-         .withColumn("nrm", F.sqrt(norm2(F.col("emb"))))
-         .filter(valid_nrm(F.col("nrm"))))
+    v = _corpus(spark, sf_dir)
     is_eval = ((F.col("vec_id") % DECON_MOD == 0)
                & (F.col("vec_id") < DECON_EVAL_CAP))
     bench = (v.filter(is_eval)
              .select(F.col("vec_id").alias("eval_id"),
-                     F.col("emb").alias("bemb"), F.col("nrm").alias("bnrm")))
-    train = v.filter(~is_eval)
-    scored = (train.crossJoin(F.broadcast(bench))
-              .withColumn("cos", _dot(F.col("emb"), F.col("bemb"))
-                          / (F.col("nrm") * F.col("bnrm"))))
-    return (ranked_topk(scored.select("vec_id", "eval_id", "cos"),
-                        "vec_id", "cos", "eval_id", 1, ascending=False)
+                     F.col("emb").alias("qemb"), F.col("nrm").alias("qnrm")))
+    # cosine_topk folds eval·train (qemb·emb) where the oracle folds
+    # train·eval: IEEE products commute, so every cosine is the same bits
+    return (cosine_topk(v.filter(~is_eval), bench, None,
+                        key="vec_id", tie="eval_id", k=1)
             .select("vec_id", "eval_id", F.round("cos", 6).alias("score"),
                     F.when(F.col("cos") >= DECON_TAU, 1).otherwise(0)
                     .cast("int").alias("contaminated")))

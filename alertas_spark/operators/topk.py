@@ -20,6 +20,14 @@ per-partition top-k under the same order, so phase 2 over phase 1's output is
 exactly equal to the full rank — for ANY partitioning of the input.  The order
 must be total (tie column unique per key) for determinism; every caller ranks
 by a float with the candidate id as tiebreak.
+
+Callers: the exact-cosine family through ``simsearch.cosine_topk``
+(``simsearch_topk_bruteforce`` / ``_ivf`` / ``_ivf_assigned`` / ``_multiprobe``,
+``kmeans.simsearch_topk_ivf_trained``, ``decontaminate_embedding``), the hamming
+and int8 tiers, the IVFADC ranks (``pq.py``), ``sample_weighted_topk``, the DSIR
+selections, ``countmin`` and ``pipeline.py``.  ``pq._adc_topk`` computes its own
+scores in numpy and folds them into the same running shortlist
+(:func:`merge_shortlist`).
 """
 
 from __future__ import annotations
@@ -30,29 +38,36 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def merge_shortlist(best, pdf, keys, by: str, tie: str, k: int,
+                    ascending: bool = True):
+    """One pandas step of a running per-partition shortlist: ``pdf`` folded
+    into ``best`` (``None`` before the first batch), keeping the ``k`` best
+    rows per ``keys`` by ``(by, tie)`` (``tie`` always ascending).  A stable
+    sort, so rows are selected, never recomputed; memory stays O(k · keys) +
+    one batch."""
+    import pandas as pd
+
+    cur = pdf if best is None else pd.concat((best, pdf), ignore_index=True)
+    cur = cur.sort_values([by, tie], ascending=[ascending, True],
+                          kind="mergesort", ignore_index=True)
+    return cur.groupby(keys, sort=False).head(k)
+
+
 def local_topk(df: DataFrame, keys: Sequence[str], by: str, tie: str, k: int,
                ascending: bool) -> DataFrame:
     """Phase 1: reduce ``df`` to ≤ ``k`` rows per ``keys`` group per partition,
     ordered by ``(by, tie)`` (``tie`` always ascending).  Selection only — every
     surviving row is byte-identical to its input row."""
-    import pandas as pd
-
     keys = list(keys)
-    schema = df.schema
 
     def gen(batches):
-        best: pd.DataFrame | None = None
+        best = None
         for pdf in batches:
-            cur = pdf if best is None else pd.concat((best, pdf),
-                                                     ignore_index=True)
-            cur = cur.sort_values([by, tie], ascending=[ascending, True],
-                                  kind="mergesort", ignore_index=True)
-            # running shortlist: memory stays O(k · keys) + one batch
-            best = cur.groupby(keys, sort=False).head(k)
+            best = merge_shortlist(best, pdf, keys, by, tie, k, ascending)
         if best is not None and len(best):
             yield best
 
-    return df.mapInPandas(gen, schema)
+    return df.mapInPandas(gen, df.schema)
 
 
 def ranked_topk(scored: DataFrame, key: str, by: str, tie: str, k: int,

@@ -36,22 +36,38 @@ PASSES = 2
 RETAINED_UI = {k: v for k, v in spark_conf("").items() if ".retained" in k}
 
 
+def swing(t: float, old: float | None) -> bool:
+    """True when a time ``t`` has moved so far above its prior record ``old``
+    (seconds, identical fixtures) that it is re-timed standalone: more than
+    3× a prior of at least 1 s, or more than 2× a prior above 5 s.  Such a
+    swing has so far always been machine state, not code."""
+    if old is None or old < 1.0:
+        return False
+    return t > (2 if old > 5.0 else 3) * old
+
+
 def timed_run(spark, rest: Rest, query, sf_dir: str) -> tuple[float, dict]:
     """One noop-sink run of a declared query: ``(wall seconds, layers)``.
 
     The clock covers ``builder()`` and ``save()`` only; the job-id watermark
-    between them and the counter reads after them stay outside it."""
+    between them and the counter reads after them stay outside it.  Between
+    the two, ``plan_s`` times Catalyst planning of the final plan
+    (``executedPlan``), also outside the clock.  The noop write plans its own
+    command again, so ``action_s`` still holds one planning pass: execution
+    is about ``action_s - plan_s``."""
     j0 = rest.max_job_id()
     t0 = time.time()
     df = query.builder(spark, sf_dir)
     t1 = time.time()
     j1 = rest.max_job_id()
+    p0 = time.time()
+    df._jdf.queryExecution().executedPlan()
     t2 = time.time()
     df.write.format("noop").mode("overwrite").save()
     t3 = time.time()
     j2 = rest.max_job_id()
     jobs = rest.jobs_between(j0, j2)
-    layers = {"builder_s": t1 - t0, "action_s": t3 - t2,
+    layers = {"builder_s": t1 - t0, "plan_s": t2 - p0, "action_s": t3 - t2,
               "builder_jobs": j1 - j0, "action_jobs": j2 - j1,
               **summarize(jobs, rest.stages(jobs), [(t0, t1), (t2, t3)],
                           spark.sparkContext.defaultParallelism)}
@@ -142,15 +158,15 @@ def main(names: list[str]) -> int:
     except (OSError, ValueError):
         prior = {}
 
-    # Swing guard: on identical fixtures, a >3x per-query regression vs the
-    # prior record has so far always been machine state, not code.  Re-time
-    # it standalone and annotate the evidence under 'retimed'.
+    # Swing guard: on identical fixtures, a query that swung far above the
+    # prior record is re-timed standalone, the evidence annotated under
+    # 'retimed'.
     retimed: dict[str, dict] = {}
     if prior.get("fixtures") == fixtures:
         prior_q = prior.get("queries") or {}
         for name, t in sorted(timings.items()):
             old = prior_q.get(name)
-            if old is None or old < 1.0 or t <= 3 * old:
+            if not swing(t, old):
                 continue
             samples = []
             for _p in range(PASSES):
@@ -235,8 +251,7 @@ def main(names: list[str]) -> int:
             os.makedirs(os.path.join(wh, "alertas"))
             alert_batch = min(batch() for _p in range(PASSES))
             prior_batch = prior.get("alert_batch_wall_clock")
-            if (prior_batch is not None and prior_batch >= 1.0
-                    and alert_batch > 3 * prior_batch):
+            if swing(alert_batch, prior_batch):
                 t = batch()
                 retimed["alert_batch_wall_clock"] = {
                     "in_loop": alert_batch, "standalone": [t], "prior": prior_batch}

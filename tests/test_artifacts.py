@@ -304,7 +304,7 @@ def test_overlap_concurrent_builds_memoize_once(spark):
         (lambda k=k: memo.session_artifact(spark, ("ovl_test", k), make(k)))
         for k in ("a", "b", "a", "b")
     ]
-    results = memo.overlap(thunks, max_workers=4)
+    results = memo.overlap(spark, thunks, max_workers=4)
     assert builds == {"a": 1, "b": 1}  # same-key races serialized, built once
     # both consumers of a key got the SAME memoized relation
     assert results[0] is results[2] and results[1] is results[3]
@@ -313,8 +313,41 @@ def test_overlap_concurrent_builds_memoize_once(spark):
     def boom():
         raise RuntimeError("axis failed")
     try:
-        memo.overlap([boom, lambda: results[0]], max_workers=2)
+        memo.overlap(spark, [boom, lambda: results[0]], max_workers=2)
         raise AssertionError("expected the thunk's exception to propagate")
     except RuntimeError as ex:
         assert "axis failed" in str(ex)
     memo.clear()
+
+
+def test_overlap_thunks_inherit_the_callers_tags_not_each_others_groups(spark):
+    """Every memo.overlap thunk sees the caller's session tags, no "Tags will
+    not be inherited" warning is raised, and a job group one thunk sets stays
+    on its own thread: both thunks set theirs, meet at a barrier, then read
+    it back."""
+    import threading
+    import warnings
+
+    from alertas_spark.operators import memo
+
+    sc = spark.sparkContext
+    caller_group = sc.getLocalProperty("spark.jobGroup.id")
+    barrier = threading.Barrier(2)
+
+    def probe(group):
+        def run():
+            sc.setJobGroup(group, group)
+            barrier.wait(timeout=60)
+            return set(spark.getTags()), sc.getLocalProperty("spark.jobGroup.id")
+        return run
+
+    spark.addTag("overlap-caller")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            got = memo.overlap(spark, [probe("g1"), probe("g2")], max_workers=2)
+    finally:
+        spark.removeTag("overlap-caller")
+    assert got == [({"overlap-caller"}, "g1"), ({"overlap-caller"}, "g2")]
+    assert not [w for w in caught if "Tags will not" in str(w.message)]
+    assert sc.getLocalProperty("spark.jobGroup.id") == caller_group

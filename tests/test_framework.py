@@ -97,6 +97,39 @@ def test_run_all_single_alert_end_to_end(ctx):
     assert ctx.table("alertas", "mmps_alertas_tipos").count() == 25
 
 
+def test_run_all_keeps_the_callers_tags_and_its_job_groups(ctx, monkeypatch):
+    """A single-sigla batch stages under the alert's job group and publishes
+    under the family's, its alert thread sees the caller's session tag, no
+    "Tags will not be inherited" warning is raised, and the caller's own job
+    group is left as it was."""
+    import warnings
+
+    spark, sc = ctx.spark, ctx.spark.sparkContext
+    seen: list[set] = []
+    run_alert = engine.run_alert
+
+    def probe(c, definition):
+        seen.append(set(spark.getTags()))
+        run_alert(c, definition)
+
+    monkeypatch.setattr(engine, "run_alert", probe)
+    sc.setJobGroup("caller", "caller")
+    spark.addTag("nightly-caller")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            engine.run_all(ctx, siglas=("VADF",), quiet=True)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+    finally:
+        spark.removeTag("nightly-caller")
+        sc._jsc.clearJobGroup()
+    assert seen == [{"nightly-caller"}]
+    assert not [w for w in caught if "Tags will not" in str(w.message)]
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("VADF")
+    assert tracker.getJobIdsForGroup("publish:mmps_alertas_mgp")
+
+
 def test_concurrent_staging_equals_serial(ctx):
     """The concurrent compute phase (per-sigla staging tables unioned at
     publish) publishes exactly the rows of each alert's own normalized

@@ -209,15 +209,23 @@ def test_pq_adc_topk_shuffles_only_for_the_window(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_bruteforce_topk_is_two_phase(spark):
-    plan = _plan(_build(spark, "simsearch_topk_bruteforce"))
-    # local per-partition shortlist (MapInPandas, selection-only) ahead of the
-    # exact rank window: the window's input is ≤ k·partitions rows per query,
-    # never the full scored corpus in N_QUERIES tasks
-    assert "MapInPandas" in plan
-    assert plan.index("MapInPandas") > plan.index("Window"), \
-        "shortlist must feed the window (formatted plans list leaves below)"
-    assert "CartesianProduct" not in plan
+def test_exact_cosine_tiers_rank_one_shortlist_per_window(spark):
+    """Every exact-cosine tier scores and ranks through
+    ``simsearch.cosine_topk``: its plan has ONE rank ``Window`` whose input is
+    ONE ``MapInPandas`` per-partition shortlist (selection-only; simple-mode
+    plans list the parent first), so the window sees ≤ k·partitions rows per
+    key — no tier ranks its whole pair relation in ``n_keys`` tasks — and no
+    ``CartesianProduct``."""
+    import re
+
+    for name in ("simsearch_topk_bruteforce", "simsearch_topk_ivf",
+                 "simsearch_topk_ivf_assigned", "simsearch_topk_multiprobe",
+                 "simsearch_topk_ivf_trained", "decontaminate_embedding"):
+        plan = _plan(_build(spark, name))
+        assert plan.count("MapInPandas") == 1, name
+        assert len(re.findall(r"\bWindow \[", plan)) == 1, name
+        assert plan.index("Window [") < plan.index("MapInPandas"), name
+        assert "CartesianProduct" not in plan, name
 
 
 def test_ranked_topk_equals_full_rank(spark):
