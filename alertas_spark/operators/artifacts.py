@@ -1,6 +1,6 @@
 """Persistent trained-artifact store — the cross-SESSION tier above memo.py.
 
-``memo.session_artifact`` deduplicates training inside one session; a nightly
+``memo.session_value`` deduplicates training inside one session; a nightly
 100 TB pipeline needs the next tier: a trained quantizer (k-means centroids,
 PQ codebooks) is produced by a full-corpus scan ONCE, persisted as a tiny
 versioned parquet relation, and every later session loads it in milliseconds
@@ -23,7 +23,7 @@ instead of re-scanning the corpus.  This module is that store:
   (read back, so the caller always consumes the on-disk artifact — a
   subsequent session is byte-identical to the first).
 * **composition** — :func:`persistent_artifact` layers
-  ``memo.session_artifact`` over ``load_or_build``: within a session the
+  ``memo.session_value`` over ``load_or_build``: within a session the
   parquet is opened at most once, and across sessions the training pipeline
   runs at most once per version.  When no artifact root is configured
   (``spark.alertas.artifacts.dir`` conf, else ``ALERTAS_ARTIFACTS_DIR`` env)
@@ -47,7 +47,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from alertas_spark.operators.memo import session_artifact, session_value
+from alertas_spark.operators.memo import session_value
 
 #: Spark conf key (checked first) and env fallback naming the artifact root.
 CONF_KEY = "spark.alertas.artifacts.dir"
@@ -165,17 +165,17 @@ def persistent_artifact(spark: SparkSession, sf_dir: str, name: str,
     whose fingerprint keys the version.
 
     ``build`` may return a LAZY plan — this tier owns materialization.  The
-    memo-only branch localCheckpoints it (session_artifact's eager contract,
-    memo.py:35); the store branch materializes through load_or_build's parquet
+    memo-only branch localCheckpoints it (session_value's eager contract for
+    relations); the store branch materializes through load_or_build's parquet
     write + read-back, so a builder-side checkpoint there would run the
     trainer TWICE (once into checkpoint blocks, once into the artifact file —
     the r14 localCheckpoint double-materialization, removed r15)."""
     root = artifact_root(spark)
     if root is None:
-        return session_artifact(spark, (name, sf_dir),
-                                lambda: build().localCheckpoint())
+        return session_value(spark, (name, sf_dir),
+                             lambda: build().localCheckpoint())
     version = f"{code_version}-{dataset_fingerprint(sf_dir, table)}"
-    return session_artifact(
+    return session_value(
         spark, (name, sf_dir, "persistent", version),
         lambda: load_or_build(spark, root, name, version, build))
 

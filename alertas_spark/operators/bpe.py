@@ -65,6 +65,26 @@ Scale shape:
   sessions (proof: tests/test_artifacts.py registry test + bench's
   persistent-warm tier).
 
+Shared steps — the subword families (this module, operators/bpe_bytes.py,
+operators/wordpiece.py, operators/ulm.py) and the streaming gates supply
+only their own trainer and per-word function; each shared step exists once:
+
+* :func:`_doc_words` — the ``[a-z0-9]+`` (doc_id, word) explode (BPE,
+  WordPiece, ULM and the pipeline capstone; the byte tier has its own
+  full-domain stream);
+* :func:`_top_words` — the trainer-input pull, top words by (freq DESC,
+  word ASC), for all four trainers (ULM passes its ``ULM_LMAX``-filtered
+  stream);
+* ``memo.model_udf`` — the one broadcast-model pandas-UDF constructor: every
+  tokenizer UDF here and in the three siblings, plus the streaming manifest
+  and the NB / bloom / LR stream gates, supplies a key, a bounded loader
+  (``artifacts.bounded_rows``) and a per-element function; one broadcast
+  per model per session;
+* :func:`_doc_token_counts` — distinct-word apply + join-back + per-doc
+  rollup (every ``*_token_count`` and ``pack_sequences_*``);
+* :func:`_census` — the four ``*_vocab_census`` queries;
+* ``packing.pack_ids`` — the per-source packing window of every packer.
+
 Oracle: the DuckDB SQL replicates the TRAINER, not just the apply — the
 training loop unrolls into ``N_MERGES`` materialized CTE steps (pair-count →
 arg-max → replace), the same replicate-the-training pattern as
@@ -84,12 +104,15 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
+import string
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alertas_spark.operators.artifacts import persistent_artifact
+from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
+from alertas_spark.operators.memo import model_udf
 from alertas_spark.operators.packing import PACK_BUDGET as _PACK_BUDGET
+from alertas_spark.operators.packing import pack_ids
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -101,6 +124,9 @@ VOCAB_TOP = 256
 CODE_VERSION = "bpe-r12b"
 
 _WORD_RE = "[a-z0-9]+"
+#: distinct characters a ``_WORD_RE`` word can hold — the alphabet bound of
+#: the character-atom models (WordPiece alphabet, ULM single pieces).
+ALPHABET = len(string.ascii_lowercase + string.digits)
 
 
 # ---------------------------------------------------------------------------
@@ -144,17 +170,22 @@ def _doc_words(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("word")))
 
 
+def _top_words(words: DataFrame, n: int) -> list[tuple[str, int]]:
+    """The trainer input of every subword family: the top ``n`` words of the
+    ``word`` stream by (freq DESC, word ASC) — one map-side-combined agg and
+    a TakeOrderedAndProject, collected (trainer-scalar pull: ≤ n rows)."""
+    return [(r["word"], r["freq"]) for r in
+            words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
+            .orderBy(F.desc("freq"), F.asc("word")).limit(n).collect()]
+
+
 def trained_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained merge table (rank, lhs, rhs, freq) through the persistent
     artifact store — trains at most once per corpus snapshot per deployment."""
 
     def build() -> DataFrame:
-        vocab = (_doc_words(spark, sf_dir)
-                 .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-                 .orderBy(F.desc("freq"), F.asc("word"))
-                 .limit(VOCAB_TOP)
-                 .collect())  # trainer-scalar collect: ≤ VOCAB_TOP rows
-        merges = _train_merges_py([(r["word"], r["freq"]) for r in vocab])
+        merges = _train_merges_py(
+            _top_words(_doc_words(spark, sf_dir), VOCAB_TOP))
         return spark.createDataFrame(
             merges, schema="rank int, lhs string, rhs string, freq bigint")
 
@@ -238,31 +269,45 @@ def _apply_merges_ranked(word: str, merges: list[tuple[str, str]],
     return toks
 
 
-def ntok_udf(spark: SparkSession, sf_dir: str):
-    """The Arrow-batched token-count UDF over the trained merge table,
-    shared by every subword-count consumer (token counts, packing, the
-    corpus-to-batches pipeline) — all over ONE session-memoized broadcast
-    of the merge list (the bpe_bytes.merges_broadcast pattern)."""
-    from alertas_spark.operators import memo
-
-    bc = memo.session_value(
-        spark, ("bpe_merges_bc", sf_dir),
-        lambda: spark.sparkContext.broadcast(_merges_list(spark, sf_dir)))
-
-    @F.pandas_udf("bigint")
-    def ntok(words: pd.Series) -> pd.Series:
-        ms = bc.value
-        rk = _merge_ranks(ms)
-        return words.map(lambda w: len(_apply_merges_ranked(w, ms, rk)))
-
-    return ntok
+def _rank_pairs(merges: DataFrame, n_merges: int,
+                what: str) -> list[tuple[str, str]]:
+    """Rank-ordered (lhs, rhs) pairs of a trained merge relation, driver-side
+    — a bounded read (``bounded_rows``: the trainer emits ≤ ``n_merges``
+    ranks, so a larger stored table is refused before it is pulled)."""
+    rows = bounded_rows(merges.orderBy("rank"), n_merges, what)
+    return [(r["lhs"], r["rhs"]) for r in rows]
 
 
 def _merges_list(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    """Rank-ordered (lhs, rhs) pairs, driver-side — a ≤ N_MERGES-row read of
-    the artifact relation (broadcast/codegen tiers need the literals)."""
-    rows = trained_merges(spark, sf_dir).orderBy("rank").collect()
-    return [(r["lhs"], r["rhs"]) for r in rows]
+    """This tier's rank-ordered merge pairs (broadcast/codegen tiers need the
+    literals)."""
+    return _rank_pairs(trained_merges(spark, sf_dir), N_MERGES, "bpe_merges")
+
+
+def _with_ranks(merges: list[tuple[str, str]]):
+    """The broadcast payload of a merge-table model: the pairs plus their
+    rank index, so executors unpack it straight into
+    :func:`_apply_merges_ranked`."""
+    return merges, _merge_ranks(merges)
+
+
+def merges_udf(spark: SparkSession, sf_dir: str, make: Callable,
+               return_type: str):
+    """A pandas UDF over the session's ONE broadcast of this corpus's merge
+    model (``memo.model_udf``); ``make((merges, ranks))`` is the per-element
+    function.  Token counts, the census and the streaming manifest all build
+    through here."""
+    return model_udf(spark, ("bpe_merges", sf_dir),
+                     lambda: _with_ranks(_merges_list(spark, sf_dir)),
+                     make, return_type)
+
+
+def ntok_udf(spark: SparkSession, sf_dir: str):
+    """The token-count UDF shared by every subword-count consumer (token
+    counts, packing, the corpus-to-batches pipeline)."""
+    return merges_udf(spark, sf_dir,
+                      lambda m: lambda w: len(_apply_merges_ranked(w, *m)),
+                      "bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -451,6 +496,24 @@ def bpe_token_count_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: census report size.
 CENSUS_TOP = 50
 
+
+def _census(words: DataFrame, tokens_udf, col: str,
+            top: int = CENSUS_TOP) -> DataFrame:
+    """The vocabulary census every tokenizer family reports: tokenize each
+    DISTINCT word of the (doc_id, word) stream once (``tokens_udf``: word →
+    token list), weight its tokens by the word's corpus frequency, and keep
+    the top ``top`` tokens by (occurrences DESC, ``col``) — a total order,
+    so the LIMIT is deterministic.  Output: (``col``, n_occurrences,
+    n_words)."""
+    wf = words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
+    return (wf.withColumn(col, F.explode(tokens_udf(F.col("word"))))
+            .groupBy(col)
+            .agg(F.sum("freq").cast("bigint").alias("n_occurrences"),
+                 F.count_distinct("word").cast("bigint").alias("n_words"))
+            .orderBy(F.desc("n_occurrences"), F.asc(col))
+            .limit(top))
+
+
 @declare(
     "bpe_vocab_census",
     oracle=f"""
@@ -485,24 +548,11 @@ def bpe_vocab_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded); word frequencies are one corpus hash agg; the weighted census
     is a (token)-keyed agg over vocabulary×tokens-per-word rows — every
     corpus-sized stage is a scan or a combinable agg, and the top-k is a
-    TakeOrderedAndProject.  (occurrences DESC, token) is a total order, so
-    the LIMIT is deterministic."""
-    merges = _merges_list(spark, sf_dir)
-    bc = spark.sparkContext.broadcast(merges)
-
-    @F.pandas_udf("array<string>")
-    def toks(words: pd.Series) -> pd.Series:
-        ms = bc.value
-        return words.map(lambda w: _apply_merges(w, ms))
-
-    docw = _doc_words(spark, sf_dir)
-    wf = docw.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-    wt = (wf.withColumn("token", F.explode(toks(F.col("word")))))
-    return (wt.groupBy("token")
-            .agg(F.sum("freq").cast("bigint").alias("n_occurrences"),
-                 F.count_distinct("word").cast("bigint").alias("n_words"))
-            .orderBy(F.desc("n_occurrences"), F.asc("token"))
-            .limit(CENSUS_TOP))
+    TakeOrderedAndProject (:func:`_census`)."""
+    toks = merges_udf(spark, sf_dir,
+                      lambda m: lambda w: _apply_merges_ranked(w, *m),
+                      "array<string>")
+    return _census(_doc_words(spark, sf_dir), toks, "token")
 
 
 @declare(
@@ -534,14 +584,7 @@ def pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized tokenize-and-join-back from the bpe tier.  Documents
     with no ``[a-z0-9]+`` word have no token count and are excluded (the
     bpe_token_count contract)."""
-    from pyspark.sql import Window
-
     per_doc = (_doc_token_counts(spark, sf_dir, ntok_udf(spark, sf_dir))
                .select("doc_id", "n_tokens"))
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return (docs.join(per_doc, "doc_id")
-            .withColumn("pack_id",
-                        F.floor(cum_before / _PACK_BUDGET).cast("int")))
+    return pack_ids(docs.join(per_doc, "doc_id"))

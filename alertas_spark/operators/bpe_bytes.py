@@ -61,16 +61,18 @@ Haddow & Birch ACL 2016 (BPE); Radford et al. 2019 (byte-level BPE atoms).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alertas_spark.operators.artifacts import persistent_artifact
 from alertas_spark.operators.bpe import (CENSUS_TOP, _apply_ctes,
-                                         _apply_merges, _apply_merges_ranked,
-                                         _doc_token_counts, _merge_ranks,
-                                         _train_ctes, _train_merges_py)
+                                         _apply_merges_ranked, _census,
+                                         _doc_token_counts, _rank_pairs,
+                                         _top_words, _train_ctes,
+                                         _train_merges_py, _with_ranks)
+from alertas_spark.operators.memo import model_udf
 from alertas_spark.operators.packing import PACK_BUDGET as _PACK_BUDGET
+from alertas_spark.operators.packing import pack_ids
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -184,13 +186,9 @@ def trained_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASCII tier's ``bpe_merges``."""
 
     def build() -> DataFrame:
-        vocab = (_doc_words(spark, sf_dir)
-                 .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-                 .orderBy(F.desc("freq"), F.asc("word"))
-                 .limit(VOCAB_TOP)
-                 .collect())  # trainer-scalar collect: ≤ VOCAB_TOP rows
-        merges = _train_merges_py([(r["word"], r["freq"]) for r in vocab],
-                                  atoms=_hex_atoms, n_merges=N_MERGES)
+        merges = _train_merges_py(
+            _top_words(_doc_words(spark, sf_dir), VOCAB_TOP),
+            atoms=_hex_atoms, n_merges=N_MERGES)
         return spark.createDataFrame(
             merges, schema="rank int, lhs string, rhs string, freq bigint")
 
@@ -199,58 +197,37 @@ def trained_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _merges_list(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    """Rank-ordered (lhs, rhs) hex pairs, driver-side — a ≤ N_MERGES-row read
-    of the artifact relation (broadcast/codegen tiers need the literals)."""
-    rows = trained_merges(spark, sf_dir).orderBy("rank").collect()
-    return [(r["lhs"], r["rhs"]) for r in rows]
+    """Rank-ordered (lhs, rhs) hex pairs, driver-side — a bounded
+    ≤ N_MERGES-row read of the artifact relation (broadcast/codegen tiers
+    need the literals)."""
+    return _rank_pairs(trained_merges(spark, sf_dir), N_MERGES,
+                       "bpe_bytes_merges")
 
 
-def merges_broadcast(spark: SparkSession, sf_dir: str):
-    """The session's ONE broadcast of the trained byte-merge list, memoized
-    per (applicationId, corpus) — every UDF constructor below shares it, so
-    a session running the census, the roundtrip AND the token counts ships
-    the table to executors once (memo.session_value; pinned in
-    test_bpe_bytes.py)."""
-    from alertas_spark.operators import memo
-
-    return memo.session_value(
-        spark, ("bpe_bytes_merges_bc", sf_dir),
-        lambda: spark.sparkContext.broadcast(_merges_list(spark, sf_dir)))
+def _bytes_udf(spark: SparkSession, sf_dir: str, make, return_type: str):
+    """A UDF over the session's ONE broadcast of the byte-merge model
+    (``memo.model_udf``) — the token counts, the census and the roundtrip
+    ship the table to executors once."""
+    return model_udf(spark, ("bpe_bytes_merges", sf_dir),
+                     lambda: _with_ranks(_merges_list(spark, sf_dir)),
+                     make, return_type)
 
 
 def ntok_udf(spark: SparkSession, sf_dir: str):
-    """Arrow-batched byte-token-count UDF over the trained merge table
-    (shared broadcast) — the production apply tier, one call per DISTINCT
-    word."""
-    bc = merges_broadcast(spark, sf_dir)
-
-    @F.pandas_udf("bigint")
-    def ntok(words: pd.Series) -> pd.Series:
-        ms = bc.value
-        rk = _merge_ranks(ms)
-        return words.map(
-            lambda w: len(_apply_merges_ranked(w, ms, rk, atoms=_hex_atoms)))
-
-    return ntok
+    """Byte-token count per DISTINCT word — the production apply tier."""
+    return _bytes_udf(
+        spark, sf_dir,
+        lambda m: lambda w: len(_apply_merges_ranked(w, *m, atoms=_hex_atoms)),
+        "bigint")
 
 
 def toks_udf(spark: SparkSession, sf_dir: str):
-    """Arrow-batched TOKEN-LIST UDF over the trained merge table — the
-    array-valued sibling of :func:`ntok_udf`, shared by the census and the
-    detokenize-roundtrip query so the tokenizer exists in exactly one Python
-    copy per shape (the bpe._apply_merges single-copy rule) and the session
-    ships one broadcast of the merge list, not one per consumer
-    (:func:`merges_broadcast`)."""
-    bc = merges_broadcast(spark, sf_dir)
-
-    @F.pandas_udf("array<string>")
-    def toks(words: pd.Series) -> pd.Series:
-        ms = bc.value
-        rk = _merge_ranks(ms)
-        return words.map(
-            lambda w: _apply_merges_ranked(w, ms, rk, atoms=_hex_atoms))
-
-    return toks
+    """Byte-token LIST per DISTINCT word — the array-valued sibling of
+    :func:`ntok_udf`, shared by the census and the detokenize roundtrip."""
+    return _bytes_udf(
+        spark, sf_dir,
+        lambda m: lambda w: _apply_merges_ranked(w, *m, atoms=_hex_atoms),
+        "array<string>")
 
 
 # ---------------------------------------------------------------------------
@@ -359,17 +336,11 @@ def bpe_bytes_vocab_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     representation on both engines: decoding merged byte sequences back to
     text is lossy at non-character boundaries (a CJK char's 3 bytes may merge
     across its middle), and hex is the seam-free cross-engine encoding."""
-    toks = toks_udf(spark, sf_dir)
-    docw = _doc_words(spark, sf_dir)
-    wf = docw.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-    wt = wf.withColumn("token", F.explode(toks(F.col("word"))))
-    return (wt.groupBy("token")
-            .agg(F.sum("freq").cast("bigint").alias("n_occurrences"),
-                 F.count_distinct("word").cast("bigint").alias("n_words"))
-            .withColumn("n_bytes", (F.length("token") / 2).cast("int"))
-            .select("token", "n_bytes", "n_occurrences", "n_words")
-            .orderBy(F.desc("n_occurrences"), F.asc("token"))
-            .limit(CENSUS_TOP))
+    census = _census(_doc_words(spark, sf_dir), toks_udf(spark, sf_dir),
+                     "token", CENSUS_TOP)
+    return census.select("token",
+                         (F.length("token") / 2).cast("int").alias("n_bytes"),
+                         "n_occurrences", "n_words")
 
 
 @declare(
@@ -402,18 +373,11 @@ def pack_sequences_bpe_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize-and-join-back.  Documents with no ``\\S+`` word (whitespace-only
     text) have no token count and are excluded (the bpe_bytes_token_count
     contract)."""
-    from pyspark.sql import Window
-
     per_doc = (_doc_token_counts(spark, sf_dir, ntok_udf(spark, sf_dir),
                                  docw=_doc_words(spark, sf_dir))
                .select("doc_id", "n_tokens"))
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return (docs.join(per_doc, "doc_id")
-            .withColumn("pack_id",
-                        F.floor(cum_before / _PACK_BUDGET).cast("int")))
+    return pack_ids(docs.join(per_doc, "doc_id"))
 
 
 @declare(

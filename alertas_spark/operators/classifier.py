@@ -45,6 +45,10 @@ NB_B = 4096
 #: test fold: docs with doc_id ≡ 0 (mod NB_FOLDS) are held out and scored.
 NB_FOLDS = 5
 
+#: label-domain bound of the driver-side model pull (``bounded_rows``): the
+#: class label is a two-letter ``lang`` code.
+NB_MAX_CLASSES = 26 * 26
+
 # md5-derived bucket id — the repo's cross-engine hash pair (dedup.py:561).
 _BUCKET_SPARK = (f"pmod(cast(conv(substring(md5(t), 1, 15), 16, 10) "
                  f"as bigint), {NB_B})")

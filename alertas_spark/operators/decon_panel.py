@@ -138,7 +138,7 @@ def _panel_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict query and the marginal audit share the axis runs in a session.
     The materialized relations are per-document thin projections (flag +
     evidence), i.e. bounded by the corpus row count, never by pair work."""
-    from alertas_spark.operators.memo import overlap, session_artifact
+    from alertas_spark.operators.memo import overlap, session_value
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     # the five axis materializations are INDEPENDENT Spark actions — overlap
@@ -146,33 +146,33 @@ def _panel_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of the sum; each lands in the same memo slot it would
     # sequentially, so results and downstream plan shape are unchanged
     ov, bl, mh, em, mk = overlap(spark, [
-        lambda: session_artifact(
+        lambda: session_value(
             spark, ("decon_axis_overlap", sf_dir),
             lambda: decontaminate_overlap(spark, sf_dir)
             .select("doc_id",
                     F.col("n_shared_ngrams").cast("bigint").alias("ov_ngrams"),
                     F.lit(1).alias("ov_hit")).localCheckpoint()),
-        lambda: session_artifact(
+        lambda: session_value(
             spark, ("decon_axis_bloom", sf_dir),
             lambda: decontaminate_bloom(spark, sf_dir)
             .select("doc_id",
                     F.col("n_flagged_grams").cast("bigint").alias("bl_grams"),
                     F.lit(1).alias("bl_hit")).localCheckpoint()),
-        lambda: session_artifact(
+        lambda: session_value(
             spark, ("decon_axis_minhash", sf_dir),
             lambda: decontaminate_minhash(spark, sf_dir)
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("mh_matches"),
                  F.max("jaccard").alias("mh_best_jaccard"))
             .withColumn("mh_hit", F.lit(1)).localCheckpoint()),
-        lambda: session_artifact(
+        lambda: session_value(
             spark, ("decon_axis_embedding", sf_dir),
             lambda: decontaminate_embedding(spark, sf_dir)
             .select(F.col("vec_id").alias("doc_id"),
                     F.col("score").alias("em_cos"),
                     F.col("contaminated").cast("int").alias("em_flag"))
             .localCheckpoint()),
-        lambda: session_artifact(
+        lambda: session_value(
             spark, ("decon_axis_minkprob", sf_dir),
             lambda: decontaminate_minkprob(spark, sf_dir)
             .select("doc_id", "mink_nats",

@@ -12,7 +12,10 @@ This memo caches the checkpointed artifact keyed by ``(session, sf_dir, name)``
 so training runs once per session per dataset.  Only relations that are ALREADY
 ``localCheckpoint``-ed belong here: the memo then changes no downstream plan
 shape (consumers were reading a checkpoint scan either way), only how many times
-the training pipeline runs.
+the training pipeline runs.  One dict (:func:`session_value`) holds every kind
+of session value: checkpointed relations, collected model rows, and the
+``sc.broadcast`` of each trained model that :func:`model_udf` — the one
+constructor of broadcast-model pandas UDFs — ships once per session.
 
 At 100 TB the same pattern holds — a trained quantizer is a tiny shared artifact
 (K × DIM doubles) produced once, pulled to the driver, and handed to every
@@ -26,11 +29,17 @@ import threading
 from collections.abc import Callable, Sequence
 from typing import TypeVar
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 T = TypeVar("T")
 
-_CACHE: dict[tuple, DataFrame] = {}
+#: ONE dict for every memoized session value — checkpointed relations,
+#: collected model rows and model broadcasts alike.  Keys are disjoint by
+#: construction: artifact names never repeat across kinds, and
+#: :func:`model_udf` prefixes its broadcasts with ``"broadcast"``.
+_CACHE: dict[tuple, object] = {}
 
 #: per-key build locks so concurrent consumers of the SAME artifact build it
 #: once (the second thread blocks, then reads the memo) while DIFFERENT
@@ -48,12 +57,13 @@ def _key_lock(k: tuple) -> threading.Lock:
         return lock
 
 
-def session_artifact(spark: SparkSession, key: tuple,
-                     build: Callable[[], DataFrame]) -> DataFrame:
-    """Return the memoized artifact for ``key``, building (and caching) on miss.
+def session_value(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """Return the memoized value for ``key``, building (and caching) on miss.
 
-    ``build`` must return an eagerly-materialized DataFrame (``localCheckpoint``)
-    — the memo hands the same object to every consumer in the session.
+    A relation handed out here must be eagerly materialized
+    (``localCheckpoint``) — the memo gives the same object to every consumer
+    in the session.  Collected model rows and ``sc.broadcast`` handles
+    (:func:`model_udf`) share the same dict.
 
     Keyed by ``applicationId`` (unique per SparkContext), not ``id(spark)``: a
     stopped context invalidates its checkpointed blocks, and a Python object id
@@ -63,29 +73,32 @@ def session_artifact(spark: SparkSession, key: tuple,
     builds (two concurrent ANN tiers sharing one trained codebook train it
     once), while distinct keys build concurrently."""
     k = (spark.sparkContext.applicationId, *key)
-    df = _CACHE.get(k)
-    if df is None:
+    if k not in _CACHE:
         with _key_lock(k):
-            df = _CACHE.get(k)
-            if df is None:
-                df = _CACHE[k] = build()
-    return df
+            if k not in _CACHE:
+                _CACHE[k] = build()
+    return _CACHE[k]
 
 
-_VALUES: dict[tuple, object] = {}
+def model_udf(spark: SparkSession, key: tuple, load: Callable[[], object],
+              make: Callable[[object], Callable], return_type: str):
+    """The one constructor for broadcast-model pandas UDFs.
 
+    ``load()`` pulls a trained model to the driver (a bounded pull) and the
+    session ships it to executors ONCE per ``key`` — one memoized
+    ``sc.broadcast`` per (model, corpus), shared by every UDF built over the
+    same key, so a session running a tokenizer's counts, census and
+    streaming gate sends the model once.  The returned Arrow-batched UDF maps
+    ``make(model)`` — the per-element function, built once per batch — over
+    each batch."""
+    bc = session_value(spark, ("broadcast", *key),
+                       lambda: spark.sparkContext.broadcast(load()))
 
-def session_value(spark: SparkSession, key: tuple, build: Callable[[], object]):
-    """:func:`session_artifact` for non-DataFrame artifacts — e.g. the ONE
-    ``sc.broadcast`` of a trained merge list that several UDF constructors
-    share (building per constructor would ship one copy per consumer).  Same
-    ``applicationId`` keying and per-key locking, cleared by :func:`clear`."""
-    k = (spark.sparkContext.applicationId, *key)
-    if k not in _VALUES:
-        with _key_lock(k):
-            if k not in _VALUES:
-                _VALUES[k] = build()
-    return _VALUES[k]
+    @F.pandas_udf(return_type)
+    def apply(xs: pd.Series) -> pd.Series:
+        return xs.map(make(bc.value))
+
+    return apply
 
 
 def overlap(spark: SparkSession, thunks: Sequence[Callable[[], T]],
@@ -99,7 +112,7 @@ def overlap(spark: SparkSession, thunks: Sequence[Callable[[], T]],
     N-artifact build toward the longest single artifact without changing any
     result (every build is deterministic and lands in the same memo slot it
     would sequentially; same-key races are serialized by the per-key lock in
-    :func:`session_artifact`).  The nightly batch stages its alerts and
+    :func:`session_value`).  The nightly batch stages its alerts and
     publishes its families through the same pool.
 
     Every thunk runs on a pool thread wrapped with the caller's ``spark``
@@ -147,7 +160,6 @@ def clear() -> None:
     """Drop all memoized artifacts AND unpersist tracked operator caches
     (tests / bench / plan audits that need cold builds)."""
     _CACHE.clear()
-    _VALUES.clear()
     with _LOCKS_GUARD:
         _LOCKS.clear()
     for df in _PERSISTED:
@@ -159,7 +171,7 @@ def clear() -> None:
 
 
 def artifact_count() -> int:
-    """Number of live memoized artifacts, relations and values alike (bench
+    """Number of live memoized values — relations, rows and broadcasts (bench
     uses this to detect which queries build session artifacts, so warm
     timings can be reported separately from the cold headline)."""
-    return len(_CACHE) + len(_VALUES)
+    return len(_CACHE)

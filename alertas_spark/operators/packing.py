@@ -22,6 +22,27 @@ from alertas_spark.sources.catalog import load_table
 PACK_BUDGET = 1024  # tokens per pack
 
 
+def _laid(df: DataFrame, *order: str) -> DataFrame:
+    """``df`` plus ``cum_before``: the ``n_tokens`` laid before each row in
+    its ``source`` shard, rows ordered by ``order`` (default ``doc_id``) —
+    the one per-source packing window every packer uses."""
+    w = (Window.partitionBy("source").orderBy(*(order or ("doc_id",)))
+         .rowsBetween(Window.unboundedPreceding, -1))
+    return df.withColumn("cum_before",
+                         F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
+
+
+def pack_ids(df: DataFrame, *order: str) -> DataFrame:
+    """``df`` plus ``pack_id``: the budget bucket of the tokens laid before
+    each row (:func:`_laid`).  ``n_tokens`` must be integral: the bucket is
+    BIGINT ``div``, exact at any size (floor over a double division equals
+    it only below 2^53)."""
+    return (_laid(df, *order)
+            .withColumn("pack_id",
+                        F.expr(f"cast(cum_before div {PACK_BUDGET} as int)"))
+            .drop("cum_before"))
+
+
 @declare(
     "pack_sequences",
     oracle=f"""
@@ -45,14 +66,9 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.regexp_extract_all(F.lower(F.col("text")),
                                            F.lit("[a-z0-9]+"), 0))
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return (
-        docs.select("doc_id", "source", n_tokens.alias("n_tokens"))
-        .withColumn("pack_id", F.floor(cum_before / PACK_BUDGET).cast("int"))
-        .withColumn("n_tokens", F.col("n_tokens").cast("int"))
-    )
+    return (pack_ids(docs.select("doc_id", "source",
+                                 n_tokens.alias("n_tokens")))
+            .withColumn("n_tokens", F.col("n_tokens").cast("int")))
 
 
 # ---------------------------------------------------------------------------
@@ -152,17 +168,15 @@ def curriculum_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alertas_spark.operators.textops import _unigram_scores
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    s = _unigram_scores(spark, sf_dir).join(docs, "doc_id")
-    w = Window.partitionBy("source").orderBy("cross_entropy_nats", "doc_id")
-    cum = (F.sum("n_tokens").over(
-        w.rowsBetween(Window.unboundedPreceding, -1)))
+    order = ("cross_entropy_nats", "doc_id")
+    s = pack_ids(_unigram_scores(spark, sf_dir).join(docs, "doc_id"), *order)
     return s.select(
         "doc_id", "source",
         F.col("n_tokens").cast("int").alias("n_tokens"),
         "cross_entropy_nats",
-        F.row_number().over(w).cast("int").alias("cur_rank"),
-        F.floor(F.coalesce(cum, F.lit(0)) / PACK_BUDGET)
-        .cast("int").alias("pack_id"))
+        F.row_number().over(Window.partitionBy("source").orderBy(*order))
+        .cast("int").alias("cur_rank"),
+        "pack_id")
 
 
 # ---------------------------------------------------------------------------
@@ -296,13 +310,9 @@ def pack_concat_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.regexp_extract_all(F.lower(F.col("text")),
                                            F.lit("[a-z0-9]+"), 0))
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    laid = (docs.select("doc_id", "source",
-                        n_tokens.cast("bigint").alias("n_tokens"))
-            .filter(F.col("n_tokens") > 0)
-            .withColumn("cum_before",
-                        F.coalesce(F.sum("n_tokens").over(w), F.lit(0))))
+    laid = _laid(docs.select("doc_id", "source",
+                             n_tokens.cast("bigint").alias("n_tokens"))
+                 .filter(F.col("n_tokens") > 0))
     spans = (laid
              .withColumn("p0", F.expr(f"cum_before div {PACK_BUDGET}"))
              .withColumn("p1", F.expr(f"(cum_before + n_tokens - 1) "
@@ -370,10 +380,7 @@ def pack_concat_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     nz = (docs.select("doc_id", "source",
                       n_tokens.cast("bigint").alias("n_tokens"))
           .filter(F.col("n_tokens") > 0))
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    laid = nz.withColumn("cum_before",
-                         F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
+    laid = _laid(nz)
     crosses = (F.expr(f"(cum_before + n_tokens - 1) div {PACK_BUDGET}")
                > F.expr(f"cum_before div {PACK_BUDGET}")).cast("int")
     agg = (laid.groupBy("source")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alertas_spark.operators.dedup import dedup_minhash_lsh
-from alertas_spark.operators.memo import session_artifact
+from alertas_spark.operators.memo import session_value
 from alertas_spark.operators.textops import WS_RE, text_quality
 from alertas_spark.registry import REGISTRY, declare
 from alertas_spark.sources.catalog import load_table
@@ -69,7 +69,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality, pairs = overlap(spark, [
         lambda: (text_quality(spark, sf_dir).filter("quality_ok = 1")
                  .select("doc_id", "n_tokens").localCheckpoint()),
-        lambda: session_artifact(
+        lambda: session_value(
             spark, ("minhash_verified_pairs", sf_dir),
             lambda: dedup_minhash_lsh(spark, sf_dir).localCheckpoint()),
     ], max_workers=2)
@@ -131,7 +131,7 @@ def pipeline_clean_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated, reps0 = overlap(spark, [
         lambda: (source_quality_gate(spark, sf_dir)
                  .select("doc_id", "source").localCheckpoint()),
-        lambda: session_artifact(
+        lambda: session_value(
             spark, ("cluster_representatives", sf_dir),
             lambda: dedup_cluster_representative(spark, sf_dir)
             .localCheckpoint()),
@@ -190,11 +190,9 @@ def pipeline_corpus_to_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer runs once per distinct word (artifact-served merges); the one
     ordered stage is the per-source packing window, sharded by construction."""
     from alertas_spark.operators.bpe import _doc_token_counts, ntok_udf
-    from alertas_spark.operators.packing import PACK_BUDGET
-    from alertas_spark.operators.textops import quality_gate_cond
-    from pyspark.sql import Window
-
     from alertas_spark.operators.memo import overlap
+    from alertas_spark.operators.packing import pack_ids
+    from alertas_spark.operators.textops import quality_gate_cond
 
     docs = load_table(spark, sf_dir, "documents")
     norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_RE, " ")
@@ -212,12 +210,8 @@ def pipeline_corpus_to_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: (_doc_token_counts(spark, sf_dir, ntok_udf(spark, sf_dir))
                  .select("doc_id", "n_tokens").localCheckpoint()),
     ], max_workers=2)
-    ds = gk.join(per_doc, "doc_id").select("doc_id", "source", "n_tokens")
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return ds.withColumn("pack_id",
-                         F.floor(cum_before / PACK_BUDGET).cast("int"))
+    return pack_ids(gk.join(per_doc, "doc_id")
+                    .select("doc_id", "source", "n_tokens"))
 
 
 # ---------------------------------------------------------------------------
@@ -552,9 +546,8 @@ def pipeline_train_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages' own audited shapes, three doc_id equi-joins to stitch (one
     reusable exchange partitioning), one shard-keyed packing window."""
     from alertas_spark.operators.decon_panel import _panel_df
-    from alertas_spark.operators.memo import overlap, session_artifact
-    from alertas_spark.operators.packing import PACK_BUDGET
-    from pyspark.sql import Window
+    from alertas_spark.operators.memo import overlap
+    from alertas_spark.operators.packing import pack_ids
 
     # the ensemble (LR retrain + scorer + battery + CLIP) and the five-axis
     # panel are independent until the stitch join — materialize the ensemble's
@@ -563,7 +556,7 @@ def pipeline_train_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wall-clock tracks its slowest branch instead of panel + ensemble in
     # sequence.  The checkpoint is a thin (doc_id, lang) keep-set projection.
     qe, clean = overlap(spark, [
-        lambda: session_artifact(
+        lambda: session_value(
             spark, ("train_ready_keep_set", sf_dir),
             lambda: _ensemble_df(spark, sf_dir)
             .filter(F.col("keep") == 1)
@@ -588,11 +581,5 @@ def pipeline_train_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(docs.select("doc_id", "source",
                               n_tokens.cast("bigint").alias("n_tokens")),
                   "doc_id"))
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    cum = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    # BIGINT `div`, never floor-over-double-division (r16 advice)
-    return (surv.withColumn("cum_before", cum)
-            .select("doc_id", "source", "lang", "n_tokens", "mink_member",
-                    F.expr(f"cast(cum_before div {PACK_BUDGET} as int)")
-                    .alias("pack_id")))
+    return pack_ids(surv).select("doc_id", "source", "lang", "n_tokens",
+                                 "mink_member", "pack_id")

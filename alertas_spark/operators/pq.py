@@ -56,7 +56,7 @@ from alertas_spark.operators.artifacts import (bounded_rows,
                                                persistent_artifact_rows)
 from alertas_spark.operators.kmeans import (_assign, _seq_subdist,
                                             argmin_arrow, lloyd_centroids)
-from alertas_spark.operators.memo import session_artifact, session_value
+from alertas_spark.operators.memo import session_value
 from alertas_spark.operators.embgate import (EMB_VALID_SQL, norm2,
                                              np_valid_mask, valid_embeddings,
                                              valid_nrm)
@@ -1296,7 +1296,7 @@ def simsearch_recall_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     def adc_short() -> DataFrame:
         return _adc_topk(spark, sf_dir, SHORTLIST).localCheckpoint()
 
-    shortlist = session_artifact(spark, ("dashboard_adc_short", sf_dir), adc_short)
+    shortlist = session_value(spark, ("dashboard_adc_short", sf_dir), adc_short)
     methods = {
         "ivf": lambda: simsearch_topk_ivf_assigned(spark, sf_dir),
         "ivf_multiprobe": lambda: simsearch_topk_multiprobe(spark, sf_dir),
@@ -1332,11 +1332,11 @@ def simsearch_recall_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alertas_spark.operators.memo import overlap
 
     tiers = overlap(spark, [
-        (lambda n=name, b=build: session_artifact(
+        (lambda n=name, b=build: session_value(
             spark, ("dashboard_tier", n, sf_dir),
             lambda: b().select("query_id", "cand_id").localCheckpoint()))
         for name, build in methods.items()
-    ] + [lambda: session_artifact(
+    ] + [lambda: session_value(
         spark, ("dashboard_counts", sf_dir),
         lambda: _candidate_counts(spark, sf_dir).localCheckpoint())],
         max_workers=5)

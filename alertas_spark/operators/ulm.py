@@ -53,12 +53,17 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
+from alertas_spark.operators.bpe import (ALPHABET, _apply_ctes, _census,
+                                         _doc_token_counts, _doc_words,
+                                         _top_words, _train_ctes, _WORD_RE,
+                                         ntok_udf)
 from alertas_spark.operators.logreg import _rnd_half_away
-from alertas_spark.operators.packing import PACK_BUDGET
+from alertas_spark.operators.memo import model_udf
+from alertas_spark.operators.packing import PACK_BUDGET, pack_ids
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -79,8 +84,6 @@ ULM_ITERS = 2
 
 #: bump when the trainer derivation changes — artifact version key.
 ULM_CODE_VERSION = "ulm-r16a"
-
-_WORD_RE = "[a-z0-9]+"
 
 
 # ---------------------------------------------------------------------------
@@ -303,18 +306,10 @@ def trained_ulm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained (piece, freq, rank) vocabulary through the artifact store
     — trainer-scalar collect of the bounded top-{ULM_WORDS} word relation,
     then the pure-Python hard-EM above."""
-    from alertas_spark.operators.artifacts import persistent_artifact
-
     def build() -> DataFrame:
-        w = (load_table(spark, sf_dir, "documents")
-             .select(F.explode(F.regexp_extract_all(
-                 F.lower(F.col("text")), F.lit(_WORD_RE), 0)).alias("word"))
-             .filter(F.length("word") <= ULM_LMAX)
-             .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-             .orderBy(F.desc("freq"), F.asc("word"))
-             .limit(ULM_WORDS)
-             .collect())  # trainer-scalar collect: ≤ ULM_WORDS rows
-        vocab = _train_ulm_py([(r["word"], r["freq"]) for r in w])
+        vocab = _train_ulm_py(_top_words(
+            _doc_words(spark, sf_dir).filter(F.length("word") <= ULM_LMAX),
+            ULM_WORDS))
         return spark.createDataFrame(
             vocab, schema="piece string, freq bigint, rank int")
 
@@ -322,37 +317,29 @@ def trained_ulm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                                ULM_CODE_VERSION, "documents", build)
 
 
+def _ulm_model(spark: SparkSession, sf_dir: str):
+    """(counts, qnorm) of the trained vocabulary — a bounded pull: the
+    trainer keeps every single character (≤ ``ALPHABET``) plus ``ULM_SEED``
+    multi-character pieces."""
+    rows = bounded_rows(trained_ulm_vocab(spark, sf_dir).orderBy("rank"),
+                        ALPHABET + ULM_SEED, "ulm_vocab")
+    cnt = {r["piece"]: r["freq"] for r in rows}
+    return cnt, _qnorm(cnt)
+
+
+def ulm_udf(spark: SparkSession, sf_dir: str, path: bool, return_type: str):
+    """Arrow-batched Viterbi UDF over the session's ONE broadcast of the
+    trained model (``memo.model_udf``): the token count, or the piece list
+    when ``path``."""
+    return model_udf(spark, ("ulm_vocab", sf_dir),
+                     lambda: _ulm_model(spark, sf_dir),
+                     lambda m: lambda w: _viterbi(w, *m, path=path),
+                     return_type)
+
+
 def ulm_ntok_udf(spark: SparkSession, sf_dir: str):
-    """Arrow-batched Viterbi token-count UDF over the trained vocabulary —
-    one session-memoized broadcast of (counts, qnorm), the bpe.ntok_udf
-    pattern."""
-    from alertas_spark.operators import memo
-
-    def load():
-        rows = trained_ulm_vocab(spark, sf_dir).collect()
-        cnt = {r["piece"]: r["freq"] for r in rows}
-        return spark.sparkContext.broadcast((cnt, _qnorm(cnt)))
-
-    bc = memo.session_value(spark, ("ulm_vocab_bc", sf_dir), load)
-
-    @F.pandas_udf("bigint")
-    def ntok(words: pd.Series) -> pd.Series:
-        cnt, qn = bc.value
-        return words.map(lambda w: _viterbi(w, cnt, qn))
-
-    return ntok
-
-
-def _ulm_doc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, word) stream + per-distinct-word ntok joined back."""
-    docw = (load_table(spark, sf_dir, "documents")
-            .select("doc_id",
-                    F.explode(F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit(_WORD_RE), 0))
-                    .alias("word")))
-    ntok = (docw.select("word").distinct()
-            .withColumn("ntok", ulm_ntok_udf(spark, sf_dir)(F.col("word"))))
-    return docw.join(ntok, "word")
+    """Viterbi token count per DISTINCT word."""
+    return ulm_udf(spark, sf_dir, False, "bigint")
 
 
 @declare(
@@ -387,18 +374,13 @@ def ulm_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document ULM subword counts under the trained vocabulary — the
     budget-relevant statistic for packing/curriculum, Viterbi-segmented.
     Apply cost ∝ DISTINCT words (Arrow UDF + join-back), not corpus size."""
-    return (_ulm_doc_counts(spark, sf_dir)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_words"),
-                 F.sum("ntok").cast("bigint").alias("n_tokens")))
+    return _doc_token_counts(spark, sf_dir, ulm_ntok_udf(spark, sf_dir))
 
 
 def _fertility_oracle() -> str:
     """ULM + BPE retraining oracles stitched (disjoint CTE namespaces:
     ulm_* here, bpe.py's w0/s*/b*/a*/docw/tokc there — the capstone
     stitching precedent), compared per language."""
-    from alertas_spark.operators.bpe import _apply_ctes, _train_ctes
-
     return f"""
     WITH {_ulm_train_ctes()},
     {_ulm_apply_ctes()},
@@ -429,14 +411,8 @@ def ulm_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are per-DISTINCT-word Arrow UDFs over their broadcast models;
     fertility divisions are integer/integer through one identically-
     evaluated double."""
-    from alertas_spark.operators.bpe import ntok_udf
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    docw = (load_table(spark, sf_dir, "documents")
-            .select("doc_id",
-                    F.explode(F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit(_WORD_RE), 0))
-                    .alias("word")))
+    docw = _doc_words(spark, sf_dir)
     words = docw.select("word").distinct()
     ucnt = words.withColumn("ntok_u",
                             ulm_ntok_udf(spark, sf_dir)(F.col("word")))
@@ -479,44 +455,13 @@ def pack_sequences_ulm(spark: SparkSession, sf_dir: str) -> DataFrame:
     a ULM-tokenized dataloader consumes.  Same scale shape: per-source shard
     windows only, never one global cumsum, plus the vocabulary-sized
     tokenize-and-join-back from the ULM tier."""
-    from pyspark.sql import Window
-
-    per_doc = (_ulm_doc_counts(spark, sf_dir)
-               .groupBy("doc_id")
-               .agg(F.sum("ntok").cast("bigint").alias("n_tokens")))
+    per_doc = ulm_token_count(spark, sf_dir).select("doc_id", "n_tokens")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return (docs.join(per_doc, "doc_id")
-            .select("doc_id", "source", "n_tokens",
-                    F.floor(cum_before / PACK_BUDGET).cast("int")
-                    .alias("pack_id")))
+    return pack_ids(docs.join(per_doc, "doc_id"))
 
 
 #: census rows kept — the heavy-hitter cut (bpe.CENSUS_TOP sibling).
 ULM_CENSUS_TOP = 50
-
-
-def ulm_pieces_udf(spark: SparkSession, sf_dir: str):
-    """Arrow-batched Viterbi PIECE-LIST UDF over the trained vocabulary —
-    the census needs the path, not just its length; same memoized broadcast
-    as :func:`ulm_ntok_udf`."""
-    from alertas_spark.operators import memo
-
-    def load():
-        rows = trained_ulm_vocab(spark, sf_dir).collect()
-        cnt = {r["piece"]: r["freq"] for r in rows}
-        return spark.sparkContext.broadcast((cnt, _qnorm(cnt)))
-
-    bc = memo.session_value(spark, ("ulm_vocab_bc", sf_dir), load)
-
-    @F.pandas_udf("array<string>")
-    def pieces(words: pd.Series) -> pd.Series:
-        cnt, qn = bc.value
-        return words.map(lambda w: _viterbi(w, cnt, qn, path=True))
-
-    return pieces
 
 
 @declare(
@@ -554,19 +499,6 @@ def ulm_vocab_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: piece lists materialize per DISTINCT word (Arrow UDF + broadcast
     model), the census is one explode + two hash aggs + a top-K cut."""
-    docw = (load_table(spark, sf_dir, "documents")
-            .select("doc_id",
-                    F.explode(F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit(_WORD_RE), 0))
-                    .alias("word")))
-    wcnt = docw.groupBy("word").agg(F.count(F.lit(1)).cast("bigint")
-                                    .alias("wf"))
-    pieces = (wcnt.select("word", "wf")
-              .withColumn("piece",
-                          F.explode(ulm_pieces_udf(spark, sf_dir)
-                                    (F.col("word")))))
-    return (pieces.groupBy("piece")
-            .agg(F.sum("wf").cast("bigint").alias("n_occurrences"),
-                 F.count_distinct("word").cast("bigint").alias("n_words"))
-            .orderBy(F.desc("n_occurrences"), F.asc("piece"))
-            .limit(ULM_CENSUS_TOP))
+    return _census(_doc_words(spark, sf_dir),
+                   ulm_udf(spark, sf_dir, True, "array<string>"),
+                   "piece", ULM_CENSUS_TOP)

@@ -39,14 +39,15 @@ operator per the training-data-pipeline brief.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alertas_spark.operators.artifacts import persistent_artifact
-from alertas_spark.operators.bpe import (VOCAB_TOP, _doc_token_counts,
-                                         _doc_words, _WORD_RE)
-from alertas_spark.operators.packing import PACK_BUDGET
+from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
+from alertas_spark.operators.bpe import (ALPHABET, VOCAB_TOP, _census,
+                                         _doc_token_counts, _doc_words,
+                                         _top_words, _WORD_RE)
+from alertas_spark.operators.memo import model_udf
+from alertas_spark.operators.packing import PACK_BUDGET, pack_ids
 from alertas_spark.registry import declare
 
 WP_MERGES = 16
@@ -98,12 +99,7 @@ def _train_wp_py(words: list[tuple[str, int]],
 def trained_wp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained merge table through the artifact store."""
     def build() -> DataFrame:
-        vocab = (_doc_words(spark, sf_dir)
-                 .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-                 .orderBy(F.desc("freq"), F.asc("word"))
-                 .limit(VOCAB_TOP)
-                 .collect())  # trainer-scalar collect: ≤ VOCAB_TOP rows
-        rows = _train_wp_py([(r["word"], r["freq"]) for r in vocab])
+        rows = _train_wp_py(_top_words(_doc_words(spark, sf_dir), VOCAB_TOP))
         return spark.createDataFrame(
             rows, schema="rank int, lhs string, rhs string, piece string, "
                          "pair_cnt bigint, lhs_cnt bigint, rhs_cnt bigint")
@@ -133,33 +129,34 @@ def _wp_ntok(word: str, plain: set[str], cont: set[str], maxlen: int) -> int:
 
 def _wp_vocab_sets(spark: SparkSession, sf_dir: str):
     """(plain, cont, maxlen): stripped match texts per form — alphabet (every
-    character of every distinct corpus word, both forms) + trained pieces."""
-    chars = (_doc_words(spark, sf_dir).select("word").distinct()
-             .select(F.explode(F.split("word", "")).alias("c"))
-             .filter(F.col("c") != "").distinct().collect())
+    character of every distinct corpus word, both forms; ≤ ``ALPHABET``) +
+    trained pieces (≤ ``WP_MERGES``), both pulled through ``bounded_rows``."""
+    chars = bounded_rows(
+        _doc_words(spark, sf_dir).select("word").distinct()
+        .select(F.explode(F.split("word", "")).alias("c"))
+        .filter(F.col("c") != "").distinct().orderBy("c"), ALPHABET,
+        "wp_alphabet")
     plain = {r["c"] for r in chars}
     cont = set(plain)
-    for r in trained_wp(spark, sf_dir).collect():  # ≤ WP_MERGES rows
+    for r in bounded_rows(trained_wp(spark, sf_dir).orderBy("rank"),
+                          WP_MERGES, "wordpiece_vocab"):
         text = _strip_cont(r["piece"])
         (cont if r["piece"].startswith("##") else plain).add(text)
     maxlen = max((len(t) for t in plain | cont), default=1)
     return plain, cont, maxlen
 
 
+def _wp_udf(spark: SparkSession, sf_dir: str, fn, return_type: str):
+    """A UDF applying ``fn(word, plain, cont, maxlen)`` over the session's ONE
+    broadcast of the WordPiece vocabulary (``memo.model_udf``)."""
+    return model_udf(spark, ("wordpiece_vocab", sf_dir),
+                     lambda: _wp_vocab_sets(spark, sf_dir),
+                     lambda v: lambda w: fn(w, *v), return_type)
+
+
 def wp_ntok_udf(spark: SparkSession, sf_dir: str):
     """Arrow-batched greedy token counter over the broadcast vocabulary."""
-    from alertas_spark.operators import memo
-
-    bc = memo.session_value(
-        spark, ("wp_vocab_bc", sf_dir),
-        lambda: spark.sparkContext.broadcast(_wp_vocab_sets(spark, sf_dir)))
-
-    @F.pandas_udf("bigint")
-    def ntok(words: pd.Series) -> pd.Series:
-        plain, cont, maxlen = bc.value
-        return words.map(lambda w: _wp_ntok(w, plain, cont, maxlen))
-
-    return ntok
+    return _wp_udf(spark, sf_dir, _wp_ntok, "bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -391,20 +388,12 @@ def pack_sequences_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
     WordPiece): pack budgets cut on the greedy-longest-match token totals a
     WordPiece-tokenized dataloader consumes.  Same scale shape as the
     siblings: per-source shard windows only, never one global cumsum."""
-    from pyspark.sql import Window
-
     from alertas_spark.sources.catalog import load_table
 
     per_doc = (wordpiece_token_count(spark, sf_dir)
                .select("doc_id", F.col("n_tokens")))
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return (docs.join(per_doc, "doc_id")
-            .select("doc_id", "source", "n_tokens",
-                    F.floor(cum_before / PACK_BUDGET).cast("int")
-                    .alias("pack_id")))
+    return pack_ids(docs.join(per_doc, "doc_id"))
 
 
 def _wp_pieces(word: str, plain: set[str], cont: set[str],
@@ -460,22 +449,6 @@ def wordpiece_vocab_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k is a TakeOrderedAndProject over a (piece)-keyed combinable agg.
     (occurrences DESC, piece) is a total order, so the LIMIT is
     deterministic."""
-    from alertas_spark.operators import memo
-
-    bc = memo.session_value(
-        spark, ("wp_vocab_bc", sf_dir),
-        lambda: spark.sparkContext.broadcast(_wp_vocab_sets(spark, sf_dir)))
-
-    @F.pandas_udf("array<string>")
-    def pieces(words: pd.Series) -> pd.Series:
-        plain, cont, maxlen = bc.value
-        return words.map(lambda w: _wp_pieces(w, plain, cont, maxlen))
-
-    docw = _doc_words(spark, sf_dir)
-    wf = docw.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-    wt = wf.withColumn("piece", F.explode(pieces(F.col("word"))))
-    return (wt.groupBy("piece")
-            .agg(F.sum("freq").cast("bigint").alias("n_occurrences"),
-                 F.countDistinct("word").cast("bigint").alias("n_words"))
-            .orderBy(F.desc("n_occurrences"), "piece")
-            .limit(50))
+    return _census(_doc_words(spark, sf_dir),
+                   _wp_udf(spark, sf_dir, _wp_pieces, "array<string>"),
+                   "piece", 50)

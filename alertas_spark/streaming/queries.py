@@ -9,10 +9,11 @@ aggregation.  ``streaming_user_totals`` exercises the custom stateful operator
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from alertas_spark.functions.numeric import sql_dsum
+from alertas_spark.operators.artifacts import bounded_rows
+from alertas_spark.operators.memo import model_udf
 from alertas_spark.operators.textops import (QUALITY_GATE_SQL, WS_RE,
                                              quality_gate_cond)
 from alertas_spark.registry import REGISTRY, declare
@@ -325,9 +326,10 @@ def streaming_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     **Artifact-served merges on the stream**: the trained merge table is
     loaded from the persistent artifact store batch-side BEFORE the stream
-    starts (``bpe._merges_list`` — the sanctioned ≤16-row read) and rides an
-    ``sc.broadcast`` into an Arrow-batched pandas UDF that tokenizes each
-    document's normalized words directly.  The batch tier's
+    starts and rides the session's one broadcast of the BPE model
+    (``bpe.merges_udf``, shared with ``bpe_token_count``) into an
+    Arrow-batched pandas UDF that tokenizes each document's normalized words
+    directly.  The batch tier's
     distinct-word-then-join-back shape needs a corpus-wide DISTINCT — an
     unbounded-state shuffle a stream cannot do incrementally — so the
     streaming tier pays per-document tokenization instead (cost ∝ the
@@ -359,19 +361,14 @@ def streaming_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from alertas_spark.operators.bpe import (_apply_merges_ranked,
-                                              _merge_ranks, _merges_list)
+    from alertas_spark.operators.bpe import _apply_merges_ranked, merges_udf
 
-    merges = _merges_list(spark, sf_dir)  # artifact-served, batch-side
-    bc = spark.sparkContext.broadcast(merges)
     word_re = _re.compile("[a-z0-9]+")
-
-    @F.pandas_udf("bigint")
-    def ntok_doc(norms: pd.Series) -> pd.Series:
-        ms = bc.value
-        rk = _merge_ranks(ms)
-        return norms.map(lambda s: sum(
-            len(_apply_merges_ranked(w, ms, rk)) for w in word_re.findall(s)))
+    ntok_doc = merges_udf(
+        spark, sf_dir,
+        lambda m: lambda s: sum(len(_apply_merges_ranked(w, *m))
+                                for w in word_re.findall(s)),
+        "bigint")
 
     docs = ev.read_documents_stream(spark, sf_dir)
     norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_RE, " ")
@@ -409,8 +406,9 @@ def streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     a streaming ingest pipeline (CCNet's fastText gate on a crawl feed).
 
     The driver-side model pull is bounded by the model GEOMETRY
-    (≤ B·|classes| + |classes| rows — a few hundred KB at any corpus size),
-    the same justification as the ≤16-row BPE merges read; per-document
+    (≤ B·|classes| + |classes| rows — a few hundred KB at any corpus size;
+    ``bounded_rows`` enforces it with ``NB_MAX_CLASSES``), the same
+    justification as the ≤16-row BPE merges read; per-document
     scoring is stateless (zero state store), so the stream needs no
     watermark and the output is append-only.
 
@@ -425,17 +423,21 @@ def streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from alertas_spark.operators.classifier import NB_B, NB_FOLDS, _nb_model
+    from alertas_spark.operators.classifier import (NB_B, NB_FOLDS,
+                                                    NB_MAX_CLASSES, _nb_model)
 
-    rows = _nb_model(spark, sf_dir).collect()  # bounded: model geometry
-    feat = {(r["cls"], r["b"]): r["qln_ct1"] for r in rows if r["b"] >= 0}
-    stats = {r["cls"]: (r["qln_prior"], r["qln_den"])
-             for r in rows if r["b"] == -1}
-    bc = spark.sparkContext.broadcast((feat, stats))
+    def load():
+        # one partition: the limit pull over a multi-partition artifact
+        # scans partitions in rounds, one job each
+        rows = bounded_rows(_nb_model(spark, sf_dir).coalesce(1),
+                            (NB_B + 1) * NB_MAX_CLASSES, "nb_model")
+        feat = {(r["cls"], r["b"]): r["qln_ct1"] for r in rows if r["b"] >= 0}
+        stats = {r["cls"]: (r["qln_prior"], r["qln_den"])
+                 for r in rows if r["b"] == -1}
+        return feat, stats
 
-    @F.pandas_udf("string")
-    def pred(toks: pd.Series) -> pd.Series:
-        feat, stats = bc.value
+    def make(model):
+        feat, stats = model
         classes = sorted(stats)
 
         def score_one(tok_list) -> str:
@@ -448,7 +450,9 @@ def streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 -(stats[c][0] + sum(n * (feat.get((c, b), 0) - stats[c][1])
                                     for b, n in db.items())), c))
 
-        return toks.map(score_one)
+        return score_one
+
+    pred = model_udf(spark, ("nb_model", sf_dir), load, make, "string")
 
     docs = ev.read_documents_stream(spark, sf_dir)
     tok = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
@@ -504,16 +508,13 @@ def streaming_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                _train_bench_grams)
     from alertas_spark.operators.textops import DECON_BENCH_MOD, DECON_N
 
-    _, bench = _train_bench_grams(spark, sf_dir)
-    filt = frozenset((r["probe"], r["pos"]) for r in
-                     _probe_rows(bench).select("probe", "pos")
-                     .distinct().collect())  # bounded: k·m pairs max
-    bc = spark.sparkContext.broadcast(filt)
+    def load():
+        _, bench = _train_bench_grams(spark, sf_dir)
+        pairs = _probe_rows(bench).select("probe", "pos").distinct()
+        return frozenset((r["probe"], r["pos"]) for r in
+                         bounded_rows(pairs, BLOOM_K * BLOOM_M, "bloom_probes"))
 
-    @F.pandas_udf("bigint")
-    def n_flagged(toks: pd.Series) -> pd.Series:
-        fset = bc.value
-
+    def make(fset):
         def count_one(tok_list) -> int:
             grams = {" ".join(tok_list[i:i + DECON_N])
                      for i in range(len(tok_list) - DECON_N + 1)}
@@ -525,7 +526,10 @@ def streaming_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                     n += 1
             return n
 
-        return toks.map(count_one)
+        return count_one
+
+    n_flagged = model_udf(spark, ("bloom_probes", sf_dir), load, make,
+                          "bigint")
 
     docs = ev.read_documents_stream(spark, sf_dir)
     tok = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
@@ -579,12 +583,13 @@ def streaming_lr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alertas_spark.operators.dsir import TARGET_SOURCES
     from alertas_spark.operators.logreg import LR_B, LR_FOLDS, _lr_model
 
-    b = _lr_model(spark, sf_dir).collect()[0]  # bounded: 1 row, 3 integers
-    bc = spark.sparkContext.broadcast((b["b0"], b["b1"], b["b2"]))
+    def load():
+        (b,) = bounded_rows(_lr_model(spark, sf_dir).coalesce(1), 1,
+                            "lr_model")
+        return b["b0"], b["b1"], b["b2"]
 
-    @F.pandas_udf("bigint")
-    def zq(toks: pd.Series) -> pd.Series:
-        b0, b1, b2 = bc.value
+    def make(betas):
+        b0, b1, b2 = betas
 
         def logit(tok_list) -> int:
             x = [0] * LR_B
@@ -593,7 +598,9 @@ def streaming_lr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .hexdigest()[:15], 16) % LR_B] += 1
             return b0 + b1 * x[0] + b2 * x[1]
 
-        return toks.map(logit)
+        return logit
+
+    zq = model_udf(spark, ("lr_model", sf_dir), load, make, "bigint")
 
     docs = ev.read_documents_stream(spark, sf_dir)
     tok = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)

@@ -27,6 +27,7 @@ sys.path.insert(0, ROOT)
 sys.path.insert(1, os.path.join(ROOT, "perfbench"))
 
 from run import pretouch, spark_conf  # noqa: E402  (perfbench/run.py)
+from workloads import fixture_warehouse  # noqa: E402  (perfbench/workloads.py)
 from sparkrest import Rest, summarize  # noqa: E402
 
 RECORD = os.path.join(ROOT, "BENCH_LOCAL.json")
@@ -246,9 +247,7 @@ def main(names: list[str]) -> int:
             return round(time.time() - t0, 3)
 
         try:
-            for schema in ("exadata", "exadata_aux", "opengeo", "alertas_compras"):
-                os.symlink(os.path.join(fixture_dir, schema), os.path.join(wh, schema))
-            os.makedirs(os.path.join(wh, "alertas"))
+            fixture_warehouse(fixture_dir, wh)
             alert_batch = min(batch() for _p in range(PASSES))
             prior_batch = prior.get("alert_batch_wall_clock")
             if swing(alert_batch, prior_batch):

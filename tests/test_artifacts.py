@@ -301,7 +301,7 @@ def test_overlap_concurrent_builds_memoize_once(spark):
 
     # two distinct keys, each requested by TWO concurrent thunks
     thunks = [
-        (lambda k=k: memo.session_artifact(spark, ("ovl_test", k), make(k)))
+        (lambda k=k: memo.session_value(spark, ("ovl_test", k), make(k)))
         for k in ("a", "b", "a", "b")
     ]
     results = memo.overlap(spark, thunks, max_workers=4)

@@ -227,3 +227,29 @@ def test_ranked_apply_equals_chain_property():
                 merges.append((lhs + rhs, rng.choice(toks)))
                 rng.shuffle(merges)
         _both(word, merges, atoms=atoms)
+
+
+def test_tampered_merge_artifact_is_refused_before_the_pull(spark, tmp_path):
+    """The merge table reaches the driver through ``bounded_rows``: a store
+    artifact holding more ranks than the trainer can emit (N_MERGES + 5
+    rows, ``_SUCCESS`` present) makes ``bpe_token_count``'s builder raise
+    instead of pulling and broadcasting it."""
+    from alertas_spark.operators import artifacts, memo
+    from alertas_spark.operators.bpe import CODE_VERSION, N_MERGES
+    from alertas_spark.registry import load_all
+
+    root = str(tmp_path)
+    version = f"{CODE_VERSION}-{artifacts.dataset_fingerprint(SF, 'documents')}"
+    (spark.createDataFrame(
+        [(r, "a", "b", 1) for r in range(1, N_MERGES + 6)],
+        "rank int, lhs string, rhs string, freq bigint")
+     .write.parquet(artifacts.artifact_path(root, "bpe_merges", version)))
+    assert artifacts.exists(spark, root, "bpe_merges", version)
+    memo.clear()
+    spark.conf.set(artifacts.CONF_KEY, root)
+    try:
+        with pytest.raises(ValueError, match="bpe_merges"):
+            load_all()["bpe_token_count"].builder(spark, SF)
+    finally:
+        spark.conf.unset(artifacts.CONF_KEY)
+        memo.clear()

@@ -4,6 +4,7 @@ multi-byte merge training, full-domain coverage, and tier agreement."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 SF = "/root/testdata/sf0.001"
 
@@ -249,18 +250,45 @@ def test_vertical_tab_splits_identically_cross_engine(spark, tmp_path):
     assert got[0][1] == 3
 
 
-def test_merge_broadcast_is_shared_across_udf_constructors(spark):
-    """ntok_udf + toks_udf (census, roundtrip, token counts) share ONE
-    sc.broadcast of the merge list per session per corpus — the
-    merges_broadcast contract."""
-    from alertas_spark.operators import memo
-    from alertas_spark.operators.bpe_bytes import merges_broadcast
+def _model_consumers(model):
+    """Two consumers of one tokenizer model: UDF constructors and/or census
+    builders (a builder constructs its UDF eagerly)."""
+    from alertas_spark.operators import bpe, bpe_bytes, ulm, wordpiece
+    from alertas_spark.registry import load_all
 
-    sf = "/root/testdata/sf0.001"
-    a = merges_broadcast(spark, sf)
-    b = merges_broadcast(spark, sf)
-    assert a is b
-    # memo.clear() (bench cold protocol) releases it: the next constructor
-    # ships a fresh copy instead of resurrecting a cleared one
+    reg = load_all()
+    return {
+        "bpe": (bpe.ntok_udf, reg["bpe_vocab_census"].builder),
+        "bpe_bytes": (bpe_bytes.ntok_udf, bpe_bytes.toks_udf),
+        "wordpiece": (wordpiece.wp_ntok_udf,
+                      reg["wordpiece_vocab_census"].builder),
+        "ulm": (ulm.ulm_ntok_udf, reg["ulm_vocab_census"].builder),
+    }[model]
+
+
+@pytest.mark.parametrize("model", ["bpe", "bpe_bytes", "wordpiece", "ulm"])
+def test_merge_broadcast_is_shared_across_udf_constructors(spark, monkeypatch,
+                                                           model):
+    """Every consumer of a tokenizer model shares ONE ``sc.broadcast`` per
+    session per corpus (``memo.model_udf``): building two consumers ships
+    the model once, and ``memo.clear()`` (bench cold protocol) releases it,
+    so the next constructor ships a fresh copy."""
+    from pyspark import SparkContext
+
+    from alertas_spark.operators import memo
+
+    shipped = []
+    real = SparkContext.broadcast
+    monkeypatch.setattr(SparkContext, "broadcast",
+                        lambda sc, v: shipped.append(v) or real(sc, v))
+    first, second = _model_consumers(model)
     memo.clear()
-    assert merges_broadcast(spark, sf) is not a
+    try:
+        first(spark, SF)
+        second(spark, SF)
+        assert len(shipped) == 1
+        memo.clear()
+        first(spark, SF)
+        assert len(shipped) == 2
+    finally:
+        memo.clear()

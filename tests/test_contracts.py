@@ -84,11 +84,11 @@ def test_session_artifact_memoizes_and_clears(spark):
         calls.append(1)
         return spark.range(3).localCheckpoint()
 
-    a = memo.session_artifact(spark, ("t", "x"), build)
-    b = memo.session_artifact(spark, ("t", "x"), build)
+    a = memo.session_value(spark, ("t", "x"), build)
+    b = memo.session_value(spark, ("t", "x"), build)
     assert a is b and len(calls) == 1
     memo.clear()
-    c = memo.session_artifact(spark, ("t", "x"), build)
+    c = memo.session_value(spark, ("t", "x"), build)
     assert len(calls) == 2 and c.count() == 3
 
 

@@ -41,9 +41,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from alertas_spark.operators import memo
-    from alertas_spark.operators.bpe import (_apply_merges_ranked,
+    from alertas_spark.operators.bpe import (_apply_merges,
+                                             _apply_merges_ranked,
                                              _merge_ranks, _train_merges_py)
-    from alertas_spark.operators.bpe_bytes import _apply_merges, _doc_words, _hex_atoms
+    from alertas_spark.operators.bpe_bytes import _doc_words, _hex_atoms
     from alertas_spark.session import get_spark
     from tools.scale_probe import WORK, build_replica
 

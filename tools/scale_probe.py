@@ -358,10 +358,12 @@ def timed_alert_batch(spark, inputs_dir: str) -> tuple[float, dict[str, float]]:
     published through the engine (the reference's nightly generateAlertas
     unit of work, including the shared documentos_ativos base views and the
     S7-S11 publication sinks) — over a fresh temp warehouse whose input
-    schemas are symlinked from ``inputs_dir``.  Returns (total_seconds,
-    per-phase timings)."""
+    schemas link to ``inputs_dir`` (perfbench's ``fixture_warehouse``).
+    Returns (total_seconds, per-phase timings)."""
     import shutil
     import tempfile
+
+    from perfbench.workloads import fixture_warehouse
 
     from alertas_spark.framework import engine
     from alertas_spark.framework.context import AlertContext
@@ -369,11 +371,7 @@ def timed_alert_batch(spark, inputs_dir: str) -> tuple[float, dict[str, float]]:
 
     wh = tempfile.mkdtemp(prefix="probe_wh_")
     try:
-        for schema in os.listdir(inputs_dir):
-            if schema != "alertas" and os.path.isdir(os.path.join(inputs_dir, schema)):
-                os.symlink(os.path.join(inputs_dir, schema),
-                           os.path.join(wh, schema))
-        os.makedirs(os.path.join(wh, "alertas"))
+        fixture_warehouse(inputs_dir, wh)
         spark.catalog.clearCache()
         ctx = AlertContext(spark=spark, warehouse=wh, as_of=AS_OF)
         t0 = time.time()
