@@ -34,8 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alertas_spark.functions.keys import h60, h60_sql
 from alertas_spark.operators.textops import (DECON_BENCH_MOD, _NGRAM_DUCK,
-                                             _NGRAM_SPARK)
+                                             _NGRAM_SPARK, words)
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -46,20 +47,11 @@ BLOOM_M = 1 << 18
 BLOOM_K = 3
 
 
-def _h_spark(i: int) -> str:
-    return (f"pmod(cast(conv(substring(md5(concat('bl{i}:', g)), 1, 15), "
-            f"16, 10) as bigint), {BLOOM_M})")
-
-
-def _h_duck(i: int) -> str:
-    return (f"CAST(concat('0x', substring(md5('bl{i}:' || g), 1, 15)) "
-            f"AS BIGINT) % {BLOOM_M}")
-
-
 def _probe_union_duck(src: str) -> str:
     """k probe rows per gram: (doc_id, g, probe, pos) UNION ALL chain."""
     return " UNION ALL ".join(
-        f"SELECT doc_id, g, {i} AS probe, {_h_duck(i)} AS pos FROM {src}"
+        f"SELECT doc_id, g, {i} AS probe, {h60_sql('g', f'bl{i}:', BLOOM_M)}"
+        f" AS pos FROM {src}"
         for i in range(BLOOM_K))
 
 
@@ -97,8 +89,7 @@ def _train_bench_grams(spark: SparkSession,
     PLUS the columnar cache build (probed: equal CPU at best, and a
     corpus-sized cache at 100 TB)."""
     docs = load_table(spark, sf_dir, "documents")
-    grams = (docs.withColumn("tok", F.regexp_extract_all(
-                 F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
+    grams = (docs.withColumn("tok", words())
              .withColumn("g", F.explode(F.expr(_NGRAM_SPARK)))
              .select("doc_id", "g"))
     bench = (grams.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
@@ -112,7 +103,8 @@ def _probe_rows(df: DataFrame) -> DataFrame:
     as TOP-LEVEL projections (codegen), never inside an array lambda."""
     probes = F.array(*[
         F.struct(F.lit(i).alias("probe"),
-                 F.expr(_h_spark(i)).alias("pos")) for i in range(BLOOM_K)])
+                 h60("g", f"bl{i}:", BLOOM_M).alias("pos"))
+        for i in range(BLOOM_K)])
     return (df.withColumn("pr", F.explode(probes))
             .select(*df.columns, F.col("pr.probe").alias("probe"),
                     F.col("pr.pos").alias("pos")))

@@ -113,6 +113,7 @@ from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
 from alertas_spark.operators.memo import model_udf
 from alertas_spark.operators.packing import PACK_BUDGET as _PACK_BUDGET
 from alertas_spark.operators.packing import pack_ids
+from alertas_spark.operators.textops import WORD_RE, words
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -123,8 +124,7 @@ VOCAB_TOP = 256
 #: bump when trainer logic changes — part of the artifact version key.
 CODE_VERSION = "bpe-r12b"
 
-_WORD_RE = "[a-z0-9]+"
-#: distinct characters a ``_WORD_RE`` word can hold — the alphabet bound of
+#: distinct characters a ``WORD_RE`` word can hold — the alphabet bound of
 #: the character-atom models (WordPiece alphabet, ULM single pieces).
 ALPHABET = len(string.ascii_lowercase + string.digits)
 
@@ -165,8 +165,7 @@ def _doc_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, word): every word occurrence in the corpus — narrow explode."""
     return (load_table(spark, sf_dir, "documents")
             .select("doc_id",
-                    F.explode(F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit(_WORD_RE), 0))
+                    F.explode(words())
                     .alias("word")))
 
 
@@ -336,7 +335,7 @@ def _train_ctes(w0_body: str | None = None, state_sql: str = _STATE_CHAR_SQL,
     if w0_body is None:
         w0_body = f"""
         SELECT t.w AS word, CAST(count(*) AS BIGINT) AS freq FROM documents,
-        LATERAL unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS t(w)
+        LATERAL unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS t(w)
         GROUP BY t.w ORDER BY count(*) DESC, t.w LIMIT {VOCAB_TOP}"""
     parts = [f"""w0 AS MATERIALIZED ({w0_body})""",
              f"""s0 AS MATERIALIZED (
@@ -377,7 +376,7 @@ def _apply_ctes(docw_body: str | None = None,
     if docw_body is None:
         docw_body = f"""
         SELECT doc_id, t.w AS word FROM documents,
-        LATERAL unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS t(w)"""
+        LATERAL unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS t(w)"""
     parts = [f"""docw AS MATERIALIZED ({docw_body})""",
              f"""a0 AS MATERIALIZED (
         SELECT DISTINCT word,

@@ -8,10 +8,10 @@ the UTF-8 BYTE: every string — any script, any symbol — decomposes into
 bytes, so every document tokenizes.  This module is that tier:
 
 * **pre-tokenization** — words are maximal non-whitespace runs of the RAW
-  text (``_WORD_RE``: an explicit character class, NOT ``\\S`` — Java and
-  RE2 disagree on U+000B; see the constant's note.  No lowercasing: case
-  folding is locale-bearing outside ASCII and would be a cross-engine
-  seam; byte fidelity is the tier's whole point).  Merges never cross word
+  text (``textops.NONWS_RE``: an explicit character class, NOT ``\\S`` —
+  Java and RE2 disagree on U+000B; see the textops whitespace note.  No
+  lowercasing: case folding is locale-bearing outside ASCII and would be a
+  cross-engine seam; byte fidelity is the tier's whole point).  Merges never cross word
   boundaries, same as the ASCII tier.
 * **atoms** — each word's UTF-8 bytes, represented as UPPERCASE HEX PAIRS
   (``'é'`` → ``['C3', 'A9']``): Spark ``hex(encode(w,'UTF-8'))`` and DuckDB
@@ -73,6 +73,7 @@ from alertas_spark.operators.bpe import (CENSUS_TOP, _apply_ctes,
 from alertas_spark.operators.memo import model_udf
 from alertas_spark.operators.packing import PACK_BUDGET as _PACK_BUDGET
 from alertas_spark.operators.packing import pack_ids
+from alertas_spark.operators.textops import NONWS_RE
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -83,16 +84,6 @@ N_MERGES = 16
 VOCAB_TOP = 256
 #: bump when trainer logic changes — part of the artifact version key.
 CODE_VERSION = "bpeb-r14c"
-
-#: full-domain pre-tokenizer: any maximal run of non-whitespace — EVERY
-#: string with a non-space character yields at least one word.  The
-#: whitespace set is an EXPLICIT class, not ``\S``: Java's ``\s`` includes
-#: U+000B (vertical tab) while RE2/DuckDB's does not, so ``\S+`` tokenizes
-#: differently across engines on text containing ``\x0B`` — the one
-#: character in the two engines' ``\s`` symmetric difference.  The class
-#: below is Java's definition spelled out, verified to split identically
-#: on both engines (tests/test_bpe_bytes.py pins the ``\x0B`` input).
-_WORD_RE = r"[^\t\n\x0B\f\r ]+"
 
 #: per-lang characteristic multi-byte letter for the derived corpus view.
 _LANG_SUFFIX = {"zh": "的", "es": "é", "de": "ü", "fr": "è"}
@@ -141,12 +132,12 @@ _MDOCS_CTE = f"""mdocs AS MATERIALIZED (
 
 _W0_BYTES = f"""
         SELECT t.w AS word, CAST(count(*) AS BIGINT) AS freq FROM mdocs,
-        LATERAL unnest(regexp_extract_all(mtext, '{_WORD_RE}')) AS t(w)
+        LATERAL unnest(regexp_extract_all(mtext, '{NONWS_RE}')) AS t(w)
         GROUP BY t.w ORDER BY count(*) DESC, t.w LIMIT {VOCAB_TOP}"""
 
 _DOCW_BYTES = f"""
         SELECT doc_id, t.w AS word FROM mdocs,
-        LATERAL unnest(regexp_extract_all(mtext, '{_WORD_RE}')) AS t(w)"""
+        LATERAL unnest(regexp_extract_all(mtext, '{NONWS_RE}')) AS t(w)"""
 
 
 def _hex_atoms(word: str) -> list[str]:
@@ -177,7 +168,7 @@ def _doc_words(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("text").isNotNull())
             .select("doc_id",
                     F.explode(F.regexp_extract_all(
-                        _mtext_col(), F.lit(_WORD_RE), 0)).alias("word")))
+                        _mtext_col(), F.lit(NONWS_RE), 0)).alias("word")))
 
 
 def trained_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

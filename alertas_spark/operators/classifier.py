@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from alertas_spark.functions.keys import h60_sql
+from alertas_spark.operators.textops import hashed_word_counts
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -49,11 +51,8 @@ NB_FOLDS = 5
 #: class label is a two-letter ``lang`` code.
 NB_MAX_CLASSES = 26 * 26
 
-# md5-derived bucket id — the repo's cross-engine hash pair (dedup.py:561).
-_BUCKET_SPARK = (f"pmod(cast(conv(substring(md5(t), 1, 15), 16, 10) "
-                 f"as bigint), {NB_B})")
-_BUCKET_DUCK = (f"CAST(concat('0x', substring(md5(t), 1, 15)) AS BIGINT) "
-                f"% {NB_B}")
+#: feature bucket of a word ``t`` (``textops.hashed_word_counts``).
+_BUCKET_DUCK = h60_sql("t", mod=NB_B)
 
 #: shared oracle front half, ending in ``pred(doc_id, lang, pred_lang)`` —
 #: one copy on each side so oracle and plan cannot drift.
@@ -101,17 +100,6 @@ _NB_PRED_CTES = f"""tok AS (
 NB_CODE_VERSION = "nb-r15a"
 
 
-def _doc_feature_counts(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, b, db) hashed-unigram counts."""
-    return (docs.filter(F.col("text").isNotNull())
-            .select("doc_id", "lang",
-                    F.explode(F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)).alias("t"))
-            .withColumn("b", F.expr(_BUCKET_SPARK))
-            .groupBy("doc_id", "lang", "b")
-            .agg(F.count(F.lit(1)).alias("db")))
-
-
 def _nb_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained NB model as ONE artifact relation: feature rows
     (cls, b ≥ 0, qln_ct1, NULL, NULL) plus one per-class stats row
@@ -122,7 +110,8 @@ def _nb_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alertas_spark.operators.artifacts import persistent_artifact
 
     def build() -> DataFrame:
-        fb = _doc_feature_counts(load_table(spark, sf_dir, "documents"))
+        fb = hashed_word_counts(load_table(spark, sf_dir, "documents"),
+                                "lang", NB_B)
         # a NULL label is UNLABELED, not a class: excluded from the model
         # (both engines GROUP NULLs into a phantom class otherwise)
         train = fb.filter((F.col("doc_id") % NB_FOLDS != 0)
@@ -149,7 +138,7 @@ def _nb_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, pred_lang) over the held-out fold — the Spark twin of
     ``_NB_PRED_CTES``."""
     docs = load_table(spark, sf_dir, "documents")
-    fb = _doc_feature_counts(docs)
+    fb = hashed_word_counts(docs, "lang", NB_B)
     test = fb.filter(F.col("doc_id") % NB_FOLDS == 0)
     art = _nb_model(spark, sf_dir)
     # model: ≤ NB_B·|classes| rows; cls: |classes| rows → both broadcast.

@@ -14,7 +14,7 @@ Representation (the bloom.py discipline): the sketch is relational — the
 ``(d, pos, cell)`` table is at most ``D·W`` rows **bounded by the sketch
 geometry, not the corpus** — so both engines evaluate the identical integer
 algebra and a deployed run can collapse it into an array per executor with
-the same semantics.  Hashes are md5-derived (the one cross-engine hash),
+the same semantics.  Hashes are ``keys.h60`` (the one cross-engine hash),
 salted ``cm{d}:`` per row.
 
 Scale shape: one vocabulary-sized hash agg (token counts), a ``D``-way probe
@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alertas_spark.functions.keys import h60, h60_sql
+from alertas_spark.operators.textops import words
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -46,19 +48,10 @@ CM_W = 16
 CM_K = 20
 
 
-def _h_duck(d: int) -> str:
-    return (f"CAST(concat('0x', substring(md5('cm{d}:' || t), 1, 15)) "
-            f"AS BIGINT) % {CM_W}")
-
-
-def _h_spark(d: int) -> str:
-    return (f"pmod(cast(conv(substring(md5(concat('cm{d}:', t)), 1, 15), "
-            f"16, 10) as bigint), {CM_W})")
-
-
 def _probe_union_duck() -> str:
     return " UNION ALL ".join(
-        f"SELECT t, c, {d} AS d, {_h_duck(d)} AS pos FROM cm_ct"
+        f"SELECT t, c, {d} AS d, {h60_sql('t', f'cm{d}:', CM_W)} AS pos"
+        " FROM cm_ct"
         for d in range(CM_D))
 
 
@@ -86,8 +79,7 @@ def _cm_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(t, c)`` — exact per-token occurrence counts over the corpus."""
     return (load_table(spark, sf_dir, "documents")
             .filter(F.col("text").isNotNull())
-            .select(F.explode(F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)).alias("t"))
+            .select(F.explode(words()).alias("t"))
             .groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("c")))
 
 
@@ -97,7 +89,7 @@ def _cm_probe_rows(df: DataFrame) -> DataFrame:
     lambda)."""
     return (df.withColumn("pr", F.explode(F.array(*[
                 F.struct(F.lit(d).alias("d"),
-                         F.expr(_h_spark(d)).alias("pos"))
+                         h60("t", f"cm{d}:", CM_W).alias("pos"))
                 for d in range(CM_D)])))
             .select(*df.columns, F.col("pr.d").alias("d"),
                     F.col("pr.pos").alias("pos")))

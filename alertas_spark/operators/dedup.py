@@ -21,9 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from alertas_spark.functions.keys import h60, h60_sql
 from alertas_spark.operators import memo
 from alertas_spark.operators.embgate import EMB_VALID_SQL, np_valid_mask
-from alertas_spark.operators.textops import WS_RE
+from alertas_spark.operators.textops import WS_RE, norm_text, words
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -71,7 +72,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeper = min(doc_id).  One shuffle on a 128-bit key; at 100 TB this is a plain
     hash-partitioned aggregation with map-side combine."""
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_RE, " ")
+    norm = norm_text()
     return (
         docs.withColumn("content_hash", F.md5(norm))
         .groupBy("content_hash")
@@ -143,11 +144,10 @@ _MH_A = [(17 * (p + 1) ** 2 + 3 * (p + 1) + 1) % _MH_PRIME for p in range(N_PERM
 _MH_B = [(31 * (p + 1) ** 3 + 7) % _MH_PRIME for p in range(N_PERM)]
 
 
-#: oracle-side shingle hash (same 31-bit md5/conv domain as
+#: oracle-side shingle hash (the same ``h60`` mod ``_MH_PRIME`` as
 #: ``_hashed_shingle_tokens``)
 _SHINGLE_HASHES_DUCK = (f"list_transform(shingles, s -> "
-                        f"CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT)"
-                        f" % {_MH_PRIME})")
+                        f"{h60_sql('s', mod=_MH_PRIME)})")
 
 
 
@@ -179,20 +179,18 @@ def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hash_shingles(shing: DataFrame) -> DataFrame:
-    """``(doc_id, s)`` → distinct ``(doc_id, h)`` via the engine-shared
-    md5/conv hash (same domain as ``_SHINGLE_HASHES_DUCK``)."""
+    """``(doc_id, s)`` → distinct ``(doc_id, h)``, h = ``h60(s)`` mod
+    ``_MH_PRIME`` (same domain as ``_SHINGLE_HASHES_DUCK``)."""
     return (
         shing
-        .select("doc_id", (F.expr(
-            "cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)")
-            % F.lit(_MH_PRIME)).alias("h"))
+        .select("doc_id", h60("s", mod=_MH_PRIME).alias("h"))
         .dropDuplicates(["doc_id", "h"])
     )
 
 
 def _hashed_shingle_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, h)``: each doc's DISTINCT 31-bit shingle hashes, one row per
-    hash — ``_shingle_rows`` pushed through the engine-shared md5/conv hash as
+    hash — ``_shingle_rows`` pushed through the engine-shared ``h60`` hash as
     a top-level codegen projection (same domain as ``_SHINGLE_HASHES_DUCK``,
     so oracles agree bit-for-bit)."""
     return _hash_shingles(_shingle_rows(spark, sf_dir))
@@ -585,9 +583,6 @@ SIMHASH_BITS = 60          # 15 hex chars of md5 → fits a signed 64-bit long
 SIMHASH_BANDS = 4          # 4 bands × 15 bits; candidates share ≥1 full band
 SIMHASH_MAX_HAMMING = 3    # verify step keeps pairs within this radius
 
-#: 60-bit token hash from md5 — the one hash both engines compute identically.
-_TOKHASH_SPARK = "cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"
-_TOKHASH_DUCK = "CAST(concat('0x', substring(md5(t), 1, 15)) AS BIGINT)"
 
 _SIG_SPARK = f"""
     aggregate(sequence(0, {SIMHASH_BITS - 1}), cast(0 as bigint), (acc, b) ->
@@ -614,7 +609,7 @@ _BAND_MASK = (1 << 15) - 1
     WITH tokd AS (
         SELECT doc_id,
                list_transform(list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')),
-                              t -> {_TOKHASH_DUCK}) AS hashes
+                              t -> {h60_sql('t')}) AS hashes
         FROM documents
         WHERE len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0
     ),
@@ -647,10 +642,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature via explode → codegen'd hash aggregate (higher-order lambdas are
     # interpreted in Spark — 60 plain bit-test sums stay in WholeStageCodegen)
     hashes = docs.select(
-        "doc_id",
-        F.explode(F.expr("array_distinct(regexp_extract_all(lower(text), "
-                         "'[a-z0-9]+', 0))")).alias("t"),
-    ).select("doc_id", F.expr(_TOKHASH_SPARK.replace("md5(t)", "md5(t)")).alias("h"))
+        "doc_id", F.explode(F.array_distinct(words())).alias("t"),
+    ).select("doc_id", h60("t").alias("h"))
     votes = hashes.groupBy("doc_id").agg(*[
         F.sum(F.expr(f"IF(((h >> {b}) & 1) = 1, 1, -1)")).alias(f"v{b}")
         for b in range(SIMHASH_BITS)
@@ -928,8 +921,7 @@ def dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 2-pass rank over the line's few occurrences."""
     docs = load_table(spark, sf_dir, "documents")
     lined = (
-        docs.withColumn("tok", F.regexp_extract_all(F.lower(F.col("text")),
-                                                    F.lit("[a-z0-9]+"), 0))
+        docs.withColumn("tok", words())
         .withColumn("n", F.size("tok"))
         .filter(F.col("n") > 0)
         .withColumn("ord", F.explode(F.expr(
@@ -965,12 +957,7 @@ def dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 INCR_SPLIT_BP = 8_000
 _INCR_MOD = 10_000
 
-_INCR_U_SPARK = ("pmod(cast(conv(substring(md5(concat('incr:', "
-                 "cast(doc_id AS string))), 1, 15), 16, 10) AS bigint), "
-                 f"{_INCR_MOD})")
-_INCR_U_DUCK = ("CAST(concat('0x', substring(md5('incr:' || "
-                "CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % "
-                f"{_INCR_MOD}")
+_INCR_U_DUCK = h60_sql("CAST(doc_id AS VARCHAR)", "incr:", _INCR_MOD)
 
 
 @declare(
@@ -1007,7 +994,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     split = docs.select(
         "doc_id", "source", F.md5("text").alias("fp"),
-        (F.expr(_INCR_U_SPARK) < INCR_SPLIT_BP).alias("is_existing"))
+        (h60("doc_id", "incr:", _INCR_MOD) < INCR_SPLIT_BP)
+        .alias("is_existing"))
     existing_fps = split.filter("is_existing").select("fp")
     incoming = (
         split.filter(~F.col("is_existing"))
@@ -1093,6 +1081,9 @@ def dedup_cluster_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: per-mille split boundaries: bucket < 800 → train, < 900 → val, else test.
 SPLIT_TRAIN_PM = 800
 SPLIT_VAL_PM = 900
+_SPLIT_MOD = 1000
+_SPLIT_BUCKET_DUCK = h60_sql("CAST(component AS VARCHAR)", "split:",
+                             _SPLIT_MOD)
 
 
 @declare(
@@ -1110,15 +1101,9 @@ SPLIT_VAL_PM = 900
     , labels AS (SELECT node AS doc_id, MIN(label) AS component FROM walk
                  GROUP BY node)
     SELECT doc_id, component,
-           CAST(CAST(concat('0x', substring(
-                    md5('split:' || CAST(component AS VARCHAR)), 1, 15))
-                AS BIGINT) % 1000 AS BIGINT) AS bucket,
-           CASE WHEN CAST(concat('0x', substring(
-                         md5('split:' || CAST(component AS VARCHAR)), 1, 15))
-                     AS BIGINT) % 1000 < {SPLIT_TRAIN_PM} THEN 'train'
-                WHEN CAST(concat('0x', substring(
-                         md5('split:' || CAST(component AS VARCHAR)), 1, 15))
-                     AS BIGINT) % 1000 < {SPLIT_VAL_PM} THEN 'val'
+           CAST({_SPLIT_BUCKET_DUCK} AS BIGINT) AS bucket,
+           CASE WHEN {_SPLIT_BUCKET_DUCK} < {SPLIT_TRAIN_PM} THEN 'train'
+                WHEN {_SPLIT_BUCKET_DUCK} < {SPLIT_VAL_PM} THEN 'val'
                 ELSE 'test' END AS split
     FROM labels
     """,
@@ -1131,9 +1116,9 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     document across train and test, the classic eval-contamination bug this
     operator exists to prevent (same failure class as benchmark
     decontamination, but *within* the corpus).  80/10/10 per-mille
-    boundaries; md5 is the one hash both engines compute identically, salted
-    with ``split:`` so the assignment is independent of every other
-    md5-keyed operator (sampling, sharding).
+    boundaries; the bucket is ``keys.h60`` of the label, salted with
+    ``split:`` so the assignment is independent of every other h60-keyed
+    operator (sampling, sharding).
 
     Scale shape: the component labels are the O(log diameter) star
     contraction (:func:`connected_components`); the split itself is a pure
@@ -1147,13 +1132,8 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = load_table(spark, sf_dir, "documents").select("doc_id")
     labels, _rounds = connected_components(
         nodes, pairs.selectExpr("doc_a AS src", "doc_b AS dst"))
-    bucket = (
-        F.conv(F.substring(
-            F.md5(F.concat(F.lit("split:"),
-                           F.col("component").cast("string"))), 1, 15),
-               16, 10).cast("bigint") % 1000)
     return (labels
-            .withColumn("bucket", bucket)
+            .withColumn("bucket", h60("component", "split:", _SPLIT_MOD))
             .withColumn("split",
                         F.when(F.col("bucket") < SPLIT_TRAIN_PM, "train")
                         .when(F.col("bucket") < SPLIT_VAL_PM, "val")

@@ -46,6 +46,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alertas_spark.functions.keys import (h60, h60_sql, ln_uniform,
+                                          ln_uniform_sql)
+from alertas_spark.operators.textops import hashed_word_counts
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -62,11 +65,8 @@ DSIR_K = 64
 
 _TGT_IN = ", ".join(f"'{s}'" for s in TARGET_SOURCES)
 
-# md5-derived bucket id — the repo's cross-engine hash pair (dedup.py:561).
-_BUCKET_SPARK = (f"pmod(cast(conv(substring(md5(t), 1, 15), 16, 10) "
-                 f"as bigint), {DSIR_B})")
-_BUCKET_DUCK = (f"CAST(concat('0x', substring(md5(t), 1, 15)) AS BIGINT) "
-                f"% {DSIR_B}")
+#: feature bucket of a word ``t`` (``textops.hashed_word_counts``).
+_BUCKET_DUCK = h60_sql("t", mod=DSIR_B)
 
 #: shared oracle front half: tokenize → per-doc bucket counts → the two LM
 #: tables (bucket counts + totals) → per-raw-doc quantized log-ratio score.
@@ -114,17 +114,6 @@ def _is_tgt():
     return F.coalesce(F.col("source").isin(*TARGET_SOURCES), F.lit(False))
 
 
-def _doc_buckets(docs: DataFrame) -> DataFrame:
-    """(doc_id, source, b, db) hashed-unigram counts — the feature map."""
-    return (docs.filter(F.col("text").isNotNull())
-            .select("doc_id", "source",
-                    F.explode(F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)).alias("t"))
-            .withColumn("b", F.expr(_BUCKET_SPARK))
-            .groupBy("doc_id", "source", "b")
-            .agg(F.count(F.lit(1)).alias("db")))
-
-
 def _dsir_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two bucket-count LM tables as one relation (domain ∈ {t, r},
     b, c) — ≤ 2·DSIR_B rows total, persisted through the artifact store so
@@ -133,7 +122,8 @@ def _dsir_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alertas_spark.operators.artifacts import persistent_artifact
 
     def build() -> DataFrame:
-        fb = _doc_buckets(load_table(spark, sf_dir, "documents"))
+        fb = hashed_word_counts(load_table(spark, sf_dir, "documents"),
+                                "source", DSIR_B)
         # NULL source is RAW (the uncurated pool), matching the oracle's
         # NOT COALESCE(IN, FALSE) — a bare NOT IN would silently DROP
         # null-source docs from the raw LM while otherwise() kept them
@@ -151,7 +141,7 @@ def _dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Spark twin of ``_DSIR_SCORED_CTES`` (one copy each side, so the oracle
     cannot drift from the plan)."""
     docs = load_table(spark, sf_dir, "documents")
-    fb = _doc_buckets(docs)
+    fb = hashed_word_counts(docs, "source", DSIR_B)
     lm = _dsir_lm(spark, sf_dir)
     # Both LM tables are ≤ DSIR_B rows by construction → explicit broadcast.
     ct = lm.filter(F.col("domain") == "t").select("b", F.col("c").alias("ct"))
@@ -230,12 +220,9 @@ def dsir_select_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: resampling temperature: key = logw/τ + Gumbel.  τ=1 is the paper default.
 DSIR_TAU = 1.0
 
-#: md5-derived 60-bit uniform per document, salted per operator.
-_G_SPARK_H = ("cast(conv(substring(md5(concat('dsg:', cast(doc_id AS string))), "
-              "1, 15), 16, 10) as bigint)")
-_G_DUCK_H = ("CAST(concat('0x', substring(md5('dsg:' || "
-             "CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)")
-_TWO60 = float(1 << 60)
+#: quantized log of the per-document uniform (``keys.h60``, salted per
+#: operator): round(ln((h+1)/2^60)·1e9).
+_G_DUCK_LNU = ln_uniform_sql(h60_sql("CAST(doc_id AS VARCHAR)", "dsg:"))
 
 
 @declare(
@@ -246,9 +233,7 @@ _TWO60 = float(1 << 60)
         SELECT doc_id, source, n_tokens, avg_logratio_nats,
                CAST(ROUND(avg_logratio_nats * 1e6) AS BIGINT)
                + CAST(ROUND(-LN(-CAST(
-                     LEAST(CAST(ROUND(LN(CAST({_G_DUCK_H}
-                                        + 1 AS DOUBLE) / {_TWO60})
-                                * 1e9) AS BIGINT), -1)
+                     LEAST({_G_DUCK_LNU}, -1)
                      AS DOUBLE) / 1e9) * 1e6) AS BIGINT) AS sel_key
         FROM scored
     ), ranked AS (
@@ -284,12 +269,8 @@ def dsir_sample_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs.  q1 = LEAST(round(...), −1) on both engines closes the seam
     # exactly: the clamped docs land on the maximal Gumbel value, which is
     # the correct limit of the transform.
-    h = F.expr(_G_SPARK_H)
     # inner: q1 = min(round(ln((h+1)/2^60)·1e9), −1) — exact negative integer
-    q1 = F.least(
-        F.round(F.log((h + 1).cast("double") / F.lit(_TWO60)) * 1e9)
-         .cast("bigint"),
-        F.lit(-1).cast("bigint"))
+    q1 = F.least(ln_uniform(h60("doc_id", "dsg:")), F.lit(-1).cast("bigint"))
     # outer: g_q = round(−ln(−q1/1e9)·1e6) — ln of a double both engines
     # derived identically from the same integer
     g_q = F.round(-F.log(-q1.cast("double") / 1e9) * 1e6).cast("bigint")

@@ -55,8 +55,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alertas_spark.functions.keys import h60, h60_sql
 from alertas_spark.operators.classifier import _NB_PRED_CTES, NB_FOLDS
 from alertas_spark.operators.dsir import TARGET_SOURCES
+from alertas_spark.operators.textops import words
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -74,11 +76,8 @@ LR_CODE_VERSION = "lr-r16a"
 
 _TGT_IN = ", ".join(f"'{s}'" for s in TARGET_SOURCES)
 
-# md5-derived bucket id, salted per operator (the repo hash pair).
-_B_SPARK = ("pmod(cast(conv(substring(md5(concat('lrb:', t)), 1, 15), 16, 10) "
-            f"as bigint), {LR_B})")
-_B_DUCK = ("CAST(concat('0x', substring(md5('lrb:' || t), 1, 15)) AS BIGINT) "
-           f"% {LR_B}")
+#: feature bucket of a word ``t``: ``keys.h60`` salted per operator.
+_B_DUCK = h60_sql("t", "lrb:", LR_B)
 
 #: feature relation CTEs → ``lr_f(doc_id, y, x1, x2)`` (all docs) and
 #: ``lr_train`` (training folds).
@@ -184,10 +183,8 @@ def _lr_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = (docs.filter(F.col("text").isNotNull())
            .select("doc_id", "source",
-                   F.explode(F.regexp_extract_all(
-                       F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
-                   .alias("t"))
-           .withColumn("b", F.expr(_B_SPARK)))
+                   F.explode(words()).alias("t"))
+           .withColumn("b", h60("t", "lrb:", LR_B)))
     y = (F.when(F.coalesce(F.col("source").isin(*TARGET_SOURCES),
                            F.lit(False)), 1).otherwise(0))
     return (tok.groupBy("doc_id", "source")

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from alertas_spark.operators.textops import words
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -104,8 +105,7 @@ def decontaminate_minkprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = (docs.filter(F.col("text").isNotNull())
          .select("doc_id",
-                 F.explode(F.regexp_extract_all(
-                     F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
+                 F.explode(words())
                  .alias("t"))
          .groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("dc")))
     ct = _lm_unigram_counts(spark, sf_dir)

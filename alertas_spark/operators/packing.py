@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from alertas_spark.operators.textops import words
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -64,8 +65,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tokens before this document.  Deterministic (ordered by doc_id within source)
     and reshard-stable; one shuffle on the shard key."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.regexp_extract_all(F.lower(F.col("text")),
-                                           F.lit("[a-z0-9]+"), 0))
+    n_tokens = F.size(words())
     return (pack_ids(docs.select("doc_id", "source",
                                  n_tokens.alias("n_tokens")))
             .withColumn("n_tokens", F.col("n_tokens").cast("int")))
@@ -109,8 +109,7 @@ def doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned cross-engine by the md5 of the joined token window."""
     docs = load_table(spark, sf_dir, "documents")
     out = (
-        docs.withColumn("tok", F.regexp_extract_all(F.lower(F.col("text")),
-                                                    F.lit("[a-z0-9]+"), 0))
+        docs.withColumn("tok", words())
         .withColumn("n", F.size("tok"))
         .filter(F.col("n") > 0)
         .withColumn("chunk_idx", F.explode(F.expr(
@@ -234,8 +233,7 @@ def pack_length_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = (docs.filter(F.col("text").isNotNull())
             .select("doc_id",
-                    F.size(F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
+                    F.size(words())
                     .cast("bigint").alias("n_tokens"))
             .filter(F.col("n_tokens") > 0))
     bucket = F.lit(len(LEN_BUCKETS))
@@ -308,8 +306,7 @@ def pack_concat_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, then a scan-side explode of ≤ (n_tokens // budget + 1) span
     rows per document."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.regexp_extract_all(F.lower(F.col("text")),
-                                           F.lit("[a-z0-9]+"), 0))
+    n_tokens = F.size(words())
     laid = _laid(docs.select("doc_id", "source",
                              n_tokens.cast("bigint").alias("n_tokens"))
                  .filter(F.col("n_tokens") > 0))
@@ -375,8 +372,7 @@ def pack_concat_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     story (contrast ``pack_length_bucketed``'s per-batch padding_waste).
     Pure integer algebra; one shard-keyed window + one hash agg."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.regexp_extract_all(F.lower(F.col("text")),
-                                           F.lit("[a-z0-9]+"), 0))
+    n_tokens = F.size(words())
     nz = (docs.select("doc_id", "source",
                       n_tokens.cast("bigint").alias("n_tokens"))
           .filter(F.col("n_tokens") > 0))

@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from alertas_spark.operators.dedup import dedup_minhash_lsh
 from alertas_spark.operators.memo import session_value
-from alertas_spark.operators.textops import WS_RE, text_quality
+from alertas_spark.operators.textops import (WS_RE, norm_text, text_quality,
+                                             words)
 from alertas_spark.registry import REGISTRY, declare
 from alertas_spark.sources.catalog import load_table
 
@@ -195,7 +196,7 @@ def pipeline_corpus_to_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alertas_spark.operators.textops import quality_gate_cond
 
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_RE, " ")
+    norm = norm_text()
     gated = (docs
              .filter(quality_gate_cond())
              .select("doc_id", "source", F.md5(norm).alias("h")))
@@ -574,8 +575,7 @@ def pipeline_train_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("text").isNotNull()))
     kept = (docs.groupBy(F.md5("text").alias("h"))
             .agg(F.min("doc_id").alias("doc_id")).select("doc_id"))
-    n_tokens = F.size(F.regexp_extract_all(F.lower(F.col("text")),
-                                           F.lit("[a-z0-9]+"), 0))
+    n_tokens = F.size(words())
     surv = (qe.join(clean, "doc_id")
             .join(kept, "doc_id")
             .join(docs.select("doc_id", "source",

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from alertas_spark.functions.numeric import finite, sql_finite
+from alertas_spark.operators.textops import words
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -344,8 +345,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = (docs.filter(F.col("text").isNotNull())
            .select((F.col("doc_id") % VOCAB_DECILES).alias("decile"),
-                   F.explode(F.regexp_extract_all(
-                       F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
+                   F.explode(words())
                    .alias("t")))
     first_seen = tok.groupBy("t").agg(F.min("decile").alias("d0"))
     newt = (first_seen.groupBy(F.col("d0").alias("decile"))

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 from alertas_spark.operators.textops import (NONWS_RE, STOPWORDS, WS_CHARS,
-                                             WS_RE)
+                                             WS_RE, words)
 
 RB_MIN_WORDS = 20
 RB_MAX_WORDS = 5000
@@ -113,7 +113,7 @@ def _spark_conds() -> dict[str, Column]:
     n_sym = (F.length(text)
              - F.length(F.replace(text, F.lit("#"), F.lit("")))
              + F.size(F.regexp_extract_all(text, F.lit(r"\.\.\."), 0)))
-    toks = F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), 0)
+    toks = words(text)
     stop_hits = F.size(F.filter(F.array(*[F.lit(w) for w in STOPWORDS]),
                                 lambda w: F.array_contains(toks, w)))
     return {

@@ -9,7 +9,7 @@ none of that (it is seeded per-partition); a content-keyed hash gives all of it.
 The idiom: ``uniform = md5(key) mod M``, keep ``uniform < rate·M``.  Pure
 scan-projection — zero shuffles, trivially pushes into any plan — and the md5 base
 makes it bit-identical in the DuckDB oracle (the same trick the MinHash/SimHash
-operators use; conventions: Spark ``conv(hex,16,10)`` ≡ DuckDB ``'0x'||hex::BIGINT``).
+operators use; the hash is ``functions/keys.h60`` and its DuckDB twin ``h60_sql``).
 """
 
 from __future__ import annotations
@@ -18,6 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from alertas_spark.functions.keys import (h60, h60_sql, ln_uniform,
+                                          ln_uniform_sql)
+from alertas_spark.operators.textops import words
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -29,10 +32,7 @@ SAMPLE_MOD = 10_000
 STRATUM_RATES = {"web": 1_000, "wiki": 3_000, "books": 6_000, "code": 2_500}
 DEFAULT_RATE = 2_000
 
-_SPARK_U = ("pmod(cast(conv(substring(md5(cast(doc_id AS string)), 1, 15), 16, 10) "
-            f"AS bigint), {SAMPLE_MOD})")
-_DUCK_U = ("CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) "
-           f"AS BIGINT) % {SAMPLE_MOD}")
+_DUCK_U = h60_sql("CAST(doc_id AS VARCHAR)", mod=SAMPLE_MOD)
 
 
 def _rate_case(col: str) -> str:
@@ -57,7 +57,7 @@ def sample_hash_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents (stable training-set diffs)."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.withColumn("u", F.expr(_SPARK_U))
+        docs.withColumn("u", h60("doc_id", mod=SAMPLE_MOD))
         .filter(F.col("u") < F.expr(_rate_case("source")))
         .select("doc_id", "source", "u")
     )
@@ -70,10 +70,7 @@ def sample_hash_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHUFFLE_SEED = "e3"  # epoch tag mixed into the hash → a new seed reshuffles
 N_SHARDS = 8
 
-_SHUF_SPARK = (f"cast(conv(substring(md5(concat('{SHUFFLE_SEED}:', "
-               "cast(doc_id AS string))), 1, 15), 16, 10) AS bigint)")
-_SHUF_DUCK = (f"CAST(concat('0x', substring(md5('{SHUFFLE_SEED}:' || "
-              "CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)")
+_SHUF_DUCK = h60_sql("CAST(doc_id AS VARCHAR)", f"{SHUFFLE_SEED}:")
 
 
 @declare(
@@ -102,7 +99,8 @@ def shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory-bounded and the output is exactly the sharded-file layout a training
     dataloader consumes."""
     docs = load_table(spark, sf_dir, "documents")
-    keyed = docs.select("doc_id", "source", F.expr(_SHUF_SPARK).alias("k"))
+    keyed = docs.select("doc_id", "source",
+                        h60("doc_id", f"{SHUFFLE_SEED}:").alias("k"))
     w = W.partitionBy(F.col("k") % N_SHARDS).orderBy("k", "doc_id")
     return keyed.select(
         "doc_id", "source",
@@ -121,10 +119,7 @@ def shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 MIX_WEIGHTS_BP = {"src0": 3_000, "src1": 25_000, "src2": 17_000}
 MIX_DEFAULT_BP = 10_000
 
-_MIX_U = ("pmod(cast(conv(substring(md5(concat('mix:', cast(doc_id AS string))), "
-          f"1, 15), 16, 10) AS bigint), {SAMPLE_MOD})")
-_MIX_U_DUCK = ("CAST(concat('0x', substring(md5('mix:' || CAST(doc_id AS VARCHAR)), "
-               f"1, 15)) AS BIGINT) % {SAMPLE_MOD}")
+_MIX_U_DUCK = h60_sql("CAST(doc_id AS VARCHAR)", "mix:", SAMPLE_MOD)
 
 
 def _mix_case(col: str) -> str:
@@ -164,7 +159,8 @@ def dataset_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n_copies = (
         (F.expr(_mix_case("source")) / SAMPLE_MOD).cast("int")
-        + (F.expr(_MIX_U) < F.expr(_mix_case("source")) % SAMPLE_MOD).cast("int")
+        + (h60("doc_id", "mix:", SAMPLE_MOD)
+           < F.expr(_mix_case("source")) % SAMPLE_MOD).cast("int")
     )
     return (
         docs.select("doc_id", "source", n_copies.alias("n_copies"))
@@ -400,9 +396,7 @@ def _doremi(spark: SparkSession, sf_dir: str, eta: float) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = (docs.filter(F.col("text").isNotNull())
          .select("doc_id", "source",
-                 F.explode(F.regexp_extract_all(
-                     F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
-                 .alias("t"))
+                 F.explode(words()).alias("t"))
          .groupBy("doc_id", "source", "t")
          .agg(F.count(F.lit(1)).alias("dc")))
     ct = _lm_unigram_counts(spark, sf_dir)
@@ -490,12 +484,8 @@ def dataset_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SAMPLE_K = 200
 
-#: u ∈ (0, 1]: 15 md5 hex digits → h ∈ [0, 2^60), u = (h+1) / 2^60
-_W_SPARK_H = ("cast(conv(substring(md5(concat('ws:', cast(doc_id AS string))), "
-              "1, 15), 16, 10) AS bigint)")
-_W_DUCK_H = ("CAST(concat('0x', substring(md5('ws:' || "
-             "CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)")
-_TWO60 = float(1 << 60)
+#: u ∈ (0, 1]: h = h60('ws:' || doc_id) ∈ [0, 2^60), u = (h+1) / 2^60
+_W_DUCK_LNU = ln_uniform_sql(h60_sql("CAST(doc_id AS VARCHAR)", "ws:"))
 
 
 @declare(
@@ -503,9 +493,7 @@ _TWO60 = float(1 << 60)
     oracle=f"""
     WITH pri AS (
         SELECT doc_id, n_chars,
-               CAST(ROUND(LN(CAST({_W_DUCK_H} + 1 AS DOUBLE) / {_TWO60})
-                          * 1e9) AS BIGINT)
-                   / CAST(n_chars + 1 AS DOUBLE) AS p
+               {_W_DUCK_LNU} / CAST(n_chars + 1 AS DOUBLE) AS p
         FROM documents
         WHERE n_chars IS NOT NULL
     ), ranked AS (
@@ -528,9 +516,7 @@ def sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = (load_table(spark, sf_dir, "documents")
             .filter(F.col("n_chars").isNotNull()))
-    h = F.expr(_W_SPARK_H)
-    lnq = F.round(F.log((h + 1).cast("double") / F.lit(_TWO60)) * 1e9) \
-           .cast("bigint")
+    lnq = ln_uniform(h60("doc_id", "ws:"))
     pri = docs.select(
         "doc_id", "n_chars",
         (lnq.cast("double") / (F.col("n_chars") + 1).cast("double")).alias("p"),
@@ -567,10 +553,7 @@ MIX_TEMPERATURE = 2.0
 MIX_ALPHA = 0.5            # 1/T — keep exactly representable in binary
 MIX_CAP_BP = 30_000        # per-source cap: at most 3 epochs
 
-_MT_U = ("pmod(cast(conv(substring(md5(concat('mixT:', cast(doc_id AS string))), "
-         f"1, 15), 16, 10) AS bigint), {SAMPLE_MOD})")
-_MT_U_DUCK = ("CAST(concat('0x', substring(md5('mixT:' || CAST(doc_id AS VARCHAR)), "
-              f"1, 15)) AS BIGINT) % {SAMPLE_MOD}")
+_MT_U_DUCK = h60_sql("CAST(doc_id AS VARCHAR)", "mixT:", SAMPLE_MOD)
 
 
 @declare(
@@ -659,7 +642,8 @@ def _mix_temperature(spark: SparkSession, sf_dir: str,
                                  / F.col("n_s").cast("double")).cast("bigint"),
                          F.lit(MIX_CAP_BP)).alias("w_bp")))
     n_copies = (F.floor(F.col("w_bp") / SAMPLE_MOD)
-                + (F.expr(_MT_U) < F.col("w_bp") % SAMPLE_MOD).cast("bigint"))
+                + (h60("doc_id", "mixT:", SAMPLE_MOD)
+                   < F.col("w_bp") % SAMPLE_MOD).cast("bigint"))
     return (docs.join(F.broadcast(w),
                       F.col("source").eqNullSafe(F.col("w_source")))
             .select("doc_id", "source", n_copies.alias("n_copies"))

@@ -1,15 +1,21 @@
 """Text-analysis operators for training-data pipelines: quality scoring, language-ID
 heuristic, token counting, document fingerprinting.
 
+Also the one home of the corpus text primitives every operator shares: the
+whitespace classes (``WS_RE``, ``NONWS_RE``), the word (``WORD_RE``,
+:func:`words`), the exact-dup key text (:func:`norm_text`) and the hashed word
+counts (:func:`hashed_word_counts`).
+
 All pure JVM expressions (regex + array higher-order functions) — no Python in the hot
 path; at 100 TB these are embarrassingly parallel scan-projections.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from alertas_spark.functions.keys import h60
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -33,6 +39,42 @@ WS_CHARS = r"\t\n\x0B\f\r "
 WS_RE = rf"[{WS_CHARS}]+"
 #: ≙ ``\S+`` (a maximal non-whitespace run), both engines.
 NONWS_RE = rf"[^{WS_CHARS}]+"
+#: a corpus word: a maximal ASCII-alphanumeric run of the lowercased text.
+WORD_RE = "[a-z0-9]+"
+
+
+def words(text: Column | str = "text") -> Column:
+    """The corpus word list of ``text``: every ``WORD_RE`` run of
+    ``lower(text)``, in order — the tokenization every word-level operator
+    shares (oracles spell it ``regexp_extract_all(lower(text), '[a-z0-9]+')``).
+
+    Limit: equal across engines on ASCII text only.  Spark's ``lower`` uses
+    full case mapping and DuckDB's simple case mapping, so U+0130 (``İ``)
+    lowers to ``i̇`` (i + U+0307) in Spark and ``i`` in DuckDB: ``İstanbul`` is
+    the words ``['i', 'stanbul']`` in Spark and ``['istanbul']`` in DuckDB.
+    The fixture text is ASCII by contract (``test_fixture_text_is_ascii``)."""
+    return F.regexp_extract_all(F.lower(text), F.lit(WORD_RE), 0)
+
+
+def norm_text(text: Column | str = "text") -> Column:
+    """The exact-dup key text: ``lower``, ``trim`` (spaces), every whitespace
+    run collapsed to one space — oracles spell it
+    ``regexp_replace(trim(lower(text)), WS_RE, ' ', 'g')``.  Same ASCII-only
+    limit as :func:`words`: the U+0130 case-fold gap changes this key too."""
+    return F.regexp_replace(F.trim(F.lower(text)), WS_RE, " ")
+
+
+def hashed_word_counts(docs: DataFrame, label: str,
+                       n_buckets: int) -> DataFrame:
+    """``(doc_id, <label>, b, db)``: each document's count ``db`` of words in
+    bucket ``b = h60(word) mod n_buckets`` — the hashed-unigram feature map
+    of DSIR and the NB classifier.  NULL-text documents have no rows."""
+    return (docs.filter(F.col("text").isNotNull())
+            .select("doc_id", label, F.explode(words()).alias("t"))
+            .withColumn("b", h60("t", mod=n_buckets))
+            .groupBy("doc_id", label, "b")
+            .agg(F.count(F.lit(1)).alias("db")))
+
 
 #: language marker words for the n-gram/stopword language-ID heuristic.
 LANG_MARKERS = {
@@ -64,7 +106,7 @@ QUALITY_GATE_SQL = (
 def quality_gate_cond():
     """The gate as a Spark Column over a ``text`` column — the exact
     predicate ``QUALITY_GATE_SQL`` states for the DuckDB side."""
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    toks = words()
     punct = F.length(F.regexp_replace(F.col("text"),
                                       rf"[a-zA-Z0-9{WS_CHARS}]", ""))
     return (F.size(toks).between(GATE_MIN_TOKENS, GATE_MAX_TOKENS)
@@ -94,7 +136,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: token count, stopword ratio, punctuation ratio, pass flag —
     the usual pre-training corpus filters (Gopher/C4-style heuristics)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    toks = words()
     n_tokens = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
     punct_len = F.length(F.regexp_replace(F.col("text"),
@@ -113,9 +155,9 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _marker_count_duck(lang: str) -> str:
-    words = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
+    markers = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
     return (f"len(list_filter(regexp_extract_all(lower(text), '[a-z]+'), "
-            f"t -> t IN ({words})))")
+            f"t -> t IN ({markers})))")
 
 
 @declare(
@@ -145,8 +187,8 @@ def lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
 
-    def marker_count(words: tuple[str, ...]):
-        return F.size(F.filter(toks, lambda t: t.isin(*words)))
+    def marker_count(markers: tuple[str, ...]):
+        return F.size(F.filter(toks, lambda t: t.isin(*markers)))
 
     counts = {lang: marker_count(words) for lang, words in LANG_MARKERS.items()}
     df = docs.select("doc_id", "lang", *[counts[lg].alias(f"c_{lg}") for lg in counts])
@@ -216,9 +258,11 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: whole-content md5 + a rolling-window (5-gram) min-hash
     — the winnowing-style signature used for fast containment checks."""
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_RE, " ")
+    norm = norm_text()
+    # whitespace runs are single spaces in the key text, so its space split
+    # is the oracle's WS_RE split of trim(lower(text))
     out = (
-        docs.withColumn("tok", F.split(F.trim(F.lower(F.col("text"))), WS_RE))
+        docs.withColumn("tok", F.split(norm, " "))
         .withColumn("content_md5", F.md5(norm))
         .withColumn(
             "rolling_min_hash",
@@ -284,8 +328,7 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc aggregation of hits."""
     docs = load_table(spark, sf_dir, "documents")
     grams = (
-        docs.withColumn("tok", F.regexp_extract_all(F.lower(F.col("text")),
-                                                    F.lit("[a-z0-9]+"), 0))
+        docs.withColumn("tok", words())
         .withColumn("g", F.explode(F.expr(_NGRAM_SPARK)))
         .select("doc_id", "g")
     )
@@ -382,8 +425,7 @@ def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     array expressions — scan-projection, no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     out = (
-        docs.withColumn("tok", F.regexp_extract_all(F.lower(F.col("text")),
-                                                    F.lit("[a-z0-9]+"), 0))
+        docs.withColumn("tok", words())
         .withColumn("g2", F.expr("""
             CASE WHEN size(tok) >= 2 THEN transform(sequence(0, size(tok) - 2),
                 i -> concat_ws(' ', tok[i], tok[i+1])) ELSE array() END"""))
@@ -450,8 +492,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     terms = (
-        docs.withColumn("tok", F.regexp_extract_all(F.lower(F.col("text")),
-                                                    F.lit("[a-z0-9]+"), 0))
+        docs.withColumn("tok", words())
         .select("doc_id", F.explode("tok").alias("term"))
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -533,8 +574,7 @@ def bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     terms = (
-        docs.withColumn("tok", F.regexp_extract_all(F.lower(F.col("text")),
-                                                    F.lit("[a-z0-9]+"), 0))
+        docs.withColumn("tok", words())
         .select("doc_id", F.explode("tok").alias("term"))
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -595,8 +635,7 @@ def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ordering key (tf, token) is unique per row."""
     docs = load_table(spark, sf_dir, "documents")
     tokens = (
-        docs.withColumn("tok", F.regexp_extract_all(F.lower(F.col("text")),
-                                                    F.lit("[a-z0-9]+"), 0))
+        docs.withColumn("tok", words())
         .select("doc_id", F.explode("tok").alias("token"))
     )
     return (
@@ -685,8 +724,7 @@ def _lm_unigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lazy: persistent_artifact owns materialization (checkpoint in the
         # memo-only branch, parquet write in the store branch)
         return (docs.filter(F.col("text").isNotNull())
-                .select(F.explode(F.regexp_extract_all(
-                    F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)).alias("t"))
+                .select(F.explode(words()).alias("t"))
                 .groupBy("t")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
 
@@ -757,8 +795,7 @@ def _unigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = (docs.filter(F.col("text").isNotNull())
          .select("doc_id",
-                 F.explode(F.regexp_extract_all(
-                     F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)).alias("t"))
+                 F.explode(words()).alias("t"))
          .groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("dc")))
     ct = _lm_unigram_counts(spark, sf_dir)
     g = ct.agg(F.round(F.log(F.sum("c")) * 1e9).cast("bigint").alias("qln_n"))
@@ -836,8 +873,7 @@ def _ppl_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (docs.filter(F.col("text").isNotNull())
             .select("doc_id",
-                    F.posexplode(F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
+                    F.posexplode(words())
                     .alias("pos", "t")))
 
 

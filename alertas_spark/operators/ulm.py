@@ -59,11 +59,11 @@ from pyspark.sql import functions as F
 from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
 from alertas_spark.operators.bpe import (ALPHABET, _apply_ctes, _census,
                                          _doc_token_counts, _doc_words,
-                                         _top_words, _train_ctes, _WORD_RE,
-                                         ntok_udf)
+                                         _top_words, _train_ctes, ntok_udf)
 from alertas_spark.operators.logreg import _rnd_half_away
 from alertas_spark.operators.memo import model_udf
 from alertas_spark.operators.packing import PACK_BUDGET, pack_ids
+from alertas_spark.operators.textops import WORD_RE
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 
@@ -249,7 +249,7 @@ def _ulm_train_ctes() -> str:
     ``ulm_mF(piece, c)``."""
     parts = [f"""ulm_w0 AS MATERIALIZED (
         SELECT t.w AS word, CAST(count(*) AS BIGINT) AS freq FROM documents,
-        LATERAL unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS t(w)
+        LATERAL unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS t(w)
         WHERE len(t.w) <= {ULM_LMAX}
         GROUP BY t.w ORDER BY count(*) DESC, t.w LIMIT {ULM_WORDS})""",
              f"""ulm_seed AS MATERIALIZED (
@@ -285,7 +285,7 @@ def _ulm_apply_ctes() -> str:
           "- d.d")
     return f"""ulm_docw AS MATERIALIZED (
         SELECT doc_id, t.w AS word FROM documents,
-        LATERAL unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS t(w)),
+        LATERAL unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS t(w)),
     ulm_aw AS MATERIALIZED (SELECT DISTINCT word FROM ulm_docw),
     {_gcte('ulm_gF', 'ulm_mF')},
     {_dp_ctes('ulm_f', 'ulm_mF', 'ulm_gF', 'ulm_aw')},

@@ -45,9 +45,10 @@ from pyspark.sql import functions as F
 from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
 from alertas_spark.operators.bpe import (ALPHABET, VOCAB_TOP, _census,
                                          _doc_token_counts, _doc_words,
-                                         _top_words, _WORD_RE)
+                                         _top_words)
 from alertas_spark.operators.memo import model_udf
 from alertas_spark.operators.packing import PACK_BUDGET, pack_ids
+from alertas_spark.operators.textops import WORD_RE
 from alertas_spark.registry import declare
 
 WP_MERGES = 16
@@ -180,7 +181,7 @@ def _wp_train_ctes(n_merges: int = WP_MERGES) -> str:
     ``_train_ctes`` shape with token-count CTEs feeding the score ORDER BY."""
     parts = [f"""w0 AS MATERIALIZED (
         SELECT t.w AS word, CAST(count(*) AS BIGINT) AS freq FROM documents,
-        LATERAL unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS t(w)
+        LATERAL unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS t(w)
         GROUP BY t.w ORDER BY count(*) DESC, t.w LIMIT {VOCAB_TOP})""",
              f"""s0 AS MATERIALIZED (
         SELECT word, freq, {_STATE_WP_SQL} AS s FROM w0)"""]
@@ -230,7 +231,7 @@ def _wp_apply_ctes(n_merges: int = WP_MERGES) -> str:
     position; words beyond the horizon take the char fallback upfront."""
     parts = [f"""docw AS MATERIALIZED (
         SELECT doc_id, t.w AS word FROM documents,
-        LATERAL unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS t(w))""",
+        LATERAL unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS t(w))""",
              """wpalpha AS MATERIALIZED (
         SELECT DISTINCT t.c AS ch
         FROM (SELECT DISTINCT word FROM docw) w,

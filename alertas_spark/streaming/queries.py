@@ -11,11 +11,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from alertas_spark.functions.keys import h60_py
 from alertas_spark.functions.numeric import sql_dsum
 from alertas_spark.operators.artifacts import bounded_rows
 from alertas_spark.operators.memo import model_udf
-from alertas_spark.operators.textops import (QUALITY_GATE_SQL, WS_RE,
-                                             quality_gate_cond)
+from alertas_spark.operators.textops import (QUALITY_GATE_SQL, WORD_RE,
+                                             WS_RE, norm_text,
+                                             quality_gate_cond, words)
 from alertas_spark.registry import REGISTRY, declare
 from alertas_spark.streaming import events as ev
 
@@ -271,9 +273,9 @@ def streaming_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = ev.read_documents_stream(spark, sf_dir)
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    toks = words()
     n_tokens = F.size(toks).cast("bigint")
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_RE, " ")
+    norm = norm_text()
     gated = (docs
              .filter(quality_gate_cond())
              .select("lang", F.md5(norm).alias("content_hash"),
@@ -363,7 +365,7 @@ def streaming_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from alertas_spark.operators.bpe import _apply_merges_ranked, merges_udf
 
-    word_re = _re.compile("[a-z0-9]+")
+    word_re = _re.compile(WORD_RE)
     ntok_doc = merges_udf(
         spark, sf_dir,
         lambda m: lambda s: sum(len(_apply_merges_ranked(w, *m))
@@ -371,7 +373,7 @@ def streaming_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bigint")
 
     docs = ev.read_documents_stream(spark, sf_dir)
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_RE, " ")
+    norm = norm_text()
     gated = (docs
              .filter(quality_gate_cond())
              .select("lang", F.md5(norm).alias("content_hash"),
@@ -412,15 +414,13 @@ def streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring is stateless (zero state store), so the stream needs no
     watermark and the output is append-only.
 
-    Exactness: tokenization and bucket-hashing stay JVM-side (the same
-    ``lower``/regex/md5 the batch tier uses — only already-tokenized arrays
-    cross into Python); scores are pure-integer sums of the artifact's
-    quantized-ln terms with the batch tier's (score DESC, cls ASC) argmax
-    tiebreak, so full replay equals ``nb_lang_classify`` row-for-row — and
+    Exactness: tokenization stays JVM-side (``textops.words``, as in the
+    batch tier — only already-tokenized arrays cross into Python), buckets
+    are ``keys.h60_py`` (≡ the engines' ``h60``); scores are pure-integer
+    sums of the artifact's quantized-ln terms with the batch tier's
+    (score DESC, cls ASC) argmax tiebreak, so full replay equals ``nb_lang_classify`` row-for-row — and
     the oracle IS that query's SQL.  Token-less and NULL-text documents are
     out of scope on both sides (no feature rows to score)."""
-    import hashlib
-
     from pyspark.sql import functions as F
 
     from alertas_spark.operators.classifier import (NB_B, NB_FOLDS,
@@ -443,8 +443,7 @@ def streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         def score_one(tok_list) -> str:
             db: dict[int, int] = {}
             for t in tok_list:
-                b = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15],
-                        16) % NB_B
+                b = h60_py(t, NB_B)
                 db[b] = db.get(b, 0) + 1
             return min(classes, key=lambda c: (
                 -(stats[c][0] + sum(n * (feat.get((c, b), 0) - stats[c][1])
@@ -455,7 +454,7 @@ def streaming_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = model_udf(spark, ("nb_model", sf_dir), load, make, "string")
 
     docs = ev.read_documents_stream(spark, sf_dir)
-    tok = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    tok = words()
     gated = (docs
              .filter(F.col("text").isNotNull()
                      & (F.col("doc_id") % NB_FOLDS == 0))
@@ -495,12 +494,10 @@ def streaming_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: tokenization stays JVM-side (the batch tier's exact
     lower/regex — only token arrays cross into Python); gram strings,
     their k md5 probes, and the all-k membership test replicate the batch
-    algebra byte-for-byte (hashlib md5 ≡ engine md5 on UTF-8), so full
+    algebra byte-for-byte (``keys.h60_py`` ≡ the engines' ``h60``), so full
     replay equals ``decontaminate_bloom`` row-for-row and the oracle IS
     that query's SQL.  Stateless append stream — no watermark, no state
     store; per-micro-batch cost is the documents' own grams."""
-    import hashlib
-
     from pyspark.sql import functions as F
 
     from alertas_spark.operators.bloom import (BLOOM_K, BLOOM_M,
@@ -520,8 +517,7 @@ def streaming_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                      for i in range(len(tok_list) - DECON_N + 1)}
             n = 0
             for g in grams:
-                if all((i, int(hashlib.md5(f"bl{i}:{g}".encode("utf-8"))
-                               .hexdigest()[:15], 16) % BLOOM_M) in fset
+                if all((i, h60_py(f"bl{i}:{g}", BLOOM_M)) in fset
                        for i in range(BLOOM_K)):
                     n += 1
             return n
@@ -532,7 +528,7 @@ def streaming_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                           "bigint")
 
     docs = ev.read_documents_stream(spark, sf_dir)
-    tok = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    tok = words()
     gated = (docs
              .filter((F.col("doc_id") % DECON_BENCH_MOD != 0)
                      & F.col("text").isNotNull())  # NULL text has no grams
@@ -570,14 +566,12 @@ def streaming_lr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow UDF that computes each arriving document's integer logit
     ``z·1e9 = β0 + β1·x1 + β2·x2`` from its hashed bucket counts.
 
-    Exactness: the UDF emits ONLY the exact-integer logit (hashlib md5 ≡
-    engine md5 on UTF-8, counts are integers); the sigmoid — the one libm
+    Exactness: the UDF emits ONLY the exact-integer logit (``keys.h60_py``
+    ≡ the engines' ``h60``, counts are integers); the sigmoid — the one libm
     call — is evaluated JVM-SIDE with the batch tier's expression on the
     same integer column, so full replay equals ``lr_quality_score``
     row-for-row and the oracle IS that query's SQL.  Stateless append
     stream — no watermark, no state store."""
-    import hashlib
-
     from pyspark.sql import functions as F
 
     from alertas_spark.operators.dsir import TARGET_SOURCES
@@ -594,8 +588,7 @@ def streaming_lr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         def logit(tok_list) -> int:
             x = [0] * LR_B
             for t in tok_list:
-                x[int(hashlib.md5(b"lrb:" + t.encode("utf-8"))
-                      .hexdigest()[:15], 16) % LR_B] += 1
+                x[h60_py("lrb:" + t, LR_B)] += 1
             return b0 + b1 * x[0] + b2 * x[1]
 
         return logit
@@ -603,7 +596,7 @@ def streaming_lr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     zq = model_udf(spark, ("lr_model", sf_dir), load, make, "bigint")
 
     docs = ev.read_documents_stream(spark, sf_dir)
-    tok = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    tok = words()
     y = (F.when(F.coalesce(F.col("source").isin(*TARGET_SOURCES),
                            F.lit(False)), 1).otherwise(0))
     mu = F.round(1e6 / (1 + F.exp(-(F.col("zq").cast("double") / 1e9)))) \
@@ -717,8 +710,7 @@ def streaming_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = ev.read_documents_stream(spark, sf_dir)
     occ = (docs.filter(F.col("text").isNotNull())
-           .select(F.explode(F.regexp_extract_all(
-               F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)).alias("t")))
+           .select(F.explode(words()).alias("t")))
     cells = (_cm_probe_rows(occ)
              .groupBy("d", "pos")
              .agg(F.count(F.lit(1)).cast("bigint").alias("cell")))

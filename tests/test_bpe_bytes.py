@@ -228,7 +228,7 @@ def test_fertility_higher_for_multibyte_langs(spark):
 
 def test_vertical_tab_splits_identically_cross_engine(spark, tmp_path):
     """U+000B is the one character in Java's and RE2's \\s symmetric
-    difference; the explicit _WORD_RE class must make both engines split on
+    difference; the explicit NONWS_RE class must make both engines split on
     it identically — pinned by running the real oracle comparison on a
     document containing a vertical tab."""
     import duckdb

@@ -10,18 +10,58 @@ matter at 100 TB:
 * ``py``          — Python-eval nodes (MapInArrow / MapInPandas /
   ArrowEvalPython / BatchEvalPython): where rows leave the JVM for a worker;
 * flags: full-width scans (no column pruning), non-broadcast joins against tiny
-  inputs, cartesian products.
+  inputs, cartesian products;
+* ``plan``        — sha1 (12 hex) of the optimized logical plan (cached
+  relations by their own optimized logical plans, every field printed) with
+  ``#N`` exprIds, ``@hash`` object identities and lambda-variable counters
+  masked, and
+  ``oracle`` — sha1 of the oracle SQL with all whitespace and the checkout
+  path removed: two checkouts whose rows print the same digests build the
+  same plans against the same oracles.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+def _sha(s: str) -> str:
+    return hashlib.sha1(s.encode("utf-8")).hexdigest()[:12]
+
+
+def _plan_text(plan, optimizer, depth: int = 0) -> str:
+    """``plan`` one node a line, each cached relation replaced by its optimized
+    logical plan: the physical plan it holds prints AQE state that depends on
+    whether an earlier query already ran it."""
+    if plan.getClass().getSimpleName() == "InMemoryRelation":
+        plan = optimizer.execute(plan.cacheBuilder().logicalPlan())
+    lines = ["  " * depth + plan.simpleString(1_000_000)]
+    kids = plan.children()
+    for i in range(kids.length()):
+        lines.append(_plan_text(kids.apply(i), optimizer, depth + 1))
+    return "\n".join(lines)
+
+
+def plan_digest(df) -> str:
+    """The optimized logical plan with the per-run values masked: exprIds,
+    the identity hashes that object-valued literals print, and the counter
+    PySpark numbers its lambda variables with."""
+    plan = _plan_text(df._jdf.queryExecution().optimizedPlan(),
+                      df.sparkSession._jsparkSession.sessionState().optimizer())
+    plan = re.sub(r"(lambda \w+?_)\d+", r"\1", plan)
+    return _sha(re.sub(r"#\d+|@[0-9a-f]+\b", "#", plan))
+
+
+def oracle_digest(sql: str | None) -> str:
+    return "-" if sql is None else _sha(re.sub(r"\s+", "", sql.replace(ROOT, "")))
 
 
 def audit_plan(plan: str) -> dict:
@@ -53,7 +93,8 @@ def main() -> None:
     only = set(sys.argv[2:])
     spark = get_spark("plan-audit")
     registry = load_all()
-    print(f"{'query':36} scans pushed bhj smj shj bnlj cart exch codegen imts py")
+    print(f"{'query':36} scans pushed bhj smj shj bnlj cart exch codegen imts py "
+          f"{'plan':12} {'oracle':12}")
     for name, q in sorted(registry.items()):
         if only and name not in only:
             continue
@@ -61,6 +102,7 @@ def main() -> None:
             df = q.builder(spark, sf_dir)
             plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils \
                 .explainString(df._jdf.queryExecution(), "formatted")
+            digest = plan_digest(df)
         except Exception as ex:
             print(f"{name:36} ERROR {str(ex)[:60]}")
             continue
@@ -72,7 +114,8 @@ def main() -> None:
             flags.append("no-broadcast")
         print(f"{name:36} {a['scans']:5} {a['pushed']:6} {a['bhj']:3} {a['smj']:3} "
               f"{a['shj']:3} {a['bnlj']:4} {a['cartesian']:4} {a['exchange']:4} "
-              f"{a['codegen']:7} {a['imts']:4} {a['py']:2}  {' '.join(flags)}")
+              f"{a['codegen']:7} {a['imts']:4} {a['py']:2} {digest:12} "
+              f"{oracle_digest(q.oracle):12}  {' '.join(flags)}")
 
 
 if __name__ == "__main__":
