@@ -1,38 +1,33 @@
-"""Pure-stdlib PNG codec (zlib + numpy) — a REAL image codec that executes in
-codec-less containers.
+"""Pure-stdlib PNG codec (zlib + numpy) — a REAL image codec with no
+imaging library behind it.
 
-The multimodal seam (operators/multimodal.py) ships a PIL worked example that
-cannot run here (no PIL is installable); this module closes that gap with an
-actual PNG implementation: chunk parsing, zlib inflate, and all five scanline
-filters (None/Sub/Up/Average/Paeth, PNG spec §9), supporting 8-bit greyscale /
-RGB / RGBA, plus a minimal encoder used to build test payloads and the
-in-engine roundtrip query.  ``png_decode_batch`` plugs into the same
-``decode_features`` seam as the PIL example and runs end-to-end in CI
-(tests/test_multimodal.py) and in the declared query
-``multimodal_png_roundtrip``.
+An actual PNG implementation: chunk parsing, CRC checks, zlib inflate, and
+all five scanline filters (None/Sub/Up/Average/Paeth, PNG spec §9), for 8-bit
+greyscale / RGB / RGBA, plus a minimal encoder.  The multimodal tier
+(operators/multimodal.py) renders every document as a PNG with
+:func:`encode_png` and decodes it back with :func:`decode_png` in its image
+stages: features, scanline frames, resize, round-trip verify and dHash.
 
-Performance note: the per-row unfilter loop is Python — fine for
-feature-extraction over small images and for proving format correctness; a
-production deployment swaps in a C-backed decoder through the SAME seam.  The
-engine-side guarantees (binary column, Arrow batches, partition-preserving
-mapInPandas, corrupt payload → NULL row not job failure) are identical either
-way.
+Performance note: the Average/Paeth unfilter loop is Python — fine for
+feature extraction over small images and for proving format correctness; the
+Sub filter the engine's own encoder emits takes the vectorized path.
+Malformed input raises ``ValueError``, which the multimodal stages map to a
+NULL row rather than a task failure.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
 #: PNG color type → channel count (8-bit depth only)
 _CHANNELS = {0: 1, 2: 3, 6: 4}
-_MODE = {0: "L", 2: "RGB", 6: "RGBA"}
+#: channel count → image mode name ('L' / 'RGB' / 'RGBA')
+MODES = {1: "L", 3: "RGB", 4: "RGBA"}
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -95,8 +90,8 @@ def _paeth(left: np.ndarray, up: np.ndarray, upleft: np.ndarray) -> np.ndarray:
 
 def decode_png(buf: bytes) -> np.ndarray:
     """Decode an 8-bit non-interlaced greyscale/RGB/RGBA PNG to a ``(H, W, C)``
-    uint8 array.  Raises ``ValueError`` on anything malformed — callers at the
-    batch seam map that to a NULL row (corrupt payload is data, not an
+    uint8 array.  Raises ``ValueError`` on anything malformed — the multimodal
+    stages map that to a NULL row (corrupt payload is data, not an
     infrastructure error)."""
     if buf[:8] != _SIG:
         raise ValueError("not a PNG")
@@ -194,40 +189,3 @@ def decode_png(buf: bytes) -> np.ndarray:
         out[y] = line.astype(np.uint8)
         prior = line
     return out.reshape(h, w, c)
-
-
-def png_mode(buf: bytes) -> str:
-    """Mode string ('L'/'RGB'/'RGBA') from the IHDR without full decode."""
-    if buf[:8] != _SIG or buf[12:16] != b"IHDR":
-        raise ValueError("not a PNG")
-    _, _, _, color = struct.unpack(">IIBB", buf[16:26])
-    return _MODE[color]
-
-
-def png_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL codec behind the multimodal seam, runnable in THIS container:
-    ``decode_features(media, decoder=png_decode_batch,
-    schema=multimodal.IMAGE_FEATURES_SCHEMA)``.  Same contract as the PIL
-    worked example: per-image failure → NULL dimensions, never a batch
-    failure."""
-    for pdf in batches:
-        widths: list = []
-        heights: list = []
-        modes: list = []
-        for buf in pdf["media"]:
-            try:
-                px = decode_png(bytes(buf))
-                heights.append(px.shape[0])
-                widths.append(px.shape[1])
-                modes.append(_MODE[{1: 0, 3: 2, 4: 6}[px.shape[2]]])
-            except Exception:
-                widths.append(None)
-                heights.append(None)
-                modes.append(None)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "n_bytes": pdf["media"].map(len).astype("int32"),
-            "width": pd.array(widths, dtype="Int32"),
-            "height": pd.array(heights, dtype="Int32"),
-            "mode": modes,
-        })

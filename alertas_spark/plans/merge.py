@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alertas_spark.functions.numeric import finite, sql_finite
+from alertas_spark.functions.numeric import finite
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alertas_spark.functions.numeric import davg, sql_davg, finite, sql_finite
+from alertas_spark.functions.numeric import davg, sql_davg, finite
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 

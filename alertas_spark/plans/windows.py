@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from alertas_spark.functions.numeric import ACC, dsum, finite, sql_dsum, sql_finite
+from alertas_spark.functions.numeric import ACC, dsum, finite, sql_dsum
 from alertas_spark.registry import declare
 from alertas_spark.sources.catalog import load_table
 

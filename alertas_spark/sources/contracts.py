@@ -26,7 +26,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 #: canonical column → Spark simpleString dtype per testdata table (TESTDATA.md).
 #: ``timestamp*`` means: any member of {timestamp, timestamp_ntz, bigint} — the

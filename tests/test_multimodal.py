@@ -1,80 +1,38 @@
-"""Multimodal codec seam + the oracle's ASCII assumption.
+"""Multimodal codec pipeline + the oracle's ASCII assumption.
 
-Every declared multimodal query executes the REAL pure-stdlib PNG codec (r9);
-fake codecs exist only here, as injection-seam fixtures — what the engine
-guarantees is the seam (inject any batch function + schema, the default never
-runs) and the Arrow plumbing around it.  The DuckDB oracles compare the
-pipeline's byte-level arithmetic against character-level SQL, which is only
-valid while the fixture text is pure ASCII — pinned here so the assumption is
-checked, not silent.
+Every declared multimodal query renders documents as REAL media payloads
+(PNG, RIFF/WAVE, RIFF/AVI) and decodes them back with real parsers through
+one per-row stage harness.  These tests pin the codecs, the stages' corrupt-
+payload contract and the harness's Arrow plumbing.  The DuckDB oracles
+compare the pipeline's byte-level arithmetic against character-level SQL,
+which is only valid while the fixture text is pure ASCII — pinned here so
+the assumption is checked, not silent.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import pytest
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from alertas_spark.operators.multimodal import (decode_features, sample_frames,
-                                                with_media_column)
+from alertas_spark.operators.multimodal import (FEATURES_SCHEMA, FRAME_SCHEMA,
+                                                MEDIA_SCHEMA, PNG_W,
+                                                RESIZED_SCHEMA,
+                                                ROUNDTRIP_SCHEMA,
+                                                TARGET_BYTES, _per_payload,
+                                                png_features, png_frames,
+                                                png_resize, png_verify,
+                                                render_png, with_png_media)
+from alertas_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
 
 
-def _media(spark):
-    from alertas_spark.sources.catalog import load_table
-
-    return with_media_column(load_table(spark, SF, "documents"))
-
-
-def test_injected_decoder_replaces_the_stub(spark):
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("head", StringType()),
-    ])
-
-    def head_decoder(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "head": pdf["media"].map(lambda b: bytes(b)[:8].decode("utf-8")),
-            })
-
-    out = decode_features(_media(spark), decoder=head_decoder, schema=schema)
-    assert out.schema == schema
-    rows = out.limit(5).collect()
-    assert rows and all(len(r["head"]) <= 8 for r in rows)
-
-
-def test_injected_frame_sampler_replaces_the_stub(spark):
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("n_frames", LongType()),
-    ])
-
-    def counting_sampler(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_frames": pdf["media"].map(lambda b: (len(bytes(b)) + 255) // 256),
-            })
-
-    out = sample_frames(_media(spark), sampler=counting_sampler, schema=schema)
-    assert out.columns == ["doc_id", "n_frames"]
-    assert out.count() > 0
-
-
 def test_default_decoder_is_the_real_png_codec(spark):
-    """No injection → the REAL PNG decoder runs (no stub anywhere on the
+    """The features stage runs the REAL PNG decoder (no stub anywhere on the
     declared path): features carry genuine raster geometry and pixel hashes."""
-    from alertas_spark.operators.multimodal import PNG_W, with_png_media
-    from alertas_spark.sources.catalog import load_table
-
     docs = load_table(spark, SF, "documents")
-    out = decode_features(with_png_media(docs))
+    out = _per_payload(with_png_media(docs), png_features, FEATURES_SCHEMA)
     assert set(out.columns) == {"doc_id", "width", "height", "mode", "px_md5",
                                 "px_mean", "n_source_bytes"}
     rows = out.orderBy("doc_id").limit(5).collect()
@@ -88,8 +46,6 @@ def test_default_decoder_is_the_real_png_codec(spark):
 def test_fixture_text_is_ascii(spark):
     # the DuckDB oracles use character-based strlen/substring against the
     # operator's byte slicing — valid only while every fixture document is ASCII
-    from alertas_spark.sources.catalog import load_table
-
     for sf in ("sf0.001", "sf0.01"):
         docs = load_table(spark, f"/root/testdata/{sf}", "documents")
         n_non_ascii = docs.filter(
@@ -131,92 +87,20 @@ def test_ascii_contract_symmetric_exclusion(spark, tmp_path):
 
 def test_resize_is_exact_target_size_and_composes_with_decode(spark):
     # binary→binary: every non-empty payload resamples to exactly TARGET_BYTES
-    # pixels re-encoded as a REAL PNG, empty stays empty, and the output feeds
-    # decode_features unchanged (the whole point of a transform stage)
-    from alertas_spark.operators.multimodal import (PNG_W, TARGET_BYTES,
-                                                    decode_features,
-                                                    resize_media,
-                                                    with_png_media)
-    from alertas_spark.sources.catalog import load_table
+    # pixels re-encoded as a REAL PNG, empty stays empty, and the output
+    # payload decodes again (the whole point of a transform stage)
+    from alertas_spark.operators.png_codec import decode_png
 
     docs = load_table(spark, SF, "documents")
-    resized = resize_media(with_png_media(docs))
-    rows = resized.collect()
+    rows = _per_payload(with_png_media(docs), png_resize,
+                        RESIZED_SCHEMA).collect()
     assert rows
     for r in rows:
         assert r["resized_bytes"] == (TARGET_BYTES if r["orig_bytes"] > 0
                                       else 0)
         if r["orig_bytes"] > 0:
-            assert bytes(r["media"])[:4] == b"\x89PNG"[:4]
-
-    # composability: the resized PNG payloads decode again through the same
-    # seam (no n_source_bytes column → all pixels are valid)
-    feats = decode_features(
-        resized.filter("orig_bytes > 0").select("doc_id", "media")
-    ).limit(5).collect()
-    assert feats
-    for f in feats:
-        assert (f["width"], f["height"]) == (PNG_W, TARGET_BYTES // PNG_W)
-
-
-def test_injected_resizer_replaces_the_default(spark):
-    """The seam carries ANY resizer: a fake byte-reverser with its own schema
-    (fake codecs live HERE, never on a declared query path)."""
-    from pyspark.sql.types import BinaryType, IntegerType
-
-    from alertas_spark.operators.multimodal import resize_media
-
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("media", BinaryType()),
-        StructField("orig_bytes", IntegerType()),
-    ])
-
-    def reverse_resizer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "media": pdf["media"].map(lambda b: bytes(b)[::-1]),
-                "orig_bytes": pdf["media"].map(len).astype("int32"),
-            })
-
-    out = resize_media(_media(spark), resizer=reverse_resizer, schema=schema)
-    assert out.schema == schema
-    row = out.filter("doc_id = 0").collect()[0]
-    assert row["orig_bytes"] == len(bytes(row["media"]))
-
-
-def test_pil_decode_real_codec(spark):
-    """Exercise the REAL-codec worked example (pil_decode_batch) end-to-end on a
-    generated PNG byte column.  Self-skips where PIL is absent (this container);
-    in a codec-equipped deployment it proves the seam carries a real decoder."""
-    import pytest
-
-    PIL = pytest.importorskip("PIL")  # noqa: F841 — skip-if-unavailable gate
-    import io
-
-    from PIL import Image
-
-    from alertas_spark.operators.multimodal import (IMAGE_FEATURES_SCHEMA,
-                                                    pil_decode_batch)
-
-    def png_bytes(w: int, h: int) -> bytes:
-        buf = io.BytesIO()
-        Image.new("RGB", (w, h), (w % 256, h % 256, 0)).save(buf, format="PNG")
-        return buf.getvalue()
-
-    rows = [(1, png_bytes(32, 16), "image/png"),
-            (2, png_bytes(8, 8), "image/png"),
-            (3, b"not a png", "image/png")]  # corrupt payload → NULLs, not a crash
-    media = spark.createDataFrame(rows, "doc_id long, media binary, media_type string")
-
-    out = {r["doc_id"]: r for r in
-           decode_features(media, decoder=pil_decode_batch,
-                           schema=IMAGE_FEATURES_SCHEMA).collect()}
-    assert (out[1]["width"], out[1]["height"], out[1]["mode"]) == (32, 16, "RGB")
-    assert (out[2]["width"], out[2]["height"]) == (8, 8)
-    assert out[3]["width"] is None and out[3]["mode"] is None
-    assert out[3]["n_bytes"] == len(b"not a png")
+            px = decode_png(bytes(r["media"]))
+            assert px.shape == (TARGET_BYTES // PNG_W, PNG_W, 1)
 
 
 def test_png_codec_roundtrip_all_filters():
@@ -238,7 +122,6 @@ def test_png_codec_roundtrip_all_filters():
 def test_png_decode_rejects_malformed_payloads():
     import struct
     import numpy as np
-    import pytest
 
     from alertas_spark.operators.png_codec import decode_png, encode_png
 
@@ -256,34 +139,10 @@ def test_png_decode_rejects_malformed_payloads():
         decode_png(good[:40])
 
 
-def test_png_decode_batch_through_the_seam(spark):
-    """The REAL codec through the SAME decode_features seam as the PIL
-    example: valid PNG payloads decode, a corrupt row yields NULLs without
-    failing the batch."""
-    import numpy as np
-
-    from alertas_spark.operators.multimodal import (IMAGE_FEATURES_SCHEMA,
-                                                    decode_features)
-    from alertas_spark.operators.png_codec import encode_png, png_decode_batch
-
-    rows = [(1, bytearray(encode_png(np.arange(48, dtype=np.uint8)
-                                     .reshape(4, 4, 3), filter_type=4)), "image/png"),
-            (2, bytearray(b"corrupt bytes"), "image/png"),
-            (3, bytearray(encode_png(np.zeros((2, 8), np.uint8))), "image/png")]
-    media = spark.createDataFrame(rows, "doc_id long, media binary, media_type string")
-    got = {r.doc_id: r for r in decode_features(
-        media, decoder=png_decode_batch,
-        schema=IMAGE_FEATURES_SCHEMA).collect()}
-    assert (got[1].width, got[1].height, got[1].mode) == (4, 4, "RGB")
-    assert (got[3].width, got[3].height, got[3].mode) == (8, 2, "L")
-    assert got[2].width is None and got[2].mode is None
-
-
 def test_png_decode_truncated_inside_crc_raises_valueerror():
     """A buffer cut inside a chunk's 4 CRC bytes must still be ValueError
     (the seam contract), not struct.error escaping the filter."""
     import numpy as np
-    import pytest
 
     from alertas_spark.operators.png_codec import decode_png, encode_png
 
@@ -297,22 +156,57 @@ def test_png_decode_truncated_inside_crc_raises_valueerror():
     assert decode_png(good[:len(good) - 12]).shape == (4, 4, 1)
 
 
-def test_png_verify_batch_nulls_corrupt_payload():
-    """_png_decode_verify_batch maps a corrupt media payload to a NULL row
-    with roundtrip_ok=False instead of killing the task."""
-    import pandas as pd
+#: stage → (output schema, its documented row for the corrupt payload of doc
+#: 2, whose source is 3 bytes)
+_NULL_ROWS = {
+    png_features: (FEATURES_SCHEMA, (2, None, None, None, None, None, 3)),
+    png_frames: (FRAME_SCHEMA, (2, None, None, None)),
+    png_resize: (RESIZED_SCHEMA, (2, None, "image/png", None, None, None)),
+    png_verify: (ROUNDTRIP_SCHEMA, (2, None, None, None, 3, False)),
+}
 
-    from alertas_spark.operators.multimodal import (_png_decode_verify_batch,
-                                                    _png_encode_batch)
 
-    src = pd.DataFrame({"doc_id": [1, 2], "text": ["hello world", "x"]})
-    enc = next(_png_encode_batch(iter([src])))
-    enc.loc[1, "media"] = b"corrupt png bytes"
-    out = next(_png_decode_verify_batch(iter([enc])))
-    good, bad = out[out.doc_id == 1].iloc[0], out[out.doc_id == 2].iloc[0]
-    assert bool(good.roundtrip_ok) and good.width == 16
-    assert not bool(bad.roundtrip_ok)
-    assert pd.isna(bad.width) and bad["mode"] is None
+@pytest.mark.parametrize("stage", list(_NULL_ROWS), ids=lambda f: f.__name__)
+def test_corrupt_payload_yields_the_stage_null_row(spark, stage):
+    """A corrupt PNG payload is data, not an infrastructure error: each
+    decoding stage maps it to exactly its documented NULL row, and a valid
+    payload in the SAME batch comes out as it does on its own."""
+    schema, null_row = _NULL_ROWS[stage]
+    text = "hello world, a valid payload"
+    valid = (1, render_png(text.encode()), "image/png", len(text), text)
+    corrupt = (2, b"corrupt png bytes", "image/png", 3, "abc")
+
+    def run(rows):
+        media = spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1)
+        return sorted(map(tuple, _per_payload(media, stage, schema).collect()))
+
+    alone = run([valid])
+    assert alone and all(r[0] == 1 for r in alone)
+    assert run([valid, corrupt]) == alone + [null_row]
+
+
+def test_harness_derives_nullable_ints_and_allows_empty_batches(spark):
+    """The harness types integer columns from the schema: NULL cells stay
+    NULL and a BIGINT beyond 2^53 survives exactly (no float round-trip);
+    a batch whose every row is excluded yields no rows, not an error."""
+    from pyspark.sql.types import (IntegerType, LongType, StructField,
+                                   StructType)
+
+    schema = StructType([StructField("doc_id", LongType()),
+                         StructField("big", LongType()),
+                         StructField("small", IntegerType())])
+    big = 2 ** 62 + 1
+
+    def stage(r):
+        return [] if r.doc_id > 2 else [(r.doc_id, big if r.doc_id == 1
+                                         else None, None)]
+
+    docs = spark.createDataFrame([(i,) for i in (1, 2, 3, 4)], "doc_id long")
+    assert sorted(map(tuple, _per_payload(docs.coalesce(1), stage,
+                                          schema).collect())) == \
+        [(1, big, None), (2, None, None)]
+    assert _per_payload(docs.filter("doc_id > 2"), stage,
+                        schema).collect() == []
 
 
 # ---------------------------------------------------------------------------
@@ -350,15 +244,10 @@ def test_wav_payload_is_a_real_riff_file(spark):
     import io
     import wave
 
-    from alertas_spark.operators.multimodal import (_wav_media_batch,
-                                                    with_media_column)
+    from alertas_spark.operators.multimodal import _media, render_wav
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .filter("text IS NOT NULL").limit(8)
-    media = (docs.select("doc_id", "text")
-             .mapInPandas(_wav_media_batch,
-                          schema="doc_id long, media binary, media_type string")
-             .collect())
+    docs = load_table(spark, SF, "documents").filter("text IS NOT NULL").limit(8)
+    media = _media(docs, render_wav, "audio/wav").collect()
     assert media
     for r in media:
         buf = bytes(r["media"])
@@ -366,6 +255,7 @@ def test_wav_payload_is_a_real_riff_file(spark):
         with wave.open(io.BytesIO(buf), "rb") as w:   # stdlib parser accepts it
             assert w.getframerate() == 16000
             assert w.getnchannels() == 1 and w.getsampwidth() == 2
+            assert w.getnframes() == r["n_source_bytes"]
 
 
 # ---------------------------------------------------------------------------
@@ -376,7 +266,6 @@ def test_wav_payload_is_a_real_riff_file(spark):
 def test_avi_roundtrip_and_validation():
     """Writer -> parser round-trips frames exactly; the parser REJECTS
     malformed containers rather than guessing."""
-    import pytest
 
     from alertas_spark.operators.avi_codec import avi_parse, avi_write
 
@@ -400,7 +289,6 @@ def test_avi_stream_layout_validation():
     chunk payloads via the writer's helpers, so the only difference from a
     well-formed file is the layout under test — proven by the control
     container parsing back exactly."""
-    import pytest
 
     from alertas_spark.operators import avi_codec as av
 

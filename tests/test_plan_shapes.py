@@ -7,6 +7,8 @@ properties the scale design depends on, per operator family.
 
 from __future__ import annotations
 
+import pytest
+
 SF = "/root/testdata/sf0.01"
 
 
@@ -253,20 +255,25 @@ def test_ranked_topk_equals_full_rank(spark):
     assert sorted(map(tuple, got_a.collect())) == sorted(map(tuple, want_a.collect()))
 
 
-def test_multimodal_resize_shuffles_once_for_codec_parallelism(spark):
-    """Since the real PNG codec became the default (r9), every multimodal query
-    stages ONE round-robin repartition before the codec mapInPandas: the local
-    fixture is a single parquet file → a single input partition, which would
-    serialize all codec CPU onto one core.  The exchange must be round-robin
-    (no key, no skew) and the only one in the plan — encode and resize stages
-    share it, with no shuffle between them."""
-    plan = _plan(_build(spark, "multimodal_resize"))
+@pytest.mark.parametrize("name", [
+    "multimodal_decode_features", "multimodal_frame_sample",
+    "multimodal_resize", "multimodal_png_roundtrip",
+    "multimodal_audio_features", "multimodal_video_features"])
+def test_codec_query_shuffles_once_round_robin(spark, name):
+    """Every scan→codec multimodal query stages ONE round-robin repartition
+    before its codec mapInPandas passes: the local fixture is a single
+    parquet file → a single input partition, which would serialize all codec
+    CPU onto one core.  The exchange must be round-robin (no key, no skew)
+    and the only one in the plan — the render and decode stages share it,
+    with no shuffle between them."""
+    plan = _plan(_build(spark, name))
     assert plan.count("Exchange") == 1, plan
     assert "RoundRobinPartitioning" in plan, plan
     assert "hashpartitioning" not in plan.lower(), plan
     assert plan.count("FileScan") == 1
-    # both codec stages sit ABOVE the single exchange: resize consumes encode's
-    # output partitioning directly
+    # every codec stage sits ABOVE the single exchange (the simple-mode plan
+    # prints the root first)
+    assert plan.count("MapInPandas") == 2, plan
     assert plan.index("Exchange") > plan.rindex("MapInPandas"), plan
 
 
