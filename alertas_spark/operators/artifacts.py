@@ -180,14 +180,7 @@ def persistent_artifact(spark: SparkSession, sf_dir: str, name: str,
         lambda: load_or_build(spark, root, name, version, build))
 
 
-def bounded_rows(df: DataFrame, max_rows: int, what: str) -> list:
-    """Collect a MODEL-GEOMETRY relation to the driver (the sanctioned
-    S15-class bounded pull): ``max_rows`` states the geometry bound and is
-    ENFORCED — this helper must never see a corpus-sized relation.  Doubles
-    arrive bit-exactly (collect yields the binary C double).  The pull is
-    ``limit(max_rows + 1)``: an over-bound relation ships one row past the
-    bound, never the whole relation, so the guard fires before a driver OOM."""
-    rows = df.limit(max_rows + 1).collect()
+def _within(rows: list, max_rows: int, what: str) -> list:
     if len(rows) > max_rows:
         raise ValueError(
             f"bounded_rows({what}): the relation exceeds the stated "
@@ -196,31 +189,47 @@ def bounded_rows(df: DataFrame, max_rows: int, what: str) -> list:
     return rows
 
 
+def bounded_rows(df: DataFrame, max_rows: int, what: str) -> list:
+    """Collect a MODEL-GEOMETRY relation to the driver (the sanctioned
+    S15-class bounded pull): ``max_rows`` states the geometry bound and is
+    ENFORCED — this helper must never see a corpus-sized relation.  Doubles
+    arrive bit-exactly (collect yields the binary C double).  The pull is
+    ``limit(max_rows + 1)``: an over-bound relation ships one row past the
+    bound, never the whole relation, so the guard fires before a driver OOM.
+    That ``limit`` pull is an incremental take, which can be several jobs
+    when the rows are not in the first partition."""
+    return _within(df.limit(max_rows + 1).collect(), max_rows, what)
+
+
 def persistent_artifact_rows(spark: SparkSession, sf_dir: str, name: str,
                              code_version: str, table: str,
-                             build: Callable[[], DataFrame],
+                             build: Callable[[], list], schema: str,
                              max_rows: int) -> list:
-    """:func:`persistent_artifact` for MODEL-GEOMETRY tables (≤ ``max_rows``
-    rows: trained centroid/codeword relations), returning the COLLECTED ROWS
-    instead of a distributed relation.  Consumers hand the rows to numpy
-    kernels — the executor-side argmin (``kmeans.argmin_arrow``) or the
-    driver-side query LUT (``pq._probe_lut``) — deleting the per-consumer pack
-    aggregation, BroadcastExchange job, and join that a relation-shaped
-    artifact costs (the trainer chains are job-count-bound:
-    OPTIMIZATION_r18 "Not yet optimized" / ADVICE item 2).  The cold build
-    pays ONE collect action, replacing the memo branch's localCheckpoint
-    action; the store branch persists/loads the same parquet as
-    :func:`persistent_artifact` (identical name/version keys — stores
-    written by either tier serve both) and collects the read-back."""
+    """The trained-artifact tier for MODEL-GEOMETRY tables (≤ ``max_rows``
+    rows: trained centroid/codeword tables) that live on the driver:
+    ``build`` returns the trained ROWS (the Lloyd trainers finish their
+    means on the driver), and so does this call.  Consumers hand the rows to
+    numpy kernels — the executor-side argmin (``kmeans.argmin_arrow``) or
+    the driver-side query LUT (``pq._probe_lut``) — with no pack
+    aggregation, BroadcastExchange job or join (the trainer chains are
+    job-count-bound).  The memo-only branch memoizes the built rows; the
+    store branch turns them into a ``schema`` relation only for the parquet
+    write (one file) and collects the read-back, with the same name/version
+    keys as :func:`persistent_artifact`."""
     root = artifact_root(spark)
     if root is None:
         return session_value(spark, (name, sf_dir, "rows"),
-                             lambda: bounded_rows(build(), max_rows, name))
+                             lambda: _within(build(), max_rows, name))
     version = f"{code_version}-{dataset_fingerprint(sf_dir, table)}"
+
+    def relation() -> DataFrame:
+        rows = _within(build(), max_rows, name)
+        return spark.createDataFrame(rows, schema).coalesce(1)
+
     return session_value(
         spark, (name, sf_dir, "persistent-rows", version),
-        lambda: bounded_rows(load_or_build(spark, root, name, version, build),
-                             max_rows, name))
+        lambda: bounded_rows(load_or_build(spark, root, name, version,
+                                           relation), max_rows, name))
 
 
 def versions(root: str, name: str) -> list[str]:

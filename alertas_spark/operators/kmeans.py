@@ -11,13 +11,17 @@ re-runs):
   contract) — the one step where naive double summation would diverge between
   partitionings and engines.
 
-Scale shape per iteration: one bounded driver collect of the ≤K centroid rows
-(K×dim doubles are always tiny), handed to ONE numpy argmin kernel that runs
-over the scan's Arrow batches (``argmin_arrow``, ``mapInArrow``; zero
-exchange, no broadcast, no join, and no interpreted per-row higher-order
-fold); and one (cluster, dim) aggregation with map-side combine.  The loop structure is exactly GraphX/Spark-ML's kmeans; the
-decimal-sum means are the price of cross-engine bit-equality and cost one
-extra cast.
+Scale shape per Lloyd update: the ≤K centroid rows are driver-held (K×dim
+doubles are always tiny) and ride into ONE numpy kernel over the scan's Arrow
+batches (``lloyd_means``, ``mapInArrow``) that assigns every row and, per
+partition, sums its cluster's members: one count and the integer sums of the
+unscaled ``decimal(29,6)`` components, cast in the JVM in front of the
+kernel.  The partials — at most one row per cluster per partition — come back
+in ONE plain collect; the driver adds them as Python ints and finishes
+``cast(sum AS double) / count``.  A round is one Spark job with no exchange,
+no broadcast, no join and no interpreted per-row fold.  The loop structure is
+exactly GraphX/Spark-ML's kmeans; the decimal-sum means are the price of
+cross-engine bit-equality and cost one extra cast.
 
 The trained assignment feeds ``simsearch_topk_ivf`` / the blocked dedup as their
 coarse partition — closing the loop from raw embeddings to a *trained* IVF index
@@ -26,10 +30,10 @@ coarse partition — closing the loop from raw embeddings to a *trained* IVF ind
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DataType, DoubleType, LongType,
-                               StructField, StructType)
+from pyspark.sql.types import (ArrayType, DataType, DecimalType, DoubleType,
+                               LongType, StructField, StructType)
 
 from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
 from alertas_spark.operators.embgate import (EMB_VALID_SQL, norm2,
@@ -97,6 +101,76 @@ def _seq_subdist(a, b):
     return d
 
 
+def _codebooks(items: list, key: str, group: str | None) -> tuple[dict, int]:
+    """``({group: (ids, codebook)}, width)`` of driver-held ``(key[, group],
+    cvec)`` rows: each group's items sorted by ascending id, so the FIRST
+    minimum of an argmin is the lowest id.  Codebook widths must agree."""
+    import numpy as np
+
+    books: dict = {}
+    for r in sorted(items, key=lambda r: r[key]):
+        books.setdefault(r[group] if group else None, []).append(r)
+    books = {g: (np.array([r[key] for r in rs], dtype=np.int64),
+                 np.array([r["cvec"] for r in rs], dtype=np.float64))
+             for g, rs in books.items()}
+    widths = {cb.shape[1] for _, cb in books.values()}
+    if len(widths) > 1:
+        raise ValueError(f"argmin_arrow: codebook widths {sorted(widths)} "
+                         "differ")
+    return books, widths.pop() if widths else 0
+
+
+def _nearest(mat, gv, books: dict, what: str, with_cvec: bool = False):
+    """``(win, best, cv)`` per row of ``mat`` ``(n, width)``: the id of the
+    nearest item of the row's group (``gv``, ``None`` when ungrouped), its
+    :func:`_seq_subdist` and, with ``with_cvec``, its vector.  The one argmin
+    loop behind every kernel and driver-side assign."""
+    import numpy as np
+
+    n, width = mat.shape
+    groups = np.unique(gv) if gv is not None else [None]
+    missing = [g for g in groups if g not in books]
+    if missing:
+        raise ValueError(f"argmin_arrow: no codebook items for {what} "
+                         f"{missing}")
+    win = np.empty(n, dtype=np.int64)
+    best = np.empty(n, dtype=np.float64)
+    cv = np.empty((n, width), dtype=np.float64) if with_cvec else None
+    for g in groups:
+        sel = slice(None) if gv is None else np.flatnonzero(gv == g)
+        ids, cb = books[g]
+        d = _seq_subdist(mat[sel][:, None, :], cb[None, :, :])
+        if not np.isfinite(d).all():
+            raise ValueError(f"argmin_arrow: non-finite {what} distance")
+        a = d.argmin(axis=1)  # first minimum: ties → lowest id
+        win[sel] = ids[a]
+        best[sel] = d[np.arange(len(a)), a]
+        if with_cvec:
+            cv[sel] = cb[a]
+    return win, best, cv
+
+
+def _batch_rows(batch, vec: str, group: str | None, width: int):
+    """``(mat, gv)`` of one Arrow batch: the ``vec`` list column as an ``(n,
+    width)`` double matrix and the group values (``None`` when ungrouped).
+    A NULL vector or a width other than the codebook's raises."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = batch.num_rows
+    col = batch.column(vec)
+    if col.null_count:
+        raise ValueError(f"argmin_arrow: NULL {vec} vector")
+    gv = (batch.column(group).to_numpy(zero_copy_only=False)
+          if group else None)
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if (lens != width).any():
+        raise ValueError(f"argmin_arrow: {vec} width "
+                         f"{sorted(set(lens.tolist()) - {width})} is "
+                         f"not the codebook's {width}")
+    return col.flatten().to_numpy(zero_copy_only=False).reshape(n, width), gv
+
+
 def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
                  key_type: DataType, dist: str, group: str | None = None,
                  with_cvec: bool = False) -> DataFrame:
@@ -105,8 +179,9 @@ def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
     with ``with_cvec``, the winner's vector ``cvec`` — one numpy kernel over
     Arrow batches (``mapInArrow``) against the driver-held ``(key[, group],
     cvec)`` rows.  With ``group`` set (PQ's subspace ``m``), a row competes
-    only against the items of its own group.  The one argmin behind every
-    k-means / PQ assign (``_assign``, ``pq._assign_sub``).
+    only against the items of its own group.  The one assign behind every
+    k-means / PQ consumer (``_assign``, ``pq._assign_sub``); the Lloyd
+    update (:func:`lloyd_means`) runs the same argmin loop (:func:`_nearest`).
 
     Exactness audit (why the result is cell-equal to the DuckDB oracle's
     ``ROW_NUMBER() OVER (ORDER BY d, id)``):
@@ -133,17 +208,7 @@ def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
     import numpy as np
     from pyspark.sql.pandas.types import to_arrow_type
 
-    books: dict = {}
-    for r in sorted(items, key=lambda r: r[key]):
-        books.setdefault(r[group] if group else None, []).append(r)
-    books = {g: (np.array([r[key] for r in rs], dtype=np.int64),
-                 np.array([r["cvec"] for r in rs], dtype=np.float64))
-             for g, rs in books.items()}
-    widths = {cb.shape[1] for _, cb in books.values()}
-    if len(widths) > 1:
-        raise ValueError(f"argmin_arrow: codebook widths {sorted(widths)} "
-                         "differ")
-    width = widths.pop() if widths else 0
+    books, width = _codebooks(items, key, group)
     out = [StructField(key, key_type, False), StructField(dist, DoubleType(), False)]
     if with_cvec:
         out.append(StructField("cvec", ArrayType(DoubleType(), False), False))
@@ -152,43 +217,13 @@ def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
 
     def kernel(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for batch in batches:
             n = batch.num_rows
             if not n:
                 continue
-            col = batch.column(vec)
-            if col.null_count:
-                raise ValueError(f"argmin_arrow: NULL {vec} vector")
-            gv = (batch.column(group).to_numpy(zero_copy_only=False)
-                  if group else None)
-            groups = np.unique(gv) if group else [None]
-            missing = [g for g in groups if g not in books]
-            if missing:
-                raise ValueError(f"argmin_arrow: no codebook items for "
-                                 f"{group or vec} {missing}")
-            lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-            if (lens != width).any():
-                raise ValueError(f"argmin_arrow: {vec} width "
-                                 f"{sorted(set(lens.tolist()) - {width})} is "
-                                 f"not the codebook's {width}")
-            mat = col.flatten().to_numpy(zero_copy_only=False).reshape(n, width)
-            win = np.empty(n, dtype=np.int64)
-            best = np.empty(n, dtype=np.float64)
-            cv = np.empty((n, width), dtype=np.float64) if with_cvec else None
-            for g in groups:
-                sel = slice(None) if group is None else np.flatnonzero(gv == g)
-                ids, cb = books[g]
-                d = _seq_subdist(mat[sel][:, None, :], cb[None, :, :])
-                if not np.isfinite(d).all():
-                    raise ValueError(f"argmin_arrow: non-finite {vec} "
-                                     "distance")
-                a = d.argmin(axis=1)  # first minimum: ties → lowest id
-                win[sel] = ids[a]
-                best[sel] = d[np.arange(len(a)), a]
-                if with_cvec:
-                    cv[sel] = cb[a]
+            mat, gv = _batch_rows(batch, vec, group, width)
+            win, best, cv = _nearest(mat, gv, books, group or vec, with_cvec)
             cols = batch.columns + [pa.array(win, type=arrow_key),
                                     pa.array(best, type=pa.float64())]
             if with_cvec:
@@ -200,65 +235,167 @@ def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
     return df.mapInArrow(kernel, schema)
 
 
+#: the exact-mean contract (functions/numeric.py): every Lloyd mean sums the
+#: members' components cast to this decimal, whose unscaled values are below
+#: 10²⁹ < 2⁹⁷ — two's-complement high words within ±2³³
+_DEC = DecimalType(29, 6)
+#: Spark's sum of ``_DEC`` is ``decimal(38,6)``: an unscaled total at or past
+#: 10³⁸ overflows it, so the fused update raises there instead
+_SUM_BOUND = 10 ** 38
+
+
+def _unscaled_limbs(col, n: int, width: int):
+    """``(n, width, 3)`` int64 limbs ``(lo32, mid32, hi)`` of the unscaled
+    decimal128 values of the list column ``col`` — the value is ``hi·2⁶⁴ +
+    mid·2³² + lo``, read straight from Arrow's little-endian two's-complement
+    buffer (no Python-side rounding).  A NULL component — Spark's non-ANSI
+    cast of a value past ``_DEC``'s range — raises."""
+    import numpy as np
+
+    flat = col.flatten()
+    if flat.null_count or len(flat) != n * width:
+        raise ValueError("lloyd_means: NULL or missing decimal(29,6) "
+                         "component (a value past the decimal range)")
+    words = np.frombuffer(flat.buffers()[1], dtype="<u8")[
+        2 * flat.offset:2 * (flat.offset + len(flat))].reshape(n, width, 2)
+    lo = words[..., 0]
+    return np.stack([(lo & np.uint64(0xFFFFFFFF)).astype(np.int64),
+                     (lo >> np.uint64(32)).astype(np.int64),
+                     words[..., 1].view(np.int64)], axis=-1)
+
+
+def _check_sum(total: int) -> int:
+    if abs(total) >= _SUM_BOUND:
+        raise ValueError("lloyd_means: decimal sum overflows decimal(38,6)")
+    return total
+
+
+def _merge_means(partials, width: int) -> dict:
+    """``{(group, id): mean}`` from the kernel's per-partition ``(g, id, n,
+    s)`` rows: the counts and the unscaled sums add as Python ints (exact in
+    any order), and each component finishes as ``cast(sum AS double) /
+    count`` — ``t / 10**6`` is a correctly rounded int division, as Spark's
+    ``Decimal.toDouble`` is, and the divide by the count is one IEEE
+    division.  A total past ``decimal(38,6)`` raises ``ValueError``."""
+    tot: dict = {}
+    for g, i, n, s in partials:
+        m, acc = tot.get((g, i), (0, [0] * width))
+        tot[(g, i)] = (m + n, [a + int(b) for a, b in zip(acc, s)])
+    return {cell: [_check_sum(t) / 10 ** 6 / n for t in acc]
+            for cell, (n, acc) in tot.items()}
+
+
+def lloyd_means(df: DataFrame, vec: str, items: list, key: str,
+                group: str | None = None) -> dict:
+    """One Lloyd update in ONE Spark job: ``{(group, id): mean vector}`` of
+    the non-empty cells of ``items`` ``(key[, group], cvec)`` after every row
+    of ``df`` joins its nearest item (``group`` ``None`` when ungrouped).
+
+    The kernel runs :func:`argmin_arrow`'s codebook build and argmin loop
+    over the scan's Arrow batches, then sums each cell's members: the count
+    and, per component, the unscaled ``_DEC`` value.  The double→decimal cast
+    is a JVM projection in front of the kernel (Spark's own rounding, the
+    same cast the oracle's ``CAST(x AS DECIMAL(29,6))`` mirrors), so the
+    kernel only adds integers — exact in any order and under any
+    partitioning.  Per batch it sums 32-bit limbs in int64: a batch of fewer
+    than 2³⁰ rows cannot wrap (checked before summing), and the per-partition
+    totals are Python ints, emitted as ``decimal(38,0)``.
+
+    A partition yields at most one row per item, so the pull is bounded by
+    partitions × items by construction: it is ONE plain ``collect`` — a
+    ``bounded_rows`` ``limit`` pull is an incremental take that re-runs the
+    kernel as several jobs."""
+    import numpy as np
+
+    books, width = _codebooks(items, key, group)
+    schema = StructType([
+        StructField("g", LongType()), StructField("id", LongType(), False),
+        StructField("n", LongType(), False),
+        StructField("s", ArrayType(DecimalType(38, 0), False), False)])
+
+    def kernel(batches):
+        from decimal import Decimal
+
+        import pyarrow as pa
+
+        acc: dict = {}
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
+                continue
+            if n >= 1 << 30:  # |limb| < 2³³: the int64 sums stay exact
+                raise ValueError(f"lloyd_means: batch of {n} rows")
+            mat, gv = _batch_rows(batch, vec, group, width)
+            win, _, _ = _nearest(mat, gv, books, group or vec)
+            limbs = _unscaled_limbs(batch.column("_dec"), n, width)
+            cells, inv = np.unique(
+                np.column_stack([gv if group else np.zeros(n, np.int64),
+                                 win]).astype(np.int64),
+                axis=0, return_inverse=True)
+            inv = inv.reshape(-1)
+            for j, cell in enumerate(map(tuple, cells.tolist())):
+                part = limbs[inv == j]
+                lo, mid, hi = part.sum(axis=0).T.tolist()
+                m, tot = acc.get(cell, (0, [0] * width))
+                acc[cell] = (m + len(part),
+                             [t + (h << 64) + (b << 32) + a
+                              for t, a, b, h in zip(tot, lo, mid, hi)])
+        if acc:
+            keys = list(acc)
+            yield pa.RecordBatch.from_arrays([
+                pa.array([g if group else None for g, _ in keys], pa.int64()),
+                pa.array([i for _, i in keys], pa.int64()),
+                pa.array([acc[k][0] for k in keys], pa.int64()),
+                pa.array([[Decimal(_check_sum(t))
+                           for t in acc[k][1]] for k in keys],
+                         pa.list_(pa.decimal128(38, 0)))],
+                names=schema.names)
+
+    cols = [group] if group else []
+    rows = (df.select(*cols, vec, F.col(vec).cast(ArrayType(_DEC)).alias("_dec"))
+            .mapInArrow(kernel, schema).collect())
+    return _merge_means(rows, width)
+
+
 def _assign(emb: DataFrame, centroids: list,
             with_cvec: bool = False) -> DataFrame:
-    # ZERO-exchange assignment: the driver-held centroid rows (every round,
-    # the seed included — bounded_rows) ride into the numpy argmin kernel
-    # (``argmin_arrow``) over the scan's Arrow batches: no pack aggregation,
-    # no BroadcastExchange job, no join (the trainer chains are
-    # job-count-bound).  A crossJoin + vec_id-window shape would shuffle and
-    # sort one full copy of every embedding per Lloyd round (measured at
-    # sf0.1: 2,000 records / 820 KB per round); here the only exchanges in a
-    # round are the tiny (cid, dim) mean partials.
+    # ZERO-exchange assignment: the driver-held centroid rows ride into the
+    # numpy argmin kernel (``argmin_arrow``) over the scan's Arrow batches:
+    # no pack aggregation, no BroadcastExchange job, no join (the trainer
+    # chains are job-count-bound).  A crossJoin + vec_id-window shape would
+    # shuffle and sort one full copy of every embedding per Lloyd round
+    # (measured at sf0.1: 2,000 records / 820 KB per round).
     return argmin_arrow(emb.select("vec_id", "emb"), "emb", centroids, "cid",
                         LongType(), "dist", with_cvec=with_cvec)
 
 
-def _update(assigned: DataFrame) -> DataFrame:
-    # Kept as posexplode + (cid, dim) + (cid) two-level aggregation: the r18
-    # single-groupBy rewrite (DIM=64 per-dimension decimal sum columns in one
-    # agg) was built and MEASURED WORSE — interleaved in-session A/B on
-    # kmeans_assign: 2.42 s vs 1.29 s min-of-4, every pass slower; the 64-wide
-    # decimal(29,6) buffer update per row costs more than the exploded narrow
-    # agg saves, and spark.sql.codegen.maxFields=400 did not recover it.  The
-    # 16-wide twin on SUBDIM sub-vectors (pq._sub_mean) measured a wash and
-    # ships; at this width the explode is the better local plan and both
-    # exchanges are model-geometry-sized.
-    sums = (
-        assigned.select("cid", F.posexplode("emb").alias("pos", "val"))
-        .groupBy("cid", (F.col("pos") + 1).alias("dim"))
-        .agg((F.sum(F.col("val").cast("decimal(29,6)")).cast("double")
-              / F.count("*")).alias("m"))
-    )
-    return (
-        sums.groupBy("cid")
-        .agg(F.transform(F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                         lambda s: s["m"]).alias("cvec"))
-    )
-
-
-def lloyd_centroids(v: DataFrame, k: int) -> DataFrame:
-    """The one Lloyd update every k-means consumer trains over ``v``
-    ``(vec_id, emb)``: the seed — the first ``k`` vectors by ``vec_id`` — is
-    collected (≤k rows, model geometry) and handed to the numpy argmin kernel
-    like every later round, and the decimal-exact means of its clusters are
-    returned LAZY as ``(cid, cvec)`` (empty clusters drop): the caller's
-    bounded pull or artifact tier owns the materialization."""
-    c0 = bounded_rows(v.filter(F.col("vec_id") < k).select(
+def seed_rows(v: DataFrame, k: int) -> list:
+    """The k-means seed: the first ``k`` vectors of ``v`` ``(vec_id, emb)``
+    by ``vec_id`` as ``(cid, cvec)`` rows — one bounded pull (≤k rows)."""
+    return bounded_rows(v.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")),
         k, "kmeans_c0")
-    return _update(_assign(v, c0))
+
+
+def lloyd_centroids(v: DataFrame, c0: list) -> list:
+    """The one Lloyd update every k-means consumer trains over ``v``
+    ``(vec_id, emb)`` from the seed rows ``c0`` ``(cid, cvec)``: the
+    decimal-exact means of the seed's clusters as driver-held ``(cid,
+    cvec)`` rows in ``cid`` order — empty clusters drop.  One Spark job
+    (:func:`lloyd_means`)."""
+    means = lloyd_means(v, "emb", c0, "cid")
+    return [Row(cid=i, cvec=means[(g, i)]) for g, i in sorted(means)]
 
 
 def _lloyd_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(vec_id, emb, cid, dist)``: the valid embeddings assigned to their
     trained centroid — seed → assign → update → re-assign, the oracle's
-    c0→a1→c1→a2 chain.  The K trained centroids come to the driver (bounded
-    by model geometry): the collect IS the round's one materializing action,
-    and it also truncates the lineage for the final assign."""
+    c0→a1→c1→a2 chain.  The K trained centroids are driver rows (bounded by
+    model geometry), which also truncates the lineage for the final
+    assign."""
     v = valid_embeddings(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    return _assign(v, bounded_rows(lloyd_centroids(v, K), K, "kmeans_c1"))
+    return _assign(v, lloyd_centroids(v, seed_rows(v, K)))
 
 
 @declare("kmeans_assign", oracle=_DUCK_ORACLE)

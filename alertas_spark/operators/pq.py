@@ -47,15 +47,16 @@ per the training-data-pipeline brief.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
 from alertas_spark.operators.artifacts import (bounded_rows,
                                                persistent_artifact,
                                                persistent_artifact_rows)
-from alertas_spark.operators.kmeans import (_assign, _seq_subdist,
-                                            argmin_arrow, lloyd_centroids)
+from alertas_spark.operators.kmeans import (_assign, _codebooks, _nearest,
+                                            _seq_subdist, argmin_arrow,
+                                            lloyd_centroids, lloyd_means)
 from alertas_spark.operators.memo import session_value
 from alertas_spark.operators.embgate import (EMB_VALID_SQL, norm2,
                                              np_valid_mask, valid_embeddings,
@@ -483,25 +484,6 @@ _DUCK_TRAINED = f"""
     )"""
 
 
-def _sub_mean(a1: DataFrame) -> DataFrame:
-    """(m, c, cvec): decimal-exact per-dimension mean of the assigned
-    sub-vectors in ONE groupBy(m, c) — SUBDIM per-dimension decimal sum
-    columns with map-side combine (r18; the former posexplode +
-    groupBy(m, c, dim) + groupBy(m, c) shape paid two exchanges and a
-    SUBDIM× row explosion).  Decimal addition is exact and order-
-    independent, so each dimension's sum, double cast, and divide are
-    bit-identical to the exploded form; COUNT(*) per (m, c) mirrors the
-    oracle's per-group count (sub-vectors are always full SUBDIM length)."""
-    sums = a1.groupBy("m", "c").agg(
-        F.count("*").alias("n"),
-        *[F.sum(F.col("sub")[i].cast("decimal(29,6)")).alias(f"s{i}")
-          for i in range(SUBDIM)])
-    return sums.select(
-        "m", "c",
-        F.array(*[F.col(f"s{i}").cast("double") / F.col("n")
-                  for i in range(SUBDIM)]).alias("cvec"))
-
-
 def _assign_sub(subs: DataFrame, cw: list) -> DataFrame:
     """``subs`` plus ``c`` (int) / ``d``: per (vec_id, m) the codeword
     minimizing the sequential-fold sub-L2², ties to the lowest id — the
@@ -510,26 +492,31 @@ def _assign_sub(subs: DataFrame, cw: list) -> DataFrame:
     (zero exchange: a crossJoin-by-m + struct-min agg would shuffle every
     sub-vector once per pass).  A subspace missing from the codebook raises;
     ``c`` is non-nullable by the kernel's output schema, so joins on it
-    infer no isnotnull filter.  ``sub`` stays on the row for the Lloyd
-    mean."""
+    infer no isnotnull filter."""
     return argmin_arrow(subs, "sub", cw, "c", IntegerType(), "d", group="m")
 
 
-def _lloyd_codebook(subs: DataFrame, what: str) -> DataFrame:
-    """One Lloyd update per subspace over ``subs`` ``(vec_id, m, sub, …)``:
-    the seed codebook — sub-vector ``m`` of the first KSUB vectors — is
-    collected (≤M·KSUB rows) and handed to the numpy sub-argmin kernel, and
-    each codeword becomes the decimal-exact mean of its members
-    (``_sub_mean``, ONE exchange); an empty cell keeps its seed.  Returns the LAZY
-    ``(m, c, cvec)`` codebook — the artifact tier owns materialization."""
-    cw0 = (subs.filter(F.col("vec_id") < KSUB)
-           .select("m", F.col("vec_id").cast("int").alias("c"),
-                   F.col("sub").alias("cvec")))
-    mean1 = _sub_mean(_assign_sub(subs, bounded_rows(cw0, M * KSUB, what)))
-    # one join: seed-aliased cw0 left-joins the means (keys unique)
-    return (cw0.withColumnRenamed("cvec", "seed")
-            .join(mean1, ["m", "c"], "left")
-            .select("m", "c", F.coalesce("cvec", "seed").alias("cvec")))
+def _sub_seed(vecs: dict) -> list:
+    """The seed codebook ``(m, c, cvec)`` of ``{vec_id: vector}``: codeword
+    ``c`` of subspace ``m`` is sub-vector ``m`` of the vector ``vec_id == c``
+    for the first KSUB vectors."""
+    return [Row(m=m + 1, c=int(q),
+                cvec=vecs[q][m * SUBDIM:(m + 1) * SUBDIM].tolist())
+            for m in range(M) for q in sorted(vecs) if q < KSUB]
+
+
+_CODEBOOK_SCHEMA = "m int, c int, cvec array<double>"
+
+
+def _lloyd_codebook(subs: DataFrame, cw0: list) -> list:
+    """One Lloyd update per subspace over ``subs`` ``(vec_id, m, sub, …)``
+    from the driver-held seed codebook ``cw0`` (``_sub_seed``): each
+    codeword becomes the decimal-exact mean of its members, grouped by
+    ``m`` in the one fused kernel (``kmeans.lloyd_means``, one Spark job);
+    an empty cell keeps its seed.  Returns the ``(m, c, cvec)`` rows."""
+    means = lloyd_means(subs, "sub", cw0, "c", group="m")
+    return [Row(m=r["m"], c=r["c"], cvec=means.get((r["m"], r["c"]), r["cvec"]))
+            for r in sorted(cw0, key=lambda r: (r["m"], r["c"]))]
 
 
 @declare(
@@ -554,12 +541,15 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest id, DECIMAL(29,6) means) applied per subspace, so training is
     idempotent across partitionings and engines.
 
-    Scale shape per subspace pass: the argmin is one numpy kernel over the
-    scan's Arrow batches (``kmeans.argmin_arrow``, grouped by ``m``) against
-    the driver-held codebook (seed and trained codebook alike are ≤M·KSUB
-    collected rows — no broadcast, no join, no interpreted per-row fold),
-    and the means are one (m, c) aggregation with map-side combine
-    (M×KSUB cells — tiny).  The qerr sum quantizes each sub-distance to
+    Scale shape: the seed codebook is sliced on the driver from the memoized
+    head rows (``_head_rows``); the Lloyd update is ONE Spark job — the
+    fused kernel (``kmeans.lloyd_means``, grouped by ``m``) assigns every
+    sub-vector over the scan's Arrow batches and returns each partition's
+    per-codeword counts and exact decimal sums (≤M·KSUB rows) in one
+    collect, which the driver merges into the trained codebook; the
+    re-assign is the argmin kernel (``kmeans.argmin_arrow``) against those
+    rows.  No exchange before the final per-vector aggregation, no
+    broadcast, no join.  The qerr sum quantizes each sub-distance to
     1e-9-unit bigints so the 4-term sum is order-independent."""
     v = _normalized(spark, sf_dir)
     subs = v.select(
@@ -575,8 +565,9 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entirely (operators/artifacts.py); the final re-assign runs per call
     cw1 = persistent_artifact_rows(
         spark, sf_dir, "pq_trained_codebook", code_version="1",
-        table="embeddings", max_rows=M * KSUB,
-        build=lambda: _lloyd_codebook(subs, "pq_cw0"))
+        table="embeddings", max_rows=M * KSUB, schema=_CODEBOOK_SCHEMA,
+        build=lambda: _lloyd_codebook(
+            subs, _sub_seed(_head_rows(spark, sf_dir))))
     a2 = _assign_sub(subs, cw1)
     # codes + qerr in ONE conditional aggregation (single shuffle on vec_id) —
     # a pivot + join-back here would cost an extra exchange and a merge join
@@ -623,11 +614,16 @@ def pq_encode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   1e-9-unit bigints before the sum so the 4-term total is order- and
 #   engine-independent.
 #
-# Scale shape: centroids and codebooks (seeds and trained alike) are tiny
-# collected rows — no broadcast job, no join; every assign and encode is the
-# numpy argmin kernel over the scan's Arrow batches (kmeans.argmin_arrow),
-# and the 10-query side (probed cells, LUT of ≤ N_QUERIES·NPROBE·M·KSUB
-# rows) is driver numpy over one memoized pull of the query rows
+# Scale shape: centroids and codebooks are tiny driver rows — no broadcast
+# job, no join.  Both seeds (the first KC vectors, the first KSUB residuals)
+# are driver numpy over one memoized pull of the head rows (``_head_rows``),
+# and each Lloyd update is ONE Spark job: the fused kernel
+# (kmeans.lloyd_means) assigns over the scan's Arrow batches and returns
+# each partition's per-cell counts and exact decimal sums in one collect.
+# A cold build is the schema read, the head pull and the two update jobs.
+# Every later assign and encode is the numpy argmin kernel
+# (kmeans.argmin_arrow), and the 10-query side (probed cells, LUT of
+# ≤ N_QUERIES·NPROBE·M·KSUB rows) is driver numpy over the same head rows
 # (``_probe_lut``); the LUT bounds the candidate join (the IVF prune — a
 # broadcast of the LUT, never all-pairs); the final rank is the two-phase
 # exact top-k.  Nothing driver-side grows with the corpus.
@@ -758,13 +754,19 @@ _DUCK_IVFPQ = f"""
 def _coarse_centroids(spark: SparkSession, sf_dir: str) -> list:
     """The trained coarse centroid ROWS ``(cid, cvec)`` (≤KC, model
     geometry) over the NORMALIZED embeddings — the index's first artifact.
-    Driver-held: the argmin kernel and the query side (``_probe_lut``) read
-    the rows directly (no broadcast jobs, no joins —
+    The seed is the first KC head rows (``_head_rows``), so training is the
+    one fused Lloyd job.  Driver-held: the argmin kernel and the query side
+    (``_probe_lut``) read the rows directly (no broadcast jobs, no joins —
     artifacts.persistent_artifact_rows)."""
+    def train() -> list:
+        c0 = [Row(cid=q, cvec=e.tolist())
+              for q, e in sorted(_head_rows(spark, sf_dir).items()) if q < KC]
+        return lloyd_centroids(_normalized(spark, sf_dir), c0)
+
     return persistent_artifact_rows(
         spark, sf_dir, "ivfpq_coarse_centroids", code_version="1",
         table="embeddings", max_rows=KC,
-        build=lambda: lloyd_centroids(_normalized(spark, sf_dir), KC))
+        schema="cid bigint, cvec array<double>", build=train)
 
 
 def _residual_subs(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
@@ -785,16 +787,34 @@ def _residual_subs(spark: SparkSession, sf_dir: str, c1: list) -> DataFrame:
         .select("vec_id", "cid", (F.col("m0") + 1).alias("m"), "sub"))
 
 
+def _head_residuals(head: dict, c1: list) -> dict:
+    """``{vec_id: residual}`` of the head rows against their nearest
+    centroid of ``c1`` — the argmin kernel's loop (``kmeans._nearest``, ties
+    to the lowest cid) and one IEEE subtraction per component, operation for
+    operation what ``_residual_subs`` computes in the scan."""
+    import numpy as np
+
+    ids = sorted(head)
+    if not ids:
+        return {}
+    mat = np.stack([head[q] for q in ids])
+    _, _, cent = _nearest(mat, None, _codebooks(c1, "cid", None)[0], "emb",
+                          with_cvec=True)
+    return dict(zip(ids, mat - cent))
+
+
 def _residual_codebook(spark: SparkSession, sf_dir: str, c1: list) -> list:
     """The trained (m, c, cvec) residual codebook ROWS (≤M·KSUB, model
     geometry) — one Lloyd update over the pooled residual sub-vectors
-    (pq_encode_trained's exact contract); driver-held for the argmin kernel
-    and the query LUT (``_probe_lut``)."""
+    (pq_encode_trained's exact contract) from the seed of the first KSUB
+    residuals, computed on the driver from the head rows; driver-held for
+    the argmin kernel and the query LUT (``_probe_lut``)."""
     return persistent_artifact_rows(
         spark, sf_dir, "ivfpq_residual_codebook", code_version="1",
-        table="embeddings", max_rows=M * KSUB,
-        build=lambda: _lloyd_codebook(_residual_subs(spark, sf_dir, c1),
-                                      "ivfpq_rcw0"))
+        table="embeddings", max_rows=M * KSUB, schema=_CODEBOOK_SCHEMA,
+        build=lambda: _lloyd_codebook(
+            _residual_subs(spark, sf_dir, c1),
+            _sub_seed(_head_residuals(_head_rows(spark, sf_dir), c1))))
 
 
 def _nearest_cells(queries: dict, c1: list) -> list:
@@ -968,9 +988,9 @@ def _int8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     affine SQ8 codes over the normalized embeddings.  One global min/max
     aggregate (2·DIM partials) broadcast into a scan-side projection."""
     v = _normalized(spark, sf_dir)
-    # per-dimension min/max via posexplode + a DIM-row agg (the kmeans
-    # _update idiom): a 2·DIM-wide single-row aggregate compiles a ~200-
-    # expression codegen stage for the same numbers and measured ~2× slower
+    # per-dimension min/max via posexplode + a DIM-row agg: a 2·DIM-wide
+    # single-row aggregate compiles a ~200-expression codegen stage for the
+    # same numbers and measured ~2× slower
     dims = (v.select(F.posexplode("emb").alias("pos", "x"))
             .groupBy((F.col("pos") + 1).alias("dim"))
             .agg(F.min("x").alias("mn"),

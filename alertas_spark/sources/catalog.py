@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from alertas_spark.operators.artifacts import dataset_fingerprint
+from alertas_spark.operators.memo import SCHEMA_KEY, session_value
+
 #: Driver-generated testdata tables (TESTDATA.md).
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -47,12 +50,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     generator has shipped NANOS, NTZ-MICROS, and plain TIMESTAMP across rounds);
     every table normalizes to session-TZ TIMESTAMP so event-time operators and
     temporal functions behave identically regardless of producer encoding.  The
-    casts sit on top of the scan and do not block pushdown of other predicates."""
+    casts sit on top of the scan and do not block pushdown of other predicates.
+
+    The inferred schema is memoized per session and dataset fingerprint
+    (``memo.session_value``): ``spark.read.parquet`` runs a schema-inference
+    job on every call, and a trainer chain reads one table several times.
+    ``events`` reads bare — its inference depends on the nanosAsLong conf."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_event_ts(spark.read.parquet(path))
-    df = spark.read.parquet(path)
+    schema = session_value(
+        spark, (SCHEMA_KEY, path, dataset_fingerprint(sf_dir, name)),
+        lambda: spark.read.parquet(path).schema)
+    df = spark.read.schema(schema).parquet(path)
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = normalize_event_ts(df, col)

@@ -12,14 +12,16 @@ SF = "/root/testdata/sf0.001"
 
 
 def _train_centroids(spark):
-    """The real Lloyd-iteration centroid trainer from kmeans.py (K rows)."""
-    from alertas_spark.operators.kmeans import K, lloyd_centroids
+    """The real Lloyd-iteration centroid trainer from kmeans.py (K rows),
+    as the relation the store writes."""
+    from alertas_spark.operators.kmeans import K, lloyd_centroids, seed_rows
     from alertas_spark.operators.embgate import valid_embeddings
     from alertas_spark.sources.catalog import load_table
 
     v = valid_embeddings(load_table(spark, SF, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-    return lloyd_centroids(v, K).localCheckpoint()
+    return spark.createDataFrame(lloyd_centroids(v, seed_rows(v, K)),
+                                 "cid bigint, cvec array<double>")
 
 
 def test_train_once_then_load(spark, tmp_path):
@@ -213,6 +215,10 @@ def test_artifact_count_counts_row_artifacts(spark):
     try:
         _noop(spark, load_all()["pq_encode_trained"])
         assert memo.artifact_count() > 0
+        # a plain table read memoizes only its schema, which is no artifact
+        memo.clear()
+        _noop(spark, load_all()["top_revenue_orders"])
+        assert memo.artifact_count() == 0
     finally:
         memo.clear()
 

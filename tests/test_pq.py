@@ -231,35 +231,116 @@ def test_ivfpq_rerank_beats_adc_and_scores_exactly(spark):
             assert score == bf[pair]
 
 
-def test_single_exchange_sub_mean_equals_exploded_form(spark):
-    """r18: the residual/PQ codebook Lloyd mean runs as ONE groupBy with
-    SUBDIM per-dimension decimal sum columns (pq._sub_mean).  Pin
-    bit-equality against the former posexplode + per-(m, c, dim) aggregate
-    on values that exercise decimal accumulation (0.1-style doubles whose
-    naive double-sum order matters)."""
+def _decimal_reference_means(assigned, vec, keys):
+    """The decimal-aggregate form the fused Lloyd kernel replaced, kept as
+    the test reference: posexplode, per-(cell, dim) ``sum(cast(x AS
+    decimal(29,6)))`` cast to double over ``count(*)``."""
     from pyspark.sql import functions as F
 
-    from alertas_spark.operators.pq import SUBDIM, _sub_mean
+    rows = (assigned.select(*keys, F.posexplode(vec).alias("pos", "x"))
+            .groupBy(*keys, "pos")
+            .agg((F.sum(F.col("x").cast("decimal(29,6)")).cast("double")
+                  / F.count("*")).alias("mu"))
+            .collect())
+    ref: dict = {}
+    for r in rows:
+        ref.setdefault(tuple(r[k] for k in keys), {})[r.pos] = r.mu
+    return {k: [d[p] for p in range(len(d))] for k, d in ref.items()}
 
-    vals = [[(0.1 * (i + 1) + 0.7 * r) % 1.3 for i in range(SUBDIM)]
-            for r in range(9)]
-    subs = spark.createDataFrame(
-        [(r, 1 + r % 4, r % 3, vals[r]) for r in range(9)],
-        "vec_id bigint, m int, c int, sub array<double>")
-    got_s = {(r.m, r.c): r.cvec for r in _sub_mean(subs).collect()}
-    # reference: the exploded two-level form this rewrite replaced
-    ref_s_rows = (
-        subs.select("m", "c", F.posexplode("sub").alias("pos", "x"))
-        .groupBy("m", "c", "pos")
-        .agg((F.sum(F.col("x").cast("decimal(29,6)")).cast("double")
-              / F.count("*")).alias("mu"))
-        .collect())
-    ref_s: dict[tuple, dict[int, float]] = {}
-    for r in ref_s_rows:
-        ref_s.setdefault((r.m, r.c), {})[r.pos] = r.mu
-    assert set(got_s) == set(ref_s)
-    for key, cvec in got_s.items():
-        assert cvec == [ref_s[key][p] for p in range(SUBDIM)]
+
+#: seed centroids (width 4) whose cells collect the adversarial components
+_LLOYD_SEEDS = [[0.0, 0.0, 0.0, 0.0], [9.9e22, 0.0, 0.0, 0.0],
+                [1e15, 1e15, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0]]
+#: per-member offsets: half-ulp ties at the 6th decimal, -0.0, 1e-30, and
+#: 0.1 + 0.2 - 0.3 and ±3.25e-3, which sum to exactly zero in decimal
+_LLOYD_OFFSETS = [0.0000005, 1.0000005, -0.0, 1e-30, 0.1, 0.2, -0.3,
+                  3.25e-3, -3.25e-3, 2.5000005, 0.0000015, -0.0000005]
+
+
+def _lloyd_rows():
+    """``(vec_id, emb)`` rows: every seed plus, per seed, one member per
+    offset rotation, so each cell holds every offset in every dimension."""
+    rows = [(i, list(s)) for i, s in enumerate(_LLOYD_SEEDS)]
+    n = len(_LLOYD_OFFSETS)
+    for i, s in enumerate(_LLOYD_SEEDS):
+        for j in range(n):
+            off = [_LLOYD_OFFSETS[(j + d) % n] for d in range(len(s))]
+            rows.append((len(rows), [x + o for x, o in zip(s, off)]))
+    return rows
+
+
+def _bits(vec):
+    import struct
+
+    return [struct.pack("<d", x) for x in vec]
+
+
+def test_fused_lloyd_means_equal_the_decimal_aggregate_bit_for_bit(spark):
+    """kmeans.lloyd_means (one Arrow kernel: per-partition counts and
+    unscaled decimal(29,6) sums, merged on the driver) against the decimal
+    aggregate it replaced, bit for bit, ungrouped (k-means) and grouped by
+    subspace (PQ), over ``repartition(7)`` so partials from several
+    partitions merge.  Components cover half-ulp ties at the 6th decimal,
+    ``-0.0``, ``1e-30``, ``1e15``, ``9.9e22`` and mixed signs that sum to
+    exactly zero."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType, LongType
+
+    from alertas_spark.operators.kmeans import argmin_arrow, lloyd_means
+
+    df = spark.createDataFrame(_lloyd_rows(), "vec_id bigint, emb array<double>")
+    seeds = [{"cid": i, "cvec": s} for i, s in enumerate(_LLOYD_SEEDS)]
+    ref = _decimal_reference_means(
+        argmin_arrow(df, "emb", seeds, "cid", LongType(), "d"), "emb",
+        ["cid"])
+    got = lloyd_means(df.repartition(7), "emb", seeds, "cid")
+    assert df.repartition(7).rdd.glom().filter(bool).count() > 1
+    assert set(got) == {(None, c) for (c,) in ref}
+    for (c,), mu in ref.items():
+        assert _bits(got[(None, c)]) == _bits(mu), c
+    # the sign-cancelling members leave an exact zero; huge cells stay huge
+    assert 0.0 in got[(None, 0)] and got[(None, 1)][0] > 9e22
+
+    subs = df.select("vec_id", F.posexplode(F.expr(
+        "array(slice(emb, 1, 2), slice(emb, 3, 2))")).alias("m0", "sub")
+    ).select("vec_id", (F.col("m0") + 1).cast("int").alias("m"), "sub")
+    cw = [{"m": m + 1, "c": i, "cvec": s[2 * m:2 * m + 2]}
+          for i, s in enumerate(_LLOYD_SEEDS) for m in range(2)]
+    ref = _decimal_reference_means(
+        argmin_arrow(subs, "sub", cw, "c", IntegerType(), "d", group="m"),
+        "sub", ["m", "c"])
+    got = lloyd_means(subs.repartition(7), "sub", cw, "c", group="m")
+    assert set(got) == set(ref)
+    for cell, mu in ref.items():
+        assert _bits(got[cell]) == _bits(mu), cell
+
+
+def test_fused_lloyd_means_raise_instead_of_overflowing(spark):
+    """The fused update refuses what it cannot sum exactly: a merged total
+    past Spark's ``decimal(38,6)`` sum raises ``ValueError`` instead of
+    wrapping, and a component past ``decimal(29,6)`` — NULL under a non-ANSI
+    cast, which the decimal aggregate silently skipped — raises in the
+    kernel."""
+    import pytest
+
+    from alertas_spark.operators.kmeans import _merge_means, lloyd_means
+
+    half = 6 * 10 ** 37  # each partial fits decimal(38,0), their sum does not
+    assert _merge_means([(None, 0, 1, [half]), (None, 0, 1, [-half])], 1) \
+        == {(None, 0): [0.0]}
+    with pytest.raises(ValueError, match="overflows decimal"):
+        _merge_means([(None, 0, 1, [half]), (None, 0, 1, [half])], 1)
+
+    df = spark.createDataFrame([(0, [1.0, 2.0]), (1, [1e24, 2.0])],
+                               "vec_id bigint, emb array<double>")
+    seeds = [{"cid": 0, "cvec": [1.0, 2.0]}]
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(Exception, match="NULL or missing decimal"):
+            lloyd_means(df, "emb", seeds, "cid")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_probe_lut_refuses_a_missing_subspace():
