@@ -209,8 +209,9 @@ def persistent_artifact_rows(spark: SparkSession, sf_dir: str, name: str,
     rows: trained centroid/codeword tables) that live on the driver:
     ``build`` returns the trained ROWS (the Lloyd trainers finish their
     means on the driver), and so does this call.  Consumers hand the rows to
-    numpy kernels — the executor-side argmin (``kmeans.argmin_arrow``) or
-    the driver-side query LUT (``pq._probe_lut``) — with no pack
+    numpy kernels — the executor-side argmin (``kmeans.argmin_arrow``), the
+    PQ encode and ADC scans (``pq._encoded``, ``pq._adc_topk``) or the
+    driver-side query LUT (``pq._probe_lut``) — with no pack
     aggregation, BroadcastExchange job or join (the trainer chains are
     job-count-bound).  The memo-only branch memoizes the built rows; the
     store branch turns them into a ``schema`` relation only for the parquet

@@ -92,7 +92,7 @@ def _seq_subdist(a, b):
     fold (single IEEE add per step, no pairwise regrouping, no FMA), so
     results are bit-equal to both engines.  The one fold behind every numpy
     distance: the argmin kernel below, the PQ encode / ADC scans
-    (pq._pq_codes) and the IVFADC query tables (pq._probe_lut)."""
+    (pq._pq_codes) and the PQ / IVFADC query tables (pq._probe_lut)."""
     diff = a - b
     sq = diff * diff
     d = sq[..., 0].copy()
@@ -179,9 +179,11 @@ def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
     with ``with_cvec``, the winner's vector ``cvec`` — one numpy kernel over
     Arrow batches (``mapInArrow``) against the driver-held ``(key[, group],
     cvec)`` rows.  With ``group`` set (PQ's subspace ``m``), a row competes
-    only against the items of its own group.  The one assign behind every
-    k-means / PQ consumer (``_assign``, ``pq._assign_sub``); the Lloyd
-    update (:func:`lloyd_means`) runs the same argmin loop (:func:`_nearest`).
+    only against the items of its own group.  The one assign kernel of the
+    k-means consumers (``_assign``: ``kmeans_assign``, the trained IVF
+    assignment, the IVFADC residual training slices); the Lloyd update
+    (:func:`lloyd_means`), the PQ encoder and the ADC scan (``pq._encoded``,
+    ``pq._adc_topk``) run the same argmin loop (:func:`_nearest`).
 
     Exactness audit (why the result is cell-equal to the DuckDB oracle's
     ``ROW_NUMBER() OVER (ORDER BY d, id)``):

@@ -43,25 +43,26 @@ NONWS_RE = rf"[^{WS_CHARS}]+"
 WORD_RE = "[a-z0-9]+"
 
 
+def _lower(text: Column | str) -> Column:
+    """``lower(text)`` with U+0130 (``İ``) folded to ``I`` first: Spark's
+    ``lower`` uses full case mapping (``İ`` → i + U+0307) and DuckDB's the
+    simple one (``İ`` → ``i``), so the fold makes both lower it to ``i``
+    (the oracles keep the plain ``lower(text)``)."""
+    return F.lower(F.translate(text, "\u0130", "I"))
+
+
 def words(text: Column | str = "text") -> Column:
     """The corpus word list of ``text``: every ``WORD_RE`` run of
     ``lower(text)``, in order — the tokenization every word-level operator
-    shares (oracles spell it ``regexp_extract_all(lower(text), '[a-z0-9]+')``).
-
-    Limit: equal across engines on ASCII text only.  Spark's ``lower`` uses
-    full case mapping and DuckDB's simple case mapping, so U+0130 (``İ``)
-    lowers to ``i̇`` (i + U+0307) in Spark and ``i`` in DuckDB: ``İstanbul`` is
-    the words ``['i', 'stanbul']`` in Spark and ``['istanbul']`` in DuckDB.
-    The fixture text is ASCII by contract (``test_fixture_text_is_ascii``)."""
-    return F.regexp_extract_all(F.lower(text), F.lit(WORD_RE), 0)
+    shares (oracles spell it ``regexp_extract_all(lower(text), '[a-z0-9]+')``)."""
+    return F.regexp_extract_all(_lower(text), F.lit(WORD_RE), 0)
 
 
 def norm_text(text: Column | str = "text") -> Column:
     """The exact-dup key text: ``lower``, ``trim`` (spaces), every whitespace
     run collapsed to one space — oracles spell it
-    ``regexp_replace(trim(lower(text)), WS_RE, ' ', 'g')``.  Same ASCII-only
-    limit as :func:`words`: the U+0130 case-fold gap changes this key too."""
-    return F.regexp_replace(F.trim(F.lower(text)), WS_RE, " ")
+    ``regexp_replace(trim(lower(text)), WS_RE, ' ', 'g')``."""
+    return F.regexp_replace(F.trim(_lower(text)), WS_RE, " ")
 
 
 def hashed_word_counts(docs: DataFrame, label: str,

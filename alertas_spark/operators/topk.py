@@ -24,10 +24,10 @@ by a float with the candidate id as tiebreak.
 Callers: the exact-cosine family through ``simsearch.cosine_topk``
 (``simsearch_topk_bruteforce`` / ``_ivf`` / ``_ivf_assigned`` / ``_multiprobe``,
 ``kmeans.simsearch_topk_ivf_trained``, ``decontaminate_embedding``), the hamming
-and int8 tiers, the IVFADC ranks (``pq.py``), ``sample_weighted_topk``, the DSIR
-selections, ``countmin`` and ``pipeline.py``.  ``pq._adc_topk`` computes its own
-scores in numpy and folds them into the same running shortlist
-(:func:`merge_shortlist`).
+and int8 tiers, ``sample_weighted_topk``, the DSIR selections, ``countmin`` and
+``pipeline.py``.  ``pq._adc_topk``, the one scan of every PQ tier (flat PQ,
+PQ+R, IVFADC, IVFADC+R), computes its own scores in numpy and folds them into
+the same running shortlist (:func:`merge_shortlist`).
 """
 
 from __future__ import annotations

@@ -143,8 +143,6 @@ def declare(name: str, oracle: str | None = None) -> Callable[[Builder], Builder
 # efe515e touched pipeline.py alongside textops/dedup) and the helper
 # module's own queries pin the shared expressions regardless.
 
-_DRIVER_WINDOW = 50
-
 
 def _artifact_root() -> str:
     return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

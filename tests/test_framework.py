@@ -12,7 +12,6 @@ import hashlib
 import itertools
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from alertas_spark.framework import engine, schemas
@@ -123,15 +122,14 @@ def test_words_and_norm_text_match_the_oracle_spelling(spark):
                            "hello world 42 foo-bar baz9")
 
 
-@pytest.mark.xfail(strict=True, reason=(
-    "U+0130 case-fold seam: Spark lower() uses full case mapping (İ → i̇, "
-    "so words ['i', 'stanbul']), DuckDB simple case mapping (İ → i, words "
-    "['istanbul']); the fixture text is ASCII by contract"))
 def test_words_and_norm_text_agree_on_dotted_capital_i(spark):
+    """U+0130 lowers to i + U+0307 under Spark's full case mapping and to
+    ``i`` under DuckDB's simple one; ``textops`` folds it to ``I`` first."""
     texts = ["İstanbul"]
     got_duck = [(list(w), n) for w, n in
                 _duck_rows([_ORACLE_WORDS, _ORACLE_NORM], texts)]
     assert _spark_words_norm(spark, texts) == got_duck
+    assert got_duck == [(["istanbul"], "istanbul")]
 
 
 def test_normalize_pads_and_orders(spark):

@@ -144,17 +144,19 @@ def test_dedup_incremental_reuses_the_fingerprint_exchange(spark):
     assert "ReusedExchange" in plan or plan.count("Exchange") <= 2, plan
 
 
-def test_pq_encode_is_scan_side_after_codebook_build(spark):
-    plan = _plan(_build(spark, "pq_encode"))
-    # the codebook is a driver-held bounded pull (pq._head_rows), so the plan
-    # is the scan plus ONE numpy encode pass: no exchange of any kind
+@pytest.mark.parametrize("name", ["pq_encode", "pq_encode_trained"])
+def test_pq_encode_is_scan_side_after_codebook_build(spark, name):
+    plan = _plan(_build(spark, name))
+    # the seed codebook is a driver-held bounded pull (pq._head_rows) and the
+    # trained one driver rows from the fused Lloyd job, so the plan is the
+    # scan plus ONE numpy encode pass (pq._encoded): no exchange of any kind
     assert plan.count("Exchange") == 0, plan.count("Exchange")
     assert plan.count("MapInPandas") == 1, plan
 
 
 def test_ivfadc_query_side_is_driver_numpy(spark):
     """The IVFADC probes and LUT are computed on the driver (pq._probe_lut)
-    and broadcast as a local relation: no ``inline`` Generate over a
+    and ride into the ADC scan's kernel: no ``inline`` Generate over a
     literal codebook, and no Window beyond the result ranks — one for the
     residual tier's top-k, two for the rerank tier (ADC shortlist, exact
     re-rank).  The former query-side probe rank was a third kind."""
@@ -174,18 +176,20 @@ def test_trainer_argmin_never_reruns_as_an_inferred_filter(spark):
     constraint, and the Python node is a barrier Catalyst pushes no filter
     through — the argmin runs once per row (an inferred filter re-running
     the former interpreted argmin chain cost 13.3 s vs 1.1 s on the IVFADC
-    scorer at sf0.1).  The kernel shows as ``MapInArrow`` wherever the
-    plan assigns; ``simsearch_topk_ivf_trained`` reads the checkpointed
-    assignment artifact, so its plan has none.  No Filter may carry an
-    interpreted argmin: ``array_min`` or an ``aggregate(zip_with(..))``
-    distance fold (the embedding validity gate's ``aggregate(transform(..))``
-    norm fold is a legitimate Filter and stays allowed)."""
+    scorer at sf0.1).  The assign kernel shows as ``MapInArrow`` in
+    ``kmeans_assign``; ``simsearch_topk_ivf_trained`` reads the
+    checkpointed assignment artifact, and the PQ encode and IVFADC scan
+    assign inside their own ``mapInPandas`` pass (pq._encoded,
+    pq._adc_topk).  No Filter may carry an interpreted argmin:
+    ``array_min`` or an ``aggregate(zip_with(..))`` distance fold (the
+    embedding validity gate's ``aggregate(transform(..))`` norm fold is a
+    legitimate Filter and stays allowed)."""
     import re
 
     for name in ("kmeans_assign", "simsearch_topk_ivf_trained",
                  "pq_encode_trained", "simsearch_topk_ivfpq_residual"):
         plan = _plan(_build(spark, name))
-        if name != "simsearch_topk_ivf_trained":
+        if name == "kmeans_assign":
             assert "MapInArrow" in plan, name
         conds = [ln.split("Filter ", 1)[1] for ln in plan.splitlines()
                  if re.search(r"\bFilter ", ln)]
@@ -194,16 +198,19 @@ def test_trainer_argmin_never_reruns_as_an_inferred_filter(spark):
                 assert hof not in cond, (name, cond[:300])
 
 
-def test_pq_adc_topk_shuffles_only_for_the_window(spark):
+@pytest.mark.parametrize("name", ["simsearch_topk_pq",
+                                  "simsearch_topk_ivfpq_residual"])
+def test_pq_adc_topk_shuffles_only_for_the_window(spark, name):
     from tools.plan_audit import audit_plan
 
-    df = _build(spark, "simsearch_topk_pq")
+    df = _build(spark, name)
     plan = _plan(df)
-    # the one Python-eval node is the ADC scan itself
+    # the one Python-eval node is the ADC scan itself (pq._adc_topk)
     assert audit_plan(_plan(df, "formatted"))["py"] == 1
-    # r6 two-phase shape: codes + ADC distances + partition-local top-k all live
-    # in one numpy mapInPandas scan; the ONLY shuffle is the exact final rank
-    # window over the ≤ k·partitions-per-query shortlist
+    # r6 two-phase shape: coarse assign + codes + ADC distances +
+    # partition-local top-k all live in one numpy mapInPandas scan; the ONLY
+    # shuffle is the exact final rank window over the
+    # ≤ k·partitions-per-query shortlist
     non_broadcast = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert non_broadcast == 1, non_broadcast
     assert "MapInPandas" in plan, "partial top-k must run scan-side"

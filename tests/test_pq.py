@@ -356,8 +356,9 @@ def test_probe_lut_refuses_a_missing_subspace():
     c1 = [{"cid": 0, "cvec": [0.0] * DIM}]
     cw1 = [{"m": m, "c": c, "cvec": [0.5] * (DIM // M)}
            for m in range(1, M + 1) for c in range(KSUB)]
-    probes, lut = _probe_lut(queries, c1, cw1)
-    assert probes == [(0, 0)] and len(lut) == M * KSUB
+    qids, probe, lut = _probe_lut(queries, c1, cw1)
+    assert qids.tolist() == [0] and probe.tolist() == [[True]]
+    assert lut.shape == (1, 1, M, KSUB)
     with pytest.raises(ValueError, match="subspaces"):
         _probe_lut(queries, c1, [r for r in cw1 if r["m"] != 2])
 
@@ -394,10 +395,15 @@ def test_probe_lut_matches_the_spark_fold_bit_for_bit(spark):
                      np.array(trap) * (c % 3) - 0.0625 * c * (m % 2)).tolist()}
            for m in range(1, M + 1) for c in range(KSUB)]
     queries = {0: q0, 1: q1}
-    probes, lut = _probe_lut(queries, c1, cw1)
+    qids, probe, lut = _probe_lut(queries, c1, cw1)
+    cids = sorted(cents)
+    sd = {(int(q), cids[ci], m + 1, lc): lut[qi, ci, m, lc]
+          for qi, q in enumerate(qids) for ci in np.flatnonzero(probe[qi])
+          for m in range(M) for lc in range(KSUB)}
+    probes = sorted({(q, c) for q, c, _, _ in sd})
 
-    assert [c for q, c in probes if q == 0] == [4, 7, 9, 3]
-    sd = {(q, c, m, lc): d for q, c, m, lc, d in lut}
+    assert [c for q, c in probes if q == 0] == [3, 4, 7, 9]
+    assert not lut[~probe].any()  # cells not probed hold no sub-distance
     assert sd[(0, 9, 1, 0)] == 2.0  # the left fold, not 2 + 12·2⁻⁵²
 
     fold = ("aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
@@ -427,6 +433,38 @@ def test_probe_lut_matches_the_spark_fold_bit_for_bit(spark):
     assert sorted(probes) == sorted({(r.query_id, r.cid) for r in ref})
     assert sorted((k, bits(d)) for k, d in sd.items()) == sorted(
         ((r.query_id, r.cid, r.m, r.lc), bits(r.sd)) for r in ref)
+
+
+def test_q9_rounds_half_up_like_spark(spark):
+    """pq._q9 (numpy) against Spark's ``round(sd * 1e9)`` cast to bigint
+    where the product is a tie k + 0.5 and at both float neighbours of each
+    tie, for k from 0 to 4e9: a tie rounds up (``np.round`` rounds half to
+    even), a neighbour rounds to its nearest integer."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from alertas_spark.operators.pq import _q9
+
+    sds = []
+    for k in (0, 1, 2, 3, 4, 5, 100, 101, 12345, 10 ** 7, 10 ** 8, 2 ** 31,
+              2 ** 32, 3_999_999_998):
+        y = k + 0.5
+        for t in (np.nextafter(y, -np.inf), y, np.nextafter(y, np.inf)):
+            # the sd within 4 ulps of t / 1e9 whose product is exactly t
+            lo = hi = t / 1e9
+            near = [lo]
+            for _ in range(4):
+                lo, hi = np.nextafter(lo, -np.inf), np.nextafter(hi, np.inf)
+                near += [lo, hi]
+            hit = [x for x in near if x * 1e9 == t]
+            assert hit, (k, t)
+            sds.append(float(hit[0]))
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(sds)],
+                               "i int, sd double")
+    ref = [r.q for r in df.orderBy("i").select(
+        F.round(F.col("sd") * 1e9).cast("bigint").alias("q")).collect()]
+    assert _q9(np.array(sds)).tolist() == ref
+    assert ref[:3] == [0, 1, 1] and ref[6:9] == [2, 3, 3]
 
 
 def test_argmin_kernel_matches_a_sequential_fold_bit_for_bit(spark):
