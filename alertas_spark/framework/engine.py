@@ -155,18 +155,33 @@ def publish(ctx: AlertContext, family_table: str,
 
 
 def generate_types_table(ctx: AlertContext) -> None:
-    """≙ generateTypesTable (jobs.py:147-185)."""
-    df = ctx.spark.createDataFrame(schemas.ALERT_TYPES, "alrt_sigla string, alrt_descricao string")
+    """≙ generateTypesTable (jobs.py:147-185): the ``schemas.ALERT_TYPES`` rows
+    as ``alrt_sigla string, alrt_descricao string``, both nullable.
+
+    The rows ride in as one Arrow table, which plans as a JVM
+    ``LocalTableScan`` whatever the session's Arrow conf.  A list
+    ``createDataFrame`` plans as ``Scan ExistingRDD`` and starts a Python
+    worker on every call (0.5–0.9 s per call on local[4], 1.4 s in a fresh
+    JVM); ``inline(array(struct(lit ..)))`` stays in the JVM too but
+    declares both columns non-nullable."""
+    import pyarrow as pa
+
+    sigla, descricao = zip(*schemas.ALERT_TYPES)
+    df = ctx.spark.createDataFrame(
+        pa.table({"alrt_sigla": sigla, "alrt_descricao": descricao}),
+        "alrt_sigla string, alrt_descricao string")
     ctx.write_table("alertas", "mmps_alertas_tipos", df, coalesce=1)
 
 
 def _batch_pool_size(spark) -> int:
-    """Concurrent-alert pool size, scale-adaptive from the session's core
-    count (cores // 2, capped at 16 = the active-alert count).  The alert
-    jobs are LATENCY-bound (each is a chain of small stages over the
-    fixture-scale inputs), so the pool needs most of the registry in flight
-    to keep task slots fed — measured at local[32]: serial 19.6 s, pool 8 →
-    15.1 s, pool 16 → 7.2 s, pool 32 → 8.1 s (min of 3 cold passes each)."""
+    """Compute-phase pool size, scale-adaptive from the session's core count
+    (cores // 2, capped at 16 = the active-alert count); publication does not
+    use it.  The alert jobs are LATENCY-bound (each is a chain of small
+    stages over the fixture-scale inputs), so the pool needs most of the
+    registry in flight to keep task slots fed — measured at local[32]:
+    serial 19.6 s, pool 8 → 15.1 s, pool 16 → 7.2 s (min of 3 cold passes
+    each).  A pool of 32 read 8.1 s, but with 16 alerts it ran the same
+    16-way concurrency as pool 16, so that reading is noise, not a cap."""
     return max(1, min(16, spark.sparkContext.defaultParallelism // 2))
 
 
@@ -183,10 +198,14 @@ def run_all(ctx: AlertContext, siglas: tuple[str, ...] = ACTIVE,
     (r18, guide §2.6): the 16 alert jobs are independent — the reference ran
     them back-to-back, leaving the cluster idle through every job's straggler
     tail — and their published union is row-identical to the serial append
-    (pinned by test_framework/test_alerts e2e).  Publication runs one family
-    per thread (disjoint tables).  Both phases run through ``memo.overlap``,
-    so every alert and family job keeps the caller's session tags.  Shared
-    base views build once under the context's view lock."""
+    (pinned by test_framework/test_alerts e2e).  Publication runs ONE thread
+    per family, whatever the compute pool's size: the families write
+    disjoint tables and each publication is a latency-bound chain of 4–7
+    one-task jobs, so all of them start in one wave (a pool capped at
+    cores // 2 published 3 families in 2 waves on local[4]).  Both phases
+    run through ``memo.overlap``, so every alert and family job keeps the
+    caller's session tags.  Shared base views build once under the
+    context's view lock."""
     from alertas_spark.framework.timing import Timer
     from alertas_spark.operators.memo import overlap
 
@@ -200,8 +219,8 @@ def run_all(ctx: AlertContext, siglas: tuple[str, ...] = ACTIVE,
         with Timer(f"alert {sigla}", timings, quiet=quiet):
             run_alert(ctx, defs[sigla])
 
-    workers = _batch_pool_size(ctx.spark)
-    overlap(ctx.spark, [lambda s=sigla: _run(s) for sigla in siglas], workers)
+    overlap(ctx.spark, [lambda s=sigla: _run(s) for sigla in siglas],
+            _batch_pool_size(ctx.spark))
     ctx.spark.catalog.clearCache()  # ≙ jobs.py:285
 
     def _pub(fam: str) -> None:
@@ -212,5 +231,5 @@ def run_all(ctx: AlertContext, siglas: tuple[str, ...] = ACTIVE,
                 if defs[s].family_table == fam))
 
     overlap(ctx.spark, [lambda f=fam: _pub(f) for fam in families],
-            max(1, min(workers, len(families))))
+            max(1, len(families)))
     return timings

@@ -32,8 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DataType, DecimalType, DoubleType,
-                               LongType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, DecimalType, DoubleType, LongType,
+                               StructField, StructType)
 
 from alertas_spark.operators.artifacts import bounded_rows, persistent_artifact
 from alertas_spark.operators.embgate import (EMB_VALID_SQL, norm2,
@@ -171,18 +171,16 @@ def _batch_rows(batch, vec: str, group: str | None, width: int):
     return col.flatten().to_numpy(zero_copy_only=False).reshape(n, width), gv
 
 
-def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
-                 key_type: DataType, dist: str, group: str | None = None,
+def argmin_arrow(df: DataFrame, vec: str, items: list, key: str, dist: str,
                  with_cvec: bool = False) -> DataFrame:
     """``df`` plus, per row, the item nearest its ``vec`` column: the winning
-    id ``key`` (typed ``key_type``), its squared L2 distance ``dist`` and,
-    with ``with_cvec``, the winner's vector ``cvec`` — one numpy kernel over
-    Arrow batches (``mapInArrow``) against the driver-held ``(key[, group],
-    cvec)`` rows.  With ``group`` set (PQ's subspace ``m``), a row competes
-    only against the items of its own group.  The one assign kernel of the
-    k-means consumers (``_assign``: ``kmeans_assign``, the trained IVF
-    assignment, the IVFADC residual training slices); the Lloyd update
-    (:func:`lloyd_means`), the PQ encoder and the ADC scan (``pq._encoded``,
+    id ``key`` (a ``long``), its squared L2 distance ``dist`` and, with
+    ``with_cvec``, the winner's vector ``cvec`` — one numpy kernel over Arrow
+    batches (``mapInArrow``) against the driver-held ``(key, cvec)`` rows.
+    The one assign kernel of the k-means consumers (``_assign``:
+    ``kmeans_assign``, the trained IVF assignment, the IVFADC residual
+    training slices); the Lloyd update (:func:`lloyd_means`, grouped by PQ
+    subspace or not), the PQ encoder and the ADC scan (``pq._encoded``,
     ``pq._adc_topk``) run the same argmin loop (:func:`_nearest`).
 
     Exactness audit (why the result is cell-equal to the DuckDB oracle's
@@ -190,7 +188,7 @@ def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
 
     * fold order — ``d`` is :func:`_seq_subdist`, Σ(x−c)² left to right, one
       IEEE multiply and one add per dimension, no pairwise or FMA regrouping;
-    * tie-break — each group's items are sorted by ascending id and numpy's
+    * tie-break — the items are sorted by ascending id and numpy's
       ``argmin`` returns the FIRST minimum, so equal distances go to the
       lowest id (``-0.0`` and ``0.0`` compare equal, as in both engines);
     * input precision — vectors arrive as doubles: callers cast the float32
@@ -202,20 +200,18 @@ def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
       input.
 
     Guards (``ValueError``): a NULL vector, a vector whose width is not the
-    codebook's, a group value missing from the codebook, a non-finite
-    distance.  The id and distance are declared NON-nullable in the output
-    schema, so joins on them infer no ``isnotnull`` filter, and the Python
-    node is a barrier Catalyst pushes no filter through: the argmin runs
-    once per row."""
+    codebook's, a non-finite distance.  The id and distance are declared
+    NON-nullable in the output schema, so joins on them infer no
+    ``isnotnull`` filter, and the Python node is a barrier Catalyst pushes no
+    filter through: the argmin runs once per row."""
     import numpy as np
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    books, width = _codebooks(items, key, group)
-    out = [StructField(key, key_type, False), StructField(dist, DoubleType(), False)]
+    books, width = _codebooks(items, key, None)
+    out = [StructField(key, LongType(), False), StructField(dist, DoubleType(), False)]
     if with_cvec:
         out.append(StructField("cvec", ArrayType(DoubleType(), False), False))
     schema = StructType(df.schema.fields + out)
-    names, arrow_key = schema.names, to_arrow_type(key_type)
+    names = schema.names
 
     def kernel(batches):
         import pyarrow as pa
@@ -224,9 +220,9 @@ def argmin_arrow(df: DataFrame, vec: str, items: list, key: str,
             n = batch.num_rows
             if not n:
                 continue
-            mat, gv = _batch_rows(batch, vec, group, width)
-            win, best, cv = _nearest(mat, gv, books, group or vec, with_cvec)
-            cols = batch.columns + [pa.array(win, type=arrow_key),
+            mat, _ = _batch_rows(batch, vec, None, width)
+            win, best, cv = _nearest(mat, None, books, vec, with_cvec)
+            cols = batch.columns + [pa.array(win, type=pa.int64()),
                                     pa.array(best, type=pa.float64())]
             if with_cvec:
                 cols.append(pa.ListArray.from_arrays(
@@ -368,7 +364,7 @@ def _assign(emb: DataFrame, centroids: list,
     # shuffle and sort one full copy of every embedding per Lloyd round
     # (measured at sf0.1: 2,000 records / 820 KB per round).
     return argmin_arrow(emb.select("vec_id", "emb"), "emb", centroids, "cid",
-                        LongType(), "dist", with_cvec=with_cvec)
+                        "dist", with_cvec=with_cvec)
 
 
 def seed_rows(v: DataFrame, k: int) -> list:

@@ -247,3 +247,53 @@ def test_concurrent_staging_equals_serial(ctx):
     # per-sigla staging cleaned up by publish
     for s in siglas:
         assert not ctx.table_exists("alertas", engine._stage_name(fam, s))
+
+
+def test_publication_runs_every_family_at_once(ctx, monkeypatch):
+    """Publication starts every family in one wave, whatever the compute
+    pool's size: with a pool of 1 and three families, each stubbed
+    publication waits on a three-party barrier, which only breaks (after
+    10 s, with ``BrokenBarrierError``) when fewer than three run at once."""
+    import threading
+
+    barrier = threading.Barrier(3, timeout=10)
+    published: list[str] = []
+
+    def publish(c, family_table, sigla_tables):
+        barrier.wait()
+        published.append(family_table)
+
+    monkeypatch.setattr(engine, "_batch_pool_size", lambda spark: 1)
+    monkeypatch.setattr(engine, "run_alert", lambda c, definition: None)
+    monkeypatch.setattr(engine, "publish", publish)
+    engine.run_all(ctx, siglas=("VADF", "RO", "COMP"), quiet=True)
+    assert sorted(published) == ["mmps_alertas_comp", "mmps_alertas_mgp",
+                                 "mmps_alertas_ro"]
+
+
+def test_types_table_is_a_jvm_local_scan_of_the_alert_types(ctx, monkeypatch):
+    """generate_types_table hands write_table a frame that plans as a
+    ``LocalTableScan`` (no ``Scan ExistingRDD``, so no Python worker), whose
+    two columns are nullable strings and whose rows are exactly
+    ``schemas.ALERT_TYPES``, in order; the published table reads back the
+    same rows."""
+    from pyspark.sql.types import StringType
+
+    frames = []
+    write_table = ctx.write_table
+
+    def capture(schema, name, df, **kw):
+        frames.append(df)
+        write_table(schema, name, df, **kw)
+
+    monkeypatch.setattr(ctx, "write_table", capture)
+    engine.generate_types_table(ctx)
+    (df,) = frames
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert [(f.name, f.dataType, f.nullable) for f in df.schema.fields] == [
+        ("alrt_sigla", StringType(), True),
+        ("alrt_descricao", StringType(), True)]
+    assert [tuple(r) for r in df.collect()] == schemas.ALERT_TYPES
+    assert sorted(tuple(r) for r in ctx.table(
+        "alertas", "mmps_alertas_tipos").collect()) == sorted(schemas.ALERT_TYPES)

@@ -248,6 +248,22 @@ def _decimal_reference_means(assigned, vec, keys):
     return {k: [d[p] for p in range(len(d))] for k, d in ref.items()}
 
 
+def _grouped_argmin(df, vec, items, key, dist, **kw):
+    """The grouped assign reference: each subspace ``m``'s rows against that
+    subspace's items alone, through the ungrouped ``kmeans.argmin_arrow``
+    kernel, unioned — a row competes only within its own group."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from alertas_spark.operators.kmeans import argmin_arrow
+
+    return reduce(lambda a, b: a.unionByName(b), [
+        argmin_arrow(df.filter(F.col("m") == m), vec,
+                     [r for r in items if r["m"] == m], key, dist, **kw)
+        for m in sorted({r["m"] for r in items})])
+
+
 #: seed centroids (width 4) whose cells collect the adversarial components
 _LLOYD_SEEDS = [[0.0, 0.0, 0.0, 0.0], [9.9e22, 0.0, 0.0, 0.0],
                 [1e15, 1e15, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0]]
@@ -284,15 +300,13 @@ def test_fused_lloyd_means_equal_the_decimal_aggregate_bit_for_bit(spark):
     ``-0.0``, ``1e-30``, ``1e15``, ``9.9e22`` and mixed signs that sum to
     exactly zero."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegerType, LongType
 
     from alertas_spark.operators.kmeans import argmin_arrow, lloyd_means
 
     df = spark.createDataFrame(_lloyd_rows(), "vec_id bigint, emb array<double>")
     seeds = [{"cid": i, "cvec": s} for i, s in enumerate(_LLOYD_SEEDS)]
     ref = _decimal_reference_means(
-        argmin_arrow(df, "emb", seeds, "cid", LongType(), "d"), "emb",
-        ["cid"])
+        argmin_arrow(df, "emb", seeds, "cid", "d"), "emb", ["cid"])
     got = lloyd_means(df.repartition(7), "emb", seeds, "cid")
     assert df.repartition(7).rdd.glom().filter(bool).count() > 1
     assert set(got) == {(None, c) for (c,) in ref}
@@ -307,8 +321,7 @@ def test_fused_lloyd_means_equal_the_decimal_aggregate_bit_for_bit(spark):
     cw = [{"m": m + 1, "c": i, "cvec": s[2 * m:2 * m + 2]}
           for i, s in enumerate(_LLOYD_SEEDS) for m in range(2)]
     ref = _decimal_reference_means(
-        argmin_arrow(subs, "sub", cw, "c", IntegerType(), "d", group="m"),
-        "sub", ["m", "c"])
+        _grouped_argmin(subs, "sub", cw, "c", "d"), "sub", ["m", "c"])
     got = lloyd_means(subs.repartition(7), "sub", cw, "c", group="m")
     assert set(got) == set(ref)
     for cell, mu in ref.items():
@@ -474,13 +487,14 @@ def test_argmin_kernel_matches_a_sequential_fold_bit_for_bit(spark):
     pairwise sum differs from the sequential one (1e16 + 1 + … + 1, which
     numpy's own ``sum`` regroups at this width); plus the
     four guards (NULL vector, wrong width, uncovered group, non-finite
-    distance)."""
+    distance).  The grouped cases run each subspace through the kernel
+    (``_grouped_argmin``); the uncovered-group guard is the grouped Lloyd
+    update's, the kernel's only grouped caller."""
     import struct
 
     import pytest
-    from pyspark.sql.types import IntegerType, LongType
 
-    from alertas_spark.operators.kmeans import argmin_arrow
+    from alertas_spark.operators.kmeans import argmin_arrow, lloyd_means
 
     def fold(x, c):
         d = 0.0
@@ -506,9 +520,9 @@ def test_argmin_kernel_matches_a_sequential_fold_bit_for_bit(spark):
 
     for group in (None, "m"):
         book = items if group else [r for r in items if r["m"] == 1]
-        got = {r.vec_id: r for r in argmin_arrow(
-            df, "emb", book, "cid", LongType(), "dist", group=group,
-            with_cvec=True).collect()}
+        assign = _grouped_argmin if group else argmin_arrow
+        got = {r.vec_id: r for r in assign(
+            df, "emb", book, "cid", "dist", with_cvec=True).collect()}
         assert len(got) == len(rows)
         for vid, m, v in rows:
             cands = sorted((fold(v, r["cvec"]), r["cid"], r["cvec"])
@@ -517,30 +531,28 @@ def test_argmin_kernel_matches_a_sequential_fold_bit_for_bit(spark):
             assert (got[vid].cid, bits(got[vid].dist)) == (cid, bits(d)), vid
             assert [bits(x) for x in got[vid].cvec] == [bits(x) for x in cvec]
     # the tie: rows equal to the duplicated centroid go to cid 2, not 5
-    assert {r.cid for r in argmin_arrow(
-        df.filter("vec_id = 0"), "emb", items, "cid", LongType(), "dist",
-        group="m").collect()} == {2}
+    assert {r.cid for r in _grouped_argmin(
+        df.filter("vec_id = 0"), "emb", items, "cid", "dist").collect()} == {2}
     # the fold order: 1e16 followed by fifteen 1s folds to 1e16 left to
     # right; a pairwise or blocked sum keeps some of the 1s
     wide = [1e8] + [1.0] * 15
     (r,) = argmin_arrow(
         spark.createDataFrame([(0, wide)], "vec_id bigint, emb array<double>"),
-        "emb", [{"cid": 0, "cvec": [0.0] * 16}], "cid", LongType(),
-        "dist").collect()
+        "emb", [{"cid": 0, "cvec": [0.0] * 16}], "cid", "dist").collect()
     assert bits(r.dist) == bits(fold(wide, [0.0] * 16)) == bits(1e16)
 
-    def run(data, book, group=None):
-        return argmin_arrow(
-            spark.createDataFrame(data, "vec_id bigint, m int, "
-                                        "emb array<double>"),
-            "emb", book, "c", IntegerType(), "d", group=group).collect()
+    def frame(data):
+        return spark.createDataFrame(data, "vec_id bigint, m int, "
+                                           "emb array<double>")
 
     cb = [{"m": 1, "c": 0, "cvec": [0.0, 0.0]},
           {"m": 1, "c": 1, "cvec": [1.0, 1.0]}]
-    assert [r.c for r in run([(0, 1, [0.9, 0.9])], cb, "m")] == [1]
+    assert [r.c for r in _grouped_argmin(
+        frame([(0, 1, [0.9, 0.9])]), "emb", cb, "c", "d").collect()] == [1]
     for data, match in (([(0, 1, None)], "NULL emb"),
                         ([(0, 1, [0.5, 0.5, 0.5])], "width"),
-                        ([(0, 2, [0.5, 0.5])], "no codebook items for m"),
                         ([(0, 1, [1e200, 0.0])], "non-finite")):
         with pytest.raises(Exception, match=match):
-            run(data, cb, "m")
+            argmin_arrow(frame(data), "emb", cb, "c", "d").collect()
+    with pytest.raises(Exception, match="no codebook items for m"):
+        lloyd_means(frame([(0, 2, [0.5, 0.5])]), "emb", cb, "c", group="m")
