@@ -7,7 +7,8 @@ protocol with two backends:
 
 * :class:`PathCatalog` — tables are parquet directories under a warehouse root
   (``<root>/<schema>/<table>.parquet``).  What the tests and the driver sandbox use;
-  no metastore service required.
+  no metastore service required.  Like a metastore lookup, a read runs no Spark
+  job: the schema comes from one footer read on the driver (``sources.parquet``).
 * :class:`MetastoreCatalog` — tables live in the session catalog (Hive metastore in
   production, Spark's in-memory session catalog in tests): ``spark.table``,
   ``saveAsTable``, ``DROP TABLE``.  Partitioned overwrites go through ``insertInto``
@@ -24,6 +25,8 @@ import shutil
 from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
+
+from alertas_spark.sources import parquet
 
 
 class Catalog(Protocol):
@@ -47,7 +50,10 @@ def _shape(df: DataFrame, coalesce: int | None) -> DataFrame:
 
 
 class PathCatalog:
-    """Parquet directories under a warehouse root — the sandbox/test backend."""
+    """Parquet directories under a warehouse root — the sandbox/test backend.
+
+    :meth:`table` reads through ``parquet.read``: the schema is one driver-side
+    footer read, so binding a table launches no Spark job."""
 
     def __init__(self, root: str):
         self.root = root
@@ -56,7 +62,7 @@ class PathCatalog:
         return os.path.join(self.root, schema, f"{name}.parquet")
 
     def table(self, spark: SparkSession, schema: str, name: str) -> DataFrame:
-        return spark.read.parquet(self.path(schema, name))
+        return parquet.read(spark, self.path(schema, name))
 
     def table_exists(self, spark: SparkSession, schema: str, name: str) -> bool:
         return os.path.exists(self.path(schema, name))

@@ -48,6 +48,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from alertas_spark.operators.memo import session_value
+from alertas_spark.sources import parquet
 
 #: Spark conf key (checked first) and env fallback naming the artifact root.
 CONF_KEY = "spark.alertas.artifacts.dir"
@@ -151,7 +152,7 @@ def load_or_build(spark: SparkSession, root: str, name: str,
                     pass  # lost a second race: serve whoever committed
                 shutil.rmtree(debris, ignore_errors=True)
             shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    return parquet.read(spark, path)
 
 
 def persistent_artifact(spark: SparkSession, sf_dir: str, name: str,

@@ -115,7 +115,7 @@ def _codebooks(items: list, key: str, group: str | None) -> tuple[dict, int]:
              for g, rs in books.items()}
     widths = {cb.shape[1] for _, cb in books.values()}
     if len(widths) > 1:
-        raise ValueError(f"argmin_arrow: codebook widths {sorted(widths)} "
+        raise ValueError(f"kmeans: codebook widths {sorted(widths)} "
                          "differ")
     return books, widths.pop() if widths else 0
 
@@ -131,7 +131,7 @@ def _nearest(mat, gv, books: dict, what: str, with_cvec: bool = False):
     groups = np.unique(gv) if gv is not None else [None]
     missing = [g for g in groups if g not in books]
     if missing:
-        raise ValueError(f"argmin_arrow: no codebook items for {what} "
+        raise ValueError(f"kmeans: no codebook items for {what} "
                          f"{missing}")
     win = np.empty(n, dtype=np.int64)
     best = np.empty(n, dtype=np.float64)
@@ -141,7 +141,7 @@ def _nearest(mat, gv, books: dict, what: str, with_cvec: bool = False):
         ids, cb = books[g]
         d = _seq_subdist(mat[sel][:, None, :], cb[None, :, :])
         if not np.isfinite(d).all():
-            raise ValueError(f"argmin_arrow: non-finite {what} distance")
+            raise ValueError(f"kmeans: non-finite {what} distance")
         a = d.argmin(axis=1)  # first minimum: ties → lowest id
         win[sel] = ids[a]
         best[sel] = d[np.arange(len(a)), a]
@@ -160,12 +160,12 @@ def _batch_rows(batch, vec: str, group: str | None, width: int):
     n = batch.num_rows
     col = batch.column(vec)
     if col.null_count:
-        raise ValueError(f"argmin_arrow: NULL {vec} vector")
+        raise ValueError(f"kmeans: NULL {vec} vector")
     gv = (batch.column(group).to_numpy(zero_copy_only=False)
           if group else None)
     lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
     if (lens != width).any():
-        raise ValueError(f"argmin_arrow: {vec} width "
+        raise ValueError(f"kmeans: {vec} width "
                          f"{sorted(set(lens.tolist()) - {width})} is "
                          f"not the codebook's {width}")
     return col.flatten().to_numpy(zero_copy_only=False).reshape(n, width), gv

@@ -36,14 +36,10 @@ from pyspark.sql import functions as F
 T = TypeVar("T")
 
 #: ONE dict for every memoized session value — checkpointed relations,
-#: collected model rows, model broadcasts and table schemas alike.  Keys are
-#: disjoint by construction: artifact names never repeat across kinds,
-#: :func:`model_udf` prefixes its broadcasts with ``"broadcast"`` and
-#: ``catalog.load_table`` its schemas with ``SCHEMA_KEY``.
+#: collected model rows and model broadcasts alike.  Keys are disjoint by
+#: construction: artifact names never repeat across kinds and
+#: :func:`model_udf` prefixes its broadcasts with ``"broadcast"``.
 _CACHE: dict[tuple, object] = {}
-
-#: key tag of the parquet schemas ``catalog.load_table`` memoizes
-SCHEMA_KEY = "parquet_schema"
 
 #: per-key build locks so concurrent consumers of the SAME artifact build it
 #: once (the second thread blocks, then reads the memo) while DIFFERENT
@@ -177,7 +173,5 @@ def clear() -> None:
 def artifact_count() -> int:
     """Number of live memoized values — relations, rows and broadcasts (bench
     uses this to detect which queries build session artifacts, so warm
-    timings can be reported separately from the cold headline).  Memoized
-    table schemas (``SCHEMA_KEY``) are not artifacts: every table read
-    leaves one."""
-    return sum(1 for k in _CACHE if k[1] != SCHEMA_KEY)
+    timings can be reported separately from the cold headline)."""
+    return len(_CACHE)

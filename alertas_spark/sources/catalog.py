@@ -13,8 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from alertas_spark.operators.artifacts import dataset_fingerprint
-from alertas_spark.operators.memo import SCHEMA_KEY, session_value
+from alertas_spark.sources import parquet
 
 #: Driver-generated testdata tables (TESTDATA.md).
 TABLES = (
@@ -52,18 +51,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     temporal functions behave identically regardless of producer encoding.  The
     casts sit on top of the scan and do not block pushdown of other predicates.
 
-    The inferred schema is memoized per session and dataset fingerprint
-    (``memo.session_value``): ``spark.read.parquet`` runs a schema-inference
-    job on every call, and a trainer chain reads one table several times.
-    ``events`` reads bare — its inference depends on the nanosAsLong conf."""
+    The schema comes from one footer read on the driver (``parquet.read``),
+    so a read runs no Spark job.  ``events`` sets the nanosAsLong conf
+    first: its footer converts under it."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(spark.read.parquet(path))
-    schema = session_value(
-        spark, (SCHEMA_KEY, path, dataset_fingerprint(sf_dir, name)),
-        lambda: spark.read.parquet(path).schema)
-    df = spark.read.schema(schema).parquet(path)
+        return normalize_event_ts(parquet.read(spark, path))
+    df = parquet.read(spark, path)
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = normalize_event_ts(df, col)

@@ -16,9 +16,10 @@ The contract is deliberately *tolerant where the engine is tolerant*:
 * integer widenings (int32 → int64) are WARN (safe upcast on read);
 * missing columns and incompatible type changes are ERROR — queries WILL break.
 
-``verify_schemas`` is driver-light: it reads parquet FOOTERS only (Spark schema
-inference on the file listing), never data, so it's O(#files) metadata work that
-can run at job start on any scale.
+``verify_schemas`` is driver-light: it reads one parquet FOOTER per table on
+the driver (``sources.parquet``: Spark's own footer-to-schema conversion, no
+inference job), never data, so it is metadata work that can run at job start on
+any scale.
 """
 
 from __future__ import annotations
@@ -27,6 +28,8 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
+
+from alertas_spark.sources import parquet
 
 #: canonical column → Spark simpleString dtype per testdata table (TESTDATA.md).
 #: ``timestamp*`` means: any member of {timestamp, timestamp_ntz, bigint} — the
@@ -96,7 +99,9 @@ def _check_column(table: str, col: str, want: str, got: str | None) -> Finding |
 
 def verify_schemas(spark: SparkSession, sf_dir: str,
                    tables: tuple[str, ...] | None = None) -> list[Finding]:
-    """Footer-only schema drift check of every source table against EXPECTED."""
+    """Footer-only schema drift check of every source table against EXPECTED:
+    each table's schema is ``parquet.read``'s — Spark's inferred schema, read
+    from one footer on the driver without a Spark job."""
     findings: list[Finding] = []
     for table in tables or tuple(EXPECTED):
         want = EXPECTED[table]
@@ -105,7 +110,7 @@ def verify_schemas(spark: SparkSession, sf_dir: str,
             findings.append(Finding(table, "*", "ERROR", "<table>", "<missing>",
                                     "source file absent"))
             continue
-        got = dict(spark.read.parquet(path).dtypes)
+        got = dict(parquet.read(spark, path).dtypes)
         for col, want_t in want.items():
             f = _check_column(table, col, want_t, got.get(col))
             if f:

@@ -32,6 +32,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from alertas_spark.functions.numeric import dsum
 from alertas_spark.operators.sessionize import SESSION_GAP_S, WINDOW
+from alertas_spark.sources.parquet import footer_schema
 
 
 def _stream_source_dir(sf_dir: str, table: str) -> tuple[str, str]:
@@ -64,8 +65,8 @@ def _stream_source_dir(sf_dir: str, table: str) -> tuple[str, str]:
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-streaming source over the events table (schema from a batch peek —
-    metadata only, no scan).
+    """File-streaming source over the events table (schema from one footer
+    read on the driver, ``sources.parquet`` — no scan, no Spark job).
 
     Table-scoped scratch subdirs keep any other streamed table's files out of
     this source's glob (a sibling file would cross-read; a sibling SUBDIR
@@ -76,8 +77,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from alertas_spark.sources.catalog import normalize_event_ts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(stream_dir)
+    stream = spark.readStream.schema(footer_schema(spark, path)).parquet(stream_dir)
     return normalize_event_ts(stream)
 
 
@@ -87,8 +87,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally (no time encoding to normalize; documents carry no event
     time)."""
     stream_dir, path = _stream_source_dir(sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
-    return spark.readStream.schema(schema).parquet(stream_dir)
+    return spark.readStream.schema(footer_schema(spark, path)).parquet(stream_dir)
 
 
 def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:

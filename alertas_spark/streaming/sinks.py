@@ -26,6 +26,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from alertas_spark.sources import parquet
+
 
 def recover_snapshot(snapshot_dir: str) -> None:
     """Repair the snapshot after a crash mid-swap (idempotent, cheap).
@@ -68,7 +70,7 @@ def merge_batch_into_snapshot(batch_df: DataFrame, key_cols: Sequence[str],
     keys = list(key_cols)
     recover_snapshot(snapshot_dir)
     if os.path.isdir(snapshot_dir):
-        current = spark.read.parquet(snapshot_dir)
+        current = parquet.read(spark, snapshot_dir)
         merged = (
             current.join(batch_df.select(*keys).distinct(), keys, "left_anti")
             .unionByName(batch_df)

@@ -441,33 +441,44 @@ def test_lr_scoring_is_scan_side_with_model_broadcast(spark):
     assert "PushedFilters" in plan or "Filter" in plan
 
 
-def _builder_jobs(spark, name: str) -> int:
-    """Spark jobs a memo-cold builder call runs, read from the StatusTracker
-    under a job group of its own (the listener bus drained on both sides)."""
+def spark_jobs(spark, thunk, label: str = "probe") -> int:
+    """Spark jobs ``thunk()`` runs, read from the StatusTracker under a job
+    group of its own (the listener bus drained on both sides)."""
     import uuid
-
-    from alertas_spark.operators import memo
 
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
-    group = f"builder-jobs-{uuid.uuid4().hex}"
-    memo.clear()
-    sc.setJobGroup(group, name)
+    group = f"jobs-{uuid.uuid4().hex}"
+    bus.waitUntilEmpty()
+    sc.setJobGroup(group, label)
     try:
-        _build(spark, name)
+        thunk()
         bus.waitUntilEmpty()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        memo.clear()
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("name,jobs", [("kmeans_assign", 3),
-                                       ("simsearch_topk_ivfpq_residual", 4)])
+def _builder_jobs(spark, name: str) -> int:
+    """Spark jobs a memo-cold builder call runs."""
+    from alertas_spark.operators import memo
+
+    memo.clear()
+    try:
+        return spark_jobs(spark, lambda: _build(spark, name), name)
+    finally:
+        memo.clear()
+
+
+@pytest.mark.parametrize("name,jobs", [("kmeans_assign", 2),
+                                       ("simsearch_topk_ivfpq_residual", 3),
+                                       ("pq_encode_trained", 2)])
 def test_trainer_builder_job_count(spark, name, jobs):
-    """The trainer chain is job-count-bound, so its job count is pinned: a
-    cold ``kmeans_assign`` builder is the schema read, the seed pull and ONE
-    fused Lloyd job (``kmeans.lloyd_means``); the IVFADC builder is the
-    schema read (memoized per table), the head-row pull that seeds both
-    codebooks, and one fused job per Lloyd update."""
+    """The trainer chain is job-count-bound, so its job count is pinned.
+    Table reads run no job (``sources.parquet`` reads the schema from a
+    footer on the driver): a cold ``kmeans_assign`` builder is the seed pull
+    and ONE fused Lloyd job (``kmeans.lloyd_means``); the IVFADC builder is
+    the head-row pull that seeds both codebooks and one fused job per Lloyd
+    update; ``pq_encode_trained`` is the seed pull and its codebook's fused
+    Lloyd job."""
     assert _builder_jobs(spark, name) <= jobs
