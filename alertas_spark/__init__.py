@@ -1,0 +1,3 @@
+from alertas_spark import _zipfix
+
+_zipfix.install()

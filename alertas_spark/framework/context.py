@@ -72,6 +72,18 @@ class AlertContext:
 
     # -- shared base views (≙ jobs.py:190-250) ------------------------------
     def view(self, name: str) -> DataFrame:
+        """The shared base view ``name``, built once per context.
+
+        Known stale case: ``documentos_ativos`` is cached and counted when
+        first built, and ``engine.run_all``'s ``clearCache()`` unpersists it,
+        but the frame stays here.  A second ``run_all`` on the same context
+        (``nightly_batch``'s rerun phase) gets the uncached frame, so each
+        consumer re-derives the anti-join chain inside its own plan.  It is
+        left that way: IC1A, the one consumer in that workload, took
+        1.26–1.57 s fresh (cache + count) against 0.78–0.86 s on a first-pass
+        rerun (inline) on local[4], so re-caching would slow the rerun down.
+        Production never hits it: ``main.py`` runs one ``run_all`` per
+        context."""
         df = self._views.get(name)
         if df is None:
             with self._views_lock:

@@ -205,7 +205,10 @@ def run_all(ctx: AlertContext, siglas: tuple[str, ...] = ACTIVE,
     cores // 2 published 3 families in 2 waves on local[4]).  Both phases
     run through ``memo.overlap``, so every alert and family job keeps the
     caller's session tags.  Shared base views build once under the
-    context's view lock."""
+    context's view lock.  The ``clearCache()`` between the phases unpersists
+    ``documentos_ativos`` but leaves it in the context, so a second
+    ``run_all`` on the same context reads it uncached (see
+    ``AlertContext.view``); ``main.py`` builds one context per run."""
     from alertas_spark.framework.timing import Timer
     from alertas_spark.operators.memo import overlap
 

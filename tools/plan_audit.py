@@ -13,8 +13,12 @@ matter at 100 TB:
   inputs, cartesian products;
 * ``plan``        — sha1 (12 hex) of the optimized logical plan (cached
   relations by their own optimized logical plans, every field printed) with
-  ``#N`` exprIds, ``@hash`` object identities and lambda-variable counters
-  masked, and
+  ``#N`` exprIds, ``@hash`` object identities, lambda-variable and
+  ``_common_expr_N`` counters masked; each query is built twice and the
+  column reads ``unstable`` when the two builds' digests differ
+  (``decontaminate_overlap`` can order its distinct-aggregate groups by the
+  session's exprId counter), so a cross-checkout diff never reads a false
+  change, and
   ``oracle`` — sha1 of the oracle SQL with all whitespace and the checkout
   path removed: two checkouts whose rows print the same digests build the
   same plans against the same oracles.
@@ -50,14 +54,25 @@ def _plan_text(plan, optimizer, depth: int = 0) -> str:
     return "\n".join(lines)
 
 
-def plan_digest(df) -> str:
-    """The optimized logical plan with the per-run values masked: exprIds,
-    the identity hashes that object-valued literals print, and the counter
-    PySpark numbers its lambda variables with."""
-    plan = _plan_text(df._jdf.queryExecution().optimizedPlan(),
+def plan_text(df) -> str:
+    return _plan_text(df._jdf.queryExecution().optimizedPlan(),
                       df.sparkSession._jsparkSession.sessionState().optimizer())
-    plan = re.sub(r"(lambda \w+?_)\d+", r"\1", plan)
+
+
+def plan_digest(plan: str) -> str:
+    """``plan`` with the per-run values masked: exprIds, the identity hashes
+    that object-valued literals print, and the session counters PySpark
+    numbers its lambda variables with and Spark its ``_common_expr_N``
+    common-subexpression aliases with."""
+    plan = re.sub(r"(lambda \w+?_|_common_expr_)\d+", r"\1", plan)
     return _sha(re.sub(r"#\d+|@[0-9a-f]+\b", "#", plan))
+
+
+def plan_column(first: str, second: str) -> str:
+    """The ``plan`` column for two builds' plans of one query: their digest,
+    or ``unstable`` when the digests differ."""
+    digest = plan_digest(first)
+    return digest if plan_digest(second) == digest else "unstable"
 
 
 def oracle_digest(sql: str | None) -> str:
@@ -99,10 +114,11 @@ def main() -> None:
         if only and name not in only:
             continue
         try:
+            first = plan_text(q.builder(spark, sf_dir))
             df = q.builder(spark, sf_dir)
             plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils \
                 .explainString(df._jdf.queryExecution(), "formatted")
-            digest = plan_digest(df)
+            digest = plan_column(first, plan_text(df))
         except Exception as ex:
             print(f"{name:36} ERROR {str(ex)[:60]}")
             continue
